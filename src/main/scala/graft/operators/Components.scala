@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Lineage.CutOps
-
 /** Connected components over an undirected edge list — the
   * canonicalization step every dedup pipeline needs after pair
   * generation: near-dup PAIRS (from MinHash-LSH / SimHash / cosine)
@@ -40,10 +38,8 @@ import graft.operators.Lineage.CutOps
   * Lineage: each round's label table references the previous round's
   * TWICE (once directly, once through the propagation join), so an
   * uncut plan doubles per round and a 15-round chain OOMs the planner
-  * before a single task runs. The loop therefore truncates lineage
-  * every round with an eager `localCheckpoint` — on a production
-  * cluster prefer `checkpoint` to reliable storage so executor loss
-  * can't orphan a round.
+  * before a single task runs. Each round is therefore a [[Fixpoint]]
+  * round, which settles the label table.
   */
 object Components {
 
@@ -72,58 +68,27 @@ object Components {
     // curation chain spent ~50 s of pure driver-side re-analysis
     // across the loop's actions at sf0.01. The checkpoint makes every
     // round plan against a leaf.
-    val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      .cutLineage()
     // Size the loop's shuffles to the EDGE COUNT, not the session-wide
-    // default: every round materializes (localCheckpoint) and re-reads
-    // the label table once per shuffle partition, so a 30-edge dedup
-    // graph on 32 partitions spends the whole loop on empty-partition
-    // overhead — the same keys-per-task sizing rule the streaming gates
-    // apply to state stores. (Same rows-per-partition target at 10⁹
-    // edges: the conf scales up instead of down.)
-    val nEdges = symRaw.count()
-    // static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4, the bwEdgesPrep mechanism): every
-    // round's propagation equi-join reads the |E| side exchange-free
-    // and sort-free
-    val sym = symRaw
-      .repartition(ScopedConf.partitionsFor(spark, nEdges), $"dst")
-      .sortWithinPartitions($"dst").cutPreppedLineage()
+    // default: every round materializes and re-reads the label table
+    // once per shuffle partition, so a 30-edge dedup graph on 32
+    // partitions spends the whole loop on empty-partition overhead —
+    // the same keys-per-task sizing rule the streaming gates apply to
+    // state stores. (Same rows-per-partition target at 10⁹ edges: the
+    // conf scales up instead of down.) The static side is laid out on
+    // the round join's key, so every round reads it exchange-free.
+    val (sym, nEdges) = GraphAlgos.prepped(GraphAlgos.symmetric(e), "dst")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // eager localCheckpoint: materializes AND cuts lineage (see scaladoc)
-      var labels = sym.select($"src".as("node")).distinct()
-        .withColumn("component", $"node")
-        .cutLineage()
-
-      val checksumAgg = sum($"component".cast("decimal(38,0)"))
-      def asSum(row: org.apache.spark.sql.Row): java.math.BigDecimal =
-        Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-
-      var prevSum = asSum(labels.agg(checksumAgg).head)
-      var converged = prevSum.signum == 0 && labels.isEmpty // empty graph
-      var i = 0
-      while (!converged && i < maxIters) {
-        // a node's candidate labels: its own + every neighbor's current.
-        // The convergence checksum rides the cut's own materialization
-        // job ([[Lineage.cutAgg]]) — one job per round, not two.
+      // the label checksum is the fixpoint witness (labels only decrease)
+      Fixpoint.run("connectedComponents",
+        sym.select($"src".as("node")).distinct().withColumn("component", $"node"),
+        maxIters, aggs = Seq(sum($"component".cast("decimal(38,0)"))),
+        done = Fixpoint.stable,
+        hint = "a component's diameter exceeds the budget; raise maxIters") { (labels, _) =>
+        // a node's candidate labels: its own + every neighbor's current
         val prop = sym.join(labels, $"dst" === $"node")
           .select($"src".as("node"), $"component")
-        val (next, row) = Lineage.cutAgg(labels.union(prop)
-          .groupBy($"node").agg(min($"component").as("component")),
-          Seq(checksumAgg))
-        val nextSum = asSum(row)
-        // superseded round's reliable-checkpoint files are dead once
-        // `next` has materialized ([[Lineage.release]] retention note)
-        Lineage.release(labels)
-        labels = next
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        i += 1
+        labels.union(prop).groupBy($"node").agg(min($"component").as("component"))
       }
-      require(converged,
-        s"connectedComponents did not converge in $maxIters rounds — " +
-          "a component's diameter exceeds the budget; raise maxIters")
-      labels
     }
   }
 
@@ -143,10 +108,7 @@ object Components {
     *    orientation) re-attaches to m — stars flatten.
     *
     * Each phase is ONE groupBy(min) + ONE equi-join on the node key,
-    * shuffles sized by |E|. Lineage is cut per round with
-    * [[Lineage.settle]] (cut + fresh relation): each phase joins its
-    * input against an aggregate of itself, so a plain cut's retained
-    * origin-stats estimate would square per phase.
+    * shuffles sized by |E|, one [[Fixpoint]] round per alternation.
     * Convergence is checked by an (edge-count, Σsrc, Σdst) checksum
     * on DECIMAL(38,0); because checksum equality is necessary but not
     * sufficient, the final edge set is then VALIDATED to be a star
@@ -163,18 +125,16 @@ object Components {
   ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      // eager checkpoint, not persist — cuts the caller's plan tree
-      // out of every round's re-analysis (see connectedComponents)
-      .cutLineage()
+    // eager checkpoint, not persist — cuts the caller's plan tree out
+    // of every round's re-analysis (see connectedComponents)
+    val e0 = Lineage.cut(edges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
     val nEdges = e0.count()
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
       // every node that appears in an edge — the output domain, and
       // the singleton fallback for nodes whose edges were all self-loops
-      val nodes = e0.select($"src".as("node"))
-        .union(e0.select($"dst".as("node"))).distinct()
-        .cutLineage()
+      val nodes = Lineage.cut(e0.select($"src".as("node"))
+        .union(e0.select($"dst".as("node"))).distinct())
 
       def largeStar(e: DataFrame): DataFrame = {
         val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
@@ -200,35 +160,18 @@ object Components {
           .distinct()
       }
 
-      val checksumAggs = Seq(
-        count(lit(1)).as("n"),
-        sum($"src".cast("decimal(38,0)") + $"dst".cast("decimal(38,0)")).as("s"))
-      def asSums(r: org.apache.spark.sql.Row): (Long, java.math.BigDecimal) =
-        (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-
-      // settle, not plain cut: each star phase joins its input against
-      // a groupBy-derived table of ITSELF, so the round's sizeInBytes
-      // estimate squares per phase — localCheckpoint keeps the origin
-      // estimate, and 2^rounds bit growth eventually drowns the driver
-      // in BigInteger stats arithmetic ([[Lineage.settle]]). The
-      // convergence checksum rides the settle's own materialization job
-      // ([[Lineage.settleAgg]]) — one job per round, not two.
-      val first = Lineage.settleAgg(smallStar(largeStar(e0)), checksumAggs)
-      var cur = first._1
-      var prev = asSums(first._2)
-      var converged = prev._1 == 0L // edge-free graph (all self-loops)
-      var i = 1
-      while (!converged && i < maxIters) {
-        val (next, row) = Lineage.settleAgg(smallStar(largeStar(cur)), checksumAggs)
-        val nextSum = asSums(row)
-        Lineage.release(cur) // superseded round (retention note on release)
-        cur = next
-        converged = nextSum == prev
-        prev = nextSum
-        i += 1
+      // (edge count, Σsrc + Σdst) on DECIMAL(38,0): stable ⇒ fixpoint
+      // (necessary, not sufficient — validated below); an edge-free
+      // graph (all self-loops) is done at round 0. Round 0 is the
+      // first alternation, so `maxIters` counts it.
+      val cur = Fixpoint.run("connectedComponentsStar", smallStar(largeStar(e0)),
+        maxIters - 1,
+        aggs = Seq(count(lit(1)),
+          sum($"src".cast("decimal(38,0)") + $"dst".cast("decimal(38,0)"))),
+        done = (p, r) => r.getLong(0) == 0L || r == p,
+        hint = s"raise maxIters (now $maxIters, round 0 included)") { (e, _) =>
+        smallStar(largeStar(e))
       }
-      require(converged,
-        s"connectedComponentsStar did not converge in $maxIters rounds")
       // star-forest validation: a parent that is itself a child means
       // the checksum stopped on a non-fixpoint — refuse to answer
       val chains = cur.join(

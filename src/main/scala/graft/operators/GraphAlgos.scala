@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Lineage.CutOps
-
 /** Distributed triangle counting and BFS — the two graph analytics a
   * curation pipeline asks of a similarity/co-occurrence graph after
   * components (cluster density → how clique-like the duplicate
@@ -82,10 +80,8 @@ object GraphAlgos {
     * one equi-join (frontier × symmetric edges) plus one anti-join
     * against the visited set — both keyed on the node, linear in the
     * frontier's incident edges; the only driver-side value per round
-    * is the new frontier's row count. Lineage is cut per round with an
-    * eager localCheckpoint exactly as in [[Components]] (the visited
-    * set references itself through union otherwise). Rounds are
-    * bounded by the graph's eccentricity from the seed, capped at
+    * is the new frontier's row count, one [[Fixpoint]] round each.
+    * Rounds are bounded by the graph's eccentricity from the seed, capped at
     * `maxDepth` — unreached nodes are simply absent from the result,
     * which is the honest answer (no sentinel distances).
     */
@@ -99,42 +95,17 @@ object GraphAlgos {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(uCol).cast("long").as("src"), col(vCol).cast("long").as("dst"))
-    val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst"))).cutLineage()
-    val nEdges = symRaw.count()
-    // static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4, the bwEdgesPrep mechanism), and the
-    // loop's shuffles sized to the edge count as in [[Components]]
-    val sym = symRaw
-      .repartition(ScopedConf.partitionsFor(spark, nEdges), $"src")
-      .sortWithinPartitions($"src").cutPreppedLineage()
+    val (sym, nEdges) = prepped(symmetric(e), "src")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // FUSED round — see [[temporalReachable]]: ONE node-keyed groupBy
-      // merges the round's expansion into the visited set (min dist —
-      // depth only grows, so an already-seen node keeps its first
-      // level) AND flags the newly-reached rows, which ARE the next
-      // frontier; the convergence count rides the settle's own
-      // materialization job ([[Lineage.settleAgg]]). The old round's
-      // distinct, anti-join, frontier cut, count job, and merged-
-      // visited cut collapse into one exchange and one job.
-      var state = Lineage.settle(
-        Seq((seed, 0L)).toDF("node", "dist").withColumn("chg", lit(true)))
-      var depth = 0L
-      var frontierSize = 1L
-      while (frontierSize > 0 && depth < maxDepth) {
-        depth += 1
-        val cand = state.filter($"chg").join(sym, $"node" === $"src")
-          .select($"dst".as("node"), lit(depth).as("dist"),
-            lit(null).cast("boolean").as("old"))
-        val (next, row) = Lineage.settleAgg(
-          state.select($"node", $"dist", lit(true).as("old")).unionByName(cand)
-            .groupBy($"node").agg(min($"dist").as("dist"),
-              max($"old").isNull.as("chg")),
-          Seq(count_if($"chg")))
-        frontierSize = row.getLong(0)
-        Lineage.release(state)
-        state = next
-      }
-      state.select($"node", $"dist")
+      // depth only grows, so an already-seen node keeps its first level
+      // and only newly-reached nodes [[improve]]. Capped, not failed, at
+      // maxDepth.
+      Fixpoint.run("bfsLevels",
+        Seq((seed, 0L)).toDF("node", "dist").withColumn("chg", lit(true)), maxDepth,
+        strict = false) { (state, r) =>
+        improve(state, state.filter($"chg").join(sym, $"node" === $"src")
+          .select($"dst".as("node"), lit(r.index.toLong).as("dist")), "dist")
+      }.select($"node", $"dist")
     }
   }
 
@@ -152,9 +123,9 @@ object GraphAlgos {
     * is O(frontier out-edges), NOT O(|E|): matching Pregel's "vertices
     * vote to halt", the property that makes the loop viable at 10⁹
     * edges where full-relaxation Bellman–Ford (|V|·|E|) is not.
-    * Lineage is cut with an eager localCheckpoint per round and the
-    * loop's shuffles are sized to the edge count (see [[Components]]
-    * for both rationales). Weights must be non-negative longs: a
+    * Each round is a [[Fixpoint]] round and the loop's shuffles are
+    * sized to the edge count (see [[Components]]). Weights must be
+    * non-negative longs: a
     * negative weight voids the frontier-converges argument, so it
     * fails loudly inside the plan rather than looping. Returns
     * (node, dist) for every node reachable from `seed`.
@@ -178,50 +149,14 @@ object GraphAlgos {
           lit(" — frontier Bellman–Ford requires non-negative weights"))))
         .as("w"))
     // undirected: relax in both directions
-    val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst"), $"w"))
-      .cutLineage()
-    val nEdges = symRaw.count()
-    // static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4, the bwEdgesPrep mechanism): every
-    // round's frontier equi-join reads the |E| side exchange-free
-    // and sort-free
-    val sym = symRaw
-      .repartition(ScopedConf.partitionsFor(spark, nEdges), $"src")
-      .sortWithinPartitions($"src").cutPreppedLineage()
+    val (sym, nEdges) = prepped(symmetric(e), "src")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // FUSED round — see [[temporalReachable]]: ONE node-keyed
-      // groupBy merges the round's relaxations into the state (min
-      // tentative distance per node, map-side combined) AND flags the
-      // improved rows — which ARE the next frontier — with the
-      // convergence count riding the settle's own materialization job
-      // ([[Lineage.settleAgg]]). The old round's candidate groupBy,
-      // left-outer improvement join, improved settle, count job, and
-      // merge materialization collapse into one exchange and one job.
-      // State has one row per node, so max(prev) recovers the single
-      // previous distance (null for first-reached nodes).
-      var state = Lineage.settle(
-        Seq((seed, 0L)).toDF("node", "dist").withColumn("chg", lit(true)))
-      var frontierSize = 1L
-      var i = 0
-      while (frontierSize > 0 && i < maxIters) {
-        i += 1
-        val cand = state.filter($"chg").join(sym, $"node" === $"src")
-          .select($"dst".as("node"), ($"dist" + $"w").as("dist"),
-            lit(null).cast("long").as("prev"))
-        val (next, row) = Lineage.settleAgg(
-          state.select($"node", $"dist", $"dist".as("prev")).unionByName(cand)
-            .groupBy($"node").agg(min($"dist").as("dist"), max($"prev").as("prev"))
-            .select($"node", $"dist",
-              ($"prev".isNull || $"dist" < $"prev").as("chg")),
-          Seq(count_if($"chg")))
-        frontierSize = row.getLong(0)
-        Lineage.release(state)
-        state = next
-      }
-      require(frontierSize == 0,
-        s"sssp did not converge in $maxIters rounds — a shortest path " +
-          "tree is deeper than the budget; raise maxIters")
-      state.select($"node", $"dist")
+      Fixpoint.run("sssp",
+        Seq((seed, 0L)).toDF("node", "dist").withColumn("chg", lit(true)), maxIters,
+        hint = "a shortest path tree is deeper than the budget; raise maxIters") {
+        (state, _) => improve(state, state.filter($"chg").join(sym, $"node" === $"src")
+          .select($"dst".as("node"), ($"dist" + $"w").as("dist")), "dist")
+      }.select($"node", $"dist")
     }
   }
 
@@ -263,30 +198,27 @@ object GraphAlgos {
     graft.functions.Fnv63Hash.register(spark)
     val e = edges.select(col(uCol).cast("long").as("src"),
       col(vCol).cast("long").as("dst")).distinct()
-    val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().cutLineage()
+    val sym = Lineage.cut(symmetric(e).distinct())
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"src").orderBy($"dst")
-    val adj = sym.withColumn("idx", row_number().over(w) - 1)
-      .cutLineage()
-    val deg = adj.groupBy($"src".as("dnode")).agg(count(lit(1)).as("deg"))
-      .cutLineage()
+    val adj = Lineage.cut(sym.withColumn("idx", row_number().over(w) - 1))
+    val deg = Lineage.cut(adj.groupBy($"src".as("dnode")).agg(count(lit(1)).as("deg")))
     val walkIds = array((0 until walksPerNode).map(lit): _*)
-    var cur = deg.select($"dnode".as("start"))
+    var cur = Lineage.cut(deg.select($"dnode".as("start"))
       .withColumn("walk", explode(walkIds))
-      .withColumn("node", $"start")
-      .cutLineage()
+      .withColumn("node", $"start"))
     var out = cur.withColumn("step", lit(0))
       .select($"start", $"walk", $"step", $"node")
+    // not a [[Fixpoint]] loop: `out` reads every step's state, so no
+    // step may be released, and there is no convergence to test
     for (k <- 1 to steps) {
       val coin = expr(
         s"fnv63(concat(cast(start as string), '_', cast(walk as string), " +
           s"'_', '$k', '_', cast(node as string)))")
-      cur = cur.join(deg, $"node" === $"dnode")
+      cur = Lineage.cut(cur.join(deg, $"node" === $"dnode")
         .withColumn("choice", coin % $"deg")
         .join(adj, $"node" === $"src" && $"choice" === $"idx")
-        .select($"start", $"walk", $"dst".as("node"))
-        .cutLineage()
+        .select($"start", $"walk", $"dst".as("node")))
       out = out.union(cur.withColumn("step", lit(k))
         .select($"start", $"walk", $"step", $"node"))
       // the accumulator is otherwise a (steps+1)-way union of the cut
@@ -294,7 +226,7 @@ object GraphAlgos {
       // Materialize the union every 16 steps so plan width stays
       // bounded regardless of walk length (each arm is already a
       // settled frame, so the cut just collapses the union).
-      if (k % 16 == 0) out = out.cutLineage()
+      if (k % 16 == 0) out = Lineage.cut(out)
     }
     out
   }
@@ -341,8 +273,8 @@ object GraphAlgos {
     * near-dup similarity graph the k-core is the template/boilerplate
     * cluster; low-core nodes are incidental pairs). Each round is ONE
     * map-side-combinable degree count plus TWO node-keyed semi-joins —
-    * linear in surviving edges, shrinking monotonically — with lineage
-    * cut per round as in [[Components]]. Convergence witness: the
+    * linear in surviving edges, shrinking monotonically — one
+    * [[Fixpoint]] round each. Convergence witness: the
     * symmetric edge COUNT is strictly decreasing until fixpoint, so
     * count-unchanged ⟺ no node was peeled ⟺ done; throws past
     * `maxIters` (an unconverged peel is a silently-too-large core).
@@ -359,41 +291,24 @@ object GraphAlgos {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(uCol).cast("long").as("src"), col(vCol).cast("long").as("dst"))
-    var cur = e.union(e.select($"dst".as("src"), $"src".as("dst"))).cutLineage()
-    var curCount = cur.count()
+    val sym = Lineage.cut(symmetric(e))
+    val nSym = sym.count()
     // loop shuffles sized to the (initial) edge count, as in
     // [[Components]]: the peel only shrinks, so the quotient is an
     // upper bound; small graphs skip empty-task scheduling overhead
-    ScopedConf.withShufflePartitionsFor(spark, curCount) {
-      var converged = curCount == 0
-      var i = 0
-      while (!converged && i < maxIters) {
+    ScopedConf.withShufflePartitionsFor(spark, nSym) {
+      def peel(cur: DataFrame): DataFrame = {
         val keep = cur.groupBy($"src").agg(count(lit(1)).as("d"))
           .filter($"d" >= k).select($"src")
-        // settle, not plain cut: `nxt` multiplies THREE descendants of
-        // `cur` (itself + keep twice), so the origin sizeInBytes
-        // estimate a localCheckpoint keeps would cube per round —
-        // 3^rounds bit growth, the driver-killing compounding
-        // [[Lineage.settle]] exists for. The convergence count rides
-        // the settle's own materialization job ([[Lineage.settleAgg]])
-        // — one job per round, not two.
-        val (nxt, row) = Lineage.settleAgg(cur
-          .join(keep, "src")
-          .join(keep.withColumnRenamed("src", "dst"), "dst")
-          .select($"src", $"dst"),
-          Seq(count(lit(1))))
-        val c = row.getLong(0)
-        converged = c == curCount
-        // retention: the peeled-from round's checkpoint files are dead
-        // the moment nxt has materialized ([[Lineage.release]])
-        Lineage.release(cur)
-        cur = nxt
-        curCount = c
-        i += 1
+        cur.join(keep, "src").join(keep.withColumnRenamed("src", "dst"), "dst")
+          .select($"src", $"dst")
       }
-      require(converged,
-        s"kCore did not converge in $maxIters rounds; raise maxIters")
-      cur.groupBy($"src").agg(count(lit(1)).as("core_deg"))
+      // round 0 is the first peel, compared with the input's count
+      Fixpoint.run("kCore", peel(sym), maxIters - 1, aggs = Seq(count(lit(1))),
+        done = (p, r) => r.getLong(0) == Option(p).fold(nSym)(_.getLong(0)),
+        hint = s"raise maxIters (now $maxIters, round 0 included)") {
+        (cur, _) => peel(cur)
+      }.groupBy($"src").agg(count(lit(1)).as("core_deg"))
         .select($"src".as("node"), $"core_deg")
     }
   }
@@ -426,9 +341,8 @@ object GraphAlgos {
     * far smaller than the edge set once neighborhoods concentrate on
     * few coreness values), a node-keyed max aggregation, and one
     * |V|-keyed left join to patch the value table. Values are monotonically non-increasing per node, so an
-    * empty changed set is a fixpoint witness; throws past `maxIters`
-    * like the other iterative operators. Lineage cut per round as in
-    * [[Components]].
+    * empty changed set is a fixpoint witness; one [[Fixpoint]] round
+    * each.
     *
     * `roundProbe` (test hook): called with (round, full value table)
     * after each round — how the spec asserts round-for-round equality
@@ -446,46 +360,35 @@ object GraphAlgos {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(uCol).cast("long").as("src"), col(vCol).cast("long").as("dst"))
-    val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst"))).cutLineage()
-    // size the loop's shuffles to the edge count, exactly as in
-    // [[sssp]]: a 20-round loop over a modest graph must not pay
-    // 20 × (default partitions) × (stages per round) of empty-task
-    // scheduling — on a big graph the quotient restores full
-    // parallelism automatically
-    val nEdges = symRaw.count()
-    // static join side pre-partitioned + pre-sorted on the round
-    // joins' key (guide §2.4, the bwEdgesPrep mechanism): BOTH
+    // loop shuffles sized to the edge count, as in [[sssp]]. BOTH
     // per-round probes of the symmetric edge table — the recompute's
     // dirty-incident expansion and the next-frontier neighbor probe —
     // are keyed on src (the frontier probe exploits symmetry: rows
     // with src ∈ changed emit the same neighbor set as rows with
-    // dst ∈ changed), so every round reads the |E| side exchange-free
-    // and sort-free instead of re-shuffling it twice per round
-    val sym = symRaw
-      .repartition(ScopedConf.partitionsFor(spark, nEdges), $"src")
-      .sortWithinPartitions($"src").cutPreppedLineage()
+    // dst ∈ changed), so the src-prepped side serves both
+    val (sym, nEdges) = prepped(symmetric(e), "src")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      var cur = sym.groupBy($"src").agg(count(lit(1)).cast("long").as("c"))
-        .select($"src".as("node"), $"c").cutLineage()
-      // the round's OWNED materialization, for reliable-checkpoint
-      // retention: once round i's state is settled, round i−1's files
-      // are dead and released ([[Lineage.release]]) — a 60-round loop
-      // retains ~2 rounds of checkpoint state, not 60
-      var owned = cur
-      // the dirty set CARRIES each node's current value (c): the
-      // recompute emits (node, new c, old c) in one pass, so change
-      // detection is a narrow filter over the materialized result —
-      // no extra |V| join per round. Round 1 recomputes everyone
-      // (init = degree is not a fixpoint certificate for anyone).
-      var dirty = cur
-      var converged = false
-      var i = 0
       val wcum = org.apache.spark.sql.expressions.Window
         .partitionBy($"src").orderBy($"val".desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)
-      while (!converged && i < maxIters) {
-        i += 1
+      var rounds = 0
+      // state (node, c, chg): chg marks last round's changed values;
+      // round 0 is the degree table, which certifies nobody
+      val out = Fixpoint.run("coreNumbers",
+        sym.groupBy($"src").agg(count(lit(1)).cast("long").as("c"))
+          .select($"src".as("node"), $"c", lit(true).as("chg")), maxIters) { (state, r) =>
+        if (r.index > 1) roundProbe.foreach(_(r.index - 1, state.select($"node", $"c")))
+        rounds = r.index
+        val cur = state.select($"node", $"c")
+        // the dirty set CARRIES each node's current value (c): nodes
+        // with a CHANGED neighbor (round 1: everyone), so change
+        // detection is a narrow filter over the round's result — no
+        // extra |V| join per round
+        val dirty = if (r.index == 1) cur else cur.join(
+          sym.join(state.filter($"chg").select($"node".as("src")), Seq("src"))
+            .select($"dst".as("node")).distinct(),
+          Seq("node"))
         // h-index of the neighbor multiset, for dirty nodes only, at
         // VALUE granularity: h = max over distinct neighbor values v of
         // min(v, C(v)), where C(v) = #neighbors with value ≥ v — the
@@ -509,41 +412,16 @@ object GraphAlgos {
           .withColumn("cum", sum($"cnt").over(wcum))
           .groupBy($"src")
           .agg(max(least($"val", $"cum")).as("c"), max($"c_old").as("c_old"))
-        // ONE materialization per round: the full next value table,
-        // with a changed-this-round bit folded in. Every dirty node
-        // takes its recomputed value (changed or not); everyone else
-        // carries over unchanged — disjoint by construction, so
-        // anti-join + union, no outer join, and change detection is a
-        // narrow filter over the materialized table instead of its own
-        // |V| join-and-materialize.
-        // convergence count rides the settle's own materialization job
-        // ([[Lineage.settleAgg]]) — one job per round, not two
-        val (nxt, row) = Lineage.settleAgg(
-          cur.join(dirty.select($"node"), Seq("node"), "left_anti")
-            .select($"node", $"c", lit(false).as("chg"))
-            .union(recomputed.select($"src".as("node"), $"c",
-              ($"c" =!= $"c_old").as("chg"))),
-          Seq(count_if($"chg")))
-        converged = row.getLong(0) == 0L
-        if (!converged) {
-          val changed = nxt.filter($"chg").select($"node", $"c")
-          Lineage.release(owned)
-          owned = nxt
-          cur = nxt.select($"node", $"c")
-          // next frontier: nodes with a CHANGED neighbor, with their
-          // current values attached — probed on the prepped src key
-          // (symmetric table: src ∈ changed emits the same neighbor
-          // set as dst ∈ changed)
-          dirty = cur.join(
-            sym.join(changed.select($"node".as("src")), Seq("src"))
-              .select($"dst".as("node")).distinct(),
-            Seq("node"))
-        } else Lineage.release(nxt) // value-identical to cur; cur is returned
-        roundProbe.foreach(_(i, cur))
+        // the full next value table with the changed bit folded in:
+        // every dirty node takes its recomputed value, everyone else
+        // carries over — disjoint, so anti-join + union, no outer join
+        cur.join(dirty.select($"node"), Seq("node"), "left_anti")
+          .select($"node", $"c", lit(false).as("chg"))
+          .union(recomputed.select($"src".as("node"), $"c",
+            ($"c" =!= $"c_old").as("chg")))
       }
-      require(converged,
-        s"coreNumbers did not converge in $maxIters rounds; raise maxIters")
-      cur.select($"node", $"c".as("coreness"))
+      roundProbe.foreach(_(rounds, out.select($"node", $"c")))
+      out.select($"node", $"c".as("coreness"))
     }
   }
 
@@ -580,9 +458,8 @@ object GraphAlgos {
     * partitioned window over the DISTINCT (edge, ρ) pairs (the
     * value-granularity h-index of [[coreNumbers]] — window input
     * collapses from triangle count to value support), an edge-keyed
-    * max, and one |E|-keyed patch join. Lineage settled per round
-    * (two descendants feed the next round). `roundProbe` is the
-    * same spec hook as [[coreNumbers]]'s.
+    * max, and one |E|-keyed patch join — one [[Fixpoint]] round.
+    * `roundProbe` is the same spec hook as [[coreNumbers]]'s.
     *
     * Returns (u, v, truss) for EVERY input edge, truss = λ* + 2.
     */
@@ -595,16 +472,16 @@ object GraphAlgos {
   ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges
+    val e = Lineage.cut(edges
       .select(least(col(uCol), col(vCol)).cast("long").as("u"),
         greatest(col(uCol), col(vCol)).cast("long").as("v"))
-      .filter($"u" =!= $"v").distinct().cutLineage()
+      .filter($"u" =!= $"v").distinct())
     // static incidence: each triangle contributes one row per member
     // edge e with its two partner edges (f, g), all in canonical
     // (min, max) form — 3T rows, built once, reused every round
     def ce(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
       struct(least(x, y).as("u"), greatest(x, y).as("v"))
-    val incRaw = enumerateTriangles(e)
+    val incRaw = Lineage.cut(enumerateTriangles(e)
       .select(explode(array(
         struct(ce($"a", $"b").as("e"), ce($"a", $"c").as("f"), ce($"b", $"c").as("g")),
         struct(ce($"a", $"c").as("e"), ce($"a", $"b").as("f"), ce($"b", $"c").as("g")),
@@ -612,40 +489,45 @@ object GraphAlgos {
       )).as("r"))
       .select($"r.e.u".as("eu"), $"r.e.v".as("ev"),
         $"r.f.u".as("fu"), $"r.f.v".as("fv"),
-        $"r.g.u".as("gu"), $"r.g.v".as("gv"))
-      .cutLineage()
+        $"r.g.u".as("gu"), $"r.g.v".as("gv")))
     // size the loop's shuffles to the incidence + edge volume, as in
     // [[coreNumbers]] (rationale there)
     val nWork = incRaw.count() + e.count()
-    // static incidence pre-partitioned + pre-sorted on (eu, ev) — the
-    // key of BOTH per-round probes (the recompute's dirty join and the
-    // next-frontier probe, re-keyed onto the e-slot below) AND of the
-    // initial support groupBy: every round reads the 3T-row side
-    // exchange-free and sort-free (guide §2.4, the bwEdgesPrep
-    // mechanism)
-    val inc = incRaw
-      .repartition(ScopedConf.partitionsFor(spark, nWork), $"eu", $"ev")
-      .sortWithinPartitions($"eu", $"ev").cutPreppedLineage()
+    // static incidence laid out on (eu, ev) — the key of BOTH per-round
+    // probes (the recompute's dirty join and the next-frontier probe,
+    // re-keyed onto the e-slot below) AND of the initial support groupBy
+    val inc = Lineage.prep(incRaw, Seq("eu", "ev"), Some(ScopedConf.partitionsFor(spark, nWork)))
     ScopedConf.withShufflePartitionsFor(spark, nWork) {
       val sup = inc.groupBy($"eu", $"ev").agg(count(lit(1)).cast("long").as("c"))
-      var cur = e
-        .join(sup, $"u" === $"eu" && $"v" === $"ev", "left")
-        .select($"u", $"v", coalesce($"c", lit(0L)).as("c"))
-        .cutLineage()
-      // reliable-checkpoint retention, as in [[coreNumbers]]: release
-      // round i−1's files once round i's state has materialized
-      var owned = cur
-      // round 1 recomputes every edge IN a triangle; support-0 edges
-      // already sit at their fixpoint (h-index of ∅ = 0 = λ₀)
-      var dirty = cur.filter($"c" > 0)
-      var converged = false
-      var i = 0
       val wcum = org.apache.spark.sql.expressions.Window
         .partitionBy($"eu", $"ev").orderBy($"val".desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)
-      while (!converged && i < maxIters) {
-        i += 1
+      var rounds = 0
+      // state (u, v, c, chg); round 1 recomputes every edge IN a
+      // triangle — support-0 edges already sit at their fixpoint
+      // (h-index of ∅ = 0 = λ₀)
+      val out = Fixpoint.run("trussNumbers",
+        e.join(sup, $"u" === $"eu" && $"v" === $"ev", "left")
+          .select($"u", $"v", coalesce($"c", lit(0L)).as("c"))
+          .withColumn("chg", $"c" > 0), maxIters) { (state, r) =>
+        if (r.index > 1) roundProbe.foreach(_(r.index - 1, state.select($"u", $"v", $"c")))
+        rounds = r.index
+        val cur = state.select($"u", $"v", $"c")
+        // next frontier: edges sharing a triangle with a changed edge —
+        // probed on the PREPPED (eu, ev) key: the incidence holds all
+        // three rotations, so the rows whose e-slot is a changed edge
+        // enumerate exactly the co-triangle partners (their f/g slots)
+        // in ONE exchange-free join
+        val dirty =
+          if (r.index == 1) state.filter($"chg").select($"u", $"v", $"c")
+          else cur.join(inc
+            .join(state.filter($"chg").select($"u".as("eu"), $"v".as("ev")), Seq("eu", "ev"))
+            .select(explode(array(
+              struct($"fu".as("u"), $"fv".as("v")),
+              struct($"gu".as("u"), $"gv".as("v")))).as("p"))
+            .select($"p.u", $"p.v")
+            .distinct(), Seq("u", "v"))
         // ρ per (dirty edge, triangle) = min of the two partners'
         // values; then the value-granularity h-index over ρ (see
         // coreNumbers for the histogram-collapse argument). c_old is
@@ -662,41 +544,13 @@ object GraphAlgos {
           .withColumn("cum", sum($"cnt").over(wcum))
           .groupBy($"eu", $"ev")
           .agg(max(least($"val", $"cum")).as("c"), max($"c_old").as("c_old"))
-        // convergence count rides the settle's own materialization job
-        // ([[Lineage.settleAgg]]) — one job per round, not two
-        val (nxt, row) = Lineage.settleAgg(
-          cur.join(dirty.select($"u", $"v"), Seq("u", "v"), "left_anti")
-            .select($"u", $"v", $"c", lit(false).as("chg"))
-            .union(recomputed.select($"eu".as("u"), $"ev".as("v"), $"c",
-              ($"c" =!= $"c_old").as("chg"))),
-          Seq(count_if($"chg")))
-        converged = row.getLong(0) == 0L
-        if (!converged) {
-          val changed = nxt.filter($"chg").select($"u", $"v")
-          Lineage.release(owned)
-          owned = nxt
-          cur = nxt.select($"u", $"v", $"c")
-          // next frontier: edges sharing a triangle with a changed
-          // edge — probed on the PREPPED (eu, ev) key: the incidence
-          // holds all three rotations, so the rows whose e-slot is a
-          // changed edge enumerate exactly the co-triangle partners
-          // (their f/g slots), the same set the old f-slot/g-slot
-          // probes produced, in ONE exchange-free join instead of two
-          // re-shuffles of the incidence
-          val dirtyKeys = inc
-            .join(changed.select($"u".as("eu"), $"v".as("ev")), Seq("eu", "ev"))
-            .select(explode(array(
-              struct($"fu".as("u"), $"fv".as("v")),
-              struct($"gu".as("u"), $"gv".as("v")))).as("p"))
-            .select($"p.u", $"p.v")
-            .distinct()
-          dirty = cur.join(dirtyKeys, Seq("u", "v"))
-        } else Lineage.release(nxt) // value-identical to cur; cur is returned
-        roundProbe.foreach(_(i, cur))
+        cur.join(dirty.select($"u", $"v"), Seq("u", "v"), "left_anti")
+          .select($"u", $"v", $"c", lit(false).as("chg"))
+          .union(recomputed.select($"eu".as("u"), $"ev".as("v"), $"c",
+            ($"c" =!= $"c_old").as("chg")))
       }
-      require(converged,
-        s"trussNumbers did not converge in $maxIters rounds; raise maxIters")
-      cur.select($"u", $"v", ($"c" + 2L).as("truss"))
+      roundProbe.foreach(_(rounds, out.select($"u", $"v", $"c")))
+      out.select($"u", $"v", ($"c" + 2L).as("truss"))
     }
   }
 
@@ -723,7 +577,7 @@ object GraphAlgos {
     * partial merge collapses every task to ≤ |V_task| sketches before
     * the shuffle. All state is fixed-size per node — the property
     * that makes ANF viable where exact neighborhood sets are
-    * quadratic. Lineage is cut per round as in [[bfsLevels]].
+    * quadratic. Lineage is cut per round.
     *
     * Returns (node, t, estimate, nonzero_buckets,
     * register_sum_scaled) for t = 0..maxT.
@@ -753,10 +607,7 @@ object GraphAlgos {
     import spark.implicits._
     graft.functions.HllRegisters.register(spark)
     val e = edges.select(col(uCol).cast("long").as("src"), col(vCol).cast("long").as("dst"))
-    val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().cutLineage()
-    // static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4, the bwEdgesPrep mechanism): every
+    // static join side laid out on the round join's key: every
     // round's neighbor equi-join reads the |E| side exchange-free and
     // sort-free instead of re-shuffling it per radius. Partitioned at
     // the SESSION shuffle count, deliberately NOT the 50k-rows
@@ -766,23 +617,21 @@ object GraphAlgos {
     // merge onto 1-2 partitions at bench scale (measured: the scoped
     // variant ran anf_closeness 0.80× — CPU down, wall up, the
     // parallelism-starvation signature).
-    val sym = symRaw
-      .repartition($"dst")
-      .sortWithinPartitions($"dst").cutPreppedLineage()
-    var cur = sym.select($"src".as("node")).distinct()
+    val sym = Lineage.prep(Lineage.cut(symmetric(e).distinct()), Seq("dst"))
+    var cur = Lineage.cut(sym.select($"src".as("node")).distinct()
       .select($"node",
         call_function(graft.functions.HllRegisters.InitName,
-          $"node".cast("string")).as("regs"))
-      .cutLineage()
+          $"node".cast("string")).as("regs")))
     var out = cur.select($"node", lit(0).as("t"), $"regs")
+    // not a [[Fixpoint]] loop: `out` reads every radius's state, so no
+    // round may be released, and there is no convergence to test
     for (t <- 1 to maxT) {
       val fromNbrs = sym
         .join(cur.select($"node".as("dst"), $"regs"), "dst")
         .select($"src".as("node"), $"regs")
-      cur = fromNbrs.union(cur)
+      cur = Lineage.cut(fromNbrs.union(cur)
         .groupBy($"node")
-        .agg(call_function(graft.functions.HllRegisters.MergeName, $"regs").as("regs"))
-        .cutLineage()
+        .agg(call_function(graft.functions.HllRegisters.MergeName, $"regs").as("regs")))
       out = out.union(cur.select($"node", lit(t).as("t"), $"regs"))
     }
     out
@@ -818,23 +667,20 @@ object GraphAlgos {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(uCol).cast("long").as("u"), col(vCol).cast("long").as("v"))
-    val biRaw = e.union(e.select($"v".as("u"), $"u".as("v")))
-      .distinct().cutLineage()
     // |E|-sized loop shuffles as in [[Components]]: the fixed-round
     // trajectory pipelines as one job, but every round still stages
     // two shuffles (pair count, per-node argmax) whose partition count
-    // would otherwise be the session default regardless of graph size
-    val nEdges = biRaw.count()
-    // static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4): each round's label equi-join reads the
-    // |E| side exchange-free — without this the pipelined trajectory
-    // re-reads one reused exchange of `bi` per round
-    val bi = biRaw
-      .repartition(ScopedConf.partitionsFor(spark, nEdges), $"v")
-      .sortWithinPartitions($"v").cutPreppedLineage()
+    // would otherwise be the session default regardless of graph size;
+    // the label equi-join reads the v-prepped side exchange-free —
+    // without it the pipelined trajectory re-reads one reused exchange
+    // of `bi` per round
+    val (bi, nEdges) = prepped(
+      e.union(e.select($"v".as("u"), $"u".as("v"))).distinct(), "v")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
       var labels = bi.select($"u".as("node")).distinct()
         .withColumn("lbl", $"node")
+      // not a [[Fixpoint]] loop: the trajectory is never cut per round
+      // (one job for all rounds), which a per-round settle would break
       for (_ <- 1 to iters) {
         labels = bi
           .join(labels.select($"node".as("v"), $"lbl"), "v")
@@ -846,7 +692,7 @@ object GraphAlgos {
       }
       // materialize INSIDE the narrowed-partition scope so the loop's
       // shuffles actually run at `parts` (the trajectory is lazy)
-      labels.cutLineage()
+      Lineage.cut(labels)
     }
   }
 
@@ -931,8 +777,8 @@ object GraphAlgos {
     * per dst, and a left join keeps strict improvements. Arrivals
     * only decrease, so frontier-empty ⟺ fixpoint; rounds are bounded
     * by the (shortcut-reduced) temporal diameter; per-round cost is
-    * O(frontier out-edges), never O(|E|). State is settled per round
-    * and superseded rounds are [[Lineage.release]]d. Returns
+    * O(frontier out-edges), never O(|E|), one [[Fixpoint]] round each.
+    * Returns
     * (node, arr) for every time-respecting-reachable node; the seed
     * carries `arr = startTs` (it departs on any edge with
     * dep ≥ startTs). Unreachable nodes are absent — the honest
@@ -950,49 +796,14 @@ object GraphAlgos {
   ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val raw = edges.select(col(uCol).cast("long").as("src"),
-      col(vCol).cast("long").as("dst"), col(depCol).cast("long").as("dep"),
-      col(arrCol).cast("long").as("ets"))
-      .filter($"dep" <= $"ets") // a path cannot arrive before it departs
-      .cutLineage()
-    val nEdges = raw.count()
-    // static side pre-partitioned + pre-sorted (see bwEdgesPrep)
-    val e = raw.repartition(ScopedConf.partitionsFor(spark, nEdges), $"src")
-      .sortWithinPartitions($"src").cutPreppedLineage()
+    val (e, nEdges) = temporalPrep(edges, uCol, vCol, depCol, arrCol)
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // FUSED round — see [[temporalBoundedWait]]: ONE node-keyed
-      // groupBy merges the round's candidates into the state (min
-      // arrival per node, map-side combined) AND flags the improved
-      // rows (no previous arrival, or the min beat it) — which ARE the
-      // next frontier — with the convergence count riding the settle's
-      // own materialization job. The old round's separate candidate
-      // groupBy, left-outer improvement join, improved settle, count
-      // job, and merge materialization collapse into one exchange and
-      // one job. State has one row per node, so max(prev) recovers the
-      // single previous arrival (null for first-reached nodes).
-      var state = Lineage.settle(
-        Seq((seed, startTs)).toDF("node", "arr").withColumn("chg", lit(true)))
-      var n = 1L
-      var i = 0
-      while (n > 0 && i < maxIters) {
-        i += 1
-        val cand = state.filter($"chg")
+      Fixpoint.run("temporalReachable",
+        Seq((seed, startTs)).toDF("node", "arr").withColumn("chg", lit(true)), maxIters) {
+        (state, _) => improve(state, state.filter($"chg")
           .join(e, $"node" === $"src" && $"dep" >= $"arr")
-          .select($"dst".as("node"), $"ets".as("arr"),
-            lit(null).cast("long").as("prev"))
-        val (next, row) = Lineage.settleAgg(
-          state.select($"node", $"arr", $"arr".as("prev")).unionByName(cand)
-            .groupBy($"node").agg(min($"arr").as("arr"), max($"prev").as("prev"))
-            .select($"node", $"arr",
-              ($"prev".isNull || $"arr" < $"prev").as("chg")),
-          Seq(count_if($"chg")))
-        n = row.getLong(0)
-        Lineage.release(state)
-        state = next
-      }
-      require(n == 0,
-        s"temporalReachable did not converge in $maxIters rounds; raise maxIters")
-      state.select($"node", $"arr")
+          .select($"dst".as("node"), $"ets".as("arr")), "arr")
+      }.select($"node", $"arr")
     }
   }
 
@@ -1179,93 +990,45 @@ object GraphAlgos {
     require(maxWait >= 0, s"temporalBoundedWait: maxWait must be >= 0, got $maxWait")
     val spark = edges.sparkSession
     import spark.implicits._
-    // static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4): every round's frontier equi-join reads
-    // the edge table exchange-free and sort-free
-    val (e, nEdges) = bwEdgesPrep(edges, uCol, vCol, depCol, arrCol)
-    val labelCap = temporalLabelCap(spark)
+    val (e, nEdges) = temporalPrep(edges, uCol, vCol, depCol, arrCol)
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // FUSED round: ONE label-keyed groupBy replaces the old
-      // distinct + left-anti + merge chain — a label is NOVEL iff no
-      // state row carried it into the round (max(old) is null), the
-      // frontier is the settled state filtered to chg, and the
-      // convergence count rides the settle's own materialization job
-      // ([[Lineage.settleAgg]]). Per round: one exchange moving
-      // |state| + |cand| rows and ONE job, where the r13 shape ran
-      // three jobs (settle fresh, count, settle merge) and two
-      // label-keyed exchanges, and the r14 keyed-merge variant added a
-      // full state repartition + sort per round on top (driver-measured
-      // 0.69x — the regression this shape resolves).
-      var state = Lineage.settle(
+      // the round's frontier is the state filtered to chg (the labels
+      // [[novel]] flagged); the label count guards the state's mass
+      Fixpoint.run("temporalBoundedWait",
         e.filter($"src" === seed && $"dep" >= startTs)
           .select($"dst".as("node"), $"ets".as("a")).distinct()
-          .withColumn("chg", lit(true)))
-      var n = state.count()
-      var total = n
-      var i = 0
-      while (n > 0 && i < maxIters) {
-        requireLabelsBounded("temporalBoundedWait", total, labelCap, i,
-          "coarsen the edge arrival timestamps before calling")
-        i += 1
-        val cand = state.filter($"chg")
-          .join(e, $"node" === $"src" && $"dep" >= $"a" &&
-            $"dep" - $"a" <= maxWait)
-          .select($"dst".as("node"), $"ets".as("a"),
-            lit(null).cast("boolean").as("old"))
-        val (next, row) = Lineage.settleAgg(
-          state.select($"node", $"a", lit(true).as("old")).unionByName(cand)
-            .groupBy($"node", $"a").agg(max($"old").isNull.as("chg")),
-          Seq(count_if($"chg")))
-        n = row.getLong(0)
-        total += n
-        Lineage.release(state)
-        state = next
-      }
-      require(n == 0,
-        s"temporalBoundedWait did not converge in $maxIters rounds; raise maxIters")
-      state.filter($"node" =!= seed)
+          .withColumn("chg", lit(true)), maxIters,
+        done = Fixpoint.labelCapped(spark, "temporalBoundedWait",
+          "coarsen the edge arrival timestamps before calling")) { (state, _) =>
+        novel(state, state.filter($"chg")
+          .join(e, $"node" === $"src" && $"dep" >= $"a" && $"dep" - $"a" <= maxWait)
+          .select($"dst".as("node"), $"ets".as("a")), Seq("node", "a"))
+      }.filter($"node" =!= seed)
         .groupBy($"node").agg(min($"a").as("arr"))
     }
   }
 
-  /** Distinct-label state bound shared by the bounded-wait temporal
-    * family (`spark.graft.temporalLabelMaxRows`, default 10 000 000):
-    * these operators' per-node state is an exact distinct label SET
-    * (pruning is unsound under waiting bounds), so its mass is a data
-    * property, not a structural one — a dense seed on fine-grained
-    * timestamps can balloon it silently until the round budget saves
-    * it (or doesn't). The loop already pays a driver-side count per
-    * round (convergence), so the guard reuses that exact number and
-    * raises BEFORE launching the next round's join — the prCurve
-    * enforce-the-precondition contract at zero added cost.
+  /** Merge candidate (node, `v`) rows into (node, `v`, chg) state by
+    * min, flagging the improved rows — no previous value, or the min
+    * beat it — which ARE the next frontier: ONE node-keyed groupBy
+    * (map-side combined) per round. State has one row per node, so
+    * max(prev) recovers the single previous value.
     */
-  /** Dev-only per-round phase tracing for the iterative loops
-    * (`-Dgraft.loopTrace=1`): the loops' cost floor is Spark job
-    * overhead × rounds, so optimizing them needs per-phase wall
-    * attribution (which job in the round carries the time), which the
-    * query-level bench cannot see. Off by default; zero cost when off.
+  private def improve(state: DataFrame, cand: DataFrame, v: String): DataFrame =
+    state.select(col("node"), col(v), col(v).as("prev"))
+      .unionByName(cand.withColumn("prev", lit(null).cast("long")))
+      .groupBy(col("node")).agg(min(col(v)).as(v), max(col("prev")).as("prev"))
+      .select(col("node"), col(v), (col("prev").isNull || col(v) < col("prev")).as("chg"))
+
+  /** Merge candidate label rows into label-SET state: ONE groupBy on
+    * the label `keys` flags the NOVEL labels (no state row carried the
+    * label into the round ⇒ max(old) is null), which ARE the next
+    * frontier.
     */
-  private def loopTrace(op: String, round: Int, msg: => String): Unit =
-    if (sys.props.get("graft.loopTrace").contains("1"))
-      System.err.println(s"[loop] $op r$round $msg")
-
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  private def temporalLabelCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.temporalLabelMaxRows")
-      .map(_.toLong).getOrElse(10000000L)
-
-  private def requireLabelsBounded(
-      op: String, total: Long, cap: Long, round: Int, lever: String): Unit =
-    require(total <= cap,
-      s"$op: distinct-label state has $total rows entering round ${round + 1}, " +
-        s"over spark.graft.temporalLabelMaxRows=$cap — exact label sets are " +
-        s"the only sound state under waiting bounds, so this growth is real; " +
-        s"$lever, or raise the cap if the cluster can hold the state")
+  private[operators] def novel(state: DataFrame, cand: DataFrame, keys: Seq[String]): DataFrame =
+    state.select(keys.map(col) :+ lit(true).as("old"): _*)
+      .unionByName(cand.select(keys.map(col) :+ lit(null).cast("boolean").as("old"): _*))
+      .groupBy(keys.map(col): _*).agg(max(col("old")).isNull.as("chg"))
 
   /** LATEST-DEPARTURE influence set — the backward twin of
     * [[temporalReachable]]: every node that can reach `target` along
@@ -1335,8 +1098,7 @@ object GraphAlgos {
     * never resurrect: domination is transitive, so a dominator (or
     * its dominator) is always still present to kill the re-candidate.
     * Rounds are bounded by the (shortcut-reduced) temporal diameter,
-    * exactly as for earliest arrival; state settled per round,
-    * superseded rounds [[Lineage.release]]d.
+    * exactly as for earliest arrival, one [[Fixpoint]] round each.
     *
     * Returns (node, d, a) — the Pareto front per reachable node, seed
     * excluded (its trivial label has no departed edge). Shortcut
@@ -1357,17 +1119,7 @@ object GraphAlgos {
   ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val raw = edges.select(col(uCol).cast("long").as("src"),
-      col(vCol).cast("long").as("dst"), col(depCol).cast("long").as("dep"),
-      col(arrCol).cast("long").as("ets"))
-      .filter($"dep" <= $"ets") // a path cannot arrive before it departs
-      .cutLineage()
-    val nEdges = raw.count()
-    // static side pre-partitioned + pre-sorted on the round join's key
-    // (see bwEdgesPrep): every round's frontier equi-join reads the
-    // edge table exchange-free and sort-free
-    val e = raw.repartition(ScopedConf.partitionsFor(spark, nEdges), $"src")
-      .sortWithinPartitions($"src").cutPreppedLineage()
+    val (e, nEdges) = temporalPrep(edges, uCol, vCol, depCol, arrCol)
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
       // keep each node's Pareto front: per (node, d) only the minimal
       // arrival survives, then a pair survives iff its arrival beats
@@ -1382,28 +1134,19 @@ object GraphAlgos {
           .drop("__best")
       }
       // first hops: the seed departs on any edge with dep >= startTs,
-      // stamping the path's source departure
-      // FUSED round — see [[temporalBoundedWait]]: the round's ONE
-      // materialization is the merged state with the fresh rows
-      // flagged (plain union: a fresh pair may dominate a stale state
-      // pair, but stale pairs are harmless — they never re-relax, they
-      // can only KILL future candidates a live dominator would kill
-      // anyway, and no objective monotone in (−d, a) can prefer them;
-      // the public front re-prunes once at the end). The survivors'
-      // anti-join/prune plan evaluates inside that settle, and the
-      // convergence count rides the same job ([[Lineage.settleAgg]]) —
-      // one job per round where the old shape ran three. (A keyed-cut
-      // merge — the bounded-wait loops' old shape — was MEASURED here
-      // and reverted: fronts are structurally small, so a per-round
+      // stamping the path's source departure. The round's state is the
+      // merged state with the fresh rows flagged (plain union: a fresh
+      // pair may dominate a stale state pair, but stale pairs are
+      // harmless — they never re-relax, they can only KILL future
+      // candidates a live dominator would kill anyway, and no objective
+      // monotone in (−d, a) can prefer them; the public front re-prunes
+      // once at the end). (A keyed-cut merge was MEASURED here and
+      // reverted: fronts are structurally small, so a per-round
       // repartition costs more than the exchange it saves.)
-      var state = Lineage.settle(prune(
+      prune(Fixpoint.run("temporalParetoLabels", prune(
         e.filter($"src" === seed && $"dep" >= startTs)
           .select($"dst".as("node"), $"dep".as("d"), $"ets".as("a")))
-        .withColumn("chg", lit(true)))
-      var n = state.count()
-      var i = 0
-      while (n > 0 && i < maxIters) {
-        i += 1
+        .withColumn("chg", lit(true)), maxIters) { (state, _) =>
         val cand = state.filter($"chg")
           .join(e, $"node" === $"src" && $"dep" >= $"a")
           .select($"dst".as("node"), $"d", $"ets".as("a"))
@@ -1417,17 +1160,9 @@ object GraphAlgos {
           .join(state.as("s"),
             $"c.node" === $"s.node" && $"s.d" >= $"c.d" && $"s.a" <= $"c.a",
             "left_anti"))
-        val (next, row) = Lineage.settleAgg(
-          state.select($"node", $"d", $"a", lit(false).as("chg"))
-            .unionByName(fresh.withColumn("chg", lit(true))),
-          Seq(count_if($"chg")))
-        n = row.getLong(0)
-        Lineage.release(state)
-        state = next
-      }
-      require(n == 0,
-        s"temporalParetoLabels did not converge in $maxIters rounds; raise maxIters")
-      prune(state.filter($"node" =!= seed))
+        state.select($"node", $"d", $"a", lit(false).as("chg"))
+          .unionByName(fresh.withColumn("chg", lit(true)))
+      }.filter($"node" =!= seed))
     }
   }
 
@@ -1516,15 +1251,7 @@ object GraphAlgos {
     require(seeds.nonEmpty, "temporalParetoLabelsMulti: seeds must be non-empty")
     val spark = edges.sparkSession
     import spark.implicits._
-    val raw = edges.select(col(uCol).cast("long").as("src"),
-      col(vCol).cast("long").as("dst"), col(depCol).cast("long").as("dep"),
-      col(arrCol).cast("long").as("ets"))
-      .filter($"dep" <= $"ets")
-      .cutLineage()
-    val nEdges = raw.count()
-    // static side pre-partitioned + pre-sorted (see bwEdgesPrep)
-    val e = raw.repartition(ScopedConf.partitionsFor(spark, nEdges), $"src")
-      .sortWithinPartitions($"src").cutPreppedLineage()
+    val (e, nEdges) = temporalPrep(edges, uCol, vCol, depCol, arrCol)
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
       def prune(labels: DataFrame): DataFrame = {
         val w = org.apache.spark.sql.expressions.Window
@@ -1536,18 +1263,11 @@ object GraphAlgos {
           .drop("__best")
       }
       val seedsDf = seeds.distinct.toDF("seed")
-      // FUSED round — see [[temporalParetoLabels]]: the round's ONE
-      // materialization is the merged state with the fresh rows
-      // flagged, and the convergence count rides the same job
-      // ([[Lineage.settleAgg]]) — one job per round instead of three.
-      var state = Lineage.settle(prune(
+      // the [[temporalParetoLabels]] round, keyed (seed, node)
+      prune(Fixpoint.run("temporalParetoLabelsMulti", prune(
         e.join(broadcast(seedsDf), $"src" === $"seed" && $"dep" >= startTs)
           .select($"seed", $"dst".as("node"), $"dep".as("d"), $"ets".as("a")))
-        .withColumn("chg", lit(true)))
-      var n = state.count()
-      var i = 0
-      while (n > 0 && i < maxIters) {
-        i += 1
+        .withColumn("chg", lit(true)), maxIters) { (state, _) =>
         val cand = state.filter($"chg")
           .join(e, $"node" === $"src" && $"dep" >= $"a")
           .select($"seed", $"dst".as("node"), $"d", $"ets".as("a"))
@@ -1557,19 +1277,9 @@ object GraphAlgos {
             $"c.seed" === $"s.seed" && $"c.node" === $"s.node" &&
               $"s.d" >= $"c.d" && $"s.a" <= $"c.a",
             "left_anti"))
-        val ((next, row), tS) = timed(Lineage.settleAgg(
-          state.select($"seed", $"node", $"d", $"a", lit(false).as("chg"))
-            .unionByName(fresh.withColumn("chg", lit(true))),
-          Seq(count_if($"chg"))))
-        n = row.getLong(0)
-        loopTrace("paretoMulti", i, f"fresh=$n settle=$tS%.2f")
-        Lineage.release(state)
-        state = next
-      }
-      require(n == 0,
-        s"temporalParetoLabelsMulti did not converge in $maxIters rounds; " +
-          "raise maxIters")
-      prune(state.filter($"node" =!= $"seed"))
+        state.select($"seed", $"node", $"d", $"a", lit(false).as("chg"))
+          .unionByName(fresh.withColumn("chg", lit(true)))
+      }.filter($"node" =!= $"seed"))
     }
   }
 
@@ -1643,23 +1353,14 @@ object GraphAlgos {
       arrCol: String,
       maxIters: Int = 40,
       registerWidth: Int = 4096,
-      // measurement hook: receives the converged round count. Rounds
-      // are the operator's cost floor (job overhead × rounds once the
-      // payload shape is right), and the [[chainShortcuts]] round-
-      // collapse claim is gated on this number — see GraphAlgosSpec.
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None,
   ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     graft.functions.HllRegistersM.register(spark)
     graft.functions.HllRegistersM.checkWidth(registerWidth)
-    val e = edges.select(col(uCol).cast("long").as("src"),
-      col(vCol).cast("long").as("dst"), col(depCol).cast("long").as("dep"),
-      col(arrCol).cast("long").as("ets"))
-      .filter($"dep" <= $"ets")
+    val e = Lineage.cut(temporalEdges(edges, uCol, vCol, depCol, arrCol)
       .distinct()
-      .withColumn("eid", monotonically_increasing_id())
-      .cutLineage()
+      .withColumn("eid", monotonically_increasing_id()))
     val nEdges = e.count()
     val dstInit = call_function(
       graft.functions.HllRegistersM.InitName, $"dst".cast("string"),
@@ -1677,7 +1378,7 @@ object GraphAlgos {
       val bps = e.select($"src".as("pn"), $"dep".as("pb")).distinct()
       val wAsof = W.partitionBy($"pn").orderBy($"tt".desc, $"isB".desc)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
-      val ePtr = Lineage.settle(
+      val (ePtr, _) = Lineage.settle(
         bps.select($"pn", $"pb".as("tt"), lit(1).as("isB"),
             $"pb", lit(null).cast("long").as("eid"))
           .union(e.select($"dst".as("pn"), $"ets".as("tt"), lit(0).as("isB"),
@@ -1686,17 +1387,13 @@ object GraphAlgos {
           .filter($"isB" === 0 && $"pbAt".isNotNull)
           .select($"eid", $"pbAt"))
       // pointer rows the rounds re-join: (src, dep) of the edge plus
-      // its (dst, pbAt) state key — pre-partitioned + pre-sorted on
-      // that key (cut preserves both), so every round's contrib join
-      // reads the pointer side exchange-free and sort-free instead of
-      // re-shuffling all |E| pointer rows per round
-      val eq = e.join(ePtr, "eid")
-        .select($"src", $"dep", $"dst", $"pbAt")
-        .repartition(ScopedConf.partitionsFor(spark, nEdges), $"dst", $"pbAt")
-        .sortWithinPartitions($"dst", $"pbAt")
-        .cutPreppedLineage()
+      // its (dst, pbAt) state key, laid out on that key, so every
+      // round's contrib join reads the pointer side exchange-free and
+      // sort-free instead of re-shuffling all |E| pointer rows per round
+      val eq = Lineage.prep(e.join(ePtr, "eid").select($"src", $"dep", $"dst", $"pbAt"),
+        Seq("dst", "pbAt"), Some(ScopedConf.partitionsFor(spark, nEdges)))
       // static {y} contributions, pre-merged to one row per (x, dep)
-      val initAtDep = Lineage.settle(
+      val (initAtDep, _) = Lineage.settle(
         e.select($"src", $"dep", dstInit)
           .groupBy($"src", $"dep").agg(mergeOf($"regs").as("regs")))
       // grouped (x, dep) contributions → suffix state S(x, b): running
@@ -1721,9 +1418,9 @@ object GraphAlgos {
       //
       // KEYED state, JOIN-shaped merge (guide §2.3/§2.4 — shuffle the
       // proxy, not the payload): the state lives hash(src)-partitioned
-      // across rounds ([[Lineage.settleKeyedAgg]] preserves the
-      // layout while dropping origin stats, so the estimate cannot
-      // compound), and the round folds the contributions in with a
+      // across rounds (a `keyed` settle preserves the layout while
+      // dropping origin stats, so the estimate cannot compound), and
+      // the round folds the contributions in with a
       // co-partitioned LEFT join — contribG is repartitioned on src at
       // the state's partition count, so its (src, dep) groupBy AND the
       // state join AND the suffix window all run exchange-free. Per
@@ -1743,21 +1440,14 @@ object GraphAlgos {
       // yields bit-identical registers (register-wise max is
       // associative, commutative, idempotent; the register-exact
       // oracle pins it). The change bit rides the same pass (`rsum <
-      // prevSum` after the window, prevSum carried through the join),
-      // and the convergence count rides the settle's materialization
-      // job ([[Lineage.settleAgg]] discipline) — one job per round.
+      // prevSum` after the window, prevSum carried through the join).
       val merge2 = (a: Column, b: Column) =>
         call_function(graft.functions.HllRegistersM.Merge2Name, a, b)
       val partsK = ScopedConf.partitionsFor(spark, nEdges)
       // init: suffixize's window exchange lands the state hash(src)
-      val stateInit = Lineage.settleKeyedAgg(
-        withSum(suffixize(initAtDep)).withColumn("chg", lit(true)),
-        Seq(count(lit(1))))
-      var state = stateInit._1
-      var nChanged = stateInit._2.getLong(0)
-      var i = 0
-      while (nChanged > 0 && i < maxIters) {
-        i += 1
+      val state = Fixpoint.run("temporalAnfReach",
+        withSum(suffixize(initAtDep)).withColumn("chg", lit(true)), maxIters, keyed = true,
+        hint = "raise maxIters (or feed chainShortcuts edges to collapse rounds)") { (state, _) =>
         val changed = state.filter($"chg")
           .select($"src".as("qn"), $"dep".as("qb"), $"regs")
         val contrib = eq
@@ -1766,24 +1456,14 @@ object GraphAlgos {
         // combined once per key, landed on the state's partitioning
         val contribG = contrib.repartition(partsK, $"src")
           .groupBy($"src", $"dep").agg(mergeOf($"regs").as("cregs"))
-        val ((next, row), tN) = timed(Lineage.settleKeyedAgg(
-          withSum(suffixize(
-            state.join(contribG, Seq("src", "dep"), "left")
-              .select($"src", $"dep",
-                merge2($"regs", $"cregs").as("regs"),
-                $"rsum".as("prevSum"))))
-            .withColumn("chg", $"rsum" < $"prevSum")
-            .select($"src", $"dep", $"regs", $"rsum", $"chg"),
-          Seq(count_if($"chg"))))
-        nChanged = row.getLong(0)
-        loopTrace("anfState", i, f"changed=$nChanged settle=$tN%.2f")
-        Lineage.release(state)
-        state = next
+        withSum(suffixize(
+          state.join(contribG, Seq("src", "dep"), "left")
+            .select($"src", $"dep",
+              merge2($"regs", $"cregs").as("regs"),
+              $"rsum".as("prevSum"))))
+          .withColumn("chg", $"rsum" < $"prevSum")
+          .select($"src", $"dep", $"regs", $"rsum", $"chg")
       }
-      require(nChanged == 0,
-        s"temporalAnfReach did not converge in $maxIters rounds; raise " +
-          "maxIters (or feed chainShortcuts edges to collapse rounds)")
-      roundsOut.foreach(_.set(i))
       // the FULL suffix table: S(x, b) for every breakpoint b — the
       // profile readouts (any start time T) come from this for free.
       // A narrow projection over the loop's already-settled state: no
@@ -1806,10 +1486,9 @@ object GraphAlgos {
       arrCol: String,
       maxIters: Int = 40,
       registerWidth: Int = 4096,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None,
   ): DataFrame = {
     val st = temporalAnfReachState(edges, uCol, vCol, depCol, arrCol,
-      maxIters, registerWidth, roundsOut)
+      maxIters, registerWidth)
     val spark = st.sparkSession
     import spark.implicits._
     val W = org.apache.spark.sql.expressions.Window
@@ -1821,7 +1500,7 @@ object GraphAlgos {
         st.withColumn("__rn",
             row_number().over(W.partitionBy($"node").orderBy($"dep".asc)))
           .filter($"__rn" === 1)
-          .select($"node", $"regs"))
+          .select($"node", $"regs"))._1
     }
   }
 
@@ -1863,7 +1542,7 @@ object GraphAlgos {
             .groupBy($"node").agg(min($"dep").as("dep"))
             .withColumn("sweep", lit(i))
             .withColumn("start_ms", lit(t))
-        }.reduce(_ unionByName _))
+        }.reduce(_ unionByName _))._1
     }
     state.join(picks, Seq("node", "dep"))
       .select($"node", $"sweep", $"start_ms", $"regs")
@@ -1884,7 +1563,7 @@ object GraphAlgos {
     *
     * That contract is ENFORCED, not prose: the per-round convergence
     * count doubles as a state-mass guard
-    * (`spark.graft.temporalLabelMaxRows`, see [[temporalLabelCap]]) —
+    * (`spark.graft.temporalLabelMaxRows`, see [[Fixpoint.labelCapped]]) —
     * a dense seed raises loudly instead of ballooning until the round
     * budget saves it. The in-plan lever is `quantizeDepartures =
     * Some(q)`: the seed departure d each label carries is floored to
@@ -1959,88 +1638,73 @@ object GraphAlgos {
           .groupBy($"node").agg(min($"a" - $"d").as("fastest"))
 
       case None =>
-    val (e, nEdges) = bwEdgesPrep(edges, uCol, vCol, depCol, arrCol)
-    val labelCap = temporalLabelCap(spark)
-    // floor-to-multiple in exact long arithmetic (pmod is always
-    // non-negative, so this is floor division × q for any sign of dep)
-    val dExpr = quantizeDepartures match {
-      case Some(q) => ($"dep" - pmod($"dep", lit(q))).as("d")
-      case None => $"dep".as("d")
-    }
-    ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // FUSED round — see [[temporalBoundedWait]]: one label-keyed
-      // groupBy replaces distinct + left-anti + keyed merge (novelty =
-      // no state row carried the label in), and the convergence count
-      // rides the settle's materialization job. One job and one
-      // label-keyed exchange per round instead of three jobs, two
-      // exchanges, and a full state repartition + sort.
-      var state = Lineage.settle(
-        e.filter($"src" === seed && $"dep" >= startTs)
-          .select($"dst".as("node"), dExpr, $"ets".as("a")).distinct()
-          .withColumn("chg", lit(true)))
-      var n = state.count()
-      var total = n
-      var i = 0
-      while (n > 0 && i < maxIters) {
-        requireLabelsBounded("temporalBoundedWaitFastest", total, labelCap, i,
-          "pass quantizeDepartures = Some(q) to merge d within q-buckets " +
-            "(exact reachability, duration upper-bounded within q) and/or " +
-            "quantizeArrivals = Some(g) to collapse arrival classes " +
-            "(the g-slack contract)")
-        i += 1
-        val cand = state.filter($"chg")
-          .join(e, $"node" === $"src" && $"dep" >= $"a" &&
-            $"dep" - $"a" <= maxWait)
-          .select($"dst".as("node"), $"d", $"ets".as("a"),
-            lit(null).cast("boolean").as("old"))
-        val ((next, row), tS) = timed(Lineage.settleAgg(
-          state.select($"node", $"d", $"a", lit(true).as("old")).unionByName(cand)
-            .groupBy($"node", $"d", $"a").agg(max($"old").isNull.as("chg")),
-          Seq(count_if($"chg"))))
-        n = row.getLong(0)
-        total += n
-        Lineage.release(state)
-        state = next
-        loopTrace("bwFastest", i, f"fresh=$n settle=$tS%.2f total=$total")
-      }
-      require(n == 0,
-        s"temporalBoundedWaitFastest did not converge in $maxIters rounds; " +
-          "raise maxIters")
-      state.filter($"node" =!= seed)
-        .groupBy($"node").agg(min($"a" - $"d").as("fastest"))
-    }
+        val (e, nEdges) = temporalPrep(edges, uCol, vCol, depCol, arrCol)
+        ScopedConf.withShufflePartitionsFor(spark, nEdges) {
+          // the [[temporalBoundedWait]] round with d carried per label
+          Fixpoint.run("temporalBoundedWaitFastest",
+            e.filter($"src" === seed && $"dep" >= startTs)
+              .select($"dst".as("node"), departure(quantizeDepartures), $"ets".as("a"))
+              .distinct().withColumn("chg", lit(true)), maxIters,
+            done = Fixpoint.labelCapped(spark, "temporalBoundedWaitFastest",
+              "pass quantizeDepartures = Some(q) to merge d within q-buckets " +
+                "(exact reachability, duration upper-bounded within q) and/or " +
+                "quantizeArrivals = Some(g) to collapse arrival classes " +
+                "(the g-slack contract)")) { (state, _) =>
+            novel(state, state.filter($"chg")
+              .join(e, $"node" === $"src" && $"dep" >= $"a" && $"dep" - $"a" <= maxWait)
+              .select($"dst".as("node"), $"d", $"ets".as("a")), Seq("node", "d", "a"))
+          }.filter($"node" =!= seed)
+            .groupBy($"node").agg(min($"a" - $"d").as("fastest"))
+        }
     }
   }
 
-  /** shared edge normalization for the bounded-wait family: cast,
-    * drop time-reversed rows, cut lineage, count (the count sizes the
-    * loop's scoped shuffle partitioning and is the state-mass guard's
-    * denominator).
+  /** A label's carried seed departure `d`: the edge's dep, floored to a
+    * multiple of q under `quantizeDepartures = Some(q)` (exact long
+    * arithmetic — pmod is always non-negative, so this is floor
+    * division × q for any sign of dep).
     */
-  private def bwEdgesPrep(edges: DataFrame, uCol: String, vCol: String,
-      depCol: String, arrCol: String): (DataFrame, Long) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val raw = edges.select(col(uCol).cast("long").as("src"),
+  private def departure(quantize: Option[Long]): Column = quantize match {
+    case Some(q) => (col("dep") - pmod(col("dep"), lit(q))).as("d")
+    case None => col("dep").as("d")
+  }
+
+  /** (u, v, dep, arr) → (src, dst, dep, ets) longs, dropping
+    * time-reversed rows (a path cannot arrive before it departs).
+    */
+  private def temporalEdges(edges: DataFrame, uCol: String, vCol: String,
+      depCol: String, arrCol: String): DataFrame =
+    edges.select(col(uCol).cast("long").as("src"),
       col(vCol).cast("long").as("dst"), col(depCol).cast("long").as("dep"),
       col(arrCol).cast("long").as("ets"))
-      .filter($"dep" <= $"ets")
-      .cutLineage()
-    val n = raw.count()
-    // pre-partition + pre-sort the STATIC side of every round's
-    // frontier equi-join on its join key, at exactly the partition
-    // count the loop's scoped shuffles will use: localCheckpoint
-    // preserves partitioning AND ordering, so each round's sort-merge
-    // join reads the edge table exchange-free and sort-free — the old
-    // shape re-shuffled and re-sorted all |E| rows once per round
-    // (measured ~1.2 s/round of the bounded-wait loops' ~1.4 s/round
-    // at sf0.1), a per-round cost that scales with the CORPUS rather
-    // than the frontier (guide §2.4: remove shuffles outright).
-    val p = ScopedConf.partitionsFor(spark, n)
-    val e = raw.repartition(p, $"src").sortWithinPartitions($"src")
-      .cutPreppedLineage()
-    (e, n)
+      .filter(col("dep") <= col("ets"))
+
+  /** [[temporalEdges]] laid out on src for the frontier equi-join
+    * ([[prepped]]): unprepped, every round re-shuffles and re-sorts all
+    * |E| rows (measured ~1.2 s/round of the bounded-wait loops'
+    * ~1.4 s/round at sf0.1), a per-round cost that scales with the
+    * CORPUS rather than the frontier. The count sizes the loop's
+    * scoped shuffles.
+    */
+  private def temporalPrep(edges: DataFrame, uCol: String, vCol: String,
+      depCol: String, arrCol: String): (DataFrame, Long) =
+    prepped(temporalEdges(edges, uCol, vCol, depCol, arrCol), "src")
+
+  /** Cut `raw`, count it, and lay it out on `key` at the partition
+    * count the loop's scoped shuffles will use ([[Lineage.prep]]), so
+    * every round's equi-join on `key` reads it exchange-free and
+    * sort-free (guide §2.4). Returns (prepped, row count).
+    */
+  private[operators] def prepped(raw: DataFrame, key: String): (DataFrame, Long) = {
+    val cut = Lineage.cut(raw)
+    val n = cut.count()
+    (Lineage.prep(cut, Seq(key), Some(ScopedConf.partitionsFor(raw.sparkSession, n))), n)
   }
+
+  /** A (src, dst, …) edge list with every edge also written dst → src. */
+  private[operators] def symmetric(e: DataFrame): DataFrame =
+    e.union(e.select(col("dst").as("src") +: col("src").as("dst") +:
+      e.columns.filterNot(Set("src", "dst")).map(col): _*))
 
   /** The g-slack bounded-wait loop's SETTLED STATE TABLE —
     * (node, d, af, ac, a): for every (node, carried seed departure d,
@@ -2085,42 +1749,28 @@ object GraphAlgos {
     val g = arrivalQuantum
     val spark = edges.sparkSession
     import spark.implicits._
-    val (e, nEdges) = bwEdgesPrep(edges, uCol, vCol, depCol, arrCol)
-    val labelCap = temporalLabelCap(spark)
-    val dExpr = quantizeDepartures match {
-      case Some(q) => ($"dep" - pmod($"dep", lit(q))).as("d")
-      case None => $"dep".as("d")
-    }
+    val (e, nEdges) = temporalPrep(edges, uCol, vCol, depCol, arrCol)
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
       // arrival-class columns: floor / ceil of an arrival to the
       // g-grid, exact long arithmetic (pmod is always non-negative)
       def clsFloor(a: Column): Column = a - pmod(a, lit(g))
       def clsCeil(a: Column): Column = a + pmod(-a, lit(g))
-      // FUSED round — see [[temporalBoundedWait]]: ONE class-keyed
-      // groupBy both merges the round's candidates into the state
-      // (min exact arrival per class — a known class re-reached with a
-      // smaller arrival improves the readout but never re-enters the
-      // frontier, successors being class-determined) and flags the
-      // class-NOVEL rows (no state row carried the class in ⇒ max(old)
-      // null), which ARE the next frontier; the convergence count
-      // rides the settle's own materialization job. The old round ran
-      // a grouped() exchange, a left-anti probe, a fresh settle, a
-      // count job, and a keyed merge — one exchange and one job now.
-      var state = Lineage.settle(
+      // ONE class-keyed groupBy both merges the round's candidates into
+      // the state (min exact arrival per class — a known class
+      // re-reached with a smaller arrival improves the readout but never
+      // re-enters the frontier, successors being class-determined) and
+      // flags the class-NOVEL rows (no state row carried the class in ⇒
+      // max(old) null), which ARE the next frontier
+      Fixpoint.run("temporalBoundedWaitArrState",
         e.filter($"src" === seed && $"dep" >= startTs)
-          .select($"dst".as("node"), dExpr,
+          .select($"dst".as("node"), departure(quantizeDepartures),
             clsFloor($"ets").as("af"), clsCeil($"ets").as("ac"),
             $"ets".as("a"))
           .groupBy($"node", $"d", $"af", $"ac").agg(min($"a").as("a"))
-          .withColumn("chg", lit(true)))
-      var n = state.count()
-      var total = n
-      var i = 0
-      while (n > 0 && i < maxIters) {
-        requireLabelsBounded("temporalBoundedWaitArrState", total, labelCap, i,
+          .withColumn("chg", lit(true)), maxIters,
+        done = Fixpoint.labelCapped(spark, "temporalBoundedWaitArrState",
           s"raise quantizeArrivals past $g to merge more arrival classes " +
-            "(and/or pass quantizeDepartures)")
-        i += 1
+            "(and/or pass quantizeDepartures)")) { (state, _) =>
         // g-slack usability reads only the CLASS, never the exact
         // arrival: dep ≥ ceil_g(a), dep ≤ floor_g(a) + maxWait —
         // stricter than exact on both ends, so every path taken is
@@ -2131,23 +1781,13 @@ object GraphAlgos {
           .select($"dst".as("node"), $"d",
             clsFloor($"ets").as("af"), clsCeil($"ets").as("ac"),
             $"ets".as("a"), lit(null).cast("boolean").as("old"))
-        val (next, row) = Lineage.settleAgg(
-          state.select($"node", $"d", $"af", $"ac", $"a", lit(true).as("old"))
-            .unionByName(cand)
-            .groupBy($"node", $"d", $"af", $"ac")
-            .agg(min($"a").as("a"), max($"old").isNull.as("chg")),
-          Seq(count_if($"chg")))
-        n = row.getLong(0)
-        total += n
-        Lineage.release(state)
-        state = next
-      }
-      require(n == 0,
-        s"temporalBoundedWaitArrState did not converge in $maxIters rounds; " +
-          "raise maxIters")
-      // the settled state itself — a narrow projection, NO re-settle
-      // (the readouts re-read the materialized rows either way)
-      state.select($"node", $"d", $"af", $"ac", $"a")
+        state.select($"node", $"d", $"af", $"ac", $"a", lit(true).as("old"))
+          .unionByName(cand)
+          .groupBy($"node", $"d", $"af", $"ac")
+          .agg(min($"a").as("a"), max($"old").isNull.as("chg"))
+        // the settled state itself — a narrow projection, NO re-settle
+        // (the readouts re-read the materialized rows either way)
+      }.select($"node", $"d", $"af", $"ac", $"a")
     }
   }
 
@@ -2161,9 +1801,8 @@ object GraphAlgos {
     *
     * Transitive closure by path doubling: reach ← reach ∪ (reach ⋈
     * reach), so a path of length 2^r is found by round r —
-    * ⌈log₂ V⌉ rounds, each one keyed equi-join + distinct, state
-    * settled per round (the closure feeds both join sides, the
-    * multiplicative-stats shape `Lineage.settle` exists for). Seeding
+    * ⌈log₂ V⌉ [[Fixpoint]] rounds, each one keyed equi-join +
+    * distinct, until the pair count repeats. Seeding
     * with identity pairs makes the closure reflexive, so the SCC of v
     * is exactly {w : reach(v,w)} ∩ {w : reach(w,v)} — computed as
     * closure ∩ closureᵀ, no second algorithm — and singletons fall
@@ -2195,26 +1834,16 @@ object GraphAlgos {
       s"sccCondensation: $nNodes nodes exceeds maxNodes=$maxNodes — the " +
         "V² closure is for bounded type domains; condense a distilled " +
         "graph, not per-entity ids")
-    var reach = Lineage.settle(
-      nodes.select($"n".as("a"), $"n".as("b")).union(e).distinct())
-    var size = reach.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val next = Lineage.settle(
-        reach.as("r1").join(reach.as("r2"), col("r1.b") === col("r2.a"))
-          .select(col("r1.a").as("a"), col("r2.b").as("b"))
-          .union(reach)
-          .distinct())
-      val nextSize = next.count()
-      converged = nextSize == size
-      reach = next
-      size = nextSize
+    // a repeated pair count is the fixpoint witness
+    val reach = Fixpoint.run("sccCondensation",
+      nodes.select($"n".as("a"), $"n".as("b")).union(e).distinct(), maxRounds,
+      aggs = Seq(count(lit(1))), done = Fixpoint.stable,
+      hint = s"raise maxRounds (covers paths up to 2^$maxRounds)") { (reach, _) =>
+      reach.as("r1").join(reach.as("r2"), col("r1.b") === col("r2.a"))
+        .select(col("r1.a").as("a"), col("r2.b").as("b"))
+        .union(reach)
+        .distinct()
     }
-    if (!converged) throw new IllegalStateException(
-      s"sccCondensation: no fixpoint after $maxRounds doubling rounds " +
-        s"($size pairs) — raise maxRounds (covers paths up to 2^$maxRounds)")
     val mutual = reach.intersect(reach.select($"b".as("a"), $"a".as("b")))
     mutual.groupBy($"a")
       .agg(min($"b").as("scc_id"), count(lit(1)).as("scc_size"))

@@ -14,15 +14,15 @@ import org.apache.spark.sql.functions._
   * pointer spans up to 2^k original edges, so a depth-d forest
   * converges in ⌈log₂ d⌉ rounds rather than d. Each round is ONE
   * equi-join of the pointer table with itself on the ancestor key
-  * (shuffle keyed on node id, state O(|V|)) — the same
-  * iterate+checkpoint discipline as [[Components]], and the reason a
-  * million-deep pathological chain is 20 rounds, not a million.
+  * (shuffle keyed on node id, state O(|V|)), run as a [[Fixpoint]]
+  * round — and the reason a million-deep pathological chain is 20
+  * rounds, not a million.
   *
   * Convergence witness: a node is DONE when its ancestor is a root;
   * the count of unfinished nodes is strictly decreasing (each round
-  * at least doubles every unfinished node's span). The loop collects
-  * only that 1-row count per round; `maxIters` throws rather than
-  * return a silently-partial flattening.
+  * at least doubles every unfinished node's span). The round's one
+  * aggregate returns that count next to the node count; `maxIters`
+  * throws rather than return a silently-partial flattening.
   */
 object Hierarchy {
 
@@ -38,7 +38,7 @@ object Hierarchy {
   ): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    var state = nodes.select(
+    val init = nodes.select(
       col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("anc"),
       when(col(parentCol).cast("long") === col(idCol).cast("long"), 0L)
@@ -46,34 +46,28 @@ object Hierarchy {
       // root-ness of the CURRENT ancestor rides along so a round can
       // tell finished rows apart without a second join
       (col(parentCol).cast("long") === col(idCol).cast("long")).as("done"))
-      .localCheckpoint(true)
-    val nNodes = state.count()
-    var iters = 0
-    var pending = state.filter(!$"done").count()
-    while (pending > 0) {
-      iters += 1
-      require(iters <= maxIters,
-        s"flattenForest: $pending nodes unresolved after $maxIters rounds " +
-          "— cycle or depth > 2^maxIters")
+    // the propagation join is INNER: a node whose ancestor pointer
+    // targets a non-existent id would silently VANISH and the pending
+    // count would read 0 — every round's row count must equal the
+    // previous one (hence round 0's node count)
+    val noneLost: Fixpoint.Done = (p, r) => {
+      require(p == null || r.getLong(0) == p.getLong(0),
+        s"flattenForest: ${p.getLong(0) - r.getLong(0)} nodes lost — " +
+          "dangling parent pointer (every parent must appear as an id)")
+      r.getLong(1) == 0L
+    }
+    Fixpoint.run("flattenForest", init, maxIters,
+      aggs = Seq(count(lit(1)), count_if(!$"done")), done = noneLost,
+      hint = "nodes unresolved — cycle or depth > 2^maxIters") { (state, _) =>
       val a = state.as("a")
       val p = state.select($"id".as("p_id"), $"anc".as("p_anc"),
         $"depth".as("p_depth"), $"done".as("p_done")).as("p")
-      state = a.join(p, $"a.anc" === $"p.p_id")
+      a.join(p, $"a.anc" === $"p.p_id")
         .select(
           $"a.id".as("id"),
           when($"a.done", $"a.anc").otherwise($"p.p_anc").as("anc"),
           when($"a.done", $"a.depth").otherwise($"a.depth" + $"p.p_depth").as("depth"),
           ($"a.done" || $"p.p_done").as("done"))
-        .localCheckpoint(true)
-      // the propagation join is INNER: a node whose ancestor pointer
-      // targets a non-existent id would silently VANISH, and pending
-      // would read 0 — surface the dangling pointer instead
-      val n = state.count()
-      require(n == nNodes,
-        s"flattenForest: ${nNodes - n} nodes lost in round $iters — " +
-          "dangling parent pointer (every parent must appear as an id)")
-      pending = state.filter(!$"done").count()
-    }
-    state.select($"id", $"anc".as("root"), $"depth")
+    }.select($"id", $"anc".as("root"), $"depth")
   }
 }

@@ -1,23 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlInternals, Row}
+import org.apache.spark.sql.functions.col
 
-/** Per-round lineage cut for the iterative graph loops (bfsLevels,
-  * sssp, coreNumbers, kCore, anf, labelProp, Components, walks).
+/** The checkpoint primitive of the iterative operators ([[Fixpoint]]
+  * and the static tables its loops read): materialize a frame and
+  * truncate its plan, so round r plans against a leaf instead of r
+  * stacked rounds.
   *
-  * Default: eager `localCheckpoint` — materialize to executor-local
-  * storage and truncate the plan, the right call in local mode and on
-  * healthy clusters (no distributed-FS round trip per iteration).
-  * LOCAL checkpoint blocks are NOT fault-tolerant though: on a real
-  * cluster, losing an executor mid-loop loses blocks that nothing can
-  * recompute (the lineage was cut), and the job aborts.
+  *  - [[prep]] lays out a loop-STATIC side (repartition + sort on the
+  *    round join's key) and cuts it, so every round reads it
+  *    exchange-free and sort-free.
+  *  - [[settle]] cuts loop STATE and drops its origin statistics,
+  *    optionally running the caller's aggregate in the same job.
+  *  - [[release]] deletes a superseded state's reliable-checkpoint
+  *    files.
+  *  - [[cut]] is the one documented exception (see its scaladoc).
   *
-  * `spark.graft.graph.reliableCheckpoint=true` opts a long loop into
-  * RELIABLE `checkpoint()` against a fault-tolerant directory
-  * (`spark.graft.graph.checkpointDir`, or a SparkContext checkpoint
-  * dir set by the caller): executor loss then re-reads the round's
-  * state from the checkpoint store instead of aborting — executor
-  * loss costs a re-read, not the whole 20-round iteration.
+  * Mode: eager `localCheckpoint` by default — executor-local blocks, no
+  * distributed-FS round trip per round, but NOT fault-tolerant (losing
+  * an executor mid-loop loses blocks nothing can recompute).
+  * `spark.graft.graph.reliableCheckpoint=true` switches every cut to
+  * RELIABLE `checkpoint()` under `spark.graft.graph.checkpointDir` (or a
+  * SparkContext checkpoint dir set by the caller): executor loss then
+  * costs a re-read, not the whole iteration. The branch lives in one
+  * place, [[checkpoint]].
   */
 object Lineage {
   val ReliableKey = "spark.graft.graph.reliableCheckpoint"
@@ -27,73 +34,88 @@ object Lineage {
     * checkpoint on its own (cleanup needs
     * `spark.cleaner.referenceTracking.cleanCheckpoints`, a
     * context-creation-time conf that is GC-driven and best-effort
-    * anyway), so a 60-round loop would retain all 60 rounds' state in
-    * the checkpoint dir. [[cut]] therefore records the `rdd-*`
-    * directory each reliable checkpoint lands in (weakly keyed by the
-    * returned frame), and the iterative operators call [[release]] on
-    * a round's state the moment the NEXT round's state has
-    * materialized — steady-state disk is ~2 rounds plus the loop's
-    * static tables, not the whole trajectory. Frames never released
-    * (the final result, the static tables) keep their files until the
-    * checkpoint dir itself is cleaned, which is documented behavior:
-    * their lifetime is the caller's, not the loop's.
+    * anyway), so a 60-round loop would retain all 60 rounds' state.
+    * Every reliable cut records the `rdd-*` directory it lands in
+    * (weakly keyed by the frame the caller holds), and [[release]]
+    * deletes it once the next round's state has materialized — steady
+    * state is ~2 rounds plus the loop's static tables. Frames never
+    * released (results, static tables) keep their files until the
+    * checkpoint dir itself is cleaned: their lifetime is the caller's.
     */
   private val tracked = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, String]())
 
-  /** SINGLE-WRITER ASSUMPTION (deliberate, documented): the rdd-* dir
-    * attribution below diffs the checkpoint directory listing around
-    * the eager materialization, serialized under this object's lock —
-    * which covers every cut() in THIS JVM, but not another driver
-    * checkpointing into the SAME directory concurrently (its fresh
-    * rdd-* dirs would be mis-attributed here, and release() could then
-    * delete a foreign checkpoint). One driver per checkpoint dir is
-    * the operating rule — the natural deployment anyway, since
-    * SparkContext.setCheckpointDir is context-global. Multi-driver
-    * setups namespace the dir per driver (e.g. suffix the
-    * applicationId) via [[DirKey]]. release() only ever deletes paths
-    * this map attributed (spec-pinned), so the failure mode without
-    * namespacing is bounded to the shared directory, never arbitrary
-    * paths.
+  /** Static side of a loop's round join: `repartition(keys)` (at
+    * `parts`, else the session's shuffle partition count),
+    * `sortWithinPartitions(keys)`, cut — planned with AQE off. Under
+    * AQE the executed plan's root is AdaptiveSparkPlanExec, which
+    * reports UnknownPartitioning and no ordering, so the checkpointed
+    * relation would silently drop the layout and every round would
+    * re-shuffle the static side. (Spark 4.1: AQE on → a keyed groupBy
+    * over the cut plans 1 exchange; AQE off → hashpartitioning(k, n) +
+    * sort order and 0 exchanges.) AQE loses nothing here: the plan is
+    * scan → explicit exchange → sort, with no join to re-plan, and the
+    * loop that reads the frame still runs under the session's AQE.
+    * Keeps origin stats like [[cut]]. The SINGLE-QUERY ASSUMPTION
+    * documented on [[ScopedConf.withShufflePartitionsFor]] applies.
     */
-  def cut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val reliable =
-      spark.conf.getOption(ReliableKey).exists(_.trim.equalsIgnoreCase("true"))
-    if (!reliable) df.localCheckpoint(eager = true)
-    else Lineage.synchronized {
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = spark.conf.getOption(DirKey).getOrElse(throw new IllegalArgumentException(
-          s"$ReliableKey=true needs $DirKey (a fault-tolerant path — " +
-            "HDFS/object store on a cluster) or a pre-set " +
-            "SparkContext.setCheckpointDir"))
-        sc.setCheckpointDir(dir)
-      }
-      // identify the checkpoint's rdd-* directory by diffing the
-      // checkpoint dir around the (eager) materialization — the
-      // Dataset API doesn't expose the checkpointed RDD. cut() is
-      // serialized under the object lock in reliable mode, so the
-      // fresh entry is unambiguous.
-      val ckDir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
-      val fs = ckDir.getFileSystem(sc.hadoopConfiguration)
-      def rdds(): Set[String] =
-        if (!fs.exists(ckDir)) Set.empty[String]
-        else fs.listStatus(ckDir).map(_.getPath.getName).toSet
-      val before = rdds()
-      val out = df.checkpoint(eager = true)
-      (rdds() -- before).foreach { fresh =>
-        tracked.put(out, new org.apache.hadoop.fs.Path(ckDir, fresh).toString)
-      }
-      out
-    }
+  def prep(df: DataFrame, keys: Seq[String], parts: Option[Int] = None): DataFrame = {
+    val ks = keys.map(col)
+    val laid = parts.fold(df.repartition(ks: _*))(n => df.repartition(n, ks: _*))
+    withAqeOff(df)(checkpoint(laid.sortWithinPartitions(ks: _*), Nil)._1)
   }
 
-  /** Delete the reliable-checkpoint files behind a SUPERSEDED loop
-    * state (see retention note on [[tracked]]). Only frames produced
-    * by [[cut]]/[[settle]] in reliable mode have files to release;
-    * anything else (localCheckpoint mode, derived projections) is a
-    * no-op — safe to call unconditionally in a loop. The caller
+  /** Cut loop state and re-wrap it in a fresh relation with NO origin
+    * statistics. A checkpointed Dataset keeps its origin plan's
+    * `sizeInBytes`; in a loop whose round-r state is built from two
+    * descendants of round r−1 (state ⋈ f(state)) those BigInt
+    * estimates MULTIPLY, and by round ~15 the driver spends minutes per
+    * round in BigInteger arithmetic during stats estimation. Dropping
+    * them keeps per-round planning flat.
+    *
+    * `aggs` (non-empty) ride the materialization: the frame is marked
+    * for local checkpointing lazily and ONE aggregate job both fills
+    * the blocks and returns the row — the row is `Row.empty` without
+    * `aggs`. In reliable mode the cut stays eager and the aggregate is
+    * a second job over the files (finalizing a reliable checkpoint from
+    * a lazy mark would recompute the round).
+    *
+    * `keyed` keeps the physical layout (partitioning + ordering)
+    * through [[GraftSqlInternals.freshKeyedRelation]] and plans the
+    * round with AQE off, so state re-consumed on the same key every
+    * round never crosses an exchange again; the price is AQE's runtime
+    * skew split for that one statement. Without `keyed` the fresh
+    * relation (`createDataFrame`) also drops the layout.
+    */
+  def settle(
+      df: DataFrame,
+      aggs: Seq[Column] = Nil,
+      keyed: Boolean = false,
+  ): (DataFrame, Row) = {
+    val (m, row) =
+      if (keyed) withAqeOff(df)(checkpoint(df, aggs)) else checkpoint(df, aggs)
+    val out =
+      if (keyed) GraftSqlInternals.freshKeyedRelation(m)
+      else m.sparkSession.createDataFrame(m.rdd, m.schema)
+    // the files now belong to the frame the caller holds
+    Option(tracked.remove(m)).foreach(tracked.put(out, _))
+    (out, row)
+  }
+
+  /** Cut that KEEPS the origin statistics — the documented fourth
+    * name. The static tables the loops count and prep, and the shared
+    * inputs of the temporal gates, are read by joins whose strategy
+    * the planner picks from those statistics: a small edge table is
+    * broadcast. Re-wrapping them as [[settle]] does would report the
+    * default (unbounded) size and turn those broadcasts into
+    * sort-merge joins — a plan change, not a simplification. Use only
+    * for frames that feed ONE input of a plan (no compounding).
+    */
+  def cut(df: DataFrame): DataFrame = checkpoint(df, Nil)._1
+
+  /** Delete the reliable-checkpoint files behind a SUPERSEDED frame
+    * (see [[tracked]]). A no-op for anything else (local mode, derived
+    * projections), so it is safe to call unconditionally. The caller
     * asserts the frame is dead: nothing may lazily read it afterwards.
     */
   def release(df: DataFrame): Unit =
@@ -104,147 +126,66 @@ object Lineage {
       ()
     }
 
-  private val AqeKey = "spark.sql.adaptive.enabled"
-
-  /** Run `body` with AQE disabled for the statements planned inside,
-    * restoring the previous value afterwards (also on failure). Needed
-    * wherever a checkpoint must CAPTURE the physical layout: under AQE
-    * the executed plan's root is AdaptiveSparkPlanExec, which reports
-    * UnknownPartitioning and no ordering, so `LogicalRDD.fromDataset`
-    * silently drops the partitioning/ordering the plan established —
-    * a cut of `repartition(n, k).sortWithinPartitions(k)` planned
-    * under AQE yields a frame every downstream join re-shuffles.
-    * (Verified against Spark 4.1: AQE on → UnknownPartitioning and a
-    * keyed groupBy over the cut plans 1 exchange; AQE off →
-    * hashpartitioning(k, n) + sort order and the same groupBy plans
-    * 0 exchanges.) The SINGLE-QUERY ASSUMPTION documented on
-    * [[ScopedConf.withShufflePartitionsFor]] applies.
+  /** The local/reliable branch. SINGLE-WRITER ASSUMPTION (deliberate):
+    * the reliable path attributes the `rdd-*` dir by diffing the
+    * checkpoint dir around the eager materialization, under this
+    * object's lock — which covers every cut in THIS JVM but not another
+    * driver writing into the SAME directory (its fresh dirs would be
+    * mis-attributed and [[release]] could delete a foreign
+    * checkpoint). One driver per checkpoint dir is the operating rule;
+    * multi-driver setups namespace [[DirKey]] per driver. [[release]]
+    * only deletes attributed paths, so the failure mode is bounded to
+    * the shared directory.
     */
-  def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prev = spark.conf.get(AqeKey)
-    spark.conf.set(AqeKey, "false")
-    try body finally spark.conf.set(AqeKey, prev)
-  }
-
-  /** [[cut]] for PREPPED static tables — `repartition(n, key) +
-    * sortWithinPartitions + cut`, planned with AQE off so the
-    * checkpointed LogicalRDD actually KEEPS the layout (see
-    * [[withAqeOff]]). AQE loses nothing on a prep plan: it is
-    * scan → explicit-count exchange → sort, with no joins to re-plan;
-    * the LOOP that consumes the prepped frame still runs under the
-    * session's AQE setting.
-    */
-  def cutPrepped(df: DataFrame): DataFrame =
-    withAqeOff(df.sparkSession)(cut(df))
-
-  /** [[cut]] FUSED with the caller's convergence aggregate: mark the
-    * plan for LOCAL checkpointing lazily, then run ONE aggregate job
-    * over the marked plan — the job materializes every partition (the
-    * local checkpoint finalizes in the same action) AND returns the
-    * row the loop's convergence check needs. The eager cut's internal
-    * count action and the loop's own count()/isEmpty() were TWO jobs
-    * over the same materialized state per round; the iterative
-    * operators are per-round-latency-bound at bench scale (scaling
-    * ratios ≈ 1 between 8 and 32 cores), so the job count per round is
-    * the floor this shaves (guide §1.2/§5 — don't re-run work you
-    * already paid for).
-    *
-    * Partitioning/ordering metadata is preserved exactly as [[cut]]
-    * (Dataset.localCheckpoint builds the same LogicalRDD either way;
-    * eagerness only decides WHEN the backing blocks materialize).
-    *
-    * RELIABLE mode falls back to eager [[cut]] + a separate aggregate:
-    * finalizing a reliable checkpoint from a lazy mark re-runs the
-    * whole plan to write the files, which would double-compute the
-    * round. The fallback costs what the un-fused shape always cost —
-    * never more.
-    */
-  def cutAgg(df: DataFrame,
-      aggs: Seq[org.apache.spark.sql.Column]): (DataFrame, org.apache.spark.sql.Row) = {
+  private def checkpoint(df: DataFrame, aggs: Seq[Column]): (DataFrame, Row) = {
     val spark = df.sparkSession
+    // planned with AQE off: under AQE the aggregate's exchange runs as
+    // a map-stage job of its own, so the round would cost two jobs
+    def agg(m: DataFrame) =
+      if (aggs.isEmpty) Row.empty else withAqeOff(m)(m.agg(aggs.head, aggs.tail: _*).head())
     val reliable =
       spark.conf.getOption(ReliableKey).exists(_.trim.equalsIgnoreCase("true"))
-    if (reliable) {
-      val m = cut(df)
-      (m, m.agg(aggs.head, aggs.tail: _*).head())
+    if (!reliable) {
+      if (aggs.isEmpty) (df.localCheckpoint(eager = true), Row.empty)
+      else {
+        // ONE job: the aggregate scans every partition of the marked RDD
+        // (blocks cache as they compute), and the action's terminal
+        // doCheckpoint() finalizes over the already-present blocks
+        val m = df.localCheckpoint(eager = false)
+        (m, agg(m))
+      }
     } else {
-      val m = df.localCheckpoint(eager = false)
-      // ONE job: the partial-aggregate stage scans every partition of
-      // the marked RDD (storage level already set by the lazy mark, so
-      // blocks cache as they compute), and the action's terminal
-      // doCheckpoint() finalizes the local checkpoint over those
-      // already-present blocks — no second materialization pass.
-      val row = m.agg(aggs.head, aggs.tail: _*).head()
-      (m, row)
+      val m = Lineage.synchronized {
+        val sc = spark.sparkContext
+        if (sc.getCheckpointDir.isEmpty) {
+          val dir = spark.conf.getOption(DirKey).getOrElse(throw new IllegalArgumentException(
+            s"$ReliableKey=true needs $DirKey (a fault-tolerant path — " +
+              "HDFS/object store on a cluster) or a pre-set " +
+              "SparkContext.setCheckpointDir"))
+          sc.setCheckpointDir(dir)
+        }
+        val ckDir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+        val fs = ckDir.getFileSystem(sc.hadoopConfiguration)
+        def rdds(): Set[String] =
+          if (!fs.exists(ckDir)) Set.empty[String]
+          else fs.listStatus(ckDir).map(_.getPath.getName).toSet
+        val before = rdds()
+        val out = df.checkpoint(eager = true)
+        (rdds() -- before).foreach { fresh =>
+          tracked.put(out, new org.apache.hadoop.fs.Path(ckDir, fresh).toString)
+        }
+        out
+      }
+      (m, agg(m))
     }
   }
 
-  /** [[settle]] fused with the caller's convergence aggregate — the
-    * [[cutAgg]] single-job round with [[settle]]'s fresh-relation
-    * rewrap (fresh exprIds, no origin stats). Use wherever the loop
-    * settled its round state and then ran a separate count.
-    */
-  def settleAgg(df: DataFrame,
-      aggs: Seq[org.apache.spark.sql.Column]): (DataFrame, org.apache.spark.sql.Row) = {
-    val (m, row) = cutAgg(df, aggs)
-    val out = m.sparkSession.createDataFrame(m.rdd, m.schema)
-    Option(tracked.remove(m)).foreach(tracked.put(out, _))
-    (out, row)
-  }
+  private val AqeKey = "spark.sql.adaptive.enabled"
 
-  /** [[settleAgg]] for KEYED loop state: the single-job fused round of
-    * [[cutAgg]], re-wrapped via
-    * [[org.apache.spark.sql.GraftSqlInternals.freshKeyedRelation]] so
-    * the frame keeps its physical partitioning/ordering (the next
-    * round's equi-join or window on the state key reads it
-    * exchange-free) while still dropping origin stats/constraints
-    * (the compounding-estimate hazard [[settle]] exists for). Use for
-    * loop state that is (a) re-consumed on the SAME key every round
-    * and (b) feeds more than one input of the next round's plan.
-    */
-  def settleKeyedAgg(df: DataFrame,
-      aggs: Seq[org.apache.spark.sql.Column]): (DataFrame, org.apache.spark.sql.Row) = {
-    // planned under AQE-off so the checkpoint CAPTURES the layout (see
-    // [[withAqeOff]] — an AQE-rooted plan reports UnknownPartitioning).
-    // The trade inside the round is explicit, documented on each call
-    // site: the round's shuffles are already explicitly sized by
-    // ScopedConf, so what is given up is AQE's runtime skew split for
-    // this one statement, in exchange for the state never crossing an
-    // exchange again.
-    val (m, row) = withAqeOff(df.sparkSession)(cutAgg(df, aggs))
-    val out = org.apache.spark.sql.GraftSqlInternals.freshKeyedRelation(m)
-    Option(tracked.remove(m)).foreach(tracked.put(out, _))
-    (out, row)
-  }
-
-  /** [[cut]] + drop ALL plan metadata by re-wrapping the materialized
-    * RDD in a fresh logical relation: fresh exprIds, no propagated
-    * constraints, and — critically — no ORIGIN STATS. A checkpointed
-    * Dataset's LogicalRDD keeps its origin plan's `sizeInBytes`
-    * estimate; in a loop whose round-r state is built from TWO
-    * descendants of round r−1 (coreNumbers: `cur` patched with
-    * `changed`, both derived from the previous `cur`), those BigInt
-    * estimates MULTIPLY — the estimate's bit-length triples per round
-    * and by round 15 the driver spends minutes per round inside
-    * BigInteger ToomCook multiplication during stats estimation.
-    * Re-wrapping resets the estimate to the default constant, so
-    * per-round planning cost stays flat. Use for any loop state that
-    * feeds MORE than one input of the next round's plan; plain [[cut]]
-    * (which keeps partitioning metadata) is fine for linear chains.
-    */
-  def settle(df: DataFrame): DataFrame = {
-    val m = cut(df)
-    val out = m.sparkSession.createDataFrame(m.rdd, m.schema)
-    // transfer checkpoint-file ownership to the frame the caller holds,
-    // so release(settledFrame) finds the files
-    Option(tracked.remove(m)).foreach(tracked.put(out, _))
-    out
-  }
-
-  /** `.cutLineage()` postfix form — drop-in for `.localCheckpoint(true)`. */
-  implicit class CutOps(private val df: DataFrame) extends AnyVal {
-    def cutLineage(): DataFrame = cut(df)
-    def settleLineage(): DataFrame = settle(df)
-    def cutPreppedLineage(): DataFrame = cutPrepped(df)
+  private def withAqeOff[T](df: DataFrame)(body: => T): T = {
+    val conf = df.sparkSession.conf
+    val prev = conf.get(AqeKey)
+    conf.set(AqeKey, "false")
+    try body finally conf.set(AqeKey, prev)
   }
 }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Lineage.CutOps
-
 /** PageRank over a directed edge list — the importance-scoring pass a
   * crawl/curation pipeline runs to weight sources (cf. Page et al.,
   * "The PageRank Citation Ranking"): seed-domain ranking, dedup-keeper
@@ -28,13 +26,11 @@ import graft.operators.Lineage.CutOps
   *     then sum by dst with map-side partial aggregation;
   *   - update: nodes ⟕ contributions, coalesce(0) for in-degree-0
   *     nodes (they keep the 15% teleport floor).
-  * The rank table is O(|V|) and lineage-cut per round ([[Lineage]] —
-  * eager localCheckpoint by default, reliable `checkpoint()` under
-  * `spark.graft.graph.reliableCheckpoint`); the edge table and
+  * The rank table is O(|V|) and settled per [[Fixpoint]] round (a
+  * fixed round count, no convergence test); the edge table and
   * out-degree table are cut ONCE before the loop so no round re-runs
-  * the caller's upstream derivation. The loop is driver-side like
-  * `Components.connectedComponents` / Lloyd's, with the per-round plan
-  * fully distributed and its shuffles sized to |E|.
+  * the caller's upstream derivation. The per-round plan is fully
+  * distributed and its shuffles are sized to |E|.
   */
 object PageRank {
 
@@ -53,49 +49,43 @@ object PageRank {
   ): DataFrame = {
     require(iters >= 1, s"pagerank: iters ($iters) must be >= 1")
     val spark = edges.sparkSession
-    // Materialize the edge derivation ONCE (eager lineage cut): `e` is
-    // read every iteration by the contribution join, and `outdeg` /
-    // `nodes` derive from it — without the cut, each of the `iters`
-    // rounds re-runs the caller's full upstream plan (at 100 TB, the
-    // source scan + distinct) twice. The cut also routes the loop
-    // through the opt-in reliable-checkpoint path like the other
-    // iterative graph operators ([[Lineage]]).
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .cutLineage()
+    // Materialize the edge derivation ONCE: `e` is read every iteration
+    // by the contribution join, and `outdeg` / `nodes` derive from it —
+    // without the cut, each round re-runs the caller's full upstream
+    // plan (at 100 TB, the source scan + distinct) twice.
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     // size the loop's shuffles to the edge count, as in [[Components]]:
     // a small graph must not pay (default partitions) × (stages per
     // round) of empty-task scheduling; a big one gets the quotient back
     val nEdges = e.count()
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .cutLineage()
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst")))
-        .distinct()
-        .cutLineage()
-      var ranks = nodes.select(col("node"), lit(scale).as("r"))
-      for (_ <- 1 to iters) {
-        val shares = ranks
-          .join(outdeg, ranks("node") === outdeg("src"))
-          .select(col("src"), expr("r div d").as("share"))
-        val contribs = e
-          .join(shares, "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("share")).as("s"))
-        // linear chain (ranks feeds exactly one input of the next
-        // round's plan), so a plain cut suffices — no settle needed
-        val next = nodes
-          .join(contribs, Seq("node"), "left")
-          .select(
-            col("node"),
-            (lit(15L * scale / 100L) +
-              expr("(85 * coalesce(s, 0)) div 100")).as("r"))
-          .cutLineage()
-        Lineage.release(ranks) // superseded round (retention note there)
-        ranks = next
+      val outdeg = Lineage.cut(e.groupBy(col("src")).agg(count(lit(1)).as("d")))
+      val nodes = Lineage.cut(e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
+      iterate("pagerank", e, outdeg, nodes.select(col("node"), lit(scale).as("r")), iters) {
+        contribs => nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            (lit(15L * scale / 100L) + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
       }
-      ranks
     }
+  }
+
+  /** `iters` damped rounds from the `start` ranks: shares = r div
+    * outdeg, contributions summed per dst, `update` turns them into
+    * the next (node, r). Round 0 is the first iteration, so the start
+    * table is never materialized on its own.
+    */
+  private def iterate(op: String, e: DataFrame, outdeg: DataFrame, start: DataFrame,
+      iters: Int)(update: DataFrame => DataFrame): DataFrame = {
+    def round(ranks: DataFrame): DataFrame = {
+      val shares = ranks
+        .join(outdeg, ranks("node") === outdeg("src"))
+        .select(col("src"), expr("r div d").as("share"))
+      update(e.join(shares, "src")
+        .groupBy(col("dst").as("node"))
+        .agg(sum(col("share")).as("s")))
+    }
+    Fixpoint.run(op, round(start), iters - 1, aggs = Nil, done = Fixpoint.never,
+      strict = false)((ranks, _) => round(ranks))
   }
 
   /** Personalized PageRank: the teleport mass restarts ONLY onto the
@@ -124,40 +114,24 @@ object PageRank {
     // same once-only edge materialization + |E|-sized loop shuffles as
     // [[pagerank]]; seed membership is folded into the cut node table,
     // so the loop never touches `seeds` again
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .cutLineage()
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val nEdges = e.count()
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .cutLineage()
-      val nodes = e.select(col("src").as("node"))
+      val outdeg = Lineage.cut(e.groupBy(col("src")).agg(count(lit(1)).as("d")))
+      val nodes = Lineage.cut(e.select(col("src").as("node"))
         .union(e.select(col("dst")))
         .distinct()
         .join(seeds.select(col(seeds.columns.head).as("node"))
             .distinct().withColumn("__s", lit(1L)),
           Seq("node"), "left")
-        .select(col("node"), coalesce(col("__s"), lit(0L)).as("is_seed"))
-        .cutLineage()
-      var ranks = nodes.select(col("node"), (col("is_seed") * scale).as("r"))
-      for (_ <- 1 to iters) {
-        val shares = ranks
-          .join(outdeg, ranks("node") === outdeg("src"))
-          .select(col("src"), expr("r div d").as("share"))
-        val contribs = e
-          .join(shares, "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("share")).as("s"))
-        val next = nodes
-          .join(contribs, Seq("node"), "left")
-          .select(
-            col("node"),
+        .select(col("node"), coalesce(col("__s"), lit(0L)).as("is_seed")))
+      iterate("personalized", e, outdeg,
+        nodes.select(col("node"), (col("is_seed") * scale).as("r")), iters) {
+        contribs => nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
             (col("is_seed") * lit(15L * scale / 100L) +
               expr("(85 * coalesce(s, 0)) div 100")).as("r"))
-          .cutLineage()
-        Lineage.release(ranks) // superseded round (retention note there)
-        ranks = next
       }
-      ranks
     }
   }
 
@@ -181,9 +155,9 @@ object PageRank {
     * Scale shape, per iteration: two |E|-keyed equi-joins (src then
     * dst — THE shuffles at 100 TB, on the edges' natural keys) each
     * feeding a map-side-combined sum; the normalizing max is a 1-row
-    * broadcast; both raw-sum tables are `Lineage.settle`d (each feeds
-    * TWO next inputs — its own max aggregate and the domain join — the
-    * multiplicative-stats shape) and loop shuffles are |E|-sized.
+    * broadcast (it and the domain join share the raw sum's exchange);
+    * every half-step is one [[Fixpoint]] round over the (node, h, a)
+    * table, and loop shuffles are |E|-sized.
     * Dst-only nodes carry hub 0, src-only nodes authority 0, exactly
     * as the math says.
     */
@@ -199,53 +173,29 @@ object PageRank {
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def fdiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       ((a - pmod(a, b)) / b).cast("long")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .cutLineage()
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val nEdges = e.count()
     require(nEdges > 0, "hits: empty edge set")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst")))
-        .distinct()
-        .cutLineage()
-      // normalized tables are SETTLED per half-step too (not just the
-      // raw sums): the nodes-join + broadcast layer would otherwise
-      // stack one analysis layer per iteration — bounded at 3 rounds
-      // here, but a 50-round HITS would carry a 50-layer plan into
-      // every subsequent round's analysis. Sums accumulate in
+      val nodes = Lineage.cut(e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
+      // one half-step: push h along the edges onto authorities (toA),
+      // or a back onto hubs, then max-normalize. Sums accumulate in
       // DECIMAL(38,0): h ≤ scale × in-degree would wrap a plain long
       // sum silently on very large hubs while the oracle sums in
       // HUGEINT — a silent cross-engine divergence.
-      def normalize(raw: DataFrame, out: String): DataFrame = {
+      def half(state: DataFrame, toA: Boolean): DataFrame = {
+        val (by, onto, from) = if (toA) ("src", "dst", "h") else ("dst", "src", "a")
+        val raw = e.join(state, e(by) === state("node"))
+          .groupBy(e(onto).as("node")).agg(sum(dec(col(from))).as("s"))
         val m = raw.agg(max(col("s")).as("m"))
-        Lineage.settle(nodes
-          .join(raw, Seq("node"), "left")
-          .crossJoin(broadcast(m))
-          .select(col("node"),
-            fdiv(dec(coalesce(col("s"), lit(0))) * lit(scale), dec(col("m")))
-              .as(out)))
+        val v = fdiv(dec(coalesce(col("s"), lit(0))) * lit(scale), dec(col("m")))
+        state.join(raw, Seq("node"), "left").crossJoin(broadcast(m))
+          .select(col("node"), if (toA) col("h") else v.as("h"), if (toA) v.as("a") else col("a"))
       }
-      var h = nodes.select(col("node"), lit(scale).as("h"))
-      var a: DataFrame = null
-      for (_ <- 1 to iters) {
-        val aRaw = Lineage.settle(
-          e.join(h, e("src") === h("node"))
-            .groupBy(e("dst").as("node")).agg(sum(dec(col("h"))).as("s")))
-        val aNew = normalize(aRaw, "a")
-        // retention: the raw sums and last round's normalized tables
-        // are dead once their settled successors materialize
-        Lineage.release(aRaw)
-        if (a != null) Lineage.release(a)
-        a = aNew
-        val hRaw = Lineage.settle(
-          e.join(a, e("dst") === a("node"))
-            .groupBy(e("src").as("node")).agg(sum(dec(col("a"))).as("s")))
-        val hNew = normalize(hRaw, "h")
-        Lineage.release(hRaw)
-        Lineage.release(h) // no-op round 1 (untracked lazy projection)
-        h = hNew
-      }
-      h.join(a, Seq("node"))
+      // round 0 is the first authority half-step; rounds alternate after it
+      val start = nodes.select(col("node"), lit(scale).as("h"), lit(null).cast("long").as("a"))
+      Fixpoint.run("hits", half(start, toA = true), 2 * iters - 1, aggs = Nil,
+        done = Fixpoint.never, strict = false)((s, r) => half(s, toA = r.index % 2 == 0))
         .select(col("node"), col("h").as("hub_scaled"), col("a").as("auth_scaled"))
     }
   }

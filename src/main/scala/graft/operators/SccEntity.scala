@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Lineage.CutOps
-
 /** Strongly connected components of a PER-ENTITY directed graph —
   * follows/links/citations, node domains that GROW with the corpus —
   * by Forward-Backward-Trim (Fleischer, Hendrickson & Pınar,
@@ -56,10 +54,10 @@ import graft.operators.Lineage.CutOps
   * C-SCC chain needs O(log C) rounds in expectation (each pivot lands
   * at a pseudo-random chain position and the split halves the part),
   * and `maxRounds` bounds the residual tail risk, failing loudly like
-  * the other iterative operators. Per-round state (`active`, the BFS
-  * visited sets, the assignment pieces) is settled via [[Lineage]]
-  * and superseded rounds are [[Lineage.release]]d, so reliable-mode
-  * checkpoint retention stays O(1) rounds.
+  * the other iterative operators. The loop state is ONE
+  * (node, part, scc_id) table — a resolved node carries its scc_id,
+  * an unresolved one its subproblem — and every pivot round, trim pass
+  * and BFS step is a [[Fixpoint]] round over it.
   *
   * Returns (node, scc_id, scc_size) for EVERY node in the edge list —
   * including nodes whose only edges are self-loops (singletons).
@@ -82,28 +80,17 @@ object SccEntity {
     // membership, so the traversal graph drops them
     val nodes = raw.select($"src".as("node")).union(raw.select($"dst"))
       .distinct()
-    val e = raw.filter($"src" =!= $"dst").distinct().cutLineage()
+    val e = Lineage.cut(raw.filter($"src" =!= $"dst").distinct())
     val nEdges = e.count()
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
-      // assignment pieces accumulate settled; the union is collapsed
-      // whenever it grows past a bounded width (the walks-accumulator
-      // discipline — plan width must not scale with round count)
-      val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def flushPieces(): Unit = if (pieces.size > 16) {
-        val merged = Lineage.settle(pieces.reduce(_ union _))
-        pieces.foreach(Lineage.release)
-        pieces.clear()
-        pieces += merged
-      }
-      // every active subproblem is keyed by its MINIMUM node id.
-      // Seed the partition from WEAKLY-connected components: disjoint
-      // weak components advance through their own pivot rounds IN
-      // PARALLEL instead of queueing through one global subproblem's
-      // "neither" quadrant — on a corpus of k disconnected communities
-      // that is the difference between max-rounds-per-community and
-      // sum-over-communities. Nodes with no traversal edges
-      // (self-loop-only) seed their own singleton parts.
-      var active = Lineage.settle(
+      // every subproblem is keyed by its MINIMUM node id. Seed the
+      // partition from WEAKLY-connected components: disjoint weak
+      // components advance through their own pivot rounds IN PARALLEL
+      // instead of queueing through one global subproblem's "neither"
+      // quadrant — on k disconnected communities that is
+      // max-rounds-per-community instead of the sum. Nodes with no
+      // traversal edges (self-loop-only) seed their own singleton parts.
+      val parts =
         if (nEdges == 0) nodes.select($"node", $"node".as("part"))
         else nodes.join(
           // star contraction, not min-label propagation: seeding must
@@ -112,128 +99,98 @@ object SccEntity {
           Components.connectedComponentsStar(e, "src", "dst")
             .select($"node", $"component".as("part")),
           Seq("node"), "left")
-          .select($"node", coalesce($"part", $"node").as("part")))
-      var activeCount = active.count()
-      var round = 0
-      while (activeCount > 0 && round < maxRounds) {
-        round += 1
-        // ---- trim to fixpoint: no in-edge or no out-edge ⇒ singleton
-        var trimming = true
-        while (trimming && activeCount > 0) {
-          val ae = withinPartEdges(e, active)
-          val outs = ae.select($"src".as("node")).distinct()
-            .withColumn("has_out", lit(1L))
-          val ins = ae.select($"dst".as("node")).distinct()
-            .withColumn("has_in", lit(1L))
-          // the trim count rides the settle's own materialization job
-          // ([[Lineage.settleAgg]]) — one job, not two
-          val (marked, mrow) = Lineage.settleAgg(active
-            .join(outs, Seq("node"), "left")
-            .join(ins, Seq("node"), "left")
-            .select($"node", $"part",
-              ($"has_out".isNotNull && $"has_in".isNotNull).as("keep")),
-            Seq(count_if(!$"keep")))
-          Lineage.release(ae)
-          val trimmed = marked.filter(!$"keep").select($"node")
-          val nTrim = mrow.getLong(0)
-          if (nTrim == 0) {
-            trimming = false
-            Lineage.release(marked)
-          } else {
-            pieces += Lineage.settle(
-              trimmed.select($"node", $"node".as("scc_id")))
-            flushPieces()
-            val nxt = Lineage.settle(
-              marked.filter($"keep").select($"node", $"part"))
-            Lineage.release(marked)
-            Lineage.release(active)
-            active = nxt
-            activeCount -= nTrim
-          }
-        }
-        if (activeCount > 0) {
-          // ---- pivot FW/BW on the trimmed, cyclic remainder. Both
-          // traversals run in ONE frontier loop over a direction-tagged
-          // edge table — rounds = max(fw depth, bw depth) instead of
-          // their sum, halving the loop's fixed per-job overhead (the
-          // dominant cost at small-to-mid scale; at corpus scale the
-          // joins are |E|-keyed either way).
-          val ae = withinPartEdges(e, active)
-          // hashed pivot (scaladoc step 2): one part-keyed map-side-
-          // combinable agg; min_by on (hash, node) keeps determinism
-          val pivots = active.groupBy($"part")
-            .agg(min_by($"node", struct(
-              graft.functions.Fnv63Hash.hash(spark, $"node".cast("string")),
-              $"node")).as("node"))
-            .select($"node", $"part")
-          val fb = reachBoth(ae, pivots, maxBfsIters)
-          val f = fb.filter($"d" === "f").select($"node", $"part")
-          val b = fb.filter($"d" === "b").select($"node", $"part")
-          val marked = Lineage.settle(active
-            .join(f.withColumn("inf", lit(1L)), Seq("node", "part"), "left")
-            .join(b.withColumn("inb", lit(1L)), Seq("node", "part"), "left")
-            .select($"node", $"part",
-              $"inf".isNotNull.as("inf"), $"inb".isNotNull.as("inb")))
-          Seq(ae, fb).foreach(Lineage.release)
-          // one shared (part, quadrant) min agg serves BOTH outputs:
-          // the s-quadrant's min is the resolved SCC's id (the hashed
-          // pivot is not itself the min), the other quadrants' mins
-          // key the next round's parts
-          val qm = marked.select($"node", $"part",
-            when($"inf" && $"inb", lit("s")).when($"inf", lit("f"))
-              .when($"inb", lit("b")).otherwise(lit("n")).as("q"))
-          val np = qm.groupBy($"part", $"q").agg(min($"node").as("np"))
-          val stamped = qm.join(np, Seq("part", "q"))
-          pieces += Lineage.settle(stamped.filter($"q" === "s")
-            .select($"node", $"np".as("scc_id")))
-          flushPieces()
-          // the surviving-active count rides the settle's own
-          // materialization job ([[Lineage.settleAgg]])
-          val (nxt, arow) = Lineage.settleAgg(stamped.filter($"q" =!= "s")
-            .select($"node", $"np".as("part")),
-            Seq(count(lit(1))))
-          Lineage.release(marked)
-          Lineage.release(active)
-          active = nxt
-          activeCount = arow.getLong(0)
-        }
-      }
-      require(activeCount == 0,
-        s"SccEntity.scc did not converge in $maxRounds rounds " +
-          s"($activeCount nodes unassigned) — an unusually deep SCC " +
-          "condensation chain; raise maxRounds")
-      val assign =
-        if (pieces.isEmpty) spark.emptyDataFrame
-          .withColumn("node", lit(0L)).withColumn("scc_id", lit(0L)).limit(0)
-        else pieces.reduce(_ union _)
+          .select($"node", coalesce($"part", $"node").as("part"))
+      val assign = Fixpoint.run("SccEntity.scc",
+        parts.withColumn("scc_id", lit(null).cast("long")), maxRounds,
+        aggs = Seq(count_if($"scc_id".isNull)),
+        hint = "an unusually deep SCC condensation chain; raise maxRounds") { (state, r) =>
+        val (trimmed, live) = trim(e, state)
+        r.own(trimmed)
+        if (live == 0L) trimmed.drop("chg") else pivot(e, trimmed, r, maxBfsIters)
+      }.select($"node", $"scc_id")
       val sizes = assign.groupBy($"scc_id")
         .agg(count(lit(1)).as("scc_size"))
       assign.join(sizes, "scc_id").select($"node", $"scc_id", $"scc_size")
     }
   }
 
-  /** Edges whose BOTH endpoints are active in the SAME part, stamped
-    * with that part: two node-keyed equi-joins, settled (it feeds
-    * several consumers in the round). Cross-part edges vanish — they
-    * can never participate in a cycle again (see the SPLIT step).
+  /** TRIM to fixpoint: an unresolved node with no in-edge or no
+    * out-edge within its part is a singleton SCC. Returns the settled
+    * state (with the last pass's `chg`) and its unresolved count.
+    */
+  private def trim(e: DataFrame, state: DataFrame): (DataFrame, Long) = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    def pass(s: DataFrame): DataFrame = {
+      val ae = withinPartEdges(e, s.filter($"scc_id".isNull))
+      val outs = ae.select($"src".as("node")).distinct().withColumn("has_out", lit(1L))
+      val ins = ae.select($"dst".as("node")).distinct().withColumn("has_in", lit(1L))
+      val chg = $"scc_id".isNull && ($"has_out".isNull || $"has_in".isNull)
+      s.join(outs, Seq("node"), "left").join(ins, Seq("node"), "left")
+        .select($"node", $"part", when(chg, $"node").otherwise($"scc_id").as("scc_id"),
+          chg.as("chg"))
+    }
+    var live = 0L
+    val out = Fixpoint.run("SccEntity.trim", pass(state), Int.MaxValue,
+      aggs = Seq(count_if($"chg"), count_if($"scc_id".isNull)),
+      done = (_, r) => { live = r.getLong(1); r.getLong(0) == 0L || live == 0L }) {
+      (s, _) => pass(s)
+    }
+    (out, live)
+  }
+
+  /** One pivot round on the trimmed state: hashed pivot per part,
+    * FW/BW from it, SCC(pivot) = F ∩ B resolved, the other quadrants
+    * split into new parts. Returns the next state, unsettled.
+    */
+  private def pivot(e: DataFrame, state: DataFrame, r: Fixpoint.Round,
+      maxBfsIters: Int): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val act = state.filter($"scc_id".isNull).select($"node", $"part")
+    // hashed pivot (scaladoc step 2): one part-keyed map-side-combinable
+    // agg; min_by on (hash, node) keeps determinism
+    val pivots = act.groupBy($"part")
+      .agg(min_by($"node", struct(
+        graft.functions.Fnv63Hash.hash(spark, $"node".cast("string")),
+        $"node")).as("node"))
+      .select($"node", $"part")
+    val fb = r.own(reachBoth(withinPartEdges(e, act), pivots, maxBfsIters))
+    val f = fb.filter($"d" === "f").select($"node", $"part").withColumn("inf", lit(true))
+    val b = fb.filter($"d" === "b").select($"node", $"part").withColumn("inb", lit(true))
+    // one (part, quadrant) min serves BOTH outputs: the s-quadrant's
+    // min is the resolved SCC's id (the hashed pivot is not itself the
+    // min), the other quadrants' mins key the next round's parts
+    val q = act.join(f, Seq("node", "part"), "left").join(b, Seq("node", "part"), "left")
+      .withColumn("q", when($"inf" && $"inb", lit("s")).when($"inf", lit("f"))
+        .when($"inb", lit("b")).otherwise(lit("n")))
+      .withColumn("np", min($"node").over(
+        org.apache.spark.sql.expressions.Window.partitionBy($"part", $"q")))
+    state.filter($"scc_id".isNotNull).select($"node", $"part", $"scc_id")
+      .unionByName(q.select($"node", $"np".as("part"),
+        when($"q" === "s", $"np").as("scc_id")))
+  }
+
+  /** Edges whose BOTH endpoints are in `active` in the SAME part,
+    * stamped with that part: two node-keyed equi-joins. Cross-part
+    * edges vanish — they can never participate in a cycle again (see
+    * the SPLIT step).
     */
   private def withinPartEdges(e: DataFrame, active: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    Lineage.settle(e
-      .join(active.select($"node".as("src"), $"part"), "src")
+    e.join(active.select($"node".as("src"), $"part"), "src")
       .join(active.select($"node".as("dst"), $"part".as("p2")), "dst")
       .filter($"part" === $"p2")
-      .select($"src", $"dst", $"part"))
+      .select($"src", $"dst", $"part")
   }
 
   /** Multi-source frontier BFS over the within-part edges, FORWARD AND
     * BACKWARD AT ONCE: the transpose traversal rides the same loop on
     * a direction-tagged edge table, so the visited set is keyed
     * (node, part, d) with d ∈ {f, b} and the round count is
-    * max(fw depth, bw depth), not their sum. Per round one equi-join +
-    * distinct + anti-join ([[GraphAlgos.bfsLevels]]'s shape), lineage
-    * settled, superseded rounds released.
+    * max(fw depth, bw depth), not their sum. Each round merges the
+    * expansion into the visited set ([[GraphAlgos.novel]]).
     */
   private def reachBoth(
       ae: DataFrame,
@@ -242,48 +199,23 @@ object SccEntity {
   ): DataFrame = {
     val spark = ae.sparkSession
     import spark.implicits._
-    // loop-static join side pre-partitioned + pre-sorted on the round
-    // join's key (guide §2.4): each BFS round reads the direction-
-    // tagged edge table exchange-free and sort-free. cut, not settle —
-    // cut preserves partitioning/ordering, and step feeds exactly one
-    // consumer per round, so the multiplicative-stats hazard cannot
-    // arise. (repartition with no explicit N uses the scoped
-    // spark.sql.shuffle.partitions, so the counts line up.)
-    val step = Lineage.cutPrepped(
+    // the direction-tagged edge table laid out on the round join's key
+    // (at the scoped shuffle partition count, so the counts line up)
+    val step = Lineage.prep(
       ae.select($"src".as("node"), $"dst".as("next"), $"part", lit("f").as("d"))
         .union(ae.select($"dst".as("node"), $"src".as("next"), $"part",
-          lit("b").as("d")))
-        .repartition($"node", $"part", $"d")
-        .sortWithinPartitions($"node", $"part", $"d"))
-    // FUSED round — see [[GraphAlgos.bfsLevels]]: ONE label-keyed
-    // groupBy merges the round's expansion into the visited set and
-    // flags the novel rows (no prior row carried the label), which ARE
-    // the next frontier; the convergence count rides the settle's own
-    // materialization job ([[Lineage.settleAgg]]).
-    var state = Lineage.settle(pivots.select($"node", $"part")
-      .crossJoin(spark.createDataset(Seq("f", "b")).toDF("d"))
-      .withColumn("chg", lit(true)))
-    var n = state.count()
-    var i = 0
-    while (n > 0 && i < maxIters) {
-      i += 1
-      val cand = state.filter($"chg")
+          lit("b").as("d"))),
+      Seq("node", "part", "d"))
+    val visited = Fixpoint.run("SccEntity.reachBoth",
+      pivots.select($"node", $"part")
+        .crossJoin(spark.createDataset(Seq("f", "b")).toDF("d"))
+        .withColumn("chg", lit(true)),
+      maxIters, hint = "graph diameter exceeds the budget; raise maxBfsIters") { (state, _) =>
+      GraphAlgos.novel(state, state.filter($"chg")
         .join(step, Seq("node", "part", "d"))
-        .select($"next".as("node"), $"part", $"d",
-          lit(null).cast("boolean").as("old"))
-      val (next, row) = Lineage.settleAgg(
-        state.select($"node", $"part", $"d", lit(true).as("old"))
-          .unionByName(cand)
-          .groupBy($"node", $"part", $"d").agg(max($"old").isNull.as("chg")),
-        Seq(count_if($"chg")))
-      n = row.getLong(0)
-      Lineage.release(state)
-      state = next
+        .select($"next".as("node"), $"part", $"d"), Seq("node", "part", "d"))
     }
-    require(n == 0,
-      s"SccEntity.reachBoth did not drain in $maxIters frontier rounds — " +
-        "graph diameter exceeds the budget; raise maxBfsIters")
     Lineage.release(step)
-    state
+    visited
   }
 }

@@ -44,11 +44,9 @@ object ScopedConf {
   /** The partition count [[withShufflePartitionsFor]] would set —
     * exposed so a loop can pre-partition its STATIC side (edge table,
     * pointer table) to exactly the count its per-round shuffles will
-    * use: a keyed `repartition(parts, key) + sortWithinPartitions +
-    * cutLineage` makes every round's equi-join read that side
-    * exchange-free AND sort-free (localCheckpoint preserves
-    * partitioning and ordering), instead of re-shuffling the full
-    * table once per round.
+    * use: [[Lineage.prep]] at this count makes every round's
+    * equi-join read that side exchange-free AND sort-free, instead of
+    * re-shuffling the full table once per round.
     */
   def partitionsFor(
       spark: SparkSession,

@@ -214,7 +214,7 @@ object Sketches {
     // one-row summary so both consumers read the SAME materialized
     // merge — the streaming twins get this for free from the memory
     // sink; this is the batch path's equivalent.
-    val sk = Lineage.settle(it
+    val (sk, _) = Lineage.settle(it
       .agg(call_function(graft.functions.SpaceSaving.Name, col("item")).as("s"))
       .select(col("s.items.item").as("cands"), col("s.delta").as("delta")))
     val cand = sk.select(explode(col("cands")).as("item"))
@@ -269,7 +269,7 @@ object Sketches {
     // [[certifiedTopK]]: per-group summaries are merge-order
     // dependent and read twice (candidates + per-group delta); the
     // settle also runs the group-cap guard exactly once, eagerly
-    val sk = Lineage.settle(it.groupBy(col("g"))
+    val (sk, _) = Lineage.settle(it.groupBy(col("g"))
       .agg(call_function(graft.functions.SpaceSaving.Name, col("item")).as("s"))
       .withColumn("__gn", row_number().over(Window.orderBy(col("g"))))
       .select(

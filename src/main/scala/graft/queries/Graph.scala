@@ -1671,13 +1671,12 @@ object Graph {
       maxWait: Option[Long] = None,
       arrivalSlack: Option[Long] = None)
       : org.apache.spark.sql.DataFrame = {
-    import graft.operators.Lineage.CutOps
     // materialized ONCE: every temporal gate runs 1-2 driver actions
     // over the chain (seed / t0 pulls) BEFORE the frontier loop's own
     // edge-prep cut, and each action re-ran the whole events-scan →
     // groupBy → 13-lead window → explode → distinct pipeline — the
     // cut makes the pulls and the loop read the same materialized rows
-    chainFromFe(feFrame(s, dir), maxWait, arrivalSlack).cutLineage()
+    graft.operators.Lineage.cut(chainFromFe(feFrame(s, dir), maxWait, arrivalSlack))
   }
 
   private val graphTemporalReach = Q(
@@ -2051,7 +2050,7 @@ object Graph {
       val chain = handoffChain(s, dir)
       val seed = chain.agg(min(least($"u", $"v"))).head.getLong(0)
       val t0 = chain.agg(min($"dep".cast("long"))).head.getLong(0)
-      val fronts = graft.operators.Lineage.settle(
+      val (fronts, _) = graft.operators.Lineage.settle(
         GraphAlgos.temporalParetoLabels(chain, "u", "v", "dep", "arr", seed))
       Seq(0L, 21600000L, 43200000L).zipWithIndex.map { case (off, i) =>
         fronts.filter($"d" >= t0 + off)
@@ -2376,7 +2375,7 @@ object Graph {
         .distinct().orderBy($"nd").limit(3)
         .collect().map(_.getLong(0)).toSeq
       val t0 = chain.agg(min($"dep".cast("long"))).head.getLong(0)
-      val fronts = graft.operators.Lineage.settle(
+      val (fronts, _) = graft.operators.Lineage.settle(
         GraphAlgos.temporalParetoLabelsMulti(chain, "u", "v", "dep", "arr", seeds))
       val grid = seeds.toDF("seed").crossJoin(
         Seq((0, 0L), (1, 21600000L), (2, 43200000L)).toDF("sweep", "off"))
@@ -2639,7 +2638,7 @@ object Graph {
       val chainAq = chainFromFe(fe, maxWait = Some(w), arrivalSlack = Some(g))
       val aq = GraphAlgos.temporalBoundedWaitFastest(
         chainAq, "u", "v", "dep", "arr", seed, w, quantizeArrivals = Some(g))
-      val j = graft.operators.Lineage.settle(
+      val (j, _) = graft.operators.Lineage.settle(
         exact.select($"node", $"fastest".as("f_exact"))
           .join(aq.select($"node", $"fastest".as("f_aq")), Seq("node"), "left")
           .withColumn("over", $"f_aq" - $"f_exact"))
@@ -2773,7 +2772,7 @@ object Graph {
         .groupBy($"node").agg(
           min($"a" - $"d").as("f_aq"),
           min($"a" - ($"d" - pmod($"d", lit(q)))).as("f_aqq"))
-      val j = graft.operators.Lineage.settle(
+      val (j, _) = graft.operators.Lineage.settle(
         exact.select($"node", $"fastest".as("f_exact"))
           .join(coarse, Seq("node"), "left")
           .withColumn("over_g", $"f_aq" - $"f_exact")

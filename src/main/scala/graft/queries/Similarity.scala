@@ -2234,7 +2234,7 @@ object Similarity {
         .persist()
       val init = e.filter($"vec_id" % 100 === 1)
         .select($"vec_id".as("cent_id"), $"q".as("qc"), $"n2".as("n2c"))
-      val fullCents = graft.operators.Lineage.settle(
+      val (fullCents, _) = graft.operators.Lineage.settle(
         VectorSim.kmeansFit(e, init, dims = 64, iters = 3)._1)
       val cs = VectorSim.lightweightCoreset(e, dims = 64, m = 256L)
         .withColumn("iw",
@@ -2250,8 +2250,8 @@ object Similarity {
       // Lloyd chains are iters× corpus scans — without the cut, every
       // downstream consumer (each weighted iteration, the drift join,
       // both cost audits) would re-execute them from scratch
-      val csVecs = graft.operators.Lineage.settle(e.join(broadcast(cs), "vec_id"))
-      val wCents = graft.operators.Lineage.settle(
+      val (csVecs, _) = graft.operators.Lineage.settle(e.join(broadcast(cs), "vec_id"))
+      val (wCents, _) = graft.operators.Lineage.settle(
         VectorSim.kmeansFitWeighted(csVecs, "iw", init, dims = 64, iters = 3)._1)
       def fullCost(cents: org.apache.spark.sql.DataFrame) =
         e.crossJoin(broadcast(cents))
@@ -2354,8 +2354,8 @@ object Similarity {
       // settle the coreset join and the trained quantizer once — the
       // coreset chain is corpus passes and wCents feeds BOTH the
       // posting assignment and the probe ranking
-      val csVecs = graft.operators.Lineage.settle(e.join(broadcast(cs), "vec_id"))
-      val wCents = graft.operators.Lineage.settle(
+      val (csVecs, _) = graft.operators.Lineage.settle(e.join(broadcast(cs), "vec_id"))
+      val (wCents, _) = graft.operators.Lineage.settle(
         VectorSim.kmeansFitWeighted(csVecs, "iw", init, dims = 64, iters = 3)._1)
       // the ONE full-corpus pass: assign everything to the coreset-
       // trained quantizer (centroids broadcast)

@@ -45,6 +45,30 @@ class HierarchySpec extends AnyFunSuite {
     (0L until n).foreach(i => assert(got(i) == ref(i), s"node $i"))
   }
 
+  test("reliable checkpointing: same result as the default path, with the " +
+    "rounds' files under the checkpoint dir") {
+    val chain = (0L to 40L).map(i => (i, math.max(i - 1, 0L)))
+    val expected = flatten(chain)
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_hierarchy_ck").toString
+    spark.conf.set(Lineage.ReliableKey, "true")
+    spark.conf.set(Lineage.DirKey, ckDir)
+    try {
+      // the context checkpoint dir is once-per-context: scan the real one
+      val actual = new java.io.File(new java.net.URI(
+        spark.sparkContext.getCheckpointDir.getOrElse("file://" + ckDir)).getPath)
+      def rddDirs(): Set[String] = Option(actual.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("rdd-")).map(_.getName).toSet
+      val before = rddDirs()
+      val out = Hierarchy.flattenForest(chain.toDF("id", "parent"), "id", "parent")
+      assert(out.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap ==
+        expected)
+      assert((rddDirs() -- before).nonEmpty, s"expected rdd-* files under $actual")
+    } finally {
+      spark.conf.set(Lineage.ReliableKey, "false")
+      spark.conf.unset(Lineage.DirKey)
+    }
+  }
+
   test("a cycle throws instead of silently not converging") {
     val e = intercept[IllegalArgumentException] {
       flatten(Seq((1L, 2L), (2L, 1L)))

@@ -32,18 +32,23 @@ class LineageSpec extends AnyFunSuite {
     val expected = GraphAlgos.coreNumbers(edges, "u", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ckDir = java.nio.file.Files.createTempDirectory("graft_reliable_ck").toString
-    val got = withReliable(ckDir) {
-      GraphAlgos.coreNumbers(edges, "u", "v")
+    def countFiles(f: java.io.File): Int =
+      Option(f.listFiles()).getOrElse(Array.empty)
+        .map(c => if (c.isDirectory) countFiles(c) else 1).sum
+    // the CONTEXT checkpoint dir wins if an earlier suite already set
+    // one (setCheckpointDir is once-per-context) — scan the real one
+    def actual = new java.io.File(new java.net.URI(
+      spark.sparkContext.getCheckpointDir.getOrElse("file://" + ckDir)).getPath)
+    val (got, before, after) = withReliable(ckDir) {
+      val before = countFiles(actual)
+      val got = GraphAlgos.coreNumbers(edges, "u", "v")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (got, before, countFiles(actual))
     }
     assert(got === expected)
     // the rounds actually went through the reliable store: RDD
     // checkpoint files exist under the configured dir
-    def countFiles(f: java.io.File): Int =
-      Option(f.listFiles()).getOrElse(Array.empty)
-        .map(c => if (c.isDirectory) countFiles(c) else 1).sum
-    assert(countFiles(new java.io.File(ckDir)) > 0,
-      s"expected checkpoint files under $ckDir")
+    assert(after > before, s"expected checkpoint files under $actual")
   }
 
   test("reliable=true without a checkpoint dir fails loudly") {
@@ -85,7 +90,7 @@ class LineageSpec extends AnyFunSuite {
       Lineage.release(df)
       assert((rddDirs() -- before).isEmpty, "release should delete the files")
       // settled frames transfer ownership to the wrapper the caller holds
-      val s = Lineage.settle(Seq((3L, 4L)).toDF("a", "b"))
+      val (s, _) = Lineage.settle(Seq((3L, 4L)).toDF("a", "b"))
       assert(s.count() == 1)
       assert((rddDirs() -- before).nonEmpty)
       Lineage.release(s)
@@ -132,6 +137,7 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
+  // also covers PageRank and hierarchy flattening (name kept stable)
   test("the round-9 loops (FW-BW SCC, temporal reach) run under the " +
     "reliable path with identical results and bounded retention") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
@@ -143,12 +149,21 @@ class LineageSpec extends AnyFunSuite {
     def reachMap() = GraphAlgos.temporalReachable(
       tEdges, "u", "v", "ts", "ts", 1L, 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def rankMap() = PageRank.pagerank(edges, "u", "v", iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def forestMap() = Hierarchy.flattenForest(
+      Seq((1L, 1L), (2L, 1L), (3L, 2L), (4L, 3L), (5L, 5L), (6L, 5L)).toDF("id", "parent"),
+      "id", "parent")
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val (sccDefault, reachDefault) = (sccMap(), reachMap())
+    val (rankDefault, forestDefault) = (rankMap(), forestMap())
     val ckDir = java.nio.file.Files.createTempDirectory("graft_r9_reliable").toString
     withReliable(ckDir) {
       assert(sccMap() === sccDefault)
       assert(reachMap() === reachDefault)
-      // retention stays bounded through BOTH loops' many cut/settle
+      assert(rankMap() === rankDefault)
+      assert(forestMap() === forestDefault)
+      // retention stays bounded through the loops' many cut/settle
       // rounds — released rounds must not pile up
       val actual = new java.io.File(
         new java.net.URI(spark.sparkContext.getCheckpointDir.getOrElse(
@@ -162,30 +177,33 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
+  // cutAgg/settleAgg are now `settle(df, aggs)` (name kept stable)
   test("cutAgg/settleAgg: the fused aggregate row matches a separate " +
     "aggregate, the materialized rows match settle's, and the reliable " +
     "path (eager fallback) agrees") {
     import org.apache.spark.sql.functions._
     val src = Seq((1L, true), (2L, false), (3L, true)).toDF("k", "chg")
-    val (m, row) = Lineage.settleAgg(src, Seq(count_if($"chg"), count(lit(1))))
+    val (m, row) = Lineage.settle(src, Seq(count_if($"chg"), count(lit(1))))
     assert(row.getLong(0) == 2L && row.getLong(1) == 3L)
     assert(m.collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
     val ckDir = java.nio.file.Files.createTempDirectory("graft_cutagg_ck").toString
     withReliable(ckDir) {
-      val (mr, rr) = Lineage.settleAgg(src, Seq(count_if($"chg")))
+      val (mr, rr) = Lineage.settle(src, Seq(count_if($"chg")))
       assert(rr.getLong(0) == 2L)
       assert(mr.collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
       Lineage.release(mr)
     }
   }
 
+  // settleKeyedAgg is now `settle(df, aggs, keyed = true)` (name kept
+  // stable)
   test("settleKeyedAgg keeps the physical layout (the next keyed join/" +
     "window plans exchange-free) AND drops origin stats (no compounding " +
     "estimate), with rows identical to settle's") {
     import org.apache.spark.sql.functions._
     val base = Seq((1L, 10L), (2L, 20L), (3L, 5L), (4L, 7L)).toDF("k", "v")
       .repartition(4, $"k").sortWithinPartitions($"k", $"v")
-    val (keyed, row) = Lineage.settleKeyedAgg(base, Seq(count(lit(1))))
+    val (keyed, row) = Lineage.settle(base, Seq(count(lit(1))), keyed = true)
     assert(row.getLong(0) == 4L)
     // layout preserved: the analyzed leaf reports hash(k) partitioning
     val lr = keyed.queryExecution.analyzed
@@ -199,29 +217,55 @@ class LineageSpec extends AnyFunSuite {
     for (_ <- 1 to 6) {
       val d2 = df.as("a").join(df.as("b"), Seq("k"))
         .select($"k", ($"a.v" + $"b.v").as("v"))
-      df = Lineage.settleKeyedAgg(d2.repartition(4, $"k"), Seq(count(lit(1))))._1
+      df = Lineage.settle(d2.repartition(4, $"k"), Seq(count(lit(1))), keyed = true)._1
     }
     val bits = df.queryExecution.optimizedPlan.stats.sizeInBytes
       .bigInteger.bitLength
     assert(bits <= 70,
-      s"estimate bit-length $bits — origin stats compound through settleKeyedAgg")
+      s"estimate bit-length $bits — origin stats compound through a keyed settle")
     // and an aggregation keyed on k over the keyed frame plans NO exchange
     val agg = keyed.groupBy($"k").agg(sum($"v"))
     val exchanges = agg.queryExecution.executedPlan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
     assert(exchanges.isEmpty,
-      s"keyed groupBy over a settleKeyedAgg frame planned ${exchanges.size} exchange(s)")
+      s"keyed groupBy over a keyed settle planned ${exchanges.size} exchange(s)")
+  }
+
+  test("prep keeps the layout it establishes; the same cut planned under " +
+    "AQE drops it (the adaptive root reports UnknownPartitioning)") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val base = Seq((1L, 10L), (2L, 20L), (3L, 5L), (4L, 7L)).toDF("k", "v")
+    def leaf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    // descends into the adaptive plan (a plain collect stops at its root)
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      helper.collect(df.groupBy($"k").agg(sum($"v")).queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.size
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val prepped = Lineage.prep(base, Seq("k"), Some(4))
+    assert(leaf(prepped).outputPartitioning.isInstanceOf[HashPartitioning])
+    assert(leaf(prepped).outputOrdering.nonEmpty)
+    assert(exchanges(prepped) == 0)
+    val aqeCut = Lineage.cut(base.repartition(4, $"k").sortWithinPartitions($"k"))
+    assert(leaf(aqeCut).outputPartitioning == UnknownPartitioning(0),
+      s"expected AQE to drop the layout, got ${leaf(aqeCut).outputPartitioning}")
+    assert(exchanges(aqeCut) == 1)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 
   test("settle drops origin stats: the size estimate's bit-length stays " +
     "flat across an iterated self-join loop (checkpointing alone lets the " +
     "BigInt estimate COMPOUND until stats estimation eats the driver)") {
-    var df = Lineage.settle(Seq((1L, 1L), (2L, 2L)).toDF("node", "c"))
+    var df = Lineage.settle(Seq((1L, 1L), (2L, 2L)).toDF("node", "c"))._1
     for (_ <- 1 to 8) {
       df = Lineage.settle(
         df.as("a").join(df.as("b"), Seq("node"))
-          .select($"node", ($"a.c" + $"b.c").as("c")))
+          .select($"node", ($"a.c" + $"b.c").as("c")))._1
     }
     val bits = df.queryExecution.optimizedPlan.stats.sizeInBytes
       .bigInteger.bitLength

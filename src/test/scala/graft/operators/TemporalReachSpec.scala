@@ -633,12 +633,14 @@ class TemporalReachSpec extends AnyFunSuite {
       val edges = GraphAlgos.chainShortcuts(
         chains, partCols = Seq("p"), ordCols = Seq("ts"),
         nodeCol = "node", tsCol = "ts", maxLevel = maxLevel)
-      val rounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-      val regs = GraphAlgos.temporalAnfReach(
-        edges, "u", "v", "dep", "arr", maxIters = 64, registerWidth = 512,
-        roundsOut = Some(rounds))
-        .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("regs")).toMap
-      (regs, rounds.get())
+      // rounds counted from the loop's per-round job descriptions
+      val (regs, descs) = org.apache.spark.JobDescriptions.during(spark.sparkContext) {
+        GraphAlgos.temporalAnfReach(
+          edges, "u", "v", "dep", "arr", maxIters = 64, registerWidth = 512)
+          .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("regs")).toMap
+      }
+      (regs, descs.collect { case d if d.startsWith("temporalAnfReach round ") =>
+        d.stripPrefix("temporalAnfReach round ").toInt }.max)
     }
     val (baseRegs, baseRounds) = run(0)
     val (shortRegs, shortRounds) = run(5)
