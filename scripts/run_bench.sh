@@ -1,19 +1,8 @@
 #!/bin/bash
-# Direct-JVM runner for graft.Bench (clone of run_verify.sh): the JSON
-# summary is the LAST BARE stdout line — no sbt [info] prefixes or
-# [success] trailer to defeat a line-oriented JSON parse.
-# Usage: SPARK_GRAFT_SF_DIR=... run_bench.sh
+# Direct-JVM runner for graft.Bench: the JSON summary is the LAST BARE
+# stdout line — no sbt [info] prefixes or [success] trailer to defeat a
+# line-oriented JSON parse.
+# Usage: SPARK_GRAFT_SF_DIR=... run_bench.sh [--only q1,q2,...]
 set -e
 "$(dirname "$0")/commit_snapshot.sh" || true
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java -Xmx16g $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Bench "$@"
+exec "$(dirname "$0")/run_main.sh" 16g graft.Bench "$@"

@@ -5,15 +5,4 @@ set -e
 # artifacts must never ride untracked into judging — commit any that
 # are new or modified before doing anything else.
 "$(dirname "$0")/commit_snapshot.sh" || true
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java -Xmx16g $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$@"
+exec "$(dirname "$0")/run_main.sh" 16g graft.Verify "$@"

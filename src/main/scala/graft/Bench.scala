@@ -1,130 +1,158 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The engine's one timing harness.
+  *
+  * Protocol: warm the JVM and the codegen cache by running every
+  * selected query once on sf0.001 (the same plan over a different
+  * directory emits identical generated source, so the measured plans
+  * are pre-compiled without touching the measured data), then time
+  * each query three times to the noop sink (which materializes every
+  * column, unlike `count()`) with `clearCache` between runs, and keep
+  * the min: the host shares physical cores with other tenants, and a
+  * multi-second stall can hit any single run. A failing run makes its
+  * query and the total read -1, so a breakage never reads as a speedup.
+  *
+  * Usage: `graft.Bench [--only q1,q2,...]` (env: `SPARK_GRAFT_SF_DIR`,
+  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_BENCH_OUT`). The artifact holds the
+  * `queries` map of min seconds plus, per query, the record of every
+  * run (wall, process CPU, JVM GC, codegen compiles). A full run writes
+  * it to `bench_full.json`; an `--only` run writes `bench_only.json`
+  * next to it and never touches the full-suite artifact.
+  */
 object Bench {
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  val Runs = 3
+
+  /** One timed run. `wallS` is -1 when the run threw. In local mode
+    * driver and executors share one JVM, so process CPU and GC cover
+    * the executors too; a stalled run with flat CPU, GC and compiles
+    * points outside the JVM (host steal).
+    */
+  final case class Run(wallS: Double, cpuS: Double, gcS: Double, compiles: Long)
+
+  final case class Row(name: String, runs: Seq[Run]) {
+    def failed: Boolean = runs.exists(_.wallS < 0)
+    def minS: Double = if (failed) -1.0 else runs.map(_.wallS).min
+  }
+
   def main(args: Array[String]): Unit = {
+    val queries = select(args.toList)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // engine-wide codegen-cache sizing (see GraftSession for the
-      // full rationale). Without it the warmup pass below was MOOT for
-      // the iterative queries: one loop query emits ~50-250 distinct
-      // codegen units, so Spark's 100-entry default evicted the warm
-      // classes before the timed runs — measured 116 Janino recompiles
-      // on EVERY repeat of q_graph_temporal_bw_fastest at the default
-      // vs 0 at 4096 (the warmup finally does what its comment says).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up JVM + whole-stage-codegen caches: run every query once on
-    // the smallest scale factor. Spark caches compiled generated code by
-    // source text, and the same plan over a different directory emits
-    // identical source — so this pre-compiles each measured plan without
-    // touching the measured data.
+    val cpus = GraftSession.envCores
+    val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
+    val out =
+      if (args.isEmpty) fullOut
+      else Paths.get(fullOut).resolveSibling("bench_only.json").toString
+    val spark = GraftSession.local(cpus)
+    try {
+      val rows = run(spark, sfDir, queries)
+      Files.write(Paths.get(out),
+        (artifact(rows, sfDir, cpus) + "\n").getBytes(StandardCharsets.UTF_8))
+      println(summary(rows, sfDir, out))
+    } finally spark.stop()
+  }
+
+  /** The registry entries to time: all of them, or the `--only` list. */
+  def select(args: List[String]): Seq[(String, QueryFn)] = args match {
+    case Nil => SparkEntry.queries.toSeq.sortBy(_._1)
+    case "--only" :: names :: Nil =>
+      val wanted = names.split(',').map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      val unknown = wanted.filterNot(SparkEntry.queries.contains)
+      require(wanted.nonEmpty, "--only needs at least one query name")
+      require(unknown.isEmpty,
+        s"unknown query name(s) for --only: ${unknown.mkString(", ")}")
+      wanted.map(n => n -> SparkEntry.queries(n))
+    case other =>
+      throw new IllegalArgumentException(
+        s"usage: graft.Bench [--only q1,q2,...]; got: ${other.mkString(" ")}")
+  }
+
+  /** Warm up, then time every query [[Runs]] times at `sfDir`. */
+  def run(spark: SparkSession, sfDir: String, queries: Seq[(String, QueryFn)]): Seq[Row] = {
     spark.range(1000000).selectExpr("sum(id)").collect()
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.values.foreach { fn =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+    queries.foreach { case (_, fn) =>
+      try noop(fn(spark, warmDir))
       catch { case _: Throwable => () }
     }
-    // noop sink materializes every column (count() would let Spark
-    // skip computing the projection entirely).
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // three timed runs, report the min — the host shares physical
-      // cores with other tenants (hypervisor steal), and a multi-second
-      // stall can hit any single run; with two runs a stray stall still
-      // poisons the min whenever it overlaps both. clearCache between
-      // runs so persisted subplans are re-materialized (their cost is
-      // part of the query).
-      // per-run JVM GC time (local mode: driver == executors, one
-      // JVM — this covers executor GC too): the standing in-suite
-      // stall signature (a query 3-4× its standalone min-of-3 ONLY
-      // mid-full-suite) needs wall time split into work vs GC pause
-      // to adjudicate — see ARCHITECTURE.md round-13/14 addenda. The
-      // round-14 full-suite run REFUTED the GC hypothesis (zero runs
-      // over 1 s of GC across 888 runs), so the next suspect,
-      // whole-stage-codegen recompilation, is instrumented alongside:
-      // a stalled run whose compile-count delta dwarfs its repeats'
-      // is a codegen-cache miss; a stall with flat GC AND flat
-      // compiles points outside the JVM (host steal).
-      def gcMillis(): Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-      }
-      def compileCount(): Long =
-        org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount
-      val runs = (1 to 3).map { _ =>
+    queries.map { case (name, fn) =>
+      Row(name, (1 to Runs).map { _ =>
         spark.catalog.clearCache()
-        val g0 = gcMillis()
-        val c0 = compileCount()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9, (gcMillis() - g0) / 1e3,
-            compileCount() - c0)
-        } catch {
-          case e: Throwable =>
-            // a failing query must read as breakage, not a speedup
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            (-1.0, 0.0, 0L)
-        }
-      }
-      val times = runs.map(_._1)
-      val worstGc = runs.map(_._2).max
-      if (worstGc > 1.0)
-        System.err.println(
-          f"[bench-gc] $name runs=${times.map(t => f"$t%.2f").mkString(",")} " +
-            f"gc=${runs.map(r => f"${r._2}%.2f").mkString(",")} s")
-      // intra-query stall: one repeat ≥ 2× the min — print the full
-      // attribution row so the mechanism is adjudicable from the log
-      if (times.min > 0.5 && times.max > 2.0 * times.min)
-        System.err.println(
-          f"[bench-stall] $name runs=${times.map(t => f"$t%.2f").mkString(",")} " +
-            f"gc=${runs.map(r => f"${r._2}%.2f").mkString(",")} " +
-            s"compiles=${runs.map(_._3).mkString(",")}")
-      name -> (if (times.contains(-1.0)) -1.0 else times.min)
-    }.toMap
-    // any failed query poisons the headline metric — a breakage must
-    // never read as a speedup
-    val total =
-      if (results.values.exists(_ < 0)) -1.0 else results.values.sum
-    def jsonMap(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // Full per-query artifact on disk (committed with the round
-    // snapshot): the driver's stdout capture keeps only a 2000-char
-    // tail, which a 213-entry map overflows — this file is the
-    // round-over-round comparison surface.
-    val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    // paths are interpolated into JSON below — escape them, or a
-    // quote/backslash in an env var yields an unparseable summary line
-    def jsonEsc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+        val (g0, c0, k0, t0) = (gcMillis(), cpuNanos(), compileCount(), System.nanoTime())
+        val ok =
+          try { noop(fn(spark, sfDir)); true }
+          catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+              false
+          }
+        Run(if (ok) (System.nanoTime() - t0) / 1e9 else -1.0,
+          (cpuNanos() - c0) / 1e9, (gcMillis() - g0) / 1e3, compileCount() - k0)
+      })
     }
-    val fullOutJson = jsonEsc(fullOut)
-    val sfDirJson = jsonEsc(sfDir)
-    val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""n_queries":${results.size},"cpus":$cpus,""" +
-      s""""queries":${jsonMap(results.toSeq.sortBy(_._1))},"sf":"$sfDirJson"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(fullOut),
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // stdout line: the 40 costliest queries — sized to survive the
-    // tail capture intact so the driver's JSON parse succeeds
-    val top = results.toSeq.sortBy(-_._2).take(40).sortBy(_._1)
-    println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""n_queries":${results.size},"full":"$fullOutJson",""" +
-      s""""queries":${jsonMap(top)},"sf":"$sfDirJson"}""")
-    spark.stop()
   }
+
+  /** Any failed query poisons the total. */
+  def total(rows: Seq[Row]): Double =
+    if (rows.exists(_.failed)) -1.0 else rows.map(_.minS).sum
+
+  /** The on-disk artifact: `queries` (name → min seconds, the shape
+    * `scripts/bench_compare.py` reads) and `runs` (name → run records).
+    */
+  def artifact(rows: Seq[Row], sfDir: String, cpus: Int): String = {
+    val sorted = rows.sortBy(_.name)
+    val runs = sorted.map { r =>
+      jsonStr(r.name) + ":" + r.runs.map { x =>
+        s"""{"wall_s":${x.wallS},"cpu_s":${x.cpuS},"gc_s":${x.gcS},"compiles":${x.compiles}}"""
+      }.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${total(rows)},"unit":"sec",""" +
+      s""""n_queries":${rows.size},"cpus":$cpus,"queries":${minMap(sorted)},""" +
+      s""""runs":$runs,"sf":${jsonStr(sfDir)}}"""
+  }
+
+  /** The stdout line: the 40 costliest queries, sized to survive a
+    * 2000-character tail capture intact; the artifact has them all.
+    */
+  def summary(rows: Seq[Row], sfDir: String, out: String): String = {
+    val top = rows.sortBy(-_.minS).take(40).sortBy(_.name)
+    s"""{"metric":"total","value":${total(rows)},"unit":"sec",""" +
+      s""""n_queries":${rows.size},"full":${jsonStr(out)},""" +
+      s""""queries":${minMap(top)},"sf":${jsonStr(sfDir)}}"""
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def gcMillis(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).filter(_ >= 0).sum
+
+  private def cpuNanos(): Long = ManagementFactory.getOperatingSystemMXBean match {
+    case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
+    case _ => 0L
+  }
+
+  private def compileCount(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def minMap(rows: Seq[Row]): String =
+    rows.map(r => jsonStr(r.name) + ":" + r.minS).mkString("{", ",", "}")
+
+  private def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

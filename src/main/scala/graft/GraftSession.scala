@@ -2,13 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** The one session factory of the graft engine: every main (`Bench`,
+  * `Verify`, the CLI, the dev tools), the test harness and the
+  * benchmark build their session here, so the session that is
+  * verified and benched is the one that ships.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 128 GiB single JVM) but every setting here is what we would ship to a
-  * real cluster too: AQE on (runtime re-planning, skew-join splitting,
-  * partition coalescing), UTC session time, shuffle partitions sized to
-  * the parallelism at hand rather than the 200 default.
+  * It installs [[graft.functions.GraftExtensions]] (the native SQL
+  * functions), runs in UTC, sizes shuffle partitions to `cores` rather
+  * than the 200 default, reads nanosecond Parquet timestamps as longs
+  * (`Tables.events` converts them) and enlarges the codegen cache.
+  * AQE with partition coalescing and skew-join splitting is Spark's
+  * default and is left at it; `BenchSpec` pins the effective values.
   */
 object GraftSession {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
@@ -16,16 +20,10 @@ object GraftSession {
       .builder()
       .master(s"local[$cores]")
       .appName("graft")
-      // the full native surface (fnv63, sketch aggregates, register
-      // algebra, replay_book TVF, range-join binning rule) rides the
-      // declarative extensions route, so plain spark.sql text can call
-      // everything without imperative register() calls; a cluster
-      // deployment sets spark.sql.extensions=graft.functions.GraftExtensions
+      // a cluster deployment sets
+      // spark.sql.extensions=graft.functions.GraftExtensions instead
       .withExtensions(new graft.functions.GraftExtensions())
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
@@ -47,4 +45,10 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Cores from `SPARK_GRAFT_CPUS`, else every available processor:
+    * the parallelism `Bench` and `Verify` run at.
+    */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 }

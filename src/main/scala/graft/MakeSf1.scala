@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not part of the driver contract): synthesizes the sf1
@@ -30,12 +30,7 @@ object MakeSf1 {
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val Off = 10000000L
 
     def stack(name: String)(transform: (DataFrame, Int) => DataFrame): Unit = {

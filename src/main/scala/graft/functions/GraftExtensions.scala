@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Declarative registration of graft's native expressions and
-  * optimizer rules, for sessions configured with
-  * `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (the SparkSessionExtensions route; `ArrayDotLong.register` and
-  * `spark.experimental.extraOptimizations` are the imperative
-  * equivalents for sessions we don't configure).
+/** Declarative registration of graft's native SQL functions (the
+  * dot kernel, fnv63, the sketch aggregates and the HLL register
+  * algebra), installed by `GraftSession.local` and by any session
+  * configured with `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * `ArrayDotLong.register` and its siblings are the imperative
+  * equivalents for sessions built elsewhere.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
@@ -46,14 +46,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier(HllRegisters.EvalName),
       new ExpressionInfo(classOf[HllRegsEval].getName, HllRegisters.EvalName),
       (exprs: Seq[Expression]) => HllRegsEval(exprs.head)))
-    // rewrites naive interval range joins (nested loops) into binned
-    // equi-joins; inert until spark.graft.rangeJoin.binWidth is set
-    extensions.injectOptimizerRule(_ => graft.plans.RangeJoinBinning)
-    // SQL-callable book replay: SELECT * FROM replay_book('feed_view')
-    extensions.injectTableFunction((
-      FunctionIdentifier(graft.plans.ReplayBookTVF.name),
-      new ExpressionInfo(graft.plans.ReplayBookTVF.getClass.getName,
-        graft.plans.ReplayBookTVF.name),
-      graft.plans.ReplayBookTVF.builder))
   }
 }

@@ -38,14 +38,7 @@ object BookReplay {
   ): Dataset[Tick] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    val filtered = marketFilter match {
-      case Some(ids) =>
-        // Broadcastable IN-set, placed upstream of the shuffle so
-        // Catalyst can push it into the scan where possible.
-        msgs.filter($"market".isin(ids.toSeq: _*))
-      case None => msgs
-    }
-    filtered
+    inMarkets(msgs, marketFilter)
       .repartition($"assetId")
       .sortWithinPartitions($"assetId", $"fileHour", $"lineNo", $"msgIdx")
       .mapPartitions(foldPartition)
@@ -79,10 +72,7 @@ object BookReplay {
   ): Dataset[Tick] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    val filtered = marketFilter match {
-      case Some(ids) => msgs.filter($"market".isin(ids.toSeq: _*))
-      case None => msgs
-    }
+    val filtered = inMarkets(msgs, marketFilter)
     if (spark.conf.getOption("spark.graft.replay.assertPreDistributed")
         .exists(_.toBoolean)) {
       val mod = spark.conf.getOption("spark.graft.replay.assertSampleMod")
@@ -128,6 +118,16 @@ object BookReplay {
         "BookReplay.ticks, which shuffles.")
   }
 
+  /** F2, the one market filter of every replay (batch and stream): an
+    * IN-set on the `market` column, placed upstream of the shuffle so
+    * Catalyst can push it into the scan where possible.
+    */
+  private[graft] def inMarkets(
+      msgs: Dataset[FeedMsg],
+      marketFilter: Option[Set[String]],
+  ): Dataset[FeedMsg] =
+    marketFilter.fold(msgs)(ids => msgs.filter(col("market").isin(ids.toSeq: _*)))
+
   /** Reference-schema projection (7 columns, `tick_generator.rs:50-58`),
     * ordered like a single-threaded replay would append.
     */
@@ -157,25 +157,31 @@ object BookReplay {
         currentAsset = m.assetId
         book = new Book
       }
-      m.eventType match {
-        case "last_trade_price" if m.price != null && m.size != null =>
-          // B3: passthrough (`tick_generator.rs:209-221`); wire side
-          // BUY/SELL → stored BID/ASK (`tick_generator.rs:85-88`).
-          val side = if (m.side == "BUY") "BID" else "ASK"
-          Seq(
-            Tick(m.ts, "TRADE", m.market, m.assetId, side,
-              new java.math.BigDecimal(m.price).doubleValue,
-              new java.math.BigDecimal(m.size).doubleValue,
-              m.fileHour, m.lineNo, m.msgIdx, 0))
-        case "book" =>
-          book.resetFromSnapshot(m.asks, m.bids)
-          bbo(book, m)
-        case "price_change" =>
-          book.updateFromDiff(m.changes)
-          bbo(book, m)
-        case _ => Nil
-      }
+      applyMsg(book, m)
     }
+  }
+
+  /** One message against the live book, the emission rule shared by
+    * the batch fold and both streaming folds (`MarketState::update`,
+    * `tick_generator.rs:318-362`).
+    */
+  private[graft] def applyMsg(book: Book, m: FeedMsg): Seq[Tick] = m.eventType match {
+    case "last_trade_price" if m.price != null && m.size != null =>
+      // B3: passthrough (`tick_generator.rs:209-221`); wire side
+      // BUY/SELL → stored BID/ASK (`tick_generator.rs:85-88`).
+      val side = if (m.side == "BUY") "BID" else "ASK"
+      Seq(
+        Tick(m.ts, "TRADE", m.market, m.assetId, side,
+          new java.math.BigDecimal(m.price).doubleValue,
+          new java.math.BigDecimal(m.size).doubleValue,
+          m.fileHour, m.lineNo, m.msgIdx, 0))
+    case "book" =>
+      book.resetFromSnapshot(m.asks, m.bids)
+      bbo(book, m)
+    case "price_change" =>
+      book.updateFromDiff(m.changes)
+      bbo(book, m)
+    case _ => Nil
   }
 
   /** B2: two BBO rows after every book event, ASK first then BID

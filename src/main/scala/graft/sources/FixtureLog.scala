@@ -2,6 +2,8 @@ package graft.sources
 
 import java.io.{File, FileOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
+import java.time.{Duration, Instant, ZoneOffset}
+import java.time.format.DateTimeFormatter
 
 import scala.collection.mutable
 import scala.util.Random
@@ -195,7 +197,19 @@ object FixtureLog {
       enable_order_book = true,
     )
 
-  private def hourOf(fi: Int): String = f"2025-07-01-${10 + fi}%02d"
+  /** File `fi` covers the hour from 2025-07-01T10:00Z + `fi` hours. Its
+    * hour key and every receipt time in it derive from that one instant,
+    * so a day of more than 14 files rolls over to 2025-07-02.
+    */
+  private def hourStart(fi: Int): Instant =
+    Instant.parse("2025-07-01T10:00:00Z").plus(Duration.ofHours(fi.toLong))
+
+  private def fmt(pattern: String) =
+    DateTimeFormatter.ofPattern(pattern).withZone(ZoneOffset.UTC)
+  private val HourKey = fmt("yyyy-MM-dd-HH")
+  private val ReceiptTs = fmt("yyyy-MM-dd'T'HH:mm:ssxxx")
+
+  private def hourOf(fi: Int): String = HourKey.format(hourStart(fi))
 
   private def writeFiles(spec: Spec, dir: File): Seq[String] = {
     (0 until spec.nFiles).map { fi =>
@@ -224,7 +238,7 @@ object FixtureLog {
     // then second), like a real single-writer collector log — the
     // streaming path keys arrival order on receipt time
     def frameTs(i: Int) =
-      s"2025-07-01T${hour.takeRight(2)}:${f"${(i / 60) % 60}%02d"}:${f"${i % 60}%02d"}+00:00"
+      ReceiptTs.format(hourStart(fileIdx).plusSeconds((i % 3600).toLong))
     def msgTs(i: Int) = (1751378400000L + fileIdx * 3600000L + i * 1000L).toString
 
     // dimension frame first, as after each rotation

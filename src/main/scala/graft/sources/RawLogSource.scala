@@ -8,7 +8,7 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.github.luben.zstd.ZstdInputStream
 import org.apache.spark.input.PortableDataStream
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -232,8 +232,7 @@ object RawLogSource {
     * checks), so the predicate never evaluates to SQL NULL — strict
     * and permissive modes agree on what "invalid" means.
     */
-  private[sources] def invalidFeedMessage: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.Column
+  private[sources] def invalidFeedMessage: Column = {
     def f(n: String) = col("m").getField(n)
     val badLevel = (l: Column) =>
       l.getField("price").isNull || l.getField("size").isNull
@@ -278,10 +277,22 @@ object RawLogSource {
             lit("malformed feed message (strict mode): "), col("m").cast("string"))))
           .otherwise(true)
       else !invalid
-    frames
+    explodeFeed(
       // F5: only feed frames, and skip logged server PONGs
       // (`tick_generator.rs:181-186`)
-      .filter($"messageType" === "feed_message" && $"content" =!= "PONG")
+      frames.filter($"messageType" === "feed_message" && $"content" =!= "PONG").toDF(),
+      structureGate)
+  }
+
+  /** Inner `from_json` + posexplode of the feed frames' `content`
+    * (columns `fileHour`, `lineNo`, `content`), F6's known-event filter,
+    * the structure `gate`, and the projection to [[FeedMsg]]'s 13
+    * columns: the parse shared by the batch and the streaming path.
+    */
+  private def explodeFeed(frames: DataFrame, gate: Column): Dataset[FeedMsg] = {
+    val spark = frames.sparkSession
+    import spark.implicits._
+    frames
       .select(
         $"fileHour",
         $"lineNo",
@@ -290,7 +301,7 @@ object RawLogSource {
       // F6: drop unknown event types (`tick_generator.rs:391-392`)
       .filter($"m.event_type".isin(KnownEvents: _*))
       // strict: error on structurally-invalid known events; permissive: drop
-      .filter(structureGate)
+      .filter(gate)
       .select(
         $"fileHour",
         $"lineNo",
@@ -347,7 +358,7 @@ object RawLogSource {
     // stream instead of classifying as dirty (null) — the isNotNull
     // drop below only works if the parse is non-throwing
     val receiptTs = try_to_timestamp($"f.timestamp")
-    lines
+    val frames = lines
       .select(from_json($"value", frameSchema).as("f"))
       .filter($"f.message_type" === "feed_message" &&
         $"f.content".isNotNull && $"f.content" =!= "PONG" &&
@@ -365,26 +376,7 @@ object RawLogSource {
           "yyyy-MM-dd-HH").as("fileHour"),
         unix_micros(receiptTs).as("lineNo"), // receipt order = append order
         $"f.content".as("content"))
-      .select($"fileHour", $"lineNo",
-        posexplode(from_json($"content", feedMessageSchema)).as(Seq("msgIdx", "m")))
-      .filter($"m.event_type".isin(KnownEvents: _*))
-      .filter(!invalidFeedMessage)
-      .select(
-        $"fileHour",
-        $"lineNo",
-        $"msgIdx",
-        $"m.event_type".as("eventType"),
-        $"m.market".as("market"),
-        $"m.asset_id".as("assetId"),
-        $"m.timestamp".as("ts"),
-        $"m.side".as("side"),
-        $"m.price".as("price"),
-        $"m.size".as("size"),
-        $"m.asks".as("asks"),
-        $"m.bids".as("bids"),
-        $"m.changes".as("changes"),
-      )
-      .as[FeedMsg]
+    explodeFeed(frames, !invalidFeedMessage)
   }
 
   /** Convenience: full scan path from a directory + hour range. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.model.{FeedMsg, Level, Tick}
-import graft.operators.Book
+import graft.operators.{Book, BookReplay}
 
 /** Structured Streaming variant of the book replay (SURVEY.md §2.7):
   * the same fold as BookReplay, with the book held in per-key
@@ -54,15 +54,11 @@ object StreamingReplay {
   ): Dataset[Tick] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    val filtered = marketFilter match {
-      case Some(ids) => msgs.filter(m => ids.contains(m.market))
-      case None => msgs
-    }
     val timeout = stateTtl
       .map(_ => GroupStateTimeout.ProcessingTimeTimeout())
       .getOrElse(GroupStateTimeout.NoTimeout())
 
-    filtered
+    BookReplay.inMarkets(msgs, marketFilter)
       .groupByKey(_.assetId)
       .flatMapGroupsWithState[BookState, Tick](OutputMode.Append(), timeout) {
         (_: String, it: Iterator[FeedMsg], state: GroupState[BookState]) =>
@@ -72,7 +68,7 @@ object StreamingReplay {
           } else {
             val book = state.getOption.map(toBook).getOrElse(new Book)
             val ordered = it.toSeq.sortBy(m => (m.fileHour, m.lineNo, m.msgIdx))
-            val out = ordered.iterator.flatMap(m => applyMsg(book, m)).toVector
+            val out = ordered.iterator.flatMap(m => BookReplay.applyMsg(book, m)).toVector
             state.update(fromBook(book))
             stateTtl.foreach(state.setTimeoutDuration)
             out.iterator
@@ -97,14 +93,10 @@ object StreamingReplay {
   ): Dataset[Tick] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    val filtered = marketFilter match {
-      case Some(ids) => msgs.filter(m => ids.contains(m.market))
-      case None => msgs
-    }
     // TTL cleanup is wall-clock based => ProcessingTime time mode
     val timeMode =
       if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    filtered
+    BookReplay.inMarkets(msgs, marketFilter)
       .groupByKey(_.assetId)
       .transformWithState(new BookProcessor(stateTtl), timeMode, OutputMode.Append())
   }
@@ -129,38 +121,10 @@ object StreamingReplay {
       val book =
         if (bookState.exists()) toBook(bookState.get()) else new Book
       val ordered = rows.toSeq.sortBy(m => (m.fileHour, m.lineNo, m.msgIdx))
-      val out = ordered.iterator.flatMap(m => applyMsg(book, m)).toVector
+      val out = ordered.iterator.flatMap(m => BookReplay.applyMsg(book, m)).toVector
       bookState.update(fromBook(book))
       out.iterator
     }
-  }
-
-  /** One message against the live book — same emission contract as the
-    * batch fold (`MarketState::update`, `tick_generator.rs:318-362`).
-    */
-  private def applyMsg(book: Book, m: FeedMsg): Seq[Tick] = m.eventType match {
-    case "last_trade_price" if m.price != null && m.size != null =>
-      val side = if (m.side == "BUY") "BID" else "ASK"
-      Seq(Tick(m.ts, "TRADE", m.market, m.assetId, side,
-        new java.math.BigDecimal(m.price).doubleValue,
-        new java.math.BigDecimal(m.size).doubleValue,
-        m.fileHour, m.lineNo, m.msgIdx, 0))
-    case "book" =>
-      book.resetFromSnapshot(m.asks, m.bids)
-      bbo(book, m)
-    case "price_change" =>
-      book.updateFromDiff(m.changes)
-      bbo(book, m)
-    case _ => Nil
-  }
-
-  private def bbo(book: Book, m: FeedMsg): Seq[Tick] = {
-    val (ap, as) = book.topAsk
-    val (bp, bs) = book.topBid
-    Seq(
-      Tick(m.ts, "BBO", m.market, m.assetId, "ASK", ap, as, m.fileHour, m.lineNo, m.msgIdx, 0),
-      Tick(m.ts, "BBO", m.market, m.assetId, "BID", bp, bs, m.fileHour, m.lineNo, m.msgIdx, 1),
-    )
   }
 
   /** A1 streaming: last BBO price per (1-minute tumbling window, side)

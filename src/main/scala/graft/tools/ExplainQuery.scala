@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print `explain("formatted")` for named registry queries —
   * the plan-audit loop (ARCHITECTURE.md "Plan audit" sections) without
   * ad-hoc scratch mains. Streaming gates and driver-parameterized
@@ -15,14 +13,7 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q_agg_pricing_summary").split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { q =>
       println(s"\n========== $q ==========")

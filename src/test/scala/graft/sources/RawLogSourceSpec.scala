@@ -136,4 +136,23 @@ class RawLogSourceSpec extends AnyFunSuite {
       .collect().toSeq
     assert(t1 == t2 && t1.nonEmpty)
   }
+
+  test("a 24-file fixture day names valid, increasing hours past midnight " +
+    "and the line parse keeps every message") {
+    val day = FixtureLog.Spec(
+      dir = Files.createTempDirectory("graft_fixture_day").toString,
+      nFiles = 24, framesPerFile = 20, compress = false)
+    val hours = FixtureLog.write(day).map(RawLogSource.fileHourOf)
+    val strict = java.time.format.DateTimeFormatter.ofPattern("uuuu-MM-dd-HH")
+      .withResolverStyle(java.time.format.ResolverStyle.STRICT)
+    hours.foreach(h => strict.parse(h)) // throws on hour 24 and above
+    assert(hours.zip(hours.tail).forall { case (a, b) => a < b })
+    assert(hours.head == "2025-07-01-10" && hours(14) == "2025-07-02-00")
+    val msgs = RawLogSource.feedMessagesFromLines(spark.read.text(day.dir))
+    val expected = FixtureLog.feedMessages(day)
+    assert(msgs.count() == expected.size)
+    // receipt times bucket into the hour the file is named after
+    assert(msgs.select("fileHour").distinct().collect().map(_.getString(0)).sorted.toSeq ==
+      expected.map(_.file_hour).distinct.sorted)
+  }
 }
