@@ -7,7 +7,8 @@ import graft.Tables
 import graft.operators.ScopedConf
 import graft.model.{FeedMsg, Tick}
 import graft.operators.BookReplay
-import graft.sources.{FixtureLog, MarketsDim, RawLogSource}
+import graft.sources.{FixtureLog, GcsJsonClient, HourCache, Loopback, MarketsConnector,
+  MarketsDim, RawLogSource, TlsLoopback}
 
 /** Order-book replay queries (SURVEY.md §2.4 B1/B2/B3) — the
   * reference's core operator, exposed through the driver's correctness
@@ -957,86 +958,52 @@ object Replay {
     Some(FixtureOracle.referenceTicksSql(FixtureOracle.fixtureMsgsPath)),
   )
 
-  /** S5's live transport under the CORRECTNESS gate: an in-process
-    * loopback TCP server serves a deterministic frame set; the REAL
-    * client stack — LiveConnection subscribe/await-first/read-loop,
-    * LiveFeedClient sharding + reconnect bookkeeping, the graft-feed
-    * DSv2 live mode — carries them into a streaming query, and the
-    * delivered rows must match the served set exactly. This is the
-    * q_stream_live_source generator gate with the generator replaced
-    * by an actual socket: the one piece of S5 no fixture could
-    * exercise before. Distinct guards against a mid-run reconnect
-    * re-serving frames (delivery is at-least-once across reconnects by
-    * design; the recorded-log path is the exactly-once one).
+  /** S5's live transport under the correctness gate: the real client
+    * stack (LiveConnection, LiveFeedClient, the graft-feed DSv2 live
+    * mode) carries 60 frames from a [[graft.sources.Loopback]] feed
+    * server into a streaming query, and the delivered seqs must match
+    * the served set. `_ws` adds RFC 6455 framing and `_wss` adds TLS
+    * with pinned trust in a fresh keystore, so the last one runs the
+    * reference's whole `wss://` stack (`connection.rs:80-135`).
+    * Delivery across reconnects is at-least-once by design, so the
+    * gates compare distinct seqs.
     */
-  private val streamLiveLoopback = Q(
-    "q_stream_live_loopback",
+  private def liveLoopbackGate(name: String, framing: String, tls: Boolean) = Q(
+    name,
     (s, _) => {
       import s.implicits._
       val nFrames = 60
-      val server = new java.net.ServerSocket(
-        0, 16, java.net.InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try {
-          while (true) {
-            val sock = server.accept()
-            val t = new Thread(() => {
-              try {
-                val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-                  sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-                val out = new java.io.OutputStreamWriter(
-                  sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8)
-                if (in.readLine() != null) { // the subscribe frame
-                  (1 to nFrames).foreach { i =>
-                    out.write(s"""{"seq":$i}"""); out.write("\n")
-                  }
-                  out.flush()
-                  // hold the connection open until the client stops
-                  sock.setSoTimeout(500)
-                  try { while (in.readLine() != null) () }
-                  catch { case _: Exception => () }
-                }
-              } catch { case _: Exception => () }
-              finally { try sock.close() catch { case _: Exception => () } }
-            })
-            t.setDaemon(true); t.start()
-          }
-        } catch { case _: Exception => () }
-      }, "graft-live-gate-server")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      val sinkName = "graft_stream_live_loopback_sink"
+      val keystore = if (tls) Some(TlsLoopback.genKeystore()) else None
+      val tlsContext = keystore.map { case (path, pass) => TlsLoopback.serverContext(path, pass) }
+      val server = Loopback.feed(framing, tlsContext) { (_, _, conn) =>
+        (1 to nFrames).foreach(i => conn.send(s"""{"seq":$i}"""))
+        conn.hold()
+      }
+      val sinkName = s"graft_${name.stripPrefix("q_")}_sink"
       s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
       s.catalog.dropTempView(sinkName)
+      val seqs = get_json_object($"value", "$.seq").cast("long").as("seq")
       try {
-        val stream = s.readStream
+        val query = s.readStream
           .format("graft.sources.GraftFeedProvider")
           .option("host", "127.0.0.1")
-          .option("port", server.getLocalPort.toString)
+          .option("port", server.port.toString)
           .option("assets", "T1,T2,T3")
+          .option("framing", framing)
           .option("idlePaceMs", "5")
+          .options(keystore.fold(Map.empty[String, String]) { case (path, pass) =>
+            Map("tlsTruststore" -> path, "tlsStorePass" -> pass) })
           .load()
-        val query = stream.writeStream
+          .writeStream
           .format("memory").queryName(sinkName)
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
           .start()
         try {
-          // Poll the DISTINCT seq count, not the raw row count: a
-          // mid-serve reconnect re-serves frames 1..k (at-least-once),
-          // so raw rows can hit nFrames while distinct seqs haven't.
           val deadline = System.currentTimeMillis() + 60000
-          var seqs = 0L
-          while (seqs < nFrames && System.currentTimeMillis() < deadline) {
-            Thread.sleep(200)
-            seqs = s.table(sinkName)
-              .select(get_json_object($"value", "$.seq"))
-              .distinct().count()
-          }
+          while (System.currentTimeMillis() < deadline &&
+            s.table(sinkName).select(seqs).distinct().count() < nFrames) Thread.sleep(200)
         } finally query.stop()
-        s.table(sinkName)
-          .select(get_json_object($"value", "$.seq").cast("long").as("seq"))
-          .distinct()
-          .orderBy($"seq")
+        s.table(sinkName).select(seqs).distinct().orderBy($"seq")
       } finally server.close()
     },
     Some("""SELECT CAST(x + 1 AS BIGINT) AS seq
@@ -1044,20 +1011,20 @@ object Replay {
            |ORDER BY seq""".stripMargin),
   )
 
-  /** S3/S4 under the CORRECTNESS gate over REAL HTTP — the markets
-    * REST scan end to end: two in-gate JDK HttpServers serve 1 237
-    * reference-shape market records in 100-row pages with base64
-    * row-offset cursors; the windowed-concurrent paginator (S3,
-    * `MarketsConnector.fetchAllMarkets` + the real
-    * `MarketsConnector.httpFetch` transport) and the sequential
-    * paginator (S4, `fetchAllSequential`) both walk the wire — the
-    * S4 server 500s the FIRST request for every cursor, so the retry
-    * path is exercised inside the gate — and the two fetches must
-    * agree row for row. The fetched JSON then flows through the REAL
-    * dim pipeline (S2 parse → F1 activity predicate → F7 token dim)
-    * and the oracle recomputes the expected projection from the same
-    * integer functions of the row index. This upgrades S3/S4 from
-    * spec-covered to driver-verified, the move r10 made for S5.
+  private val streamLiveLoopback =
+    liveLoopbackGate("q_stream_live_loopback", "ndjson", tls = false)
+  private val streamLiveLoopbackWs =
+    liveLoopbackGate("q_stream_live_loopback_ws", "ws", tls = false)
+  private val streamLiveLoopbackWss =
+    liveLoopbackGate("q_stream_live_loopback_wss", "ws", tls = true)
+
+  /** S3/S4 under the correctness gate over real HTTP: the
+    * windowed-concurrent paginator (S3, `fetchAllMarkets`) and the
+    * sequential one (S4, `fetchAllSequential`, against a pager that
+    * 500s every cursor's first request) both walk 1 237 market records
+    * through the real `MarketsConnector.httpFetch`, must agree row for
+    * row, and the rows then flow through the real dim pipeline (S2
+    * parse → F1 activity predicate → F7 token dim).
     */
   private val sourceMarketsHttp = Q(
     "q_source_markets_http",
@@ -1076,58 +1043,16 @@ object Replay {
           s"""{"outcome":"NO","price":${1.0 - p},"token_id":"T${i}n","winner":${i % 2 == 1}}""" +
           s"""],"extra":$i}"""
       }
-      // DAEMON executor threads: HttpServer.stop() does not shut down a
-      // custom executor, and a non-daemon pool would pin the driver JVM
-      // at exit (DestroyJavaVM waiting on idle pool threads)
-      def daemonPool(n: Int) = java.util.concurrent.Executors.newFixedThreadPool(
-        n,
-        (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-      def startServer(failFirst: Boolean): com.sun.net.httpserver.HttpServer = {
-        val server = com.sun.net.httpserver.HttpServer.create(
-          new java.net.InetSocketAddress("127.0.0.1", 0), 16)
-        val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        server.createContext("/markets", (ex: com.sun.net.httpserver.HttpExchange) => {
-          try {
-            val q = Option(ex.getRequestURI.getQuery).getOrElse("")
-            val cursor = q.split("&").collectFirst {
-              case kv if kv.startsWith("next_cursor=") => kv.drop("next_cursor=".length)
-            }.getOrElse("")
-            if (failFirst && failed.add(cursor)) {
-              ex.sendResponseHeaders(500, -1)
-            } else {
-              val offset = new String(java.util.Base64.getDecoder.decode(cursor),
-                java.nio.charset.StandardCharsets.UTF_8).toInt
-              val rows = (offset until math.min(offset + pageSize, total))
-                .map(marketJson)
-              val next =
-                if (offset + pageSize >= total) "null"
-                else "\"" + graft.sources.MarketsConnector
-                  .cursorFor(offset / pageSize + 1, pageSize) + "\""
-              val body = s"""{"data":[${rows.mkString(",")}],"next_cursor":$next}"""
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              ex.getResponseHeaders.set("Content-Type", "application/json")
-              ex.sendResponseHeaders(200, body.length)
-              ex.getResponseBody.write(body)
-            }
-          } finally ex.close()
-        })
-        server.setExecutor(daemonPool(16))
-        server.start()
-        server
-      }
-      val plain = startServer(failFirst = false)
-      val flaky = startServer(failFirst = true)
+      val plain = Loopback.marketPages(total, pageSize)(marketJson)
+      val flaky = Loopback.marketPages(total, pageSize, failFirst = true)(marketJson)
       try {
-        import graft.sources.MarketsConnector
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.global
         val viaConcurrent = MarketsConnector.fetchAllMarkets(
-          MarketsConnector.httpFetch(
-            s"http://127.0.0.1:${plain.getAddress.getPort}/markets"),
+          MarketsConnector.httpFetch(s"${plain.base}/markets"),
           pageSize = pageSize, concurrency = 8)
         val viaSequential = MarketsConnector.fetchAllSequential(
-          MarketsConnector.httpFetch(
-            s"http://127.0.0.1:${flaky.getAddress.getPort}/markets"),
+          MarketsConnector.httpFetch(s"${flaky.base}/markets"),
           firstCursor = MarketsConnector.cursorFor(0, pageSize))
         require(viaConcurrent.sorted == viaSequential.sorted,
           "S3 and S4 paginations must return the identical row set")
@@ -1138,13 +1063,11 @@ object Replay {
           messageType = "active_markets",
           content = s"""{"markets":[${viaConcurrent.mkString(",")}]}"""))
           .toDS()
-        graft.sources.MarketsDim.tokenDim(
-          graft.sources.MarketsDim.activeMarkets(
-            graft.sources.MarketsDim.markets(frames)))
+        MarketsDim.tokenDim(MarketsDim.activeMarkets(MarketsDim.markets(frames)))
           .orderBy($"condition_id", $"token_id")
       } finally {
-        plain.stop(0)
-        flaky.stop(0)
+        plain.close()
+        flaky.close()
       }
     },
     Some("""WITH idx AS (SELECT CAST(x AS INTEGER) AS i FROM range(1237) t(x)),
@@ -1166,270 +1089,12 @@ object Replay {
            |ORDER BY condition_id, token_id""".stripMargin),
   )
 
-  /** [[streamLiveLoopback]] with the wire swapped for REAL RFC 6455
-    * WebSocket framing (`sources.WsChannel`, `framing = ws`): the
-    * in-gate server performs the Upgrade handshake (Sec-WebSocket-Key
-    * → SHA-1 Accept), reads the client's MASKED subscribe frame, and
-    * serves the same 60-frame set as unmasked text frames; the client
-    * stack — handshake, frame decode, control frames, the whole
-    * lifecycle — carries them into the streaming query. With this
-    * gate the only untested layer between the repo and the
-    * reference's `wss://` ingest is TLS itself.
-    */
-  private val streamLiveLoopbackWs = Q(
-    "q_stream_live_loopback_ws",
-    (s, _) => {
-      import s.implicits._
-      import graft.sources.WsCodec
-      val nFrames = 60
-      val server = new java.net.ServerSocket(
-        0, 16, java.net.InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try {
-          while (true) {
-            val sock = server.accept()
-            val t = new Thread(() => {
-              try {
-                val in = sock.getInputStream
-                val out = sock.getOutputStream
-                // HTTP Upgrade request up to CRLFCRLF
-                val hdr = new java.io.ByteArrayOutputStream
-                var done = false
-                while (!done) {
-                  val b = in.read()
-                  if (b < 0) throw new java.io.IOException("eof in handshake")
-                  hdr.write(b)
-                  val a = hdr.toByteArray; val n = a.length
-                  done = n >= 4 && a(n - 4) == '\r' && a(n - 3) == '\n' &&
-                    a(n - 2) == '\r' && a(n - 1) == '\n'
-                }
-                val req = new String(hdr.toByteArray,
-                  java.nio.charset.StandardCharsets.ISO_8859_1)
-                val key = req.linesIterator
-                  .find(_.toLowerCase.startsWith("sec-websocket-key:"))
-                  .map(_.split(":", 2)(1).trim).get
-                out.write(("HTTP/1.1 101 Switching Protocols\r\n" +
-                  "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
-                  s"Sec-WebSocket-Accept: ${WsCodec.acceptKey(key)}\r\n\r\n")
-                  .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-                out.flush()
-                // the masked subscribe frame
-                var buf = Array.emptyByteArray
-                def readFrame(): Option[(Int, Array[Byte])] = {
-                  while (true) {
-                    WsCodec.decodeFrame(buf, 0) match {
-                      case Some((_, op, payload, used)) =>
-                        buf = buf.drop(used)
-                        return Some((op, payload))
-                      case None =>
-                        val tmp = new Array[Byte](4096)
-                        val k = in.read(tmp)
-                        if (k < 0) return None
-                        buf = buf ++ tmp.take(k)
-                    }
-                  }
-                  None
-                }
-                if (readFrame().exists(_._1 == WsCodec.OpText)) {
-                  (1 to nFrames).foreach { i =>
-                    out.write(WsCodec.encodeFrame(WsCodec.OpText,
-                      s"""{"seq":$i}""".getBytes(
-                        java.nio.charset.StandardCharsets.UTF_8), None))
-                  }
-                  out.flush()
-                  sock.setSoTimeout(500)
-                  // hold open, absorbing client pings, until close/EOF
-                  try {
-                    var live = true
-                    while (live) live = readFrame().exists(_._1 != WsCodec.OpClose)
-                  } catch { case _: Exception => () }
-                }
-              } catch { case _: Exception => () }
-              finally { try sock.close() catch { case _: Exception => () } }
-            })
-            t.setDaemon(true); t.start()
-          }
-        } catch { case _: Exception => () }
-      }, "graft-live-ws-gate-server")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      val sinkName = "graft_stream_live_loopback_ws_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      s.catalog.dropTempView(sinkName)
-      try {
-        val stream = s.readStream
-          .format("graft.sources.GraftFeedProvider")
-          .option("host", "127.0.0.1")
-          .option("port", server.getLocalPort.toString)
-          .option("assets", "T1,T2,T3")
-          .option("framing", "ws")
-          .option("idlePaceMs", "5")
-          .load()
-        val query = stream.writeStream
-          .format("memory").queryName(sinkName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
-          .start()
-        try {
-          val deadline = System.currentTimeMillis() + 60000
-          var seqs = 0L
-          while (seqs < nFrames && System.currentTimeMillis() < deadline) {
-            Thread.sleep(200)
-            seqs = s.table(sinkName)
-              .select(get_json_object($"value", "$.seq"))
-              .distinct().count()
-          }
-        } finally query.stop()
-        s.table(sinkName)
-          .select(get_json_object($"value", "$.seq").cast("long").as("seq"))
-          .distinct()
-          .orderBy($"seq")
-      } finally server.close()
-    },
-    Some("""SELECT CAST(x + 1 AS BIGINT) AS seq
-           |FROM range(60) t(x)
-           |ORDER BY seq""".stripMargin),
-  )
-
-  /** [[streamLiveLoopbackWs]] with the LAST wire layer added: the
-    * server listens on an `SSLServerSocket` keyed by a keystore
-    * generated fresh at gate runtime (JDK keytool, no embedded
-    * certificate material — [[graft.sources.TlsLoopback]]), and the
-    * Structured Streaming source connects with a pinned-trust client
-    * `SSLContext` (`tlsTruststore` option), so the full reference
-    * stack — TCP → TLS handshake → HTTP Upgrade → masked RFC 6455
-    * frames → subscribe → delivery — runs end to end under the
-    * driver hash (`connection.rs:80-135`'s `wss://` connect shape,
-    * now with zero environment-bound residue above the DNS name).
-    */
-  private val streamLiveLoopbackWss = Q(
-    "q_stream_live_loopback_wss",
-    (s, _) => {
-      import s.implicits._
-      import graft.sources.{TlsLoopback, WsCodec}
-      val nFrames = 60
-      val (ksPath, ksPass) = TlsLoopback.genKeystore()
-      val server = TlsLoopback.serverContext(ksPath, ksPass)
-        .getServerSocketFactory.createServerSocket(
-          0, 16, java.net.InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try {
-          while (true) {
-            val sock = server.accept() // TLS handshake runs on first IO
-            val t = new Thread(() => {
-              try {
-                val in = sock.getInputStream
-                val out = sock.getOutputStream
-                val hdr = new java.io.ByteArrayOutputStream
-                var done = false
-                while (!done) {
-                  val b = in.read()
-                  if (b < 0) throw new java.io.IOException("eof in handshake")
-                  hdr.write(b)
-                  val a = hdr.toByteArray; val n = a.length
-                  done = n >= 4 && a(n - 4) == '\r' && a(n - 3) == '\n' &&
-                    a(n - 2) == '\r' && a(n - 1) == '\n'
-                }
-                val req = new String(hdr.toByteArray,
-                  java.nio.charset.StandardCharsets.ISO_8859_1)
-                val key = req.linesIterator
-                  .find(_.toLowerCase.startsWith("sec-websocket-key:"))
-                  .map(_.split(":", 2)(1).trim).get
-                out.write(("HTTP/1.1 101 Switching Protocols\r\n" +
-                  "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
-                  s"Sec-WebSocket-Accept: ${WsCodec.acceptKey(key)}\r\n\r\n")
-                  .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-                out.flush()
-                var buf = Array.emptyByteArray
-                def readFrame(): Option[(Int, Array[Byte])] = {
-                  while (true) {
-                    WsCodec.decodeFrame(buf, 0) match {
-                      case Some((_, op, payload, used)) =>
-                        buf = buf.drop(used)
-                        return Some((op, payload))
-                      case None =>
-                        val tmp = new Array[Byte](4096)
-                        val k = in.read(tmp)
-                        if (k < 0) return None
-                        buf = buf ++ tmp.take(k)
-                    }
-                  }
-                  None
-                }
-                if (readFrame().exists(_._1 == WsCodec.OpText)) {
-                  (1 to nFrames).foreach { i =>
-                    out.write(WsCodec.encodeFrame(WsCodec.OpText,
-                      s"""{"seq":$i}""".getBytes(
-                        java.nio.charset.StandardCharsets.UTF_8), None))
-                  }
-                  out.flush()
-                  sock.setSoTimeout(500)
-                  try {
-                    var live = true
-                    while (live) live = readFrame().exists(_._1 != WsCodec.OpClose)
-                  } catch { case _: Exception => () }
-                }
-              } catch { case _: Exception => () }
-              finally { try sock.close() catch { case _: Exception => () } }
-            })
-            t.setDaemon(true); t.start()
-          }
-        } catch { case _: Exception => () }
-      }, "graft-live-wss-gate-server")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      val sinkName = "graft_stream_live_loopback_wss_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      s.catalog.dropTempView(sinkName)
-      try {
-        val stream = s.readStream
-          .format("graft.sources.GraftFeedProvider")
-          .option("host", "127.0.0.1")
-          .option("port", server.getLocalPort.toString)
-          .option("assets", "T1,T2,T3")
-          .option("framing", "ws")
-          .option("tlsTruststore", ksPath)
-          .option("tlsStorePass", ksPass)
-          .option("idlePaceMs", "5")
-          .load()
-        val query = stream.writeStream
-          .format("memory").queryName(sinkName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
-          .start()
-        try {
-          val deadline = System.currentTimeMillis() + 60000
-          var seqs = 0L
-          while (seqs < nFrames && System.currentTimeMillis() < deadline) {
-            Thread.sleep(200)
-            seqs = s.table(sinkName)
-              .select(get_json_object($"value", "$.seq"))
-              .distinct().count()
-          }
-        } finally query.stop()
-        s.table(sinkName)
-          .select(get_json_object($"value", "$.seq").cast("long").as("seq"))
-          .distinct()
-          .orderBy($"seq")
-      } finally server.close()
-    },
-    Some("""SELECT CAST(x + 1 AS BIGINT) AS seq
-           |FROM range(60) t(x)
-           |ORDER BY seq""".stripMargin),
-  )
-
-  /** S6 over the REAL GCS wire protocol (minus only hostname + OAuth):
-    * the fixture hour logs are served by an in-gate JSON-API object
-    * store (paginated listing, percent-encoded media paths, daemon
-    * executor), DISCOVERED via `GcsJsonClient.listObjects` (the S7
-    * hourly-discovery shape on the wire), fetched through
-    * `HourCache.fetchMissing`'s 4-wide batches with the protocol
-    * fetcher into a cleaned cache dir, and then run through the SAME
-    * scan→parse→fold pipeline as q_replay_fixture_ticks — same
-    * oracle, so the hash covers listing, pagination, the %2F media
-    * path, byte-exact transfer, the cache partition, and the replay
-    * in one gate. This moves S6 from spec-covered to DRIVER-VERIFIED
-    * over real HTTP (the r11 S3/S4 move, applied to the object
-    * store); the residue is the `storage.googleapis.com` endpoint
-    * itself.
+  /** S6 over the real GCS JSON API (minus only hostname and OAuth):
+    * the fixture hour logs sit in a [[graft.sources.Loopback]] bucket,
+    * are discovered with `GcsJsonClient.listObjects` (S7 on the wire,
+    * paginated), fetched by `HourCache.fetchMissing` with the protocol
+    * fetcher into a cleaned cache dir, and replayed through the same
+    * scan→parse→fold as q_replay_fixture_ticks under the same oracle.
     */
   private val sourceGcsHttp = Q(
     "q_source_gcs_http",
@@ -1441,57 +1106,11 @@ object Replay {
         s"raw/${f.getName}" -> java.nio.file.Files.readAllBytes(f.toPath)
       }.toMap
       val names = byName.keys.toSeq.sorted
-      def daemonPool(n: Int) = java.util.concurrent.Executors.newFixedThreadPool(
-        n, (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-      val server = com.sun.net.httpserver.HttpServer.create(
-        new java.net.InetSocketAddress("127.0.0.1", 0), 16)
-      val pageSize = 2 // forces the pagination loop on the tiny set
-      server.createContext("/storage/v1/b/logs/o",
-        (ex: com.sun.net.httpserver.HttpExchange) => {
-          try {
-            val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-            def param(k: String): Option[String] = raw.split("&").collectFirst {
-              case kv if kv.startsWith(k + "=") => java.net.URLDecoder.decode(
-                kv.drop(k.length + 1), java.nio.charset.StandardCharsets.UTF_8)
-            }
-            val prefix = param("prefix").getOrElse("")
-            val start = param("pageToken").map(_.toInt).getOrElse(0)
-            val matching = names.filter(_.startsWith(prefix))
-            val page = matching.slice(start, start + pageSize)
-            val items = page.map(n =>
-              s"""{"name":"$n","size":${byName(n).length}}""").mkString(",")
-            val nextTok =
-              if (start + pageSize < matching.size)
-                s""","nextPageToken":"${start + pageSize}""""
-              else ""
-            val body = s"""{"items":[$items]$nextTok}"""
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            ex.getResponseHeaders.set("Content-Type", "application/json")
-            ex.sendResponseHeaders(200, body.length)
-            ex.getResponseBody.write(body)
-          } finally ex.close()
-        })
-      server.createContext("/download/storage/v1/b/logs/o/",
-        (ex: com.sun.net.httpserver.HttpExchange) => {
-          try {
-            val enc = ex.getRequestURI.getRawPath
-              .stripPrefix("/download/storage/v1/b/logs/o/")
-            val name = java.net.URLDecoder.decode(
-              enc, java.nio.charset.StandardCharsets.UTF_8)
-            byName.get(name) match {
-              case Some(bytes) =>
-                ex.sendResponseHeaders(200, bytes.length)
-                ex.getResponseBody.write(bytes)
-              case None => ex.sendResponseHeaders(404, -1)
-            }
-          } finally ex.close()
-        })
-      server.setExecutor(daemonPool(16))
-      server.start()
+      // pageSize 2 forces the pagination loop on the tiny set
+      val server = Loopback.gcsBucket(byName, pageSize = 2)
       try {
-        val base = s"http://127.0.0.1:${server.getAddress.getPort}"
         // S7 on the wire: discovery must see exactly the bucket's hours
-        val listed = graft.sources.GcsJsonClient.listObjects(base, "logs", "raw/")
+        val listed = GcsJsonClient.listObjects(server.base, "logs", "raw/")
         require(listed.map(_.name) == names,
           s"GCS listing mismatch: ${listed.map(_.name)} vs $names")
         val hours = names.map(_.stripPrefix("raw/").stripSuffix(".jsonl.zst"))
@@ -1499,16 +1118,15 @@ object Replay {
           sys.props("java.io.tmpdir"), "graft_gcs_gate_cache")
         // clean: every run must exercise the fetch path, not stale cache
         Option(cacheDir.listFiles()).foreach(_.foreach(_.delete()))
-        val fetched = graft.sources.HourCache.fetchMissing(
-          cacheDir.getPath, hours,
-          graft.sources.GcsJsonClient.hourFetcher(base, "logs", "raw/"))
+        val fetched = HourCache.fetchMissing(cacheDir.getPath, hours,
+          GcsJsonClient.hourFetcher(server.base, "logs", "raw/"))
         require(fetched.sorted == hours.sorted,
           s"expected ${hours.size} hours fetched, got ${fetched.size}")
         val paths = hours.sorted.map(h =>
           new java.io.File(cacheDir, s"$h.jsonl.zst").getPath)
         val msgs = RawLogSource.feedMessages(RawLogSource.frames(s, paths))
         BookReplay.referenceTicks(msgs)
-      } finally server.stop(0)
+      } finally server.close()
     },
     Some(FixtureOracle.referenceTicksSql(FixtureOracle.fixtureMsgsPath)),
   )

@@ -1,10 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
-import java.net.{InetAddress, ServerSocket, Socket}
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, LinkedBlockingQueue, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -15,78 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * subscribe frames, the 25-asset sharding, all-connections-opened
   * bookkeeping, keepalive pings, reconnect after a server-side drop,
   * the ≥20-flap split policy, and clean shutdown. Every test speaks
-  * through actual sockets on 127.0.0.1; no transport code is mocked.
+  * through actual sockets on 127.0.0.1 ([[Loopback.feed]]); no
+  * transport code is mocked.
   */
 class FeedLoopbackSpec extends AnyFunSuite {
-
-  /** Newline-framed loopback server: `behavior(connIndex, subscribeLine,
-    * io)` runs per accepted connection on its own thread.
-    */
-  private final class LoopbackServer(
-      behavior: (Int, String, ServerIo) => Unit) {
-    private val server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-    val port: Int = server.getLocalPort
-    val subscribes = new ConcurrentLinkedQueue[String]()
-    val pings = new ConcurrentLinkedQueue[String]()
-    private val nConn = new AtomicInteger(0)
-    @volatile private var closed = false
-
-    private val acceptor = new Thread(() => {
-      try {
-        while (!closed) {
-          val sock = server.accept()
-          val idx = nConn.getAndIncrement()
-          val t = new Thread(() => handle(idx, sock), s"loopback-conn-$idx")
-          t.setDaemon(true)
-          t.start()
-        }
-      } catch { case _: Exception => () } // server closed
-    }, "loopback-acceptor")
-    acceptor.setDaemon(true)
-    acceptor.start()
-
-    def connectionsSeen: Int = nConn.get()
-
-    private def handle(idx: Int, sock: Socket): Unit = {
-      try {
-        val in = new BufferedReader(
-          new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-        val out = new OutputStreamWriter(sock.getOutputStream, StandardCharsets.UTF_8)
-        val sub = in.readLine()
-        if (sub != null) {
-          subscribes.add(sub)
-          behavior(idx, sub, new ServerIo(sock, in, out, pings))
-        }
-      } catch { case _: Exception => () }
-      finally { try sock.close() catch { case _: Exception => () } }
-    }
-
-    def close(): Unit = {
-      closed = true
-      try server.close() catch { case _: Exception => () }
-    }
-  }
-
-  private final class ServerIo(
-      val sock: Socket,
-      in: BufferedReader,
-      out: OutputStreamWriter,
-      pings: ConcurrentLinkedQueue[String]) {
-    def send(line: String): Unit = { out.write(line); out.write("\n"); out.flush() }
-    /** Drain incoming lines (pings) for ~`ms`, recording them. */
-    def listen(ms: Long): Unit = {
-      sock.setSoTimeout(20)
-      val deadline = System.currentTimeMillis() + ms
-      while (System.currentTimeMillis() < deadline) {
-        try {
-          val l = in.readLine()
-          if (l == null) return
-          if (l.contains("ping")) pings.add(l)
-          ()
-        } catch { case _: java.net.SocketTimeoutException => () }
-      }
-    }
-  }
 
   private def fastCfg(port: Int): LiveFeed.Config = LiveFeed.Config(
     host = "127.0.0.1", port = port,
@@ -109,7 +37,7 @@ class FeedLoopbackSpec extends AnyFunSuite {
     "(the feed_integration_test shape): 60 assets open as 3 connections " +
     "of 25/25/10, each subscribe lists exactly its shard, frames flow, " +
     "and cancel drains to zero open") {
-    val server = new LoopbackServer((idx, _, io) => {
+    val server = Loopback.feed("ndjson")((idx, _, io) => {
       (1 to 5).foreach(i => io.send(s"""{"frame":"$idx-$i"}"""))
       io.listen(30000) // hold the connection open until the client closes
     })
@@ -147,7 +75,7 @@ class FeedLoopbackSpec extends AnyFunSuite {
   test("reconnect with pacing after a server-side drop: the connection " +
     "re-opens and re-subscribes") {
     val stable = new CountDownLatch(1)
-    val server = new LoopbackServer((idx, _, io) => {
+    val server = Loopback.feed("ndjson")((idx, _, io) => {
       io.send(s"""{"frame":"hello-$idx"}""")
       if (idx == 0) () // first connection: return = close immediately (drop)
       else { stable.countDown(); io.listen(30000) }
@@ -169,7 +97,7 @@ class FeedLoopbackSpec extends AnyFunSuite {
   }
 
   test("keepalive pings arrive on the configured cadence") {
-    val server = new LoopbackServer((_, _, io) => {
+    val server = Loopback.feed("ndjson")((_, _, io) => {
       io.send("""{"frame":"hi"}""")
       io.listen(3000)
     })
@@ -190,7 +118,7 @@ class FeedLoopbackSpec extends AnyFunSuite {
     "a real loopback server arrive as rows through the full DSv2 path") {
     val spark = graft.TestSpark.spark
     val nFrames = 40
-    val server = new LoopbackServer((idx, _, io) => {
+    val server = Loopback.feed("ndjson")((idx, _, io) => {
       (1 to nFrames).foreach(i => io.send(s"""{"frame":"$idx-$i"}"""))
       io.listen(30000)
     })
@@ -232,7 +160,7 @@ class FeedLoopbackSpec extends AnyFunSuite {
     "client heals completely when the server recovers (count back to 0, " +
     "connection open, frames flowing)") {
     val healthy = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val server = new LoopbackServer((idx, _, io) => {
+    val server = Loopback.feed("ndjson")((idx, _, io) => {
       if (healthy.get()) {
         io.send(s"""{"frame":"recovered-$idx"}""")
         io.listen(30000)
@@ -274,7 +202,7 @@ class FeedLoopbackSpec extends AnyFunSuite {
   test("the >=20-flap split policy: a connection that repeatedly opens " +
     "and dies splits into two half-shards, which then both open") {
     val afterSplit = new ConcurrentLinkedQueue[String]()
-    val server = new LoopbackServer((idx, sub, io) => {
+    val server = Loopback.feed("ndjson")((idx, sub, io) => {
       // asset count in the subscribe tells us which phase this is
       val nAssets = "\"A\\d+\"".r.findAllIn(sub).size
       if (nAssets >= 10) {

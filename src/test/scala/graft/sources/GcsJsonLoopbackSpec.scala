@@ -1,16 +1,15 @@
 package graft.sources
 
 import java.io.File
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.time.Instant
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The GCS JSON API wire against a real loopback HTTP server: paginated
+/** The GCS JSON API wire against a real loopback HTTP server
+  * ([[Loopback.gcsBucket]]): paginated
   * listing, percent-encoded media paths (the %2F requirement pinned on
   * the RAW request path), absent-object 404s, and the whole
   * [[HourCache]] flow fetching over the protocol — the in-sandbox
@@ -18,204 +17,104 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GcsJsonLoopbackSpec extends AnyFunSuite {
 
-  /** In-memory bucket speaking the JSON API shape; `pageSize` forces
-    * pagination; an object named with suffix "boom" 500s (transport
-    * error, not absence).
-    */
-  private final class GcsServer(objects: Map[String, Array[Byte]], pageSize: Int = 2) {
-    private val server = com.sun.net.httpserver.HttpServer
-      .create(new InetSocketAddress("127.0.0.1", 0), 8)
-    val port: Int = server.getAddress.getPort
-    def base: String = s"http://127.0.0.1:$port"
-    val listQueries = new ConcurrentLinkedQueue[String]()
-    val mediaPaths = new ConcurrentLinkedQueue[String]()
-    val authHeaders = new ConcurrentLinkedQueue[String]()
-    private val names = objects.keys.toSeq.sorted
-
-    server.createContext("/storage/v1/b/logs/o",
-      (ex: com.sun.net.httpserver.HttpExchange) => {
-        try {
-          val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-          listQueries.add(raw)
-          Option(ex.getRequestHeaders.getFirst("Authorization"))
-            .foreach(authHeaders.add)
-          def param(k: String): Option[String] = raw.split("&").collectFirst {
-            case s if s.startsWith(k + "=") =>
-              java.net.URLDecoder.decode(s.drop(k.length + 1), StandardCharsets.UTF_8)
-          }
-          val prefix = param("prefix").getOrElse("")
-          val start = param("pageToken").map(_.toInt).getOrElse(0)
-          val matching = names.filter(_.startsWith(prefix))
-          val page = matching.slice(start, start + pageSize)
-          val items = page.map(n =>
-            s"""{"name":${jstr(n)},"size":${objects(n).length}}""").mkString(",")
-          val nextTok =
-            if (start + pageSize < matching.size)
-              s""","nextPageToken":"${start + pageSize}""""
-            else ""
-          val body = s"""{"kind":"storage#objects","items":[$items]$nextTok}"""
-            .getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, body.length)
-          ex.getResponseBody.write(body)
-        } finally ex.close()
-      })
-    server.createContext("/download/storage/v1/b/logs/o/",
-      (ex: com.sun.net.httpserver.HttpExchange) => {
-        try {
-          // the RAW path is what the %2F pin inspects
-          val rawPath = ex.getRequestURI.getRawPath
-          mediaPaths.add(rawPath)
-          Option(ex.getRequestHeaders.getFirst("Authorization"))
-            .foreach(authHeaders.add)
-          val enc = rawPath.stripPrefix("/download/storage/v1/b/logs/o/")
-          val name = java.net.URLDecoder.decode(enc, StandardCharsets.UTF_8)
-          if (name.endsWith("boom")) ex.sendResponseHeaders(500, -1)
-          else objects.get(name) match {
-            case Some(bytes) =>
-              ex.sendResponseHeaders(200, bytes.length)
-              ex.getResponseBody.write(bytes)
-            case None => ex.sendResponseHeaders(404, -1)
-          }
-        } finally ex.close()
-      })
-    private def jstr(s: String) = "\"" + s.replace("\"", "\\\"") + "\""
-    server.start()
-    def close(): Unit = server.stop(0)
-  }
-
   private def bytesOf(s: String) = s.getBytes(StandardCharsets.UTF_8)
 
   test("listing follows nextPageToken to the end and honors the prefix") {
     val objs = (0 until 5).map(i =>
       s"raw/2024-01-01-0$i.jsonl.zst" -> bytesOf(s"hour $i")).toMap +
       ("other/x.bin" -> bytesOf("not ours"))
-    val server = new GcsServer(objs, pageSize = 2)
+    val server = Loopback.gcsBucket(objs, pageSize = 2)
     try {
       val listed = GcsJsonClient.listObjects(server.base, "logs", "raw/")
       assert(listed.map(_.name) ==
         (0 until 5).map(i => s"raw/2024-01-01-0$i.jsonl.zst"))
       assert(listed.map(_.size) == (0 until 5).map(i => s"hour $i".length.toLong))
       // 5 matches at pageSize 2 = 3 requests, 2 of them token-bearing
-      assert(server.listQueries.asScala.count(_.contains("pageToken=")) == 2)
+      assert(server.requests.asScala.count(_.query.contains("pageToken=")) == 2)
     } finally server.close()
   }
 
   test("the Authorization header passes through to BOTH the list and " +
     "media requests — the run-book's bearer-token seam, wire-checked") {
     val name = "raw/a.jsonl.zst"
-    val server = new GcsServer(Map(name -> bytesOf("x")))
+    val server = Loopback.gcsBucket(Map(name -> bytesOf("x")))
     try {
       val hdrs = Map("Authorization" -> "Bearer fixture-token-123")
       GcsJsonClient.listObjects(server.base, "logs", "raw/", headers = hdrs)
       val dest = File.createTempFile("gcs-dl", ".bin")
       dest.deleteOnExit()
       assert(GcsJsonClient.download(server.base, "logs", name, dest, headers = hdrs))
-      assert(server.authHeaders.asScala.toSeq ==
+      assert(server.requests.asScala.flatMap(_.authorization).toSeq ==
         Seq("Bearer fixture-token-123", "Bearer fixture-token-123"),
-        s"got ${server.authHeaders.asScala.toSeq}")
+        s"got ${server.requests.asScala.flatMap(_.authorization).toSeq}")
     } finally server.close()
   }
 
   test("a server that echoes an unchanged nextPageToken aborts loudly " +
     "instead of looping forever; an item missing 'name' is a protocol " +
     "error, not an NPE") {
-    def oneShotServer(body: String): (com.sun.net.httpserver.HttpServer, String) = {
-      val s = com.sun.net.httpserver.HttpServer
-        .create(new InetSocketAddress("127.0.0.1", 0), 8)
-      s.createContext("/storage/v1/b/logs/o",
-        (ex: com.sun.net.httpserver.HttpExchange) => {
-          try {
-            val bytes = body.getBytes(StandardCharsets.UTF_8)
-            ex.getResponseHeaders.set("Content-Type", "application/json")
-            ex.sendResponseHeaders(200, bytes.length)
-            ex.getResponseBody.write(bytes)
-          } finally ex.close()
-        })
-      s.start()
-      (s, s"http://127.0.0.1:${s.getAddress.getPort}")
-    }
+    // `body` is by name: evaluated once per request
+    def listing(body: => String) = Loopback.http("/storage/v1/b/logs/o" ->
+      (ex => Loopback.respond(ex, 200, bytesOf(body))))
     // same token on every page — no progress
-    val (echo, echoBase) = oneShotServer(
+    val echo = listing(
       """{"items":[{"name":"raw/a","size":1}],"nextPageToken":"stuck"}""")
     try {
       val ex = intercept[java.io.IOException] {
-        GcsJsonClient.listObjects(echoBase, "logs", "raw/")
+        GcsJsonClient.listObjects(echo.base, "logs", "raw/")
       }
       assert(ex.getMessage.contains("repeated"), ex.getMessage)
-    } finally echo.stop(0)
+    } finally echo.close()
     // an A/B token CYCLE also makes no progress — the seen-set must
     // catch it (an unchanged-token-only check would loop forever)
     val flip = new java.util.concurrent.atomic.AtomicInteger(0)
-    val cyc = com.sun.net.httpserver.HttpServer
-      .create(new InetSocketAddress("127.0.0.1", 0), 8)
-    cyc.createContext("/storage/v1/b/logs/o",
-      (ex: com.sun.net.httpserver.HttpExchange) => {
-        try {
-          val t = if (flip.getAndIncrement() % 2 == 0) "A" else "B"
-          val bytes = s"""{"items":[],"nextPageToken":"$t"}"""
-            .getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-        } finally ex.close()
-      })
-    cyc.start()
+    val cyc = listing {
+      val t = if (flip.getAndIncrement() % 2 == 0) "A" else "B"
+      s"""{"items":[],"nextPageToken":"$t"}"""
+    }
     try {
       val ex = intercept[java.io.IOException] {
-        GcsJsonClient.listObjects(
-          s"http://127.0.0.1:${cyc.getAddress.getPort}", "logs", "raw/")
+        GcsJsonClient.listObjects(cyc.base, "logs", "raw/")
       }
       assert(ex.getMessage.contains("repeated"), ex.getMessage)
       assert(flip.get() <= 4, s"must abort on the first repeat: ${flip.get()} pages")
-    } finally cyc.stop(0)
+    } finally cyc.close()
     // item with no name field
-    val (anon, anonBase) = oneShotServer("""{"items":[{"size":7}]}""")
+    val anon = listing("""{"items":[{"size":7}]}""")
     try {
       val ex = intercept[java.io.IOException] {
-        GcsJsonClient.listObjects(anonBase, "logs", "raw/")
+        GcsJsonClient.listObjects(anon.base, "logs", "raw/")
       }
       assert(ex.getMessage.contains("missing 'name'"), ex.getMessage)
-    } finally anon.stop(0)
+    } finally anon.close()
   }
 
   test("a REISSUED token with NEW objects on every page is progress, not " +
     "an abort — opaque tokens carry no distinctness guarantee") {
     val page = new java.util.concurrent.atomic.AtomicInteger(0)
-    val srv = com.sun.net.httpserver.HttpServer
-      .create(new InetSocketAddress("127.0.0.1", 0), 8)
-    srv.createContext("/storage/v1/b/logs/o",
-      (ex: com.sun.net.httpserver.HttpExchange) => {
-        try {
-          val i = page.getAndIncrement()
-          val tok = if (i < 2) ""","nextPageToken":"same"""" else ""
-          val bytes = s"""{"items":[{"name":"raw/p$i","size":$i}]$tok}"""
-            .getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-        } finally ex.close()
-      })
-    srv.start()
+    val srv = Loopback.http("/storage/v1/b/logs/o" -> { ex =>
+      val i = page.getAndIncrement()
+      val tok = if (i < 2) ""","nextPageToken":"same"""" else ""
+      Loopback.respond(ex, 200, bytesOf(s"""{"items":[{"name":"raw/p$i","size":$i}]$tok}"""))
+    })
     try {
-      val objs = GcsJsonClient.listObjects(
-        s"http://127.0.0.1:${srv.getAddress.getPort}", "logs", "raw/")
+      val objs = GcsJsonClient.listObjects(srv.base, "logs", "raw/")
       assert(objs.map(_.name) == Seq("raw/p0", "raw/p1", "raw/p2"))
-    } finally srv.stop(0)
+    } finally srv.close()
   }
 
   test("media requests percent-encode the object name as one segment " +
     "(%2F on the raw path) and bytes round-trip exactly") {
     val name = "raw/2024-01-01-00.jsonl.zst"
     val payload = Array.tabulate[Byte](4096)(i => (i * 31).toByte)
-    val server = new GcsServer(Map(name -> payload))
+    val server = Loopback.gcsBucket(Map(name -> payload))
     try {
       val dest = File.createTempFile("gcs-dl", ".bin")
       dest.deleteOnExit()
       assert(GcsJsonClient.download(server.base, "logs", name, dest))
       assert(java.util.Arrays.equals(
         java.nio.file.Files.readAllBytes(dest.toPath), payload))
-      val raw = server.mediaPaths.asScala.head
+      val raw = server.requests.asScala.head.path
       assert(raw.contains("raw%2F2024-01-01-00.jsonl.zst"),
         s"object name must be one percent-encoded segment: $raw")
     } finally server.close()
@@ -223,7 +122,7 @@ class GcsJsonLoopbackSpec extends AnyFunSuite {
 
   test("absent object → false (the skip-an-hour contract); a 500 " +
     "throws instead of reading as absence") {
-    val server = new GcsServer(Map("raw/a.jsonl.zst" -> bytesOf("x")))
+    val server = Loopback.gcsBucket(Map("raw/a.jsonl.zst" -> bytesOf("x")))
     try {
       val dest = File.createTempFile("gcs-dl", ".bin")
       dest.deleteOnExit()
@@ -242,7 +141,7 @@ class GcsJsonLoopbackSpec extends AnyFunSuite {
     // hour 02 has no object (collector downtime)
     val objs = (hours.toSet - "2024-01-01-02").map(h =>
       s"raw/$h.jsonl.zst" -> bytesOf(s"content of $h")).toMap
-    val server = new GcsServer(objs, pageSize = 2)
+    val server = Loopback.gcsBucket(objs, pageSize = 2)
     val cacheDir = java.nio.file.Files.createTempDirectory("gcs-cache").toFile
     try {
       // hour 00 pre-cached with DIFFERENT bytes — it must not be re-fetched

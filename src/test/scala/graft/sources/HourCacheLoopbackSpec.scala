@@ -1,18 +1,16 @@
 package graft.sources
 
 import java.io.File
-import java.net.{HttpURLConnection, InetSocketAddress, URI}
+import java.net.{HttpURLConnection, URI}
 import java.time.Instant
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S6's download-and-cache path over a REAL HTTP object store on
-  * 127.0.0.1 — the loopback complement to HourCacheSpec's injected
-  * fetcher: actual GETs, actual files on disk, a genuinely missing
+  * 127.0.0.1 ([[Loopback.http]]) — the loopback complement to
+  * HourCacheSpec's injected fetcher: actual GETs, actual files on disk, a genuinely missing
   * object (collector downtime) skipped, the 4-wide batch parallelism
   * observed on the wire, and the anti-join cache check keeping
   * already-cached hours off the network entirely.
@@ -20,43 +18,26 @@ import org.scalatest.funsuite.AnyFunSuite
 class HourCacheLoopbackSpec extends AnyFunSuite {
 
   /** Object store serving /objects/<hour>.jsonl.zst; hours in
-    * `missing404` return 404. Tracks per-request concurrency.
+    * `missing404` return 404.
     */
-  private final class ObjectServer(missing404: Set[String]) {
-    private val server = com.sun.net.httpserver.HttpServer
-      .create(new InetSocketAddress("127.0.0.1", 0), 16)
-    val port: Int = server.getAddress.getPort
-    val requested = new ConcurrentLinkedQueue[String]()
-    private val inFlight = new AtomicInteger(0)
-    val maxInFlight = new AtomicInteger(0)
+  private def objectServer(missing404: Set[String]) = Loopback.http("/objects/" -> { ex =>
+    Thread.sleep(30) // let batch-mates overlap measurably
+    val hour = hourOf(ex.getRequestURI.getPath)
+    if (missing404.contains(hour)) Loopback.respond(ex, 404)
+    else Loopback.respond(ex, 200, s"payload-for-$hour\n".getBytes("UTF-8"))
+  })
 
-    server.createContext("/objects/", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val cur = inFlight.incrementAndGet()
-      maxInFlight.updateAndGet(m => math.max(m, cur))
-      try {
-        Thread.sleep(30) // let batch-mates overlap measurably
-        val name = ex.getRequestURI.getPath.stripPrefix("/objects/")
-        val hour = name.stripSuffix(".jsonl.zst")
-        requested.add(hour)
-        if (missing404.contains(hour)) ex.sendResponseHeaders(404, -1)
-        else {
-          val body = s"payload-for-$hour\n".getBytes("UTF-8")
-          ex.sendResponseHeaders(200, body.length)
-          ex.getResponseBody.write(body)
-        }
-      } finally { inFlight.decrementAndGet(); ex.close() }
-    })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
-    server.start()
-    def close(): Unit = server.stop(0)
-  }
+  private def hourOf(path: String) = path.stripPrefix("/objects/").stripSuffix(".jsonl.zst")
+
+  private def requested(server: Loopback.Http) =
+    server.requests.asScala.toSeq.map(r => hourOf(r.path))
 
   /** The real fetch: GET the object, stream it to the target file;
     * false (skip) on 404, like the reference tolerating an absent
     * hour.
     */
-  private def httpFetch(port: Int)(hour: String, target: File): Boolean = {
-    val conn = URI.create(s"http://127.0.0.1:$port/objects/$hour.jsonl.zst")
+  private def httpFetch(base: String)(hour: String, target: File): Boolean = {
+    val conn = URI.create(s"$base/objects/$hour.jsonl.zst")
       .toURL.openConnection().asInstanceOf[HttpURLConnection]
     conn.setConnectTimeout(3000)
     conn.setReadTimeout(3000)
@@ -77,13 +58,13 @@ class HourCacheLoopbackSpec extends AnyFunSuite {
       Instant.parse("2025-07-01T03:10:00Z"), Instant.parse("2025-07-01T08:10:00Z"))
     assert(hours.size == 6)
     val gone = hours(2)
-    val server = new ObjectServer(Set(gone))
+    val server = objectServer(Set(gone))
     val dir = java.nio.file.Files.createTempDirectory("graft_s6_loopback").toFile
     try {
       val fetched = HourCache.fetchMissing(
-        dir.getPath, hours, httpFetch(server.port), batchSize = 4)
+        dir.getPath, hours, httpFetch(server.base), batchSize = 4)
       assert(fetched.toSet == hours.toSet - gone)
-      assert(server.requested.asScala.toSet == hours.toSet)
+      assert(requested(server).toSet == hours.toSet)
       for (h <- hours if h != gone) {
         val f = new File(dir, s"$h.jsonl.zst")
         assert(f.isFile, s"missing $f")
@@ -102,23 +83,23 @@ class HourCacheLoopbackSpec extends AnyFunSuite {
     val hours = HourCache.requiredHours(
       Instant.parse("2025-07-01T00:00:00Z"), Instant.parse("2025-07-01T03:00:00Z"))
     val flaky = hours.last
-    val server1 = new ObjectServer(Set(flaky))
+    val server1 = objectServer(Set(flaky))
     val dir = java.nio.file.Files.createTempDirectory("graft_s6_cache").toFile
     try {
       val p1 = HourCache.partitionByCache(dir.getPath, hours)
       assert(p1.cached.isEmpty && p1.missing == hours)
-      HourCache.fetchMissing(dir.getPath, p1.missing, httpFetch(server1.port))
+      HourCache.fetchMissing(dir.getPath, p1.missing, httpFetch(server1.base))
       server1.close()
       // the object appears (collector caught up); only it gets fetched
-      val server2 = new ObjectServer(Set.empty)
+      val server2 = objectServer(Set.empty)
       try {
         val p2 = HourCache.partitionByCache(dir.getPath, hours)
         assert(p2.cached.toSet == hours.toSet - flaky)
         assert(p2.missing == Seq(flaky))
         val fetched = HourCache.fetchMissing(
-          dir.getPath, p2.missing, httpFetch(server2.port))
+          dir.getPath, p2.missing, httpFetch(server2.base))
         assert(fetched == Seq(flaky))
-        assert(server2.requested.asScala.toSeq == Seq(flaky),
+        assert(requested(server2) == Seq(flaky),
           "cached hours must not touch the network")
       } finally server2.close()
     } finally { dir.listFiles().foreach(_.delete()); dir.delete(); () }

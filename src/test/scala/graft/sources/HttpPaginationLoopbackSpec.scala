@@ -1,17 +1,13 @@
 package graft.sources
 
-import java.net.{HttpURLConnection, InetSocketAddress, URI}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S3/S4's REST pagination against a real in-process HTTP server on
-  * 127.0.0.1 (the JDK's HttpServer): the windowed-concurrent and
+  * 127.0.0.1 ([[Loopback.marketPages]]): the windowed-concurrent and
   * sequential-with-retry paginators drive actual HTTP GETs with the
   * reference's base64 row-offset cursors, and the retry path sees a
   * server that genuinely 500s. Completes the loopback story from
@@ -19,93 +15,21 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class HttpPaginationLoopbackSpec extends AnyFunSuite {
 
-  private val mapper = new ObjectMapper()
+  private def rowJson(i: Int) = s"""{"id":"$i"}"""
 
-  /** Markets endpoint: 1237 rows served in `pageSize` pages, cursor =
-    * base64(row offset). `failFirst` makes the FIRST request per
-    * offset 500 before succeeding (the retry path).
-    */
-  private final class MarketsServer(
-      total: Int, pageSize: Int, failFirst: Boolean = false) {
-    private val server = com.sun.net.httpserver.HttpServer
-      .create(new InetSocketAddress("127.0.0.1", 0), 16)
-    val port: Int = server.getAddress.getPort
-    val requests = new ConcurrentLinkedQueue[String]()
-    private val failed = new ConcurrentLinkedQueue[String]()
-    private val inFlight = new AtomicInteger(0)
-    val maxInFlight = new AtomicInteger(0)
-
-    server.createContext("/markets", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val cur = inFlight.incrementAndGet()
-      maxInFlight.updateAndGet(m => math.max(m, cur))
-      try {
-        val q = Option(ex.getRequestURI.getQuery).getOrElse("")
-        val cursor = q.split("&").collectFirst {
-          case s if s.startsWith("next_cursor=") => s.drop("next_cursor=".length)
-        }.getOrElse("")
-        requests.add(cursor)
-        if (failFirst && !failed.contains(cursor)) {
-          failed.add(cursor)
-          ex.sendResponseHeaders(500, -1)
-        } else {
-          val offset = new String(
-            java.util.Base64.getDecoder.decode(cursor), StandardCharsets.UTF_8).toInt
-          val data = (offset until math.min(offset + pageSize, total))
-            .map(i => s"""{"id":"$i"}""")
-          val next =
-            if (offset + pageSize >= total) null
-            else MarketsConnector.cursorFor(offset / pageSize + 1, pageSize)
-          val body = mapper.createObjectNode()
-          val arr = body.putArray("data")
-          data.foreach(arr.add)
-          if (next != null) body.put("next_cursor", next) else body.putNull("next_cursor")
-          val bytes = mapper.writeValueAsBytes(body)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-        }
-      } finally {
-        inFlight.decrementAndGet()
-        ex.close()
-      }
-    })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(32))
-    server.start()
-
-    def close(): Unit = server.stop(0)
-  }
-
-  /** A real HTTP fetch for the paginators: GET /markets?next_cursor=…,
-    * JSON-parse {data, next_cursor}. Non-200 throws (the retry path's
-    * trigger).
-    */
-  private def httpFetch(port: Int)(cursor: String): MarketsConnector.Page = {
-    val url = URI.create(
-      s"http://127.0.0.1:$port/markets?next_cursor=$cursor").toURL
-    val conn = url.openConnection().asInstanceOf[HttpURLConnection]
-    conn.setConnectTimeout(3000)
-    conn.setReadTimeout(3000)
-    try {
-      if (conn.getResponseCode != 200)
-        throw new java.io.IOException(s"HTTP ${conn.getResponseCode}")
-      val node = mapper.readTree(conn.getInputStream)
-      val data = node.get("data").elements().asScala.map(_.asText()).toSeq
-      val next = Option(node.get("next_cursor"))
-        .filterNot(_.isNull).map(_.asText())
-      MarketsConnector.Page(data, next)
-    } finally conn.disconnect()
-  }
+  private def httpFetch(server: Loopback.Http) =
+    MarketsConnector.httpFetch(s"${server.base}/markets") _
 
   test("S3 windowed-concurrent pagination over real HTTP: every row " +
     "exactly once, requests actually overlap") {
-    val server = new MarketsServer(total = 1237, pageSize = 100)
+    val server = Loopback.marketPages(total = 1237, pageSize = 100)(rowJson)
     try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
       val rows = MarketsConnector.fetchAllMarkets(
-        httpFetch(server.port), pageSize = 100, concurrency = 8)
+        httpFetch(server), pageSize = 100, concurrency = 8)
       assert(rows.size == 1237)
-      assert(rows.toSet == (0 until 1237).map(i => s"""{"id":"$i"}""").toSet)
+      assert(rows.toSet == (0 until 1237).map(rowJson).toSet)
       assert(server.maxInFlight.get() > 1,
         "concurrent pagination should overlap requests on the wire")
     } finally server.close()
@@ -113,13 +37,13 @@ class HttpPaginationLoopbackSpec extends AnyFunSuite {
 
   test("S4 sequential pagination over real HTTP follows next_cursor to " +
     "the end and retries a genuine 500 per page") {
-    val server = new MarketsServer(total = 250, pageSize = 100, failFirst = true)
+    val server = Loopback.marketPages(total = 250, pageSize = 100, failFirst = true)(rowJson)
     try {
       val rows = MarketsConnector.fetchAllSequential(
-        httpFetch(server.port), firstCursor = MarketsConnector.cursorFor(0, 100))
+        httpFetch(server), firstCursor = MarketsConnector.cursorFor(0, 100))
       assert(rows.size == 250)
       // each of the 3 cursors was requested at least twice (500 then 200)
-      val counts = server.requests.asScala.groupBy(identity).map { case (k, v) => k -> v.size }
+      val counts = server.requests.asScala.groupMapReduce(_.query)(_ => 1)(_ + _)
       assert(counts.size == 3 && counts.values.forall(_ >= 2),
         s"every page should see a failed then retried request: $counts")
     } finally server.close()
@@ -131,41 +55,26 @@ class HttpPaginationLoopbackSpec extends AnyFunSuite {
     // server applying standard application/x-www-form-urlencoded
     // decoding ('+' → space); only %2B/%3D escaping round-trips it
     val want = "MTI+MA=="
-    val seen = new ConcurrentLinkedQueue[String]()
-    val server = com.sun.net.httpserver.HttpServer
-      .create(new InetSocketAddress("127.0.0.1", 0), 4)
-    server.createContext("/m", (ex: com.sun.net.httpserver.HttpExchange) => {
-      try {
-        // a standard server: RAW query, then form-urlencoded decode
-        val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-        val v = raw.split("&").collectFirst {
-          case s if s.startsWith("next_cursor=") => s.drop("next_cursor=".length)
-        }.getOrElse("")
-        seen.add(java.net.URLDecoder.decode(v, StandardCharsets.UTF_8))
-        val body = """{"data":["ok"],"next_cursor":null}"""
-          .getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body)
-      } finally ex.close()
-    })
-    server.start()
+    val server = Loopback.http("/m" -> (ex =>
+      Loopback.respond(ex, 200,
+        """{"data":["ok"],"next_cursor":null}""".getBytes(StandardCharsets.UTF_8))))
     try {
-      val page = MarketsConnector.httpFetch(
-        s"http://127.0.0.1:${server.getAddress.getPort}/m")(want)
+      val page = MarketsConnector.httpFetch(s"${server.base}/m")(want)
       assert(page.data == Seq("ok") && page.nextCursor.isEmpty)
-      assert(seen.asScala.toSeq == Seq(want),
-        s"the server must recover the cursor exactly: ${seen.asScala.toSeq}")
-    } finally server.stop(0)
+      // a standard server: RAW query, then form-urlencoded decode
+      val seen = server.requests.asScala.toSeq.map(r => java.net.URLDecoder
+        .decode(r.query.stripPrefix("next_cursor="), StandardCharsets.UTF_8))
+      assert(seen == Seq(want), s"the server must recover the cursor exactly: $seen")
+    } finally server.close()
   }
 
   test("S4 exhausts retries on a permanently failing page and surfaces " +
     "the error") {
-    val server = new MarketsServer(total = 100, pageSize = 100)
+    val server = Loopback.marketPages(total = 100, pageSize = 100)(rowJson)
     server.close() // connection refused = permanent transport failure
     val ex = intercept[Exception] {
       MarketsConnector.fetchAllSequential(
-        httpFetch(server.port), firstCursor = MarketsConnector.cursorFor(0, 100),
+        httpFetch(server), firstCursor = MarketsConnector.cursorFor(0, 100),
         maxRetries = 2)
     }
     assert(ex.isInstanceOf[java.io.IOException] ||

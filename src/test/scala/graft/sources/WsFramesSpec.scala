@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.io.{InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -65,173 +63,18 @@ class WsFramesSpec extends AnyFunSuite {
     }
   }
 
-  // --- a real loopback WebSocket server -----------------------------------
+  // --- a real loopback WebSocket server ([[Loopback.feed]]) ---------------
 
-  /** Minimal RFC 6455 server: HTTP Upgrade handshake, then frames.
-    * Records every client text payload; `behavior` drives the serve
-    * side per connection.
+  /** A whole message as two hand-built frames: `op` with FIN clear,
+    * then a continuation with FIN set (the codec always sets FIN).
     */
-  private final class WsLoopbackServer(
-      behavior: (Int, String, WsServerIo) => Unit,
-      makeServer: () => ServerSocket =
-        () => new ServerSocket(0, 16, InetAddress.getLoopbackAddress)) {
-    private val server = makeServer()
-    val port: Int = server.getLocalPort
-    val subscribes = new ConcurrentLinkedQueue[String]()
-    val clientTexts = new ConcurrentLinkedQueue[String]()
-    val clientPongs = new ConcurrentLinkedQueue[String]()
-    private val nConn = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile private var closed = false
-
-    private val acceptor = new Thread(() => {
-      try {
-        while (!closed) {
-          val sock = server.accept()
-          val idx = nConn.getAndIncrement()
-          val t = new Thread(() => handle(idx, sock), s"ws-loopback-$idx")
-          t.setDaemon(true)
-          t.start()
-        }
-      } catch { case _: Exception => () }
-    }, "ws-loopback-acceptor")
-    acceptor.setDaemon(true)
-    acceptor.start()
-
-    private def handle(idx: Int, sock: Socket): Unit = {
-      try {
-        val in = sock.getInputStream
-        val out = sock.getOutputStream
-        // HTTP request up to CRLFCRLF
-        val hdr = new java.io.ByteArrayOutputStream
-        var done = false
-        while (!done) {
-          val b = in.read()
-          if (b < 0) return
-          hdr.write(b)
-          val a = hdr.toByteArray
-          val n = a.length
-          done = n >= 4 && a(n - 4) == '\r' && a(n - 3) == '\n' &&
-            a(n - 2) == '\r' && a(n - 1) == '\n'
-        }
-        val req = new String(hdr.toByteArray, StandardCharsets.ISO_8859_1)
-        assert(req.startsWith("GET "), "ws server: not an HTTP GET")
-        assert(req.toLowerCase.contains("upgrade: websocket"))
-        val key = req.linesIterator
-          .find(_.toLowerCase.startsWith("sec-websocket-key:"))
-          .map(_.split(":", 2)(1).trim).get
-        val resp = "HTTP/1.1 101 Switching Protocols\r\n" +
-          "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
-          s"Sec-WebSocket-Accept: ${WsCodec.acceptKey(key)}\r\n\r\n"
-        out.write(resp.getBytes(StandardCharsets.ISO_8859_1))
-        out.flush()
-        val io = new WsServerIo(sock, in, out, clientTexts, clientPongs)
-        // first client text frame is the subscribe
-        val sub = io.readText(5000)
-        if (sub != null) {
-          subscribes.add(sub)
-          behavior(idx, sub, io)
-        }
-      } catch { case _: Exception => () }
-      finally { try sock.close() catch { case _: Exception => () } }
-    }
-
-    def connectionsSeen: Int = nConn.get()
-    def close(): Unit = {
-      closed = true
-      try server.close() catch { case _: Exception => () }
-    }
+  private def fragmented(op: Int, a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val f1 = WsCodec.encodeFrame(op, a, None)
+    f1(0) = (f1(0) & 0x7f).toByte // clear FIN
+    f1 ++ WsCodec.encodeFrame(WsCodec.OpCont, b, None)
   }
 
-  private final class WsServerIo(
-      sock: Socket,
-      in: InputStream,
-      out: OutputStream,
-      texts: ConcurrentLinkedQueue[String],
-      pongs: ConcurrentLinkedQueue[String]) {
-    private var buf = Array.emptyByteArray
-    private var off = 0
-
-    def sendText(text: String): Unit = out.synchronized {
-      out.write(WsCodec.encodeFrame(WsCodec.OpText,
-        text.getBytes(StandardCharsets.UTF_8), None))
-      out.flush()
-    }
-    /** Server-initiated fragmented message: text frame FIN=0 +
-      * continuation FIN=1 — hand-built (the codec always sets FIN).
-      */
-    def sendFragmented(a: String, b: String): Unit = out.synchronized {
-      val f1 = WsCodec.encodeFrame(WsCodec.OpText,
-        a.getBytes(StandardCharsets.UTF_8), None)
-      f1(0) = (f1(0) & 0x7f).toByte // clear FIN
-      out.write(f1)
-      out.write(WsCodec.encodeFrame(WsCodec.OpCont,
-        b.getBytes(StandardCharsets.UTF_8), None))
-      out.flush()
-    }
-    def sendPing(payload: String): Unit = out.synchronized {
-      out.write(WsCodec.encodeFrame(WsCodec.OpPing,
-        payload.getBytes(StandardCharsets.UTF_8), None))
-      out.flush()
-    }
-    /** Fragmented BINARY message: OpBinary FIN=0 + OpCont FIN=1. A
-      * text-only client must drop BOTH fragments — the continuation
-      * carries no opcode (RFC 6455 §5.4), so the client has to
-      * remember the message was binary.
-      */
-    def sendFragmentedBinary(a: Array[Byte], b: Array[Byte]): Unit = out.synchronized {
-      val f1 = WsCodec.encodeFrame(WsCodec.OpBinary, a, None)
-      f1(0) = (f1(0) & 0x7f).toByte // clear FIN
-      out.write(f1)
-      out.write(WsCodec.encodeFrame(WsCodec.OpCont, b, None))
-      out.flush()
-    }
-
-    private def fill(): Boolean = {
-      val tmp = new Array[Byte](4096)
-      val k = in.read(tmp)
-      if (k < 0) false
-      else {
-        buf = buf.drop(off) ++ tmp.take(k); off = 0; true
-      }
-    }
-
-    /** Read the next client TEXT payload within `ms`, recording pongs;
-      * null on EOF/timeout.
-      */
-    def readText(ms: Long): String = {
-      sock.setSoTimeout(20)
-      val deadline = System.currentTimeMillis() + ms
-      while (System.currentTimeMillis() < deadline) {
-        WsCodec.decodeFrame(buf, off) match {
-          case Some((_, op, payload, used)) =>
-            off += used
-            op match {
-              case WsCodec.OpText =>
-                val t = new String(payload, StandardCharsets.UTF_8)
-                texts.add(t)
-                return t
-              case WsCodec.OpPong =>
-                pongs.add(new String(payload, StandardCharsets.UTF_8))
-              case WsCodec.OpClose => return null
-              case _ => ()
-            }
-          case None =>
-            try { if (!fill()) return null }
-            catch { case _: java.net.SocketTimeoutException => () }
-        }
-      }
-      null
-    }
-
-    /** Drain client frames (pings/pongs) for ~`ms`. */
-    def listen(ms: Long): Unit = {
-      val deadline = System.currentTimeMillis() + ms
-      while (System.currentTimeMillis() < deadline) {
-        val remain = deadline - System.currentTimeMillis()
-        if (readText(math.max(1, remain)) == null) return
-      }
-    }
-  }
+  private def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
 
   private def cfg(port: Int) = LiveFeed.Config(
     host = "127.0.0.1", port = port,
@@ -256,10 +99,10 @@ class WsFramesSpec extends AnyFunSuite {
   test("the full client lifecycle over real RFC 6455 frames: handshake, " +
     "masked subscribe, delivery, keepalive pings as ws frames, clean stop") {
     val served = new LinkedBlockingQueue[Unit]()
-    val server = new WsLoopbackServer({ (_, sub, io) =>
+    val server = Loopback.feed("ws")({ (_, sub, io) =>
       assert(sub.contains("\"assets_ids\"") || sub.toLowerCase.contains("subscribe"),
         s"subscribe frame shape: $sub")
-      (1 to 20).foreach(i => io.sendText(s"""{"seq":$i}"""))
+      (1 to 20).foreach(i => io.send(s"""{"seq":$i}"""))
       served.put(())
       io.listen(1500) // keep open; record client pings (as ws text frames)
     })
@@ -272,9 +115,9 @@ class WsFramesSpec extends AnyFunSuite {
       served.poll(2000, TimeUnit.MILLISECONDS)
       // the keepalive ping must arrive as a MASKED client text frame
       val deadline = System.currentTimeMillis() + 3000
-      while (!server.clientTexts.asScala.exists(_.contains("\"ping\"")) &&
+      while (!server.pings.asScala.exists(_.contains("\"ping\"")) &&
         System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(server.clientTexts.asScala.exists(_.contains("\"ping\"")),
+      assert(server.pings.asScala.exists(_.contains("\"ping\"")),
         "keepalive ping did not arrive through the ws framing")
     } finally {
       client.stop()
@@ -283,10 +126,10 @@ class WsFramesSpec extends AnyFunSuite {
   }
 
   test("server ping gets a client pong; fragmented server text reassembles") {
-    val server = new WsLoopbackServer({ (_, _, io) =>
-      io.sendText("""{"seq":1}""")
-      io.sendPing("hb-42")
-      io.sendFragmented("""{"seq":""", """2}""")
+    val server = Loopback.feed("ws")({ (_, _, io) =>
+      io.send("""{"seq":1}""")
+      io.write(WsCodec.encodeFrame(WsCodec.OpPing, utf8("hb-42"), None))
+      io.write(fragmented(WsCodec.OpText, utf8("""{"seq":"""), utf8("""2}""")))
       io.listen(1200)
     })
     val client = new LiveFeedClient(Seq("B1"), cfg(server.port))
@@ -296,9 +139,9 @@ class WsFramesSpec extends AnyFunSuite {
       assert(msgs.contains("""{"seq":1}"""))
       assert(msgs.contains("""{"seq":2}"""), s"fragmented message lost: $msgs")
       val deadline = System.currentTimeMillis() + 3000
-      while (server.clientPongs.isEmpty && System.currentTimeMillis() < deadline)
+      while (server.pongs.isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
-      assert(server.clientPongs.asScala.toSeq == Seq("hb-42"),
+      assert(server.pongs.asScala.toSeq == Seq("hb-42"),
         "ping payload must echo back in the pong")
     } finally {
       client.stop()
@@ -310,12 +153,11 @@ class WsFramesSpec extends AnyFunSuite {
     "handshake per reopen; pinned trust rejects a foreign certificate") {
     val (ksPath, ksPass) = TlsLoopback.genKeystore()
     val sctx = TlsLoopback.serverContext(ksPath, ksPass)
-    def tlsServer(behavior: (Int, String, WsServerIo) => Unit) =
-      new WsLoopbackServer(behavior, () => sctx.getServerSocketFactory
-        .createServerSocket(0, 16, InetAddress.getLoopbackAddress))
+    def tlsServer(behavior: (Int, String, Loopback.Conn) => Unit) =
+      Loopback.feed("ws", Some(sctx))(behavior)
     val server = tlsServer({ (idx, _, io) =>
-      if (idx == 0) io.sendText("""{"seq":1}""") // then return → close
-      else { io.sendText("""{"seq":2}"""); io.listen(1500) }
+      if (idx == 0) io.send("""{"seq":1}""") // then return → close
+      else { io.send("""{"seq":2}"""); io.listen(1500) }
     })
     val client = new LiveFeedClient(Seq("E1"), cfg(server.port)
       .copy(sslContext = Some(TlsLoopback.clientContext(ksPath, ksPass))))
@@ -333,7 +175,7 @@ class WsFramesSpec extends AnyFunSuite {
     // fresh keystore must fail the TLS handshake and deliver nothing
     val (otherKs, otherPass) = TlsLoopback.genKeystore()
     val server2 = tlsServer({ (_, _, io) =>
-      io.sendText("""{"seq":9}"""); io.listen(300)
+      io.send("""{"seq":9}"""); io.listen(300)
     })
     val bad = new LiveFeedClient(Seq("E1"), cfg(server2.port)
       .copy(sslContext = Some(TlsLoopback.clientContext(otherKs, otherPass))))
@@ -349,15 +191,15 @@ class WsFramesSpec extends AnyFunSuite {
 
   test("a fragmented BINARY message is dropped whole: its continuation " +
     "frames must not leak into text reassembly or corrupt the next text") {
-    val server = new WsLoopbackServer({ (_, _, io) =>
+    val server = Loopback.feed("ws")({ (_, _, io) =>
       // binary fragments whose bytes LOOK like text — if the client
       // appends the continuation to its text buffer, the next real
       // message arrives corrupted (prefixed with `garbage}`)
-      io.sendFragmentedBinary(
-        "{\"bin\":".getBytes(StandardCharsets.UTF_8),
-        "garbage}".getBytes(StandardCharsets.UTF_8))
-      io.sendText("""{"seq":1}""")
-      io.sendFragmented("""{"seq":""", """2}""")
+      // (the continuation carries no opcode, RFC 6455 §5.4, so a
+      // text-only client has to remember the message was binary)
+      io.write(fragmented(WsCodec.OpBinary, utf8("{\"bin\":"), utf8("garbage}")))
+      io.send("""{"seq":1}""")
+      io.write(fragmented(WsCodec.OpText, utf8("""{"seq":"""), utf8("""2}""")))
       io.listen(1200)
     })
     val client = new LiveFeedClient(Seq("D1"), cfg(server.port))
@@ -374,9 +216,9 @@ class WsFramesSpec extends AnyFunSuite {
 
   test("ws reconnect: a server-side drop reopens through a fresh " +
     "handshake and delivery resumes") {
-    val server = new WsLoopbackServer({ (idx, _, io) =>
-      if (idx == 0) io.sendText("""{"seq":1}""") // then return → close
-      else { io.sendText("""{"seq":2}"""); io.listen(1500) }
+    val server = Loopback.feed("ws")({ (idx, _, io) =>
+      if (idx == 0) io.send("""{"seq":1}""") // then return → close
+      else { io.send("""{"seq":2}"""); io.listen(1500) }
     })
     val client = new LiveFeedClient(Seq("C1"), cfg(server.port))
     try {
