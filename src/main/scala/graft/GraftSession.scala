@@ -7,8 +7,10 @@ import org.apache.spark.sql.SparkSession
   * benchmark build their session here, so the session that is
   * verified and benched is the one that ships.
   *
-  * It installs [[graft.functions.GraftExtensions]] (the native SQL
-  * functions), runs in UTC, sizes shuffle partitions to `cores` rather
+  * It installs [[graft.functions.GraftExtensions]], the one catalogue
+  * of native SQL functions, so every session and each `newSession()`
+  * of it can call all of them and no query registers its own. It runs
+  * in UTC, sizes shuffle partitions to `cores` rather
   * than the 200 default, reads nanosecond Parquet timestamps as longs
   * (`Tables.events` converts them) and enlarges the codegen cache.
   * AQE with partition coalescing and skew-join splitting is Spark's

@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression: integer dot product of two
@@ -76,25 +73,4 @@ case class ArrayDotLong(left: Expression, right: Expression)
 
 object ArrayDotLong {
   val name = "array_dot_long"
-
-  private val info = new ExpressionInfo(classOf[ArrayDotLong].getName, name)
-
-  /** Imperative registration — safe to call repeatedly, works in any
-    * session (no extensions config required).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name))) {
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        info,
-        (exprs: Seq[Expression]) => ArrayDotLong(exprs.head, exprs(1)))
-    }
-  }
-
-  /** Column API over the registered function. */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
 }

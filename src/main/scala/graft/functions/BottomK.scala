@@ -2,15 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -134,23 +131,4 @@ case class BottomK(
 
 object BottomK {
   val Name = "bottomk_hash"
-
-  private val info = new ExpressionInfo(classOf[BottomK].getName, Name)
-
-  /** Imperative registration, safe to call repeatedly. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(Name))) {
-      registry.registerFunction(
-        FunctionIdentifier(Name),
-        info,
-        (exprs: Seq[Expression]) => BottomK(exprs.head, exprs(1)))
-    }
-  }
-
-  /** Column API over the registered function. */
-  def bottomK(spark: SparkSession, c: Column, k: Column): Column = {
-    register(spark)
-    call_function(Name, c, k)
-  }
 }

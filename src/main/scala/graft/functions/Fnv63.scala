@@ -1,16 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's cross-engine-reproducible 63-bit string hash (see
-  * [[HllSketch]] for the full design rationale): FNV-1a over the UTF-8
+  * [[Hll]] for the full design rationale): FNV-1a over the UTF-8
   * bytes with the accumulator kept mod 2⁶³, then a murmur-style
   * xor-shift/multiply finalizer in the same 63-bit domain. Everything
   * stays in [0, 2⁶³), so DuckDB reproduces it bit-for-bit in
@@ -69,23 +66,4 @@ case class Fnv63Hash(child: Expression) extends UnaryExpression {
 
 object Fnv63Hash {
   val name = "fnv63"
-
-  private val info = new ExpressionInfo(classOf[Fnv63Hash].getName, name)
-
-  /** Imperative registration — safe to call repeatedly. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name))) {
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        info,
-        (exprs: Seq[Expression]) => Fnv63Hash(exprs.head))
-    }
-  }
-
-  /** Column API over the registered function. */
-  def hash(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function(name, c)
-  }
 }

@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Streaming/mergeable quantile sketch over longs — a KLL-shaped
@@ -289,27 +286,6 @@ object KllSketch {
     * aggregate.
     */
   val SampleName = "kll_sample"
-
-  private val info = new ExpressionInfo(classOf[KllSketch].getName, Name)
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String, clazz: Class[_], builder: Seq[Expression] => Expression): Unit =
-      if (!registry.functionExists(FunctionIdentifier(name))) {
-        registry.registerFunction(
-          FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
-      }
-    reg(Name, classOf[KllSketch], exprs => KllSketch(exprs.head))
-    reg(StateName, classOf[KllState], exprs => KllState(exprs.head))
-    reg(MergeName, classOf[KllMergeState], exprs => KllMergeState(exprs.head))
-    reg(SampleName, classOf[KllSampleOf], exprs => KllSampleOf(exprs.head))
-  }
-
-  /** Column API over the registered function. */
-  def sketch(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function(Name, c)
-  }
 
   private[functions] def sampleArray(b: Buffer): GenericArrayData =
     new GenericArrayData(b.weightedSample().map { case (v, w) =>

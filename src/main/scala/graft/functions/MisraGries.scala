@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -193,23 +190,6 @@ object MisraGries {
     StructField("item", StringType, nullable = false),
     StructField("cnt", LongType, nullable = false),
   )), containsNull = false)
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String, clazz: Class[_], builder: Seq[Expression] => Expression): Unit =
-      if (!registry.functionExists(FunctionIdentifier(name))) {
-        registry.registerFunction(
-          FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
-      }
-    reg(Name, classOf[MisraGries], exprs => MisraGries(exprs.head))
-    reg(MergeName, classOf[MgMerge], exprs => MgMerge(exprs.head))
-  }
-
-  /** Column API over the registered function. */
-  def summary(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function(Name, c)
-  }
 }
 
 /** `mg_merge(array<struct<item,cnt>>) → array<struct<item,cnt>>` — see

@@ -138,7 +138,6 @@ object Bloom {
     * cross-engine pins this hash.
     */
   private def withFnvProbes(df: DataFrame, key: Column, m: Int, k: Int): DataFrame = {
-    graft.functions.Fnv63Hash.register(df.sparkSession)
     val h1 = shiftrightunsigned(
       call_function(graft.functions.Fnv63Hash.name, key), 3)
     val h2 = shiftrightunsigned(

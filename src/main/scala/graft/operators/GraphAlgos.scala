@@ -195,7 +195,6 @@ object GraphAlgos {
         s"got $walksPerNode, $steps")
     val spark = edges.sparkSession
     import spark.implicits._
-    graft.functions.Fnv63Hash.register(spark)
     val e = edges.select(col(uCol).cast("long").as("src"),
       col(vCol).cast("long").as("dst")).distinct()
     val sym = Lineage.cut(symmetric(e).distinct())
@@ -254,7 +253,6 @@ object GraphAlgos {
     require(k >= 1, s"sampleNeighbors: k must be >= 1, got $k")
     val spark = edges.sparkSession
     import spark.implicits._
-    graft.functions.Fnv63Hash.register(spark)
     val e = edges.select(col(uCol).cast("long").as("src"),
       col(vCol).cast("long").as("dst")).distinct()
     val sym = e.union(e.select($"dst".as("src"), $"src".as("dst"))).distinct()
@@ -563,7 +561,7 @@ object GraphAlgos {
     * graphs where per-node exact BFS is unpayable.
     *
     * The whole algorithm is sketch algebra over
-    * [[graft.functions.HllRegisters]]: round 0 seeds each node with
+    * [[graft.functions.Hll]]: round 0 seeds each node with
     * the singleton sketch of itself; round t merges (bytewise max)
     * each node's own sketch with its neighbors' round-(t−1) sketches.
     * Register merge is EXACT set union, so after t rounds each node
@@ -587,7 +585,7 @@ object GraphAlgos {
     import spark.implicits._
     anfRegisters(edges, uCol, vCol, maxT)
       .select($"node", $"t",
-        call_function(graft.functions.HllRegisters.EvalName, $"regs").as("ev"))
+        call_function(graft.functions.Hll.EvalName, $"regs").as("ev"))
       .select($"node", $"t", $"ev.estimate".as("estimate"),
         $"ev.nonzero_buckets".as("nonzero_buckets"),
         $"ev.register_sum_scaled".as("register_sum_scaled"))
@@ -605,7 +603,6 @@ object GraphAlgos {
   def anfRegisters(edges: DataFrame, uCol: String, vCol: String, maxT: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    graft.functions.HllRegisters.register(spark)
     val e = edges.select(col(uCol).cast("long").as("src"), col(vCol).cast("long").as("dst"))
     // static join side laid out on the round join's key: every
     // round's neighbor equi-join reads the |E| side exchange-free and
@@ -620,7 +617,7 @@ object GraphAlgos {
     val sym = Lineage.prep(Lineage.cut(symmetric(e).distinct()), Seq("dst"))
     var cur = Lineage.cut(sym.select($"src".as("node")).distinct()
       .select($"node",
-        call_function(graft.functions.HllRegisters.InitName,
+        call_function(graft.functions.Hll.InitName,
           $"node".cast("string")).as("regs")))
     var out = cur.select($"node", lit(0).as("t"), $"regs")
     // not a [[Fixpoint]] loop: `out` reads every radius's state, so no
@@ -631,7 +628,7 @@ object GraphAlgos {
         .select($"src".as("node"), $"regs")
       cur = Lineage.cut(fromNbrs.union(cur)
         .groupBy($"node")
-        .agg(call_function(graft.functions.HllRegisters.MergeName, $"regs").as("regs")))
+        .agg(call_function(graft.functions.Hll.MergeName, $"regs").as("regs")))
       out = out.union(cur.select($"node", lit(t).as("t"), $"regs"))
     }
     out
@@ -1304,7 +1301,7 @@ object GraphAlgos {
     * of y at or after e's arrival — is STATIC, computed once as an
     * interleaved-window as-of over longs (no payload), which turns
     * every round's suffix lookup into a plain (node, breakpoint)
-    * EQUI-join. Register merge is EXACT set union (HllRegisters'
+    * EQUI-join. Register merge is EXACT set union (Hll's
     * contract), so the fixpoint registers equal a direct sketch of
     * the true reach set bit for bit — the property the gate oracle
     * checks by rebuilding every register from the exact recursive
@@ -1313,7 +1310,7 @@ object GraphAlgos {
     * knob: the register binary is the unit every round moves, so
     * m = 512 cuts the iteration's bytes 8× at ε ≈ 4.6 % — the
     * setting a reach-profiling deployment actually runs
-    * ([[graft.functions.HllRegistersM]]; at m = 4096 the bytes are
+    * ([[graft.functions.Hll]]; at m = 4096 the bytes are
     * identical to the fixed-width family).
     *
     * Round shape, chosen for what it does NOT move: the {y}
@@ -1356,18 +1353,17 @@ object GraphAlgos {
   ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    graft.functions.HllRegistersM.register(spark)
-    graft.functions.HllRegistersM.checkWidth(registerWidth)
+    graft.functions.Hll.checkWidth(graft.functions.Hll.InitWName, registerWidth)
     val e = Lineage.cut(temporalEdges(edges, uCol, vCol, depCol, arrCol)
       .distinct()
       .withColumn("eid", monotonically_increasing_id()))
     val nEdges = e.count()
     val dstInit = call_function(
-      graft.functions.HllRegistersM.InitName, $"dst".cast("string"),
+      graft.functions.Hll.InitWName, $"dst".cast("string"),
       lit(registerWidth)).as("regs")
     ScopedConf.withShufflePartitionsFor(spark, nEdges) {
       val mergeOf = (c: Column) =>
-        call_function(graft.functions.HllRegistersM.MergeName, c)
+        call_function(graft.functions.Hll.MergeWName, c)
       val W = org.apache.spark.sql.expressions.Window
       // STATIC pointer pass (longs only): pb(e) = the smallest
       // breakpoint of e.dst at or after e.arr — an interleaved as-of
@@ -1407,7 +1403,7 @@ object GraphAlgos {
       // merge, so a row's register_sum_scaled strictly decreases iff
       // its registers changed — a LONG comparison, no binary diff
       def withSum(df: DataFrame): DataFrame = df.withColumn("rsum",
-        call_function(graft.functions.HllRegistersM.EvalName, $"regs")
+        call_function(graft.functions.Hll.EvalWName, $"regs")
           .getField("register_sum_scaled"))
       // INCREMENTAL rounds (merge is idempotent + monotone, so stale
       // contributions are already absorbed and never need re-sending):
@@ -1442,7 +1438,7 @@ object GraphAlgos {
       // oracle pins it). The change bit rides the same pass (`rsum <
       // prevSum` after the window, prevSum carried through the join).
       val merge2 = (a: Column, b: Column) =>
-        call_function(graft.functions.HllRegistersM.Merge2Name, a, b)
+        call_function(graft.functions.Hll.Merge2WName, a, b)
       val partsK = ScopedConf.partitionsFor(spark, nEdges)
       // init: suffixize's window exchange lands the state hash(src)
       val state = Fixpoint.run("temporalAnfReach",

@@ -553,8 +553,7 @@ object MlEval {
       valCols: Seq[String],
       reps: Int,
   ): DataFrame = {
-    val spark = df.sparkSession
-    val u = graft.functions.Fnv63Hash.hash(spark,
+    val u = call_function(graft.functions.Fnv63Hash.name,
       concat(col(idCol).cast("string"), lit(":"), col("b").cast("string")))
     df.select(Seq(col(groupCol).as("g"), col(idCol).cast("string").as(idCol),
         explode(sequence(lit(1), lit(reps))).as("b")) ++

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the standard exact-distinct cost, fine for profiling runs over a
   * bounded column list. When the expansion is the bottleneck at full
   * scale, swap the distinct leg for the mergeable HLL sketch
-  * (`functions.HllSketch`) — same query shape, one pass, no Expand,
+  * (`functions.Hll`) — same query shape, one pass, no Expand,
   * ±2% instead of exact.
   */
 object Profile {
@@ -55,7 +55,7 @@ object Profile {
 
   /** The at-scale profiler: same one-pass report shape as [[profile]]
     * with the exact-distinct leg swapped for the mergeable HLL sketch
-    * (`functions.HllSketch`, fixed 4 KiB state). Because the sketch is
+    * (`functions.Hll`, fixed 4 KiB state). Because the sketch is
     * a REGULAR aggregate — not `count_distinct` — Catalyst plans ONE
     * aggregation with NO Expand: the scan is read once regardless of
     * how many columns are profiled, versus the exact profiler's
@@ -69,7 +69,6 @@ object Profile {
     * engine can verify the estimate bit-for-bit (see q_agg_hll_distinct).
     */
   def profileHll(df: DataFrame, cols0: Seq[String]): DataFrame = {
-    graft.functions.HllSketch.register(df.sparkSession)
     val cols = cols0.distinct
     require(cols.nonEmpty, "profileHll: need at least one column")
     val missing = cols.filterNot(df.columns.contains)
@@ -78,7 +77,7 @@ object Profile {
     val aggs = cols.flatMap { c =>
       Seq(
         count(q(c)).as(s"__${c}__nn"),
-        call_function(graft.functions.HllSketch.Name, q(c).cast("string"))
+        call_function(graft.functions.Hll.DistinctName, q(c).cast("string"))
           .as(s"__${c}__hll"),
         min(q(c)).cast("string").as(s"__${c}__min"),
         max(q(c)).cast("string").as(s"__${c}__max"))
@@ -110,7 +109,6 @@ object Profile {
     * per (group, column).
     */
   def profileHllBy(df: DataFrame, groupCol: String, cols0: Seq[String]): DataFrame = {
-    graft.functions.HllSketch.register(df.sparkSession)
     val cols = cols0.distinct
     require(cols.nonEmpty, "profileHllBy: need at least one column")
     val missing = (groupCol +: cols).filterNot(df.columns.contains)
@@ -119,7 +117,7 @@ object Profile {
     val aggs = cols.flatMap { c =>
       Seq(
         count(q(c)).as(s"__${c}__nn"),
-        call_function(graft.functions.HllSketch.Name, q(c).cast("string"))
+        call_function(graft.functions.Hll.DistinctName, q(c).cast("string"))
           .as(s"__${c}__hll"),
         min(q(c)).cast("string").as(s"__${c}__min"),
         max(q(c)).cast("string").as(s"__${c}__max"))

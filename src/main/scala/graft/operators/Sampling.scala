@@ -49,10 +49,9 @@ object Sampling {
   ): DataFrame = {
     require(k >= 1, s"systematicPps: k must be >= 1, got $k")
     require(buckets >= 1, s"systematicPps: buckets must be >= 1, got $buckets")
-    val spark = df.sparkSession
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     def fdiv(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("decimal(38,0)")
-    val h = graft.functions.Fnv63Hash.hash(spark, col(idCol).cast("string"))
+    val h = call_function(graft.functions.Fnv63Hash.name, col(idCol).cast("string"))
     val w = when(col(weightCol).cast("long") > 0, col(weightCol).cast("long"))
       .otherwise(raise_error(concat(
         lit("systematicPps: non-positive weight "),
@@ -130,9 +129,8 @@ object Sampling {
   ): DataFrame = {
     require(k >= 1, s"ppsDistinct: k must be >= 1, got $k")
     require(k <= Int.MaxValue, s"ppsDistinct: k must fit an Int, got $k")
-    val spark = df.sparkSession
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val h = graft.functions.Fnv63Hash.hash(spark, col(idCol).cast("string"))
+    val h = call_function(graft.functions.Fnv63Hash.name, col(idCol).cast("string"))
     val w = when(col(weightCol).cast("long") > 0, col(weightCol).cast("long"))
       .otherwise(raise_error(concat(
         lit("ppsDistinct: non-positive weight "),
@@ -207,11 +205,10 @@ object Sampling {
       buckets: Int = 64,
   ): DataFrame = {
     require(k >= 1, s"stratifiedPps: k must be >= 1, got $k")
-    val spark = df.sparkSession
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     def fdiv(a: Column, b: Column): Column =
       ((a - pmod(a, b)) / b).cast("decimal(38,0)")
-    val h = graft.functions.Fnv63Hash.hash(spark, col(idCol).cast("string"))
+    val h = call_function(graft.functions.Fnv63Hash.name, col(idCol).cast("string"))
     val w = when(col(weightCol).cast("long") > 0, col(weightCol).cast("long"))
       .otherwise(raise_error(concat(
         lit("stratifiedPps: non-positive weight "),

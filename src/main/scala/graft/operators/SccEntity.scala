@@ -152,7 +152,7 @@ object SccEntity {
     // agg; min_by on (hash, node) keeps determinism
     val pivots = act.groupBy($"part")
       .agg(min_by($"node", struct(
-        graft.functions.Fnv63Hash.hash(spark, $"node".cast("string")),
+        call_function(graft.functions.Fnv63Hash.name, $"node".cast("string")),
         $"node")).as("node"))
       .select($"node", $"part")
     val fb = r.own(reachBoth(withinPartEdges(e, act), pivots, maxBfsIters))

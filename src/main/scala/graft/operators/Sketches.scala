@@ -202,8 +202,6 @@ object Sketches {
   def certifiedTopK(items: DataFrame, itemCol: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 64,
       s"certifiedTopK: k must be in [1, 64] (the summary holds 64 counters), got $k")
-    val spark = items.sparkSession
-    graft.functions.SpaceSaving.register(spark)
     val it = items.select(col(itemCol).cast("string").as("item"))
     // The summary's final merge is merge-order DEPENDENT (candidates
     // and delta both vary with shuffle-fetch order), and the plan
@@ -259,7 +257,6 @@ object Sketches {
     require(k >= 1 && k <= 64,
       s"certifiedTopKGrouped: k must be in [1, 64], got $k")
     val spark = items.sparkSession
-    graft.functions.SpaceSaving.register(spark)
     val groupCap = spark.conf
       .getOption("spark.graft.certifiedTopKMaxGroups").map(_.toLong)
       .getOrElse(10000L)

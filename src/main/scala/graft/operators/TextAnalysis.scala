@@ -372,7 +372,6 @@ object TextAnalysis {
     require(tPpm >= 1, s"subsampleTokens: tPpm must be >= 1, got $tPpm")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Fnv63Hash.register(spark)
     val toks = docs
       .select($"doc_id", posexplode(split($"text", " ")))
       .toDF("doc_id", "pos", "word")

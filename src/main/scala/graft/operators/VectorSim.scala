@@ -36,9 +36,8 @@ object VectorSim {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
   /** Same semantics via the native codegen'd expression (see
-    * graft.functions.ArrayDotLong) — call
-    * `ArrayDotLong.register(spark)` once per session first. Use in
-    * hot per-pair verification loops.
+    * graft.functions.ArrayDotLong, which every `GraftSession`
+    * installs). Use in hot per-pair verification loops.
     */
   def qdotNative(a: Column, b: Column): Column =
     call_function(graft.functions.ArrayDotLong.name, a, b)
@@ -94,9 +93,7 @@ object VectorSim {
   def assignToCentroids(vecs: DataFrame, cents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // native kernel: the assignment pass is vectors × centroids dots —
-    // the hottest loop of every Lloyd iteration (registration is
-    // idempotent, so the operator self-registers)
-    graft.functions.ArrayDotLong.register(vecs.sparkSession)
+    // the hottest loop of every Lloyd iteration
     vecs
       .crossJoin(broadcast(cents))
       .withColumn("cos", qcosine(qdotNative(col("q"), col("qc")), col("n2"), col("n2c")))
@@ -206,7 +203,6 @@ object VectorSim {
     */
   def assignToCentroidsL2(vecs: DataFrame, cents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.ArrayDotLong.register(vecs.sparkSession)
     vecs
       .crossJoin(broadcast(cents))
       .withColumn("d2p", col("n2c") - lit(2L) * qdotNative(col("q"), col("qc")))
@@ -264,7 +260,6 @@ object VectorSim {
     */
   private def assignSubL2(subs: DataFrame, cents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.ArrayDotLong.register(subs.sparkSession)
     subs
       .join(broadcast(cents), "sub")
       .withColumn("d2p", col("n2c") - lit(2L) * qdotNative(col("q"), col("qc")))
@@ -344,7 +339,6 @@ object VectorSim {
     */
   def pqLut(queries: DataFrame, codebooks: DataFrame, dims: Int, m: Int): DataFrame = {
     require(dims % m == 0, s"dims ($dims) must divide into $m subspaces")
-    graft.functions.ArrayDotLong.register(queries.sparkSession)
     subVectors(queries, dims, m)
       .select(col("vec_id").as("query_id"), col("sub"), col("q").as("qs"))
       .join(broadcast(codebooks), "sub")
@@ -378,8 +372,6 @@ object VectorSim {
     * milli-scaled longs (|v| ≈ 1000).
     */
   def powerIteration(vecs: DataFrame, dims: Int, iters: Int): Seq[Long] = {
-    val spark = vecs.sparkSession
-    graft.functions.ArrayDotLong.register(spark)
     var v: Seq[Long] = Seq.fill(dims)(1000L)
     for (_ <- 1 to iters) {
       val vLit = typedlit(v)
@@ -448,7 +440,6 @@ object VectorSim {
     val mu = vecs.agg(avgs.head, avgs.tail: _*)
       .select(array((0 until dims).map(i => col(s"__m$i")): _*).as("__muq"))
       .withColumn("__n2mu", qnorm2(col("__muq")))
-    graft.functions.ArrayDotLong.register(vecs.sparkSession)
     val d2 = vecs.crossJoin(broadcast(mu))
       .withColumn("d2",
         col("n2") + col("__n2mu") - lit(2L) * qdotNative(col("q"), col("__muq")))

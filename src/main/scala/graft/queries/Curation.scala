@@ -817,7 +817,6 @@ object Curation {
     (s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      graft.functions.Fnv63Hash.register(s)
       val docs = Tables(s, dir).documents
       val gated = TextAnalysis
         .gate(docs.select($"doc_id", $"text", $"source"),

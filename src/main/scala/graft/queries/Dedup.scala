@@ -537,7 +537,6 @@ object Dedup {
     (s, dir) => {
       import s.implicits._
       import graft.operators.VectorSim
-      graft.functions.ArrayDotLong.register(s)
       // scope ENFORCED, not advisory: past spark.graft.allPairsMaxRows
       // the guard throws and names the blocked variant (the persisted
       // return feeds both join sides, so the guard's count is the same
@@ -598,7 +597,6 @@ object Dedup {
     (s, dir) => {
       import s.implicits._
       import graft.operators.VectorSim
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -656,7 +654,6 @@ object Dedup {
     (s, dir) => {
       import s.implicits._
       import graft.operators.VectorSim
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))

@@ -808,7 +808,6 @@ object Graph {
     "q_graph_triangles_doulion",
     (s, dir) => {
       import s.implicits._
-      graft.functions.Fnv63Hash.register(s)
       val items = Tables(s, dir).lineitem
         .select($"l_orderkey".as("ok"), $"l_partkey".as("p")).distinct()
       val edges = items.as("a").join(items.as("b"),
@@ -1221,7 +1220,7 @@ object Graph {
         .write.mode("overwrite").parquet(lake)
       val est = s.read.parquet(lake)
         .select($"node", $"t",
-          round(call_function(graft.functions.HllRegisters.EvalName, $"regs")
+          round(call_function(graft.functions.Hll.EvalName, $"regs")
             .getField("estimate"), 4).cast("decimal(20,4)").as("est"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"node").orderBy($"t")
@@ -1351,7 +1350,6 @@ object Graph {
     "q_pipeline_graph_embedding",
     (s, dir) => {
       import s.implicits._
-      graft.functions.Fnv63Hash.register(s)
       val li = Tables(s, dir).lineitem
         .select($"l_orderkey".as("ok"), $"l_linenumber".as("ln"), $"l_partkey".as("p"))
       val edges = li.as("a").join(li.as("b"),
@@ -2129,7 +2127,7 @@ object Graph {
     import regs.sparkSession.implicits._
     regs
       .select($"node",
-        call_function(graft.functions.HllRegistersM.EvalName, $"regs").as("ev"))
+        call_function(graft.functions.Hll.EvalWName, $"regs").as("ev"))
       .select($"node",
         round($"ev.estimate", 4).cast("decimal(20,4)").as("reach_est"),
         $"ev.nonzero_buckets".as("nonzero_buckets"),
@@ -2339,7 +2337,7 @@ object Graph {
         registerWidth = 512)
       GraphAlgos.temporalAnfProfile(st, anfProfileOffsets.map(t0 + _))
         .select($"node", $"sweep", $"start_ms",
-          call_function(graft.functions.HllRegistersM.EvalName, $"regs").as("ev"))
+          call_function(graft.functions.Hll.EvalWName, $"regs").as("ev"))
         .select($"node", $"sweep", $"start_ms",
           round($"ev.estimate", 4).cast("decimal(20,4)").as("reach_est"),
           $"ev.nonzero_buckets".as("nonzero_buckets"),

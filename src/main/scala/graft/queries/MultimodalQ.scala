@@ -208,7 +208,6 @@ object MultimodalQ {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       import graft.operators.VectorSim
-      graft.functions.ArrayDotLong.register(s)
       val e = Multimodal.features(Multimodal.syntheticMedia(Tables(s, dir).documents))
         .map(f => (f.media_id, f.histogram.map(_.toLong)))
         .toDF("vec_id", "q")

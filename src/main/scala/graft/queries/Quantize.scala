@@ -48,7 +48,6 @@ object Quantize {
     "q_embed_scalar_quantize",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Scale.requireAllPairsBounded(
         Tables(s, dir).embeddings
           .select($"vec_id", VectorSim.quantize($"embedding").as("q")),
@@ -156,7 +155,6 @@ object Quantize {
     "q_embed_matryoshka_rerank",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Scale.requireAllPairsBounded(
         Tables(s, dir).embeddings
           .select($"vec_id", VectorSim.quantize($"embedding").as("q"))

@@ -813,7 +813,6 @@ object Relational {
     "q_sample_bottomk",
     (s, dir) => {
       import s.implicits._
-      graft.functions.Fnv63Hash.register(s)
       val k = 100
       val sampled = Tables(s, dir).documents
         .select($"doc_id", $"source",
@@ -931,7 +930,6 @@ object Relational {
     "q_sample_weighted",
     (s, dir) => {
       import s.implicits._
-      graft.functions.Fnv63Hash.register(s)
       val k = 100
       Tables(s, dir).documents
         .filter($"n_chars" > 0)
@@ -1374,7 +1372,7 @@ object Relational {
       s"CAST(strpos('0123456789abcdef', substr($expr, CAST($start + i AS BIGINT), 1)) - 1 AS BIGINT) * " +
       s"(CAST(1 AS BIGINT) << CAST((${n - 1} - i) * 4 AS INT)))) AS BIGINT)"
 
-  /** DuckDB twin of `HllSketch.fnv63` (`functions/HllSketch.scala`):
+  /** DuckDB twin of `Fnv63.hash` (`functions/Fnv63.scala`):
     * the identical FNV-1a-63 byte fold + 63-bit xor-shift finalizer
     * over the UTF-8 bytes of `expr`. The accumulator rides in BIGINT
     * (everything stays < 2⁶³); each multiply widens through HUGEINT
@@ -1397,7 +1395,7 @@ object Relational {
   }
 
   /** bucket / 51-bit tail / capped rank from an fnv63 BIGINT column —
-    * the DuckDB side of the register derivation in `HllSketch.update`.
+    * the DuckDB side of the register derivation in `Hll.add`.
     */
   private[queries] def fnv63Bucket(h: String): String = s"$h >> 51"
   private[queries] def fnv63Tail(h: String): String =
@@ -1406,7 +1404,7 @@ object Relational {
     s"least(CASE WHEN $v = 0 THEN 52 ELSE 52 - length(bin($v)) END, 30)"
 
   /** Approximate distinct users per event type through the native
-    * `hll_distinct` sketch aggregate (`functions/HllSketch.scala` —
+    * `hll_distinct` sketch aggregate (`functions/Hll.scala` —
     * fixed 4 KiB mergeable state, the cardinality shape that survives
     * 100 TB), next to the exact count so the output quantifies its own
     * error. The oracle rebuilds every HLL register from the same fnv63
@@ -1419,12 +1417,11 @@ object Relational {
     "q_agg_hll_distinct",
     (s, dir) => {
       import s.implicits._
-      graft.functions.HllSketch.register(s)
       Tables(s, dir).events
         .groupBy($"event_type")
         .agg(
           countDistinct($"user_id").as("n_exact"),
-          call_function(graft.functions.HllSketch.Name,
+          call_function(graft.functions.Hll.DistinctName,
             $"user_id".cast("string")).as("hll"))
         .select(
           $"event_type",
@@ -1763,14 +1760,13 @@ object Relational {
     "q_stream_hll_distinct",
     (s, dir) => {
       import s.implicits._
-      graft.functions.HllSketch.register(s)
       val sinkName = "graft_stream_hll_gate"
       ScopedConf.withStreamingGate(s, sinkName) {
         val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
         def src = Tables.streamTable(s, dir, "events", rawSchema)
         val agg = src.union(src)
           .groupBy($"event_type")
-          .agg(call_function(graft.functions.HllSketch.Name,
+          .agg(call_function(graft.functions.Hll.DistinctName,
             $"user_id".cast("string")).as("hll"))
           .select(
             $"event_type",
@@ -1829,7 +1825,6 @@ object Relational {
     "q_stream_sample_bottomk",
     (s, dir) => {
       import s.implicits._
-      graft.functions.BottomK.register(s)
       val sinkName = "graft_stream_bottomk_gate"
       ScopedConf.withStreamingGate(s, sinkName) {
         val sch = s.read.parquet(s"$dir/documents.parquet").schema
@@ -1879,7 +1874,6 @@ object Relational {
     "q_sketch_kmv_jaccard",
     (s, dir) => {
       import s.implicits._
-      graft.functions.BottomK.register(s)
       val k = 64
       val entity = concat($"user_id".cast("string"), lit(":"),
         date_format($"ts", "yyyy-MM-dd"))
@@ -1959,7 +1953,6 @@ object Relational {
     "q_sample_bottomk_by_source",
     (s, dir) => {
       import s.implicits._
-      graft.functions.BottomK.register(s)
       Tables(s, dir).documents
         .groupBy($"source")
         .agg(call_function(graft.functions.BottomK.Name,
@@ -1997,7 +1990,6 @@ object Relational {
     "q_sketch_kmv_rollup",
     (s, dir) => {
       import s.implicits._
-      graft.functions.BottomK.register(s)
       val k = 64
       val ev = Tables(s, dir).events
         .select($"user_id", to_date($"ts").as("d"))
@@ -2046,7 +2038,7 @@ object Relational {
            |FROM kth""".stripMargin),
   )
 
-  /** HLL-register sketch lake (the [[graft.functions.HllRegisters]]
+  /** HLL-register sketch lake (the [[graft.functions.Hll]]
     * persistence story, the register analog of q_sketch_kmv_rollup):
     * a "nightly" job builds one 4 KiB register sketch PER DAY with the
     * `hll_regs` builder aggregate and persists them to a parquet lake
@@ -2064,7 +2056,6 @@ object Relational {
     "q_sketch_hll_lake",
     (s, dir) => {
       import s.implicits._
-      graft.functions.HllRegisters.register(s)
       val ev = Tables(s, dir).events
         .select($"user_id", to_date($"ts").as("d"))
       // per-application path: concurrent verify/bench runs each get
@@ -2073,19 +2064,19 @@ object Relational {
         sys.props("java.io.tmpdir"),
         s"graft_hll_sketch_lake_${s.sparkContext.applicationId}").getPath
       ev.groupBy($"d")
-        .agg(call_function(graft.functions.HllRegisters.AggName,
+        .agg(call_function(graft.functions.Hll.RegsName,
           $"user_id".cast("string")).as("regs"))
         .write.mode("overwrite").parquet(lake)
       val stored = s.read.parquet(lake)
       val perDay = stored
         .select(date_format($"d", "yyyy-MM-dd").as("day"), $"regs")
       val total = stored
-        .agg(call_function(graft.functions.HllRegisters.MergeName,
+        .agg(call_function(graft.functions.Hll.MergeName,
           $"regs").as("regs"))
         .select(lit("__total").as("day"), $"regs")
       val sketched = perDay.union(total)
         .select($"day",
-          call_function(graft.functions.HllRegisters.EvalName, $"regs").as("ev"))
+          call_function(graft.functions.Hll.EvalName, $"regs").as("ev"))
         .select($"day", $"ev.nonzero_buckets".cast("long").as("nonzero_buckets"),
           $"ev.register_sum_scaled".as("register_sum_scaled"),
           round($"ev.estimate", 4).as("hll_estimate"))
@@ -2149,7 +2140,6 @@ object Relational {
     "q_sketch_kll",
     (s, dir) => {
       import s.implicits._
-      graft.functions.KllSketch.register(s)
       val px = Tables(s, dir).lineitem
         .select(($"l_extendedprice" * 100).cast("long").as("x"))
       val sk = px.agg(
@@ -2207,7 +2197,6 @@ object Relational {
     "q_sketch_kll_lake",
     (s, dir) => {
       import s.implicits._
-      graft.functions.KllSketch.register(s)
       val li = Tables(s, dir).lineitem
         .select(date_format($"l_shipdate", "yyyy-MM").as("mon"),
           ($"l_extendedprice" * 100).cast("long").as("x"))
@@ -2257,7 +2246,6 @@ object Relational {
     "q_stream_kll",
     (s, dir) => {
       import s.implicits._
-      graft.functions.KllSketch.register(s)
       val sinkName = "graft_stream_kll_gate"
       ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
         val rawSchema = s.read.parquet(s"$dir/lineitem.parquet").schema

@@ -362,11 +362,8 @@ object Replay {
     * string forms match exactly), then assembled per side into the
     * SVG polyline `points` attribute by an ordered aggregation. The
     * oracle computes the same string with string_agg ORDER BY the
-    * minute index. [[graft.notebook.PlotSvg]] wraps exactly these
-    * strings in markup (spec-pinned, including that the gate rows'
-    * points appear verbatim in the document) — so the only part of
-    * the plotting surface NOT under the hash is inert SVG
-    * boilerplate.
+    * minute index. Wrapping these strings in SVG markup is inert
+    * boilerplate, so the whole plot geometry is under the hash.
     */
   private val notebookBboPlot = Q(
     "q_notebook_bbo_plot",
@@ -426,10 +423,8 @@ object Replay {
     * spans its hour slot, width = 880 / n_slots) and baseline at
     * volume 0, one float division per coordinate, rounded to 2 dp
     * through DECIMAL(10,2) so the string forms match the oracle
-    * exactly. [[graft.notebook.PlotSvg.barChart]] wraps exactly these
-    * "x,y,w,h" quadruples in `<rect>` markup (spec-pinned verbatim),
-    * so the only plotting surface not under the hash is inert SVG
-    * boilerplate.
+    * exactly. Wrapping these "x,y,w,h" quadruples in `<rect>` markup
+    * is inert boilerplate, so the whole bar geometry is under the hash.
     */
   /** The yes-token dimension of the fixture's 0xM0 market — the
     * static dim both volume-bars gates (batch + streaming twin)

@@ -30,7 +30,6 @@ object Similarity {
     "q_embed_topk_brute",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       // scope ENFORCED: the candidate side is counted and the O(n·q)
       // scan refused past spark.graft.allPairsMaxRows (see
       // Scale.requireAllPairsBounded) — recall baselines stay baselines
@@ -103,7 +102,6 @@ object Similarity {
     "q_embed_lsh_pairs",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -194,7 +192,6 @@ object Similarity {
     "q_embed_topk_ivf",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -445,7 +442,6 @@ object Similarity {
     "q_embed_topk_ivf_kmeans",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -498,7 +494,6 @@ object Similarity {
     "q_embed_ivf_persist",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -657,7 +652,6 @@ object Similarity {
     "q_embed_topk_pq",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .persist()
@@ -763,7 +757,6 @@ object Similarity {
       s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import s.implicits._
-    graft.functions.ArrayDotLong.register(s)
     val e = Tables(s, dir).embeddings
       .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
       .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -962,7 +955,6 @@ object Similarity {
     "q_embed_knn_classify",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val raw = Tables(s, dir).embeddings
       val e = raw
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
@@ -1028,7 +1020,6 @@ object Similarity {
     "q_embed_topk_ivf_filtered",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", $"label", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -1180,7 +1171,6 @@ object Similarity {
     "q_embed_hard_negatives",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", $"label", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -1241,7 +1231,6 @@ object Similarity {
     "q_rank_rrf_fusion",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val lex = graft.operators.TextAnalysis.bm25(
           Tables(s, dir).documents,
           Seq("window", "merge", "stream", "hash"), k1 = 1.2, b = 0.75)
@@ -1389,7 +1378,6 @@ object Similarity {
     "q_embed_pca_power",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", $"label", VectorSim.quantize($"embedding").as("q"))
         .persist() // 4 iterations + the projection reuse the quantized scan
@@ -1435,7 +1423,6 @@ object Similarity {
     "q_embed_all_but_top",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .persist()
@@ -1516,7 +1503,6 @@ object Similarity {
     "q_rank_mmr_diversify",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -1615,7 +1601,6 @@ object Similarity {
     "q_embed_ivf_recall",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
         .withColumn("n2", VectorSim.qnorm2($"q"))
@@ -1763,7 +1748,6 @@ object Similarity {
     "q_embed_ivf_ndcg",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       val k = ndcgK
       val e = Tables(s, dir).embeddings
         .select($"vec_id", VectorSim.quantize($"embedding").as("q"))
@@ -2020,7 +2004,6 @@ object Similarity {
     "q_embed_coreset_cost",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       def fdiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
         ((a - pmod(a, b)) / b).cast("decimal(38,0)")
@@ -2224,7 +2207,6 @@ object Similarity {
     "q_embed_coreset_kmeans",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       def fdiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
         ((a - pmod(a, b)) / b).cast("decimal(38,0)")
@@ -2332,7 +2314,6 @@ object Similarity {
     "q_embed_topk_ivf_coreset",
     (s, dir) => {
       import s.implicits._
-      graft.functions.ArrayDotLong.register(s)
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       def fdiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
         ((a - pmod(a, b)) / b).cast("decimal(38,0)")

@@ -1368,7 +1368,6 @@ object TextAnalysisQ {
     "q_sketch_misra_gries",
     (s, dir) => {
       import s.implicits._
-      graft.functions.MisraGries.register(s)
       val words = Tables(s, dir).documents
         .select(explode(split($"text", " ")).as("w"))
       val sk = words.agg(
@@ -1420,7 +1419,6 @@ object TextAnalysisQ {
     "q_sketch_spacesaving",
     (s, dir) => {
       import s.implicits._
-      graft.functions.SpaceSaving.register(s)
       val words = Tables(s, dir).documents
         .select(explode(split($"text", " ")).as("w"))
       val sk = words.agg(
@@ -1477,7 +1475,6 @@ object TextAnalysisQ {
     "q_stream_misra_gries",
     (s, dir) => {
       import s.implicits._
-      graft.functions.MisraGries.register(s)
       val sinkName = "graft_stream_mg_gate"
       ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
         val sch = Tables(s, dir).documents.schema
@@ -1537,7 +1534,6 @@ object TextAnalysisQ {
     "q_sketch_mg_lake",
     (s, dir) => {
       import s.implicits._
-      graft.functions.MisraGries.register(s)
       val words = Tables(s, dir).documents
         .select($"source", explode(split($"text", " ")).as("w"))
       val lake = new java.io.File(
@@ -1590,7 +1586,6 @@ object TextAnalysisQ {
     "q_stream_spacesaving",
     (s, dir) => {
       import s.implicits._
-      graft.functions.SpaceSaving.register(s)
       val sinkName = "graft_stream_ss_gate"
       ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
         val sch = Tables(s, dir).documents.schema
@@ -1660,7 +1655,6 @@ object TextAnalysisQ {
     "q_stream_ss_certified",
     (s, dir) => {
       import s.implicits._
-      graft.functions.SpaceSaving.register(s)
       val sinkName = "graft_stream_ss_cert_gate"
       ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
         val sch = Tables(s, dir).documents.schema
@@ -1716,7 +1710,6 @@ object TextAnalysisQ {
     "q_stream_ss_cert_by_source",
     (s, dir) => {
       import s.implicits._
-      graft.functions.SpaceSaving.register(s)
       val sinkName = "graft_stream_ss_cert_src_gate"
       ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
         val sch = Tables(s, dir).documents.schema
@@ -1774,7 +1767,6 @@ object TextAnalysisQ {
     "q_sketch_ss_lake",
     (s, dir) => {
       import s.implicits._
-      graft.functions.SpaceSaving.register(s)
       val words = Tables(s, dir).documents
         .select($"source", explode(split($"text", " ")).as("w"))
       val lake = new java.io.File(

@@ -441,7 +441,8 @@ object TimeSeries {
         .crossJoin(broadcast(rng))
         .filter($"obs_day".between($"lo", $"hi"))
         .groupBy($"event_type", $"obs_day")
-        .agg(graft.functions.HllSketch.sketch(s, $"user_id".cast("string")).as("hll"))
+        .agg(call_function(graft.functions.Hll.DistinctName,
+          $"user_id".cast("string")).as("hll"))
         .select($"event_type",
           date_format($"obs_day", "yyyy-MM-dd").as("obs_day"),
           $"hll.nonzero_buckets".as("nonzero_buckets"),

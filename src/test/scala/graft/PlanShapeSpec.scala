@@ -641,11 +641,10 @@ class PlanShapeSpec extends AnyFunSuite {
     "input sketches collapses to <= |groups| x 4 KiB before the shuffle " +
     "(the ANF-round / sketch-lake-rollup scale shape)") {
     import spark.implicits._
-    graft.functions.HllRegisters.register(spark)
     val df = (1 to 100).map(i => (i % 5, s"v$i")).toDF("g", "v")
-      .select($"g", call_function(graft.functions.HllRegisters.InitName, $"v").as("regs"))
+      .select($"g", call_function(graft.functions.Hll.InitName, $"v").as("regs"))
       .groupBy($"g")
-      .agg(call_function(graft.functions.HllRegisters.MergeName, $"regs").as("regs"))
+      .agg(call_function(graft.functions.Hll.MergeName, $"regs").as("regs"))
     val p = physical(df)
     assert(countOccurrences(p, "ObjectHashAggregate") == 2,
       s"expected partial + final ObjectHashAggregate:\n$p")

@@ -14,7 +14,6 @@ class ArrayDotLongSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("native dot equals HOF dot on random vectors, nulls propagate") {
-    ArrayDotLong.register(spark)
     val rnd = new scala.util.Random(13)
     val rows = (0 until 200).map { i =>
       (i.toLong,
@@ -32,19 +31,18 @@ class ArrayDotLongSpec extends AnyFunSuite {
   }
 
   test("registration is idempotent and SQL-callable") {
-    ArrayDotLong.register(spark)
-    ArrayDotLong.register(spark)
-    val r = spark.sql("SELECT array_dot_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
+    // a fresh session holds only what GraftExtensions injects
+    val fresh = spark.newSession()
+    val r = fresh.sql("SELECT array_dot_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
       .head().getLong(0)
     assert(r == 4 + 10 + 18)
     // min-length zip semantics, same as zip_with
-    val short = spark.sql("SELECT array_dot_long(array(2L), array(10L, 99L)) AS d")
+    val short = fresh.sql("SELECT array_dot_long(array(2L), array(10L, 99L)) AS d")
       .head().getLong(0)
     assert(short == 20)
   }
 
   test("the expression participates in whole-stage codegen") {
-    ArrayDotLong.register(spark)
     val df = spark.range(10)
       .select(VectorSim.qdotNative(
         array(lit(1L), lit(2L)), array($"id", $"id")).as("d"))

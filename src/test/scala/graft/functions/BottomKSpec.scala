@@ -10,11 +10,7 @@ import graft.TestSpark
   * and null/type handling.
   */
 class BottomKSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    BottomK.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private def sketch(values: Seq[String], k: Int, parts: Int): Seq[Long] = {
     import spark.implicits._

@@ -11,11 +11,7 @@ import graft.TestSpark
   * nulls/unicode/empty strings.
   */
 class Fnv63Spec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    Fnv63Hash.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private def ref(v: String): BigInt = {
     val m = BigInt(1) << 63

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,19 +16,17 @@ class HllRegistersSpec extends AnyFunSuite {
 
   test("merge of singleton sketches ≡ hll_distinct over the same group") {
     import spark.implicits._
-    HllSketch.register(spark)
-    HllRegisters.register(spark)
     val vals = (1 to 5000).map(i => (i % 7, s"user_$i"))
       .toDF("g", "v")
     val direct = vals.groupBy($"g")
-      .agg(call_function(HllSketch.Name, $"v").as("hll"))
+      .agg(call_function(Hll.DistinctName, $"v").as("hll"))
       .select($"g", $"hll.estimate", $"hll.nonzero_buckets", $"hll.register_sum_scaled")
       .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getInt(2), r.getLong(3))).toMap
     val merged = vals
-      .select($"g", call_function(HllRegisters.InitName, $"v").as("regs"))
+      .select($"g", call_function(Hll.InitName, $"v").as("regs"))
       .groupBy($"g")
-      .agg(call_function(HllRegisters.MergeName, $"regs").as("regs"))
-      .select($"g", call_function(HllRegisters.EvalName, $"regs").as("ev"))
+      .agg(call_function(Hll.MergeName, $"regs").as("regs"))
+      .select($"g", call_function(Hll.EvalName, $"regs").as("ev"))
       .select($"g", $"ev.estimate", $"ev.nonzero_buckets", $"ev.register_sum_scaled")
       .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getInt(2), r.getLong(3))).toMap
     assert(merged === direct)
@@ -35,10 +34,9 @@ class HllRegistersSpec extends AnyFunSuite {
 
   test("singleton registers match an independent derivation from Fnv63") {
     import spark.implicits._
-    HllRegisters.register(spark)
     val v = "some-node-42"
     val regs = Seq(v).toDF("v")
-      .select(call_function(HllRegisters.InitName, $"v").as("regs"))
+      .select(call_function(Hll.InitName, $"v").as("regs"))
       .collect().head.getAs[Array[Byte]](0)
     // independent: recompute bucket/rank from the public hash here
     val h = Fnv63.hash(org.apache.spark.unsafe.types.UTF8String.fromString(v))
@@ -53,11 +51,10 @@ class HllRegistersSpec extends AnyFunSuite {
 
   test("merge result is independent of partitioning (bytewise max commutes)") {
     import spark.implicits._
-    HllRegisters.register(spark)
     def mergedRegs(parts: Int): Seq[Byte] = {
       val df = (1 to 1000).map(i => s"x$i").toDF("v").repartition(parts)
-      df.select(call_function(HllRegisters.InitName, $"v").as("regs"))
-        .agg(call_function(HllRegisters.MergeName, $"regs").as("regs"))
+      df.select(call_function(Hll.InitName, $"v").as("regs"))
+        .agg(call_function(Hll.MergeName, $"regs").as("regs"))
         .collect().head.getAs[Array[Byte]](0).toSeq
     }
     assert(mergedRegs(1) === mergedRegs(13))
@@ -69,6 +66,14 @@ class HllRegistersSpec extends AnyFunSuite {
     // SparkSessionExtensions only — so these resolve iff
     // GraftExtensions injected them
     val fresh = spark.newSession()
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.size == 20 && names.distinct.size == 20, names)
+    // each name resolves to the graft expression, not to a builtin
+    // (Spark's hll_sketch_* / kll_sketch_*_bigint are near-misses)
+    for (name <- names) {
+      val info = fresh.sessionState.catalog.lookupFunctionInfo(FunctionIdentifier(name))
+      assert(info.getClassName.startsWith("graft.functions."), s"$name -> ${info.getClassName}")
+    }
     val row = fresh.sql(
       """SELECT fnv63('abc') AS h,
         |       hll_regs_eval(hll_merge_regs(hll_init_regs('abc'))).nonzero_buckets AS nz,
@@ -82,10 +87,9 @@ class HllRegistersSpec extends AnyFunSuite {
 
   test("a foreign-width binary input fails loudly, not silently") {
     import spark.implicits._
-    HllRegisters.register(spark)
     val bad = Seq(Array[Byte](1, 2, 3)).toDF("regs")
     val e = intercept[Exception] {
-      bad.agg(call_function(HllRegisters.MergeName, $"regs")).collect()
+      bad.agg(call_function(Hll.MergeName, $"regs")).collect()
     }
     assert(e.getMessage != null)
   }
@@ -94,7 +98,6 @@ class HllRegistersSpec extends AnyFunSuite {
     "merge and eval both reject values outside [0,30] instead of " +
     "shifting mod 64 into garbage estimates") {
     import spark.implicits._
-    HllRegisters.register(spark)
     def foreign(b: Byte): Array[Byte] = {
       val a = new Array[Byte](4096)
       a(7) = b
@@ -103,18 +106,18 @@ class HllRegistersSpec extends AnyFunSuite {
     for (b <- Seq(31.toByte, (-1).toByte, Byte.MinValue)) {
       val df = Seq(foreign(b)).toDF("regs")
       val eMerge = intercept[Exception] {
-        df.agg(call_function(HllRegisters.MergeName, $"regs")).collect()
+        df.agg(call_function(Hll.MergeName, $"regs")).collect()
       }
       assert(eMerge.getMessage != null)
       val eEval = intercept[Exception] {
-        df.select(call_function(HllRegisters.EvalName, $"regs")).collect()
+        df.select(call_function(Hll.EvalName, $"regs")).collect()
       }
       assert(eEval.getMessage != null)
     }
     // boundary value 30 (the rank cap) is valid on both paths
     val ok = Seq(foreign(30.toByte)).toDF("regs")
-    val merged = ok.agg(call_function(HllRegisters.MergeName, $"regs").as("m"))
-      .select(call_function(HllRegisters.EvalName, $"m").getField("nonzero_buckets"))
+    val merged = ok.agg(call_function(Hll.MergeName, $"regs").as("m"))
+      .select(call_function(Hll.EvalName, $"m").getField("nonzero_buckets"))
       .collect().head.getInt(0)
     assert(merged === 1)
   }

@@ -11,22 +11,18 @@ import graft.TestSpark
   * contract), accuracy, and null handling.
   */
 class HllSketchSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    HllSketch.register(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private def sketchOf(values: Seq[String], parts: Int): Row = {
     import spark.implicits._
     values.toDF("v").repartition(parts)
-      .agg(call_function(HllSketch.Name, $"v").as("h"))
+      .agg(call_function(Hll.DistinctName, $"v").as("h"))
       .select($"h.estimate", $"h.nonzero_buckets", $"h.register_sum_scaled")
       .head()
   }
 
   /** The spec's own (bucket, rank) derivation — scalar, no Spark, and
-    * deliberately NOT calling HllSketch.fnv63: BigInt arithmetic mod
+    * deliberately NOT calling Fnv63.hash: BigInt arithmetic mod
     * 2⁶³ re-derives the same hash a third way (the DuckDB oracle being
     * the second), so a transcription slip in the Long bit-twiddling
     * can't self-confirm.
@@ -90,7 +86,7 @@ class HllSketchSpec extends AnyFunSuite {
   test("nulls are ignored") {
     import spark.implicits._
     val withNulls = (Seq("a", "b") ++ Seq.fill(50)(null: String)).toDF("v")
-      .agg(call_function(HllSketch.Name, $"v").as("h"))
+      .agg(call_function(Hll.DistinctName, $"v").as("h"))
       .select($"h.register_sum_scaled").head().getLong(0)
     assert(withNulls == sketchOf(Seq("a", "b"), 1).getLong(2))
   }
@@ -98,7 +94,7 @@ class HllSketchSpec extends AnyFunSuite {
   test("non-string input fails analysis, not silently hashes") {
     import spark.implicits._
     val e = intercept[Exception] {
-      Seq(1L, 2L).toDF("v").agg(call_function(HllSketch.Name, $"v")).head()
+      Seq(1L, 2L).toDF("v").agg(call_function(Hll.DistinctName, $"v")).head()
     }
     assert(e.getMessage.toLowerCase.contains("string"))
   }

@@ -17,7 +17,6 @@ class KllSketchSpec extends AnyFunSuite {
   /** Weighted sample via the aggregate; returns (value, weight) pairs. */
   private def sample(values: Seq[Long], parts: Int = 1): Seq[(Long, Long)] = {
     val df = values.toDF("x").repartition(parts)
-    KllSketch.register(spark)
     df.agg(call_function(KllSketch.Name, $"x").as("s"))
       .select(explode($"s").as("p"))
       .select($"p.v", $"p.w")
@@ -88,7 +87,6 @@ class KllSketchSpec extends AnyFunSuite {
   test("per-group aggregation keeps sketches independent") {
     val df = ((1L to 5000L).map(i => ("a", i)) ++
       (1L to 5000L).map(i => ("b", i + 1000000L))).toDF("g", "x")
-    KllSketch.register(spark)
     val out = df.groupBy($"g")
       .agg(call_function(KllSketch.Name, $"x").as("s"))
       .select($"g", explode($"s").as("p"))
@@ -102,7 +100,6 @@ class KllSketchSpec extends AnyFunSuite {
 
   test("kll_state round-trips through bytes and kll_merge_state of halves " +
     "preserves mass and the rank bound (the sketch-lake path)") {
-    KllSketch.register(spark)
     val n = 40000L
     val df = (1L to n).map(i => (if (i % 2 == 0) "a" else "b",
       (i * 2654435761L) % 100000L)).toDF("h", "x")
@@ -153,7 +150,6 @@ class KllSketchSpec extends AnyFunSuite {
   }
 
   test("nulls are ignored like every aggregate") {
-    KllSketch.register(spark)
     val df = Seq(Some(1L), None, Some(2L), None, Some(3L)).toDF("x")
     val mass = df.agg(call_function(KllSketch.Name, $"x").as("s"))
       .select(explode($"s").as("p")).agg(sum($"p.w")).collect().head.getLong(0)

@@ -15,7 +15,6 @@ class MisraGriesSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def summary(values: Seq[String], parts: Int = 1): Map[String, Long] = {
-    MisraGries.register(spark)
     values.toDF("x").repartition(parts)
       .agg(call_function(MisraGries.Name, $"x").as("s"))
       .select(explode($"s").as("p"))
@@ -62,7 +61,6 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("mg_merge of stored per-partition summaries keeps the full corpus " +
     "guarantees (the mergeable-summaries theorem, exercised as a rollup)") {
-    MisraGries.register(spark)
     val base = zipf(3000)
     val n = base.size.toLong
     val slack = n / (MisraGries.K + 1)
@@ -85,7 +83,6 @@ class MisraGriesSpec extends AnyFunSuite {
   }
 
   test("per-group summaries are independent; nulls ignored") {
-    MisraGries.register(spark)
     val df = ((1 to 100).map(_ => ("g1", Some("x"))) ++
       (1 to 100).map(_ => ("g2", Some("y"))) ++
       Seq(("g1", None), ("g2", None))).toDF("g", "v")

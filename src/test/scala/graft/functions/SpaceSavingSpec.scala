@@ -17,7 +17,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   private case class Summary(delta: Long, items: Map[String, (Long, Long)])
 
   private def summarize(values: Seq[String], parts: Int = 1): Summary = {
-    SpaceSaving.register(spark)
     val row = values.toDF("x").repartition(parts)
       .agg(call_function(SpaceSaving.Name, $"x").as("s"))
       .select($"s.delta", $"s.items").collect().head
@@ -80,7 +79,6 @@ class SpaceSavingSpec extends AnyFunSuite {
 
   test("ss_merge rollup of per-shard summaries preserves every invariant " +
     "(the lake leg)") {
-    SpaceSaving.register(spark)
     val heavy = (1 to 8).flatMap(i => Seq.fill(500)(s"h$i"))
     val tail = (1 to 4000).map(i => s"t$i")
     val values = heavy ++ tail
@@ -98,7 +96,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("nulls are ignored and a malformed stored summary fails loudly") {
-    SpaceSaving.register(spark)
     val s = Seq(Some("a"), None, Some("a"), None, Some("b")).toDF("x")
       .agg(call_function(SpaceSaving.Name, $"x").as("s"))
       .select($"s.items").collect().head

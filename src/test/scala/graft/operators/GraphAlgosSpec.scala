@@ -123,7 +123,6 @@ class GraphAlgosSpec extends AnyFunSuite {
   test("DOULION-style sampled estimate tracks the exact global triangle " +
     "count (deterministic fnv63 coin, p = 1/2)") {
     import spark.implicits._
-    graft.functions.Fnv63Hash.register(spark)
     val rnd = new scala.util.Random(31)
     val n = 60
     val edges = (for {

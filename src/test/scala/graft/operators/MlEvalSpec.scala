@@ -260,7 +260,6 @@ class MlEvalSpec extends AnyFunSuite {
     // mean of Poisson(1) is 1: over 5000 hash draws the total weight
     // should sit well inside ±10% — a wrong threshold constant or a
     // truncated hash range would blow this immediately
-    graft.functions.Fnv63Hash.register(spark)
     val u = expr("fnv63(cast(id as string))")
     val w = MlEval.poissonThresholds
       .map(c => (u >= lit(c)).cast("long")).reduce(_ + _)

@@ -604,15 +604,14 @@ class TemporalReachSpec extends AnyFunSuite {
       val out = GraphAlgos.temporalAnfReach(
         edges.toDF("u", "v", "ts"), "u", "v", "ts", "ts")
         .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("regs")).toMap
-      graft.functions.HllRegisters.register(spark)
       val sources = edges.map(_._1).distinct
       val direct = sources.flatMap(s => reachSet(s).toSeq.map(m => (s, m)))
         .toDF("node", "member")
         .select($"node", org.apache.spark.sql.functions.call_function(
-          graft.functions.HllRegisters.InitName,
+          graft.functions.Hll.InitName,
           $"member".cast("string")).as("regs"))
         .groupBy($"node").agg(org.apache.spark.sql.functions.call_function(
-          graft.functions.HllRegisters.MergeName, $"regs").as("regs"))
+          graft.functions.Hll.MergeName, $"regs").as("regs"))
         .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
       assert(out.keySet == direct.keySet, s"trial $trial")
       out.foreach { case (nd, regs) =>
