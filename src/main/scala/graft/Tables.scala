@@ -64,14 +64,10 @@ object Tables {
     * an empty stream. Resolve the layout once here: a directory
     * streams directly, a flat file keeps the glob shim. In production
     * the same queries point this at an arriving-files directory; the
-    * shim exists only because the fixture is one static file.
+    * shim exists only because the fixture is one static file. The
+    * stream's schema is the table's own parquet schema, read once.
     */
-  def streamTable(
-      spark: SparkSession,
-      dir: String,
-      table: String,
-      schema: org.apache.spark.sql.types.StructType,
-  ): DataFrame = {
+  def streamTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     // probe via Hadoop FileSystem, not java.io.File: the table can
     // live on any supported filesystem (hdfs://, s3a://, file:/), and
     // java.io.File.isDirectory is silently false for every non-local
@@ -82,6 +78,7 @@ object Tables {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val isDir = try fs.getFileStatus(p).isDirectory
                 catch { case _: java.io.FileNotFoundException => false }
+    val schema = spark.read.parquet(p.toString).schema
     if (isDir)
       spark.readStream.schema(schema).parquet(p.toString)
     else

@@ -6,8 +6,7 @@ import java.nio.charset.StandardCharsets
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * payloads with typed metadata, plus decode / feature-extract /

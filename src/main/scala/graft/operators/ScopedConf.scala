@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Scoped `spark.sql.shuffle.partitions` override for the iterative
   * operators (graph loops, SCC, PageRank, components): each loop sizes
@@ -58,7 +59,7 @@ object ScopedConf {
 
   /** Fixed shuffle-partition override for a scope, restored
     * afterwards (also on failure) — the non-streaming sibling of
-    * [[withStreamingGate]] for gates that need a fixed small
+    * [[streamGate]] for gates that need a fixed small
     * partition count without a named memory sink.
     */
   def withShufflePartitions[T](
@@ -70,36 +71,40 @@ object ScopedConf {
     try body finally spark.conf.set(Key, prev)
   }
 
-  /** The STREAMING-GATE scope every streaming query gate shares,
-    * with the restore the hand-rolled sites kept forgetting:
+  /** The ONE streaming-gate body every streaming query gate shares:
+    * runs `plan` to a memory sink named `sinkName` with an
+    * `AvailableNow` trigger and returns the sink table. Around the run
+    * it
     *
     *   - stops any active query already named `sinkName` and drops
     *     its temp view (a re-run on a warm session must not collide
     *     with the previous run's sink);
-    *   - forces `noDataMicroBatches` ON for the scope — append-mode
-    *     windowed aggs only finalize in the terminal no-data batch,
-    *     and a session with it off would silently gate against an
-    *     empty table — and RESTORES it afterwards (the hand-rolled
-    *     sites set it and leaked it session-wide);
+    *   - forces `noDataMicroBatches` ON — append-mode windowed aggs
+    *     only finalize in the terminal no-data batch, and a session
+    *     with it off would silently gate against an empty table;
     *   - sizes shuffle partitions to the query's STATE-KEY
     *     cardinality (stateful operators allocate one state-store
     *     instance per shuffle partition per micro-batch, each with
     *     its own commit — a handful of keys under the session's 32
-    *     partitions is mostly empty-store commits), restoring the
-    *     session value afterwards;
+    *     partitions is mostly empty-store commits);
     *   - optionally pins the RocksDB state-store provider
-    *     (`transformWithState` requires it), restoring whatever the
-    *     session had.
+    *     (`transformWithState` requires it).
     *
-    * All restores run on failure too. The SINGLE-QUERY ASSUMPTION
-    * documented on [[withShufflePartitionsFor]] applies identically.
+    * `plan` is built inside the scope, so any batch work it does sees
+    * the same settings. Every setting is restored afterwards, also
+    * when the plan or the query fails (the failure is rethrown). The
+    * SINGLE-QUERY ASSUMPTION documented on [[withShufflePartitionsFor]]
+    * applies identically. `outputMode` is "append" for fold/window
+    * gates, "complete" for gates that finish in batch on settled,
+    * mergeable state.
     */
-  def withStreamingGate[T](
+  def streamGate(
       spark: SparkSession,
       sinkName: String,
+      outputMode: String = "append",
       partitions: Int = 8,
       rocksDb: Boolean = false,
-  )(body: => T): T = {
+  )(plan: => DataFrame): DataFrame = {
     spark.streams.active
       .filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
     spark.catalog.dropTempView(sinkName)
@@ -109,7 +114,14 @@ object ScopedConf {
     spark.conf.set(Key, partitions.toString)
     spark.conf.set(NoDataKey, "true")
     if (rocksDb) spark.conf.set(ProviderKey, RocksDb)
-    try body finally {
+    try {
+      plan.writeStream
+        .format("memory").queryName(sinkName)
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    } finally {
       spark.conf.set(Key, prevParts)
       prevNoData match {
         case Some(v) => spark.conf.set(NoDataKey, v)
@@ -120,5 +132,6 @@ object ScopedConf {
         case None => spark.conf.unset(ProviderKey)
       }
     }
+    spark.table(sinkName)
   }
 }

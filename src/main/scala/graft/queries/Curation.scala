@@ -576,12 +576,10 @@ object Curation {
     "q_stream_curation",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_curation_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val sch = Tables(s, dir).documents.schema
-        val src = Tables.streamTable(s, dir, "documents", sch)
+      ScopedConf.streamGate(s, "graft_stream_curation_gate") {
+        val src = Tables.streamTable(s, dir, "documents")
           .select($"doc_id", $"text")
-        val gated = TextAnalysis
+        TextAnalysis
           .gate(src, TextAnalysis.defaultStopwords, TextAnalysis.defaultProfile)
           .filter($"quality" >= 0.45)
           .select(
@@ -590,14 +588,7 @@ object Curation {
             $"words",
             round($"quality" * 10000).cast("long").as("q_m"))
           .dropDuplicates("h")
-        val query = gated.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
-      s.table(sinkName)
         .groupBy($"lang")
         .agg(
           count(lit(1)).as("n_docs"),

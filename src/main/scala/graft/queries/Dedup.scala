@@ -722,25 +722,12 @@ object Dedup {
     "q_stream_dedup_exact",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_dedup_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val sch = Tables(s, dir).documents.schema
-        // the file streaming source lists a DIRECTORY; the glob filter
-        // narrows it to the documents table
-        def src = Tables.streamTable(s, dir, "documents", sch)
-        val dd = src
-          .union(src)
+      ScopedConf.streamGate(s, "graft_stream_dedup_gate") {
+        def src = Tables.streamTable(s, dir, "documents")
+        src.union(src)
           .select(md5($"text").as("h"), length($"text").cast("long").as("chars"))
           .dropDuplicates("h")
-        val query = dd.writeStream
-          .format("memory")
-          .queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"h")
+      }.orderBy($"h")
     },
     Some("""SELECT DISTINCT md5(text) AS h,
            |       CAST(length(text) AS BIGINT) AS chars
@@ -764,23 +751,14 @@ object Dedup {
     "q_stream_dedup_watermarked",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_dedup_wm_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      ScopedConf.streamGate(s, "graft_stream_dedup_wm_gate") {
         def src = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val dd = src.union(src)
+          Tables.streamTable(s, dir, "events"))
+        src.union(src)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .select($"event_id", $"user_id", $"event_type", $"value")
-        val query = dd.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"event_id")
+      }.orderBy($"event_id")
     },
     Some("""SELECT event_id, user_id, event_type, value
            |FROM events
@@ -810,27 +788,18 @@ object Dedup {
     "q_stream_dedup_lsh",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_dedup_lsh_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val sch = Tables(s, dir).documents.schema
-        def src = Tables.streamTable(s, dir, "documents", sch)
+      val buckets = ScopedConf.streamGate(s, "graft_stream_dedup_lsh_gate", "complete") {
+        def src = Tables.streamTable(s, dir, "documents")
         val bands = TextDedup.minhashBands(
           TextDedup.minhashSignature(
             TextDedup.shingleArrays(src.select($"doc_id", $"text"), 3), 8),
           8, 2)
-        val buckets = bands
-          .groupBy($"band", $"band_hash")
+        bands.groupBy($"band", $"band_hash")
           .agg(sort_array(collect_set($"doc_id")).as("docs"))
-        val query = buckets.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
       // batch finish on the materialized bucket state: cap, pair, verify
       val docs = col("docs")
-      val pairs = s.table(sinkName)
+      val pairs = buckets
         .filter(size(docs) >= 2 && size(docs) <= TextDedup.DefaultMaxBucket)
         .select(explode(flatten(transform(docs, (x, i) =>
           transform(slice(docs, i + 2, size(docs)),

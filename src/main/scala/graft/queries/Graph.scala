@@ -2235,24 +2235,14 @@ object Graph {
     "q_stream_temporal_anf",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_temporal_anf_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val src = Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val fe = src
+      val fe = ScopedConf.streamGate(s, "graft_stream_temporal_anf_gate", "complete") {
+        Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .groupBy($"event_type", date_trunc("day", $"ts").as("bkt"), $"user_id")
           .agg(min($"ts").as("fts"), min($"event_id").as("feid"))
-        val query = fe.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
       // batch finish on the settled first-event state: shortcut chain +
       // register fixpoint + shared readout, all identical to the batch gate
-      val feB = s.table(sinkName).withColumn("ts_ms", unix_millis($"fts"))
+      val feB = fe.withColumn("ts_ms", unix_millis($"fts"))
       anfReachReadout(GraphAlgos.temporalAnfReach(
         chainFromFe(feB), "u", "v", "dep", "arr", registerWidth = 512))
     },

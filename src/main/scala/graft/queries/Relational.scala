@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -532,30 +531,19 @@ object Relational {
     "q_stream_gap_fill",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_gap_fill_gate"
       // ≈ series keys / task; RocksDB: transformWithState requires it
-      ScopedConf.withStreamingGate(s, sinkName, rocksDb = true) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        def fixTs(df: org.apache.spark.sql.DataFrame) =
-          graft.Tables.normalizeEventTs(df)
+      ScopedConf.streamGate(s, "graft_stream_gap_fill_gate", rocksDb = true) {
         // spine bounds: the same 1-row aggregate the batch plan runs,
         // surfaced to the driver because the timer needs a Long
-        val bounds = fixTs(s.read.parquet(s"$dir/events.parquet"))
+        val bounds = Tables(s, dir).events
           .agg(
             min(expr("(cast(ts as bigint) div 60) * 60000")).as("lo"),
             max(expr("(cast(ts as bigint) div 60) * 60000")).as("hi"))
           .head()
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val ev = fixTs(Tables.streamTable(s, dir, "events", rawSchema))
-        val query = graft.streaming.GapFill.filledSpine(ev, lo, hi)
-          .writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"minute", $"event_type")
+        graft.streaming.GapFill.filledSpine(
+          Tables.normalizeEventTs(Tables.streamTable(s, dir, "events")), lo, hi)
+      }.orderBy($"minute", $"event_type")
     },
     Some("""WITH ev AS (
            |  SELECT date_trunc('minute', ts) AS m, event_type, value, event_id FROM events
@@ -1108,14 +1096,10 @@ object Relational {
     "q_stream_sessionize_dynamic",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_sess_dyn_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val ev = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
+      ScopedConf.streamGate(s, "graft_stream_sess_dyn_gate") {
         val gap = when($"event_type".isin("click", "view"), "2 hours")
           .otherwise("6 hours")
-        val sess = ev
+        graft.Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .withWatermark("ts", "1 hour")
           .groupBy(session_window($"ts", gap), $"user_id")
           .agg(count(lit(1)).as("n_events"))
@@ -1123,14 +1107,7 @@ object Relational {
             $"session_window.start".as("session_start"),
             $"session_window.end".as("session_end"),
             $"n_events")
-        val query = sess.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"user_id", $"session_start")
+      }.orderBy($"user_id", $"session_start")
     },
     Some("""WITH g AS (
            |  SELECT user_id, ts,
@@ -1181,12 +1158,8 @@ object Relational {
     "q_stream_sessionize",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_sessionize_gate"
-      ScopedConf.withStreamingGate(s, sinkName) { // ≈ state keys / task
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val ev = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val sess = ev
+      ScopedConf.streamGate(s, "graft_stream_sessionize_gate") { // ≈ state keys / task
+        graft.Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .withWatermark("ts", "1 hour")
           .groupBy(session_window($"ts", "6 hours"), $"user_id")
           .agg(count(lit(1)).as("n_events"))
@@ -1194,14 +1167,7 @@ object Relational {
             $"session_window.start".as("session_start"),
             $"session_window.end".as("session_end"),
             $"n_events")
-        val query = sess.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"user_id", $"session_start")
+      }.orderBy($"user_id", $"session_start")
     },
     Some("""WITH f AS (
            |  SELECT user_id, ts,
@@ -1245,11 +1211,9 @@ object Relational {
     "q_stream_join_attribution",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_attr_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      ScopedConf.streamGate(s, "graft_stream_attr_gate") {
         def src = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
+          Tables.streamTable(s, dir, "events"))
         val views = src.filter($"event_type" === "view")
           .select($"user_id", $"ts".as("view_ts"), $"event_id".as("view_id"))
           .withWatermark("view_ts", "1 hour")
@@ -1257,20 +1221,13 @@ object Relational {
           .select($"user_id".as("buyer_id"), $"ts".as("buy_ts"),
             $"event_id".as("buy_id"), $"value".as("amount"))
           .withWatermark("buy_ts", "1 hour")
-        val joined = buys.join(views,
+        buys.join(views,
           $"buyer_id" === $"user_id" &&
             $"buy_ts" >= $"view_ts" &&
             $"buy_ts" <= $"view_ts" + expr("INTERVAL 6 HOURS"))
           .select($"buyer_id".as("user_id"), $"buy_id", $"view_id",
             $"buy_ts", $"view_ts", round($"amount", 2).as("amount"))
-        val query = joined.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"buy_id", $"view_id")
+      }.orderBy($"buy_id", $"view_id")
     },
     Some("""SELECT b.user_id, b.buy_id, v.view_id, b.buy_ts, v.view_ts,
            |       round(b.amount, 2) AS amount
@@ -1304,11 +1261,9 @@ object Relational {
     "q_stream_join_attribution_outer",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_attr_outer_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      ScopedConf.streamGate(s, "graft_stream_attr_outer_gate") {
         def src = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
+          Tables.streamTable(s, dir, "events"))
         val views = src.filter($"event_type" === "view")
           .select($"user_id", $"ts".as("view_ts"), $"event_id".as("view_id"))
           .withWatermark("view_ts", "1 hour")
@@ -1316,21 +1271,14 @@ object Relational {
           .select($"user_id".as("buyer_id"), $"ts".as("buy_ts"),
             $"event_id".as("buy_id"), $"value".as("amount"))
           .withWatermark("buy_ts", "1 hour")
-        val joined = buys.join(views,
+        buys.join(views,
           $"buyer_id" === $"user_id" &&
             $"buy_ts" >= $"view_ts" &&
             $"buy_ts" <= $"view_ts" + expr("INTERVAL 6 HOURS"),
           "left_outer")
           .select($"buyer_id", $"buy_id", $"view_id",
             $"buy_ts", $"view_ts", round($"amount", 2).as("amount"))
-        val query = joined.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"buy_id", $"view_id")
+      }.orderBy($"buy_id", $"view_id")
     },
     Some("""WITH b AS (
            |  SELECT user_id, ts AS buy_ts, event_id AS buy_id, value AS amount
@@ -1362,15 +1310,6 @@ object Relational {
            |WHERE m.buy_id IS NULL AND b.buy_ts < wm.w
            |ORDER BY buy_id, view_id""".stripMargin),
   )
-
-  /** DuckDB twin of the Spark-side hex→integer parses: `n` hex chars
-    * of `expr` from 1-based `start` as BIGINT (generalizes
-    * Dedup.hex15ToBig).
-    */
-  private def hexToBig(expr: String, start: Int, n: Int): String =
-    s"CAST(list_sum(list_transform(range(0, $n), i -> " +
-      s"CAST(strpos('0123456789abcdef', substr($expr, CAST($start + i AS BIGINT), 1)) - 1 AS BIGINT) * " +
-      s"(CAST(1 AS BIGINT) << CAST((${n - 1} - i) * 4 AS INT)))) AS BIGINT)"
 
   /** DuckDB twin of `Fnv63.hash` (`functions/Fnv63.scala`):
     * the identical FNV-1a-63 byte fold + 63-bit xor-shift finalizer
@@ -1760,11 +1699,9 @@ object Relational {
     "q_stream_hll_distinct",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_hll_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        def src = Tables.streamTable(s, dir, "events", rawSchema)
-        val agg = src.union(src)
+      ScopedConf.streamGate(s, "graft_stream_hll_gate", "complete") {
+        def src = Tables.streamTable(s, dir, "events")
+        src.union(src)
           .groupBy($"event_type")
           .agg(call_function(graft.functions.Hll.DistinctName,
             $"user_id".cast("string")).as("hll"))
@@ -1773,14 +1710,7 @@ object Relational {
             $"hll.nonzero_buckets".cast("long").as("nonzero_buckets"),
             $"hll.register_sum_scaled".as("register_sum_scaled"),
             round($"hll.estimate", 4).as("hll_estimate"))
-        val query = agg.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"event_type")
+      }.orderBy($"event_type")
     },
     Some(s"""WITH h AS (
            |  SELECT event_type, ${fnv63Sql("CAST(user_id AS VARCHAR)")} AS h FROM events
@@ -1825,21 +1755,12 @@ object Relational {
     "q_stream_sample_bottomk",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_bottomk_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val sch = s.read.parquet(s"$dir/documents.parquet").schema
-        def src = Tables.streamTable(s, dir, "documents", sch)
-        val agg = src.union(src)
+      ScopedConf.streamGate(s, "graft_stream_bottomk_gate", "complete") {
+        def src = Tables.streamTable(s, dir, "documents")
+        src.union(src)
           .agg(call_function(graft.functions.BottomK.Name,
             $"doc_id".cast("string"), lit(100)).as("hs"))
-        val query = agg.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
-      s.table(sinkName)
         .select(posexplode($"hs").as(Seq("rank", "h")))
         .orderBy($"rank")
     },
@@ -2246,22 +2167,13 @@ object Relational {
     "q_stream_kll",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_kll_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
-        val rawSchema = s.read.parquet(s"$dir/lineitem.parquet").schema
-        val px = Tables.streamTable(s, dir, "lineitem", rawSchema)
+      val st = ScopedConf.streamGate(s, "graft_stream_kll_gate", "complete", partitions = 1) {
+        Tables.streamTable(s, dir, "lineitem")
           .select(($"l_extendedprice" * 100).cast("long").as("x"))
-        val sk = px.agg(
-          call_function(graft.functions.KllSketch.Name, $"x").as("sk"),
-          count(lit(1)).as("n"))
-        val query = sk.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+          .agg(
+            call_function(graft.functions.KllSketch.Name, $"x").as("sk"),
+            count(lit(1)).as("n"))
       }
-      val st = s.table(sinkName)
       val sample = st.select(explode($"sk").as("p"))
         .select($"p.v".as("v"), $"p.w".as("w"))
       val wCum = org.apache.spark.sql.expressions.Window.orderBy($"v", $"w")
@@ -2311,21 +2223,10 @@ object Relational {
     "q_stream_cms_cells",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_cms_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val src = Tables.streamTable(s, dir, "events", rawSchema)
-        val cells = graft.operators.Sketches
-          .cmsCells(src.select($"user_id".cast("string").as("k")), $"k",
-            depth = 3, width = 1024)
-        val query = cells.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"r", $"pos")
+      ScopedConf.streamGate(s, "graft_stream_cms_gate", "complete") {
+        val keys = Tables.streamTable(s, dir, "events").select($"user_id".cast("string").as("k"))
+        graft.operators.Sketches.cmsCells(keys, $"k", depth = 3, width = 1024)
+      }.orderBy($"r", $"pos")
     },
     Some(s"""WITH hx AS (
             |  SELECT md5(CAST(user_id AS VARCHAR)) AS hx FROM events
@@ -2357,21 +2258,12 @@ object Relational {
     "q_stream_histogram_quantiles",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_hq_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/lineitem.parquet").schema
-        val src = Tables.streamTable(s, dir, "lineitem", rawSchema)
-        val hist = graft.operators.Sketches
-          .histogram(src, $"l_extendedprice", lo = 0.0, hi = 110000.0, bins = 256)
-        val query = hist.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val hist = ScopedConf.streamGate(s, "graft_stream_hq_gate", "complete") {
+        graft.operators.Sketches.histogram(Tables.streamTable(s, dir, "lineitem"),
+          $"l_extendedprice", lo = 0.0, hi = 110000.0, bins = 256)
       }
       graft.operators.Sketches
-        .quantilesFromHistogram(s.table(sinkName),
+        .quantilesFromHistogram(hist,
           lo = 0.0, hi = 110000.0, bins = 256, qs = Seq(0.5, 0.9, 0.99))
         .select($"q", $"bin", round($"approx_value", 4).as("approx_value"),
           $"cum_count", $"n")
@@ -2897,23 +2789,13 @@ object Relational {
     "q_stream_changepoint",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_changepoint_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val ev = Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val counts = ev
+      val state = ScopedConf.streamGate(
+          s, "graft_stream_changepoint_gate", "complete", partitions = 4) {
+        Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .groupBy($"event_type".as("g"),
             date_format($"ts", "yyyy-MM-dd").as("p"))
           .agg(count(lit(1)).as("x"))
-        val query = counts.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
-      val state = s.table(sinkName)
       graft.operators.Drift.cusumFromPeriods(state)
         .withColumnRenamed("g", "event_type")
         .orderBy($"event_type")
@@ -3182,24 +3064,15 @@ object Relational {
     "q_stream_ks",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_ks_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
-        val sch = Tables(s, dir).documents.schema
-        val stream = Tables.streamTable(s, dir, "documents", sch)
-        val counts = stream
+      val state0 = ScopedConf.streamGate(
+          s, "graft_stream_ks_gate", "complete", partitions = 4) {
+        Tables.streamTable(s, dir, "documents")
           .withColumn("is_en", $"lang" === "en")
           .groupBy($"n_chars".cast("long").as("x"))
           .agg(
             sum(when($"is_en", 1L).otherwise(0L)).as("ca"),
             sum(when(!$"is_en", 1L).otherwise(0L)).as("cb"))
-        val query = counts.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
-      val state0 = s.table(sinkName)
       val state = s.createDataFrame(state0.rdd, state0.schema)
       graft.operators.Drift.ksFromCounts(state)
     },
@@ -3245,24 +3118,15 @@ object Relational {
     "q_stream_ks_by_source",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_ks_by_source_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
-        val sch = Tables(s, dir).documents.schema
-        val stream = Tables.streamTable(s, dir, "documents", sch)
-        val counts = stream
+      val state0 = ScopedConf.streamGate(
+          s, "graft_stream_ks_by_source_gate", "complete", partitions = 4) {
+        Tables.streamTable(s, dir, "documents")
           .withColumn("is_en", $"lang" === "en")
           .groupBy($"source".as("g"), $"n_chars".cast("long").as("x"))
           .agg(
             sum(when($"is_en", 1L).otherwise(0L)).as("ca"),
             sum(when(!$"is_en", 1L).otherwise(0L)).as("cb"))
-        val query = counts.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
-      val state0 = s.table(sinkName)
       val state = s.createDataFrame(state0.rdd, state0.schema)
       graft.operators.Drift.ksFromCountsGrouped(state)
         .withColumnRenamed("g", "src")
@@ -3314,25 +3178,17 @@ object Relational {
     "q_stream_drift",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_drift_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
-        val sch = Tables(s, dir).documents.schema
-        val newStream = Tables.streamTable(s, dir, "documents", sch)
-          .filter(expr("(doc_id div 20) % 2 = 1"))
-        val histNew = graft.operators.Drift.histogram(
-          newStream, "source", "n_chars", binWidth = 100L, nBins = 8, cntCol = "c_new")
-        val query = histNew.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val histNew = ScopedConf.streamGate(
+          s, "graft_stream_drift_gate", "complete", partitions = 4) {
+        graft.operators.Drift.histogram(
+          Tables.streamTable(s, dir, "documents").filter(expr("(doc_id div 20) % 2 = 1")),
+          "source", "n_chars", binWidth = 100L, nBins = 8, cntCol = "c_new")
       }
       val histOld = graft.operators.Drift.histogram(
         Tables(s, dir).documents.filter(expr("(doc_id div 20) % 2 = 0")),
         "source", "n_chars", binWidth = 100L, nBins = 8, cntCol = "c_old")
       graft.operators.Drift
-        .histogramL1FromHists(histOld, s.table(sinkName))
+        .histogramL1FromHists(histOld, histNew)
         .withColumnRenamed("g", "source")
         .orderBy($"source")
     },
@@ -3353,17 +3209,10 @@ object Relational {
     "q_stream_chi2_divergence",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_chi2_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
-        val sch = Tables(s, dir).documents.schema
-        val stream = Tables.streamTable(s, dir, "documents", sch)
-        val counts = graft.operators.Drift.tokenCounts(stream, "source", "text")
-        val query = counts.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val state0 = ScopedConf.streamGate(
+          s, "graft_stream_chi2_gate", "complete", partitions = 4) {
+        graft.operators.Drift.tokenCounts(
+          Tables.streamTable(s, dir, "documents"), "source", "text")
       }
       // The χ² tail self-joins the state table (counts ⋈ vocab totals
       // of the SAME relation). The memory sink's MemoryPlan is not a
@@ -3371,7 +3220,6 @@ object Relational {
       // two sides' attribute ids — rebase onto a fresh LogicalRDD
       // (one distributed pass over the bounded |sources|·|vocab|
       // state, no driver collect) before joining.
-      val state0 = s.table(sinkName)
       val state = s.createDataFrame(state0.rdd, state0.schema)
       graft.operators.Drift
         .chi2FromCounts(state, minCount = 2L)
@@ -3398,23 +3246,14 @@ object Relational {
     "q_stream_profile_hll",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_profile_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
-        val rawSchema = s.read.parquet(s"$dir/orders.parquet").schema
-        val o = Tables.streamTable(s, dir, "orders", rawSchema)
-          .withColumn("o_priority_nz", nullif($"o_orderpriority", lit("1-URGENT")))
-          .withColumn("o_date", to_date($"o_orderdate"))
-        val prof = graft.operators.Profile.profileHll(
-          o, Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_date",
+      ScopedConf.streamGate(s, "graft_stream_profile_gate", "complete", partitions = 1) {
+        graft.operators.Profile.profileHll(
+          Tables.streamTable(s, dir, "orders")
+            .withColumn("o_priority_nz", nullif($"o_orderpriority", lit("1-URGENT")))
+            .withColumn("o_date", to_date($"o_orderdate")),
+          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_date",
             "o_priority_nz"))
-        val query = prof.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"col_name")
+      }.orderBy($"col_name")
     },
     Some(profileHllOrdersOracle),
   )
@@ -3534,12 +3373,8 @@ object Relational {
     "q_stream_sliding_window",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_sliding_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val src = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val agg = src
+      ScopedConf.streamGate(s, "graft_stream_sliding_gate") {
+        graft.Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .withWatermark("ts", "1 hour")
           .groupBy(window($"ts", "10 minutes", "5 minutes"), $"event_type")
           .agg(count(lit(1)).as("n"),
@@ -3548,14 +3383,7 @@ object Relational {
             date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("w_start"),
             $"event_type", $"n",
             round($"cents" / 100.0, 2).as("val_sum"))
-        val query = agg.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"w_start", $"event_type")
+      }.orderBy($"w_start", $"event_type")
     },
     // Append mode emits exactly the windows finalized below the
     // terminal watermark (max event time − delay): the oracle applies
@@ -3596,25 +3424,14 @@ object Relational {
     "q_stream_join_enrich",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_enrich_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
+      ScopedConf.streamGate(s, "graft_stream_enrich_gate") {
         val dim = Tables(s, dir).customer
           .select($"c_custkey", $"c_mktsegment")
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val src = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val enriched = src
+        graft.Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .join(broadcast(dim), $"user_id" === $"c_custkey")
           .select($"event_id", $"user_id",
             $"c_mktsegment".as("segment"), $"event_type", $"value")
-        val query = enriched.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"event_id")
+      }.orderBy($"event_id")
     },
     Some("""SELECT e.event_id, e.user_id, c.c_mktsegment AS segment,
            |       e.event_type, e.value
@@ -3645,6 +3462,7 @@ object Relational {
       val inDir = new java.io.File(base, "in").getPath
       val outDir = new java.io.File(base, "out").getPath
       val ckpt = new java.io.File(base, "ckpt").getPath
+      // not streamGate: a parquet sink restarted from its checkpoint
       ScopedConf.withShufflePartitions(s, 8) {
         val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
         def arrive(pred: org.apache.spark.sql.Column): Unit =

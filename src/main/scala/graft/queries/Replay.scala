@@ -1,12 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.ScopedConf
 import graft.model.{FeedMsg, Tick}
 import graft.operators.BookReplay
+import graft.streaming.StreamingReplay
 import graft.sources.{FixtureLog, GcsJsonClient, HourCache, Loopback, MarketsConnector,
   MarketsDim, RawLogSource, TlsLoopback}
 
@@ -523,7 +524,7 @@ object Replay {
     (s, _) => {
       import s.implicits._
       val yesTokens = fixtureYesTokens(s)
-      runStreamToTable(s, "graft_stream_volume_gate", outputMode = "complete")(tks =>
+      volumeRects(runStreamToTable(s, "graft_stream_volume_gate", outputMode = "complete")(tks =>
         tks.filter($"kind" === "TRADE")
           .join(broadcast(yesTokens), tks("asset") === yesTokens("token_id"), "left_semi")
           // try_cast, not cast: the raw exchange timestamp is a string
@@ -534,8 +535,7 @@ object Replay {
           .withColumn("hi",
             (unix_millis(date_trunc("hour", $"event_ts")) / lit(3600000L)).cast("long"))
           .groupBy($"hi")
-          .agg(sum(round($"size" * 100).cast("long")).as("vol_c")))
-      volumeRects(s.table("graft_stream_volume_gate"))
+          .agg(sum(round($"size" * 100).cast("long")).as("vol_c"))))
     },
     Some(FixtureOracle.notebookVolumePlotSql),
   )
@@ -611,41 +611,26 @@ object Replay {
     */
   private def streamFixtureSpec: FixtureLog.Spec = FixtureOracle.streamSpec
 
-  /** Run a streaming plan built on the fixture tick stream to a memory
-    * sink with an AvailableNow trigger, returning the sink table.
-    * [[ScopedConf.withStreamingGate]] supplies the gate scope:
-    * no-data-microbatches forced on (append-mode windowed aggs only
-    * finalize in the terminal no-data batch — a session with it
-    * disabled would silently gate against an empty table), shuffle
-    * partitions sized to the fixture's handful of state keys, the
-    * RocksDB provider when transformWithState needs it, all restored
-    * afterwards. `outputMode` is "append" for the fold/window gates,
-    * "complete" for global-extent finishes (the volume-bars twin)
-    * whose state is mergeable and bucket-count-sized.
+  /** Run a streaming plan built on the fixture tick stream (the
+    * `ticksStream` fold over the plain-text fixture logs) through
+    * [[ScopedConf.streamGate]], returning the sink table. `outputMode`
+    * is "append" for the fold/window gates, "complete" for
+    * global-extent finishes (the volume-bars twin) whose state is
+    * mergeable and bucket-count-sized; `rocksDb` pins the RocksDB
+    * state-store provider for the run.
     */
   private def runStreamToTable(
       s: SparkSession,
       sinkName: String,
-      useTws: Boolean = false,
       outputMode: String = "append",
-  )(plan: org.apache.spark.sql.Dataset[graft.model.Tick] => DataFrame): DataFrame = {
+      rocksDb: Boolean = false,
+  )(plan: Dataset[Tick] => DataFrame): DataFrame = {
     FixtureOracle.ensureDumps(s)
     FixtureLog.write(streamFixtureSpec)
-    ScopedConf.withStreamingGate(s, sinkName, rocksDb = useTws) {
+    ScopedConf.streamGate(s, sinkName, outputMode, rocksDb = rocksDb) {
       val lines = s.readStream.schema("value STRING").text(streamFixtureSpec.dir)
-      val msgs = RawLogSource.feedMessagesFromLines(lines.toDF())
-      val ticks =
-        if (useTws) graft.streaming.StreamingReplay.ticksStreamTWS(msgs)
-        else graft.streaming.StreamingReplay.ticksStream(msgs)
-      val query = plan(ticks).writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      plan(StreamingReplay.ticksStream(RawLogSource.feedMessagesFromLines(lines.toDF())))
     }
-    s.table(sinkName)
   }
 
   private val streamReplayTicks = Q(
@@ -662,18 +647,17 @@ object Replay {
     Some(FixtureOracle.referenceTicksSql(FixtureOracle.fixtureMsgsPath)),
   )
 
-  /** The MODERN state API under the gate: the identical fixture fold
-    * through `transformWithState` + `ValueState` on the RocksDB store
-    * (see StreamingReplay.ticksStreamTWS), hash-checked against the
-    * same structured-dump oracle as the flatMapGroupsWithState form —
-    * so both state APIs are verified equal to the reference semantics
-    * every round, not just against each other in a spec.
+  /** The same fixture fold on the RocksDB state store: `ticksStream`
+    * with the RocksDB provider pinned for the run, hash-checked
+    * against the same structured-dump oracle as the default-provider
+    * gate — so both state-store providers are verified equal to the
+    * reference semantics every round.
     */
   private val streamReplayTicksTws = Q(
     "q_stream_replay_ticks_tws",
     (s, _) => {
       import s.implicits._
-      runStreamToTable(s, "graft_stream_replay_tws_gate", useTws = true)(_.toDF())
+      runStreamToTable(s, "graft_stream_replay_tws_gate", rocksDb = true)(_.toDF())
         .orderBy($"asset", $"line_no", $"msg_idx", $"emit_idx")
         .select(Tick.referenceColumns.map(col): _*)
     },
@@ -691,7 +675,7 @@ object Replay {
     (s, _) => {
       import s.implicits._
       runStreamToTable(s, "graft_stream_bbo_gate")(
-        graft.streaming.StreamingReplay.bboMinutely(_))
+        StreamingReplay.bboMinutely(_))
         .orderBy($"minute", $"asset", $"side")
     },
     // Watermark + window-close semantics under oracle: append mode
@@ -714,22 +698,12 @@ object Replay {
     (s, _) => {
       import s.implicits._
       FixtureOracle.ensureDumps(s)
-      val sinkName = "graft_stream_live_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
+      ScopedConf.streamGate(s, "graft_stream_live_gate") {
         val lines = s.readStream.format("graft-feed")
           .option("totalFrames", FixtureOracle.LiveTotalFrames)
           .option("framesPerBatch", 100).load()
-        val ticks = graft.streaming.StreamingReplay.ticksStream(
-          RawLogSource.feedMessagesFromLines(lines))
-        val query = ticks.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName)
-        .orderBy($"asset", $"line_no", $"msg_idx", $"emit_idx")
+        StreamingReplay.ticksStream(RawLogSource.feedMessagesFromLines(lines)).toDF()
+      }.orderBy($"asset", $"line_no", $"msg_idx", $"emit_idx")
         .select(Tick.referenceColumns.map(col): _*)
     },
     // The custom-source gate folds the generator's pure-function
@@ -754,9 +728,6 @@ object Replay {
       import s.implicits._
       FixtureOracle.ensureDumps(s)
       FixtureLog.write(streamFixtureSpec)
-      val sinkName = "graft_stream_ingest_metrics_gate"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      s.catalog.dropTempView(sinkName)
       val totals =
         new java.util.concurrent.atomic.AtomicReference[(Long, Long)]((0L, 0L))
       val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -775,21 +746,16 @@ object Replay {
       }
       s.streams.addListener(listener)
       try {
-        val lines = s.readStream.schema("value STRING").text(streamFixtureSpec.dir)
-        val msgs = graft.streaming.StreamingReplay.withIngestMetrics(
-          RawLogSource.feedMessagesFromLines(lines.toDF()))
-        val query = msgs.toDF().select($"eventType")
-          .writeStream.format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+        val expected = ScopedConf.streamGate(s, "graft_stream_ingest_metrics_gate") {
+          val lines = s.readStream.schema("value STRING").text(streamFixtureSpec.dir)
+          StreamingReplay.withIngestMetrics(RawLogSource.feedMessagesFromLines(lines.toDF()))
+            .toDF().select($"eventType")
+        }.count()
         // The listener bus is async: progress events can land after
-        // awaitTermination returns. The sink row count is ground truth
+        // the query terminates. The sink row count is ground truth
         // for "every batch reported" (observe counts the same rows the
         // sink receives), so wait until the observed total catches up,
         // bounded by a deadline.
-        val expected = s.table(sinkName).count()
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
         while (totals.get()._1 < expected && System.nanoTime() < deadline)
           Thread.sleep(50)
@@ -974,6 +940,7 @@ object Replay {
         (1 to nFrames).foreach(i => conn.send(s"""{"seq":$i}"""))
         conn.hold()
       }
+      // not streamGate: a ProcessingTime trigger, polled, then stopped
       val sinkName = s"graft_${name.stripPrefix("q_")}_sink"
       s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
       s.catalog.dropTempView(sinkName)

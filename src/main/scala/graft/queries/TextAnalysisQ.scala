@@ -1475,22 +1475,11 @@ object TextAnalysisQ {
     "q_stream_misra_gries",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_mg_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
-        val sch = Tables(s, dir).documents.schema
-        val words = Tables.streamTable(s, dir, "documents", sch)
+      val st = ScopedConf.streamGate(s, "graft_stream_mg_gate", "complete", partitions = 1) {
+        Tables.streamTable(s, dir, "documents")
           .select(explode(split($"text", " ")).as("w"))
-        val sk = words.agg(
-          call_function(graft.functions.MisraGries.Name, $"w").as("s"),
-          count(lit(1)).as("n"))
-        val query = sk.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+          .agg(call_function(graft.functions.MisraGries.Name, $"w").as("s"), count(lit(1)).as("n"))
       }
-      val st = s.table(sinkName)
       val mg = st.select(explode($"s").as("p"))
         .select($"p.item".as("w"), $"p.cnt".as("mg_cnt"))
       val words = Tables(s, dir).documents
@@ -1586,22 +1575,11 @@ object TextAnalysisQ {
     "q_stream_spacesaving",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_ss_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
-        val sch = Tables(s, dir).documents.schema
-        val words = Tables.streamTable(s, dir, "documents", sch)
+      val st = ScopedConf.streamGate(s, "graft_stream_ss_gate", "complete", partitions = 1) {
+        Tables.streamTable(s, dir, "documents")
           .select(explode(split($"text", " ")).as("w"))
-        val sk = words.agg(
-          call_function(graft.functions.SpaceSaving.Name, $"w").as("s"),
-          count(lit(1)).as("n"))
-        val query = sk.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+          .agg(call_function(graft.functions.SpaceSaving.Name, $"w").as("s"), count(lit(1)).as("n"))
       }
-      val st = s.table(sinkName)
       val items = st.select(explode($"s.items").as("p"), $"s.delta".as("delta"))
         .select($"p.item".as("w"), $"p.lb".as("lb"), $"p.ub".as("ub"), $"delta")
       val words = Tables(s, dir).documents
@@ -1655,21 +1633,11 @@ object TextAnalysisQ {
     "q_stream_ss_certified",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_ss_cert_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 1) {
-        val sch = Tables(s, dir).documents.schema
-        val words = Tables.streamTable(s, dir, "documents", sch)
+      val st = ScopedConf.streamGate(s, "graft_stream_ss_cert_gate", "complete", partitions = 1) {
+        Tables.streamTable(s, dir, "documents")
           .select(explode(split($"text", " ")).as("w"))
-        val sk = words.agg(
-          call_function(graft.functions.SpaceSaving.Name, $"w").as("s"))
-        val query = sk.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+          .agg(call_function(graft.functions.SpaceSaving.Name, $"w").as("s"))
       }
-      val st = s.table(sinkName)
       val cand = st.select(explode($"s.items.item").as("w"))
       val delta = st.select($"s.delta".as("delta"))
       val words = Tables(s, dir).documents
@@ -1710,21 +1678,13 @@ object TextAnalysisQ {
     "q_stream_ss_cert_by_source",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_ss_cert_src_gate"
-      ScopedConf.withStreamingGate(s, sinkName, partitions = 4) {
-        val sch = Tables(s, dir).documents.schema
-        val words = Tables.streamTable(s, dir, "documents", sch)
+      val st = ScopedConf.streamGate(
+          s, "graft_stream_ss_cert_src_gate", "complete", partitions = 4) {
+        Tables.streamTable(s, dir, "documents")
           .select($"source", explode(split($"text", " ")).as("w"))
-        val sk = words.groupBy($"source")
+          .groupBy($"source")
           .agg(call_function(graft.functions.SpaceSaving.Name, $"w").as("s"))
-        val query = sk.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
       }
-      val st = s.table(sinkName)
       val cand = st.select($"source".as("g"), explode($"s.items.item").as("w"))
       val delta = st.select($"source".as("g"), $"s.delta".as("delta"))
       val words = Tables(s, dir).documents

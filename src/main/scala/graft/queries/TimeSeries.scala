@@ -191,17 +191,12 @@ object TimeSeries {
     "q_stream_ohlc_bars",
     (s, dir) => {
       import s.implicits._
-      val sinkName = "graft_stream_ohlc_gate"
-      ScopedConf.withStreamingGate(s, sinkName) {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val src = graft.Tables.normalizeEventTs(
-          Tables.streamTable(s, dir, "events", rawSchema))
-        val keyed = src
+      ScopedConf.streamGate(s, "graft_stream_ohlc_gate") {
+        graft.Tables.normalizeEventTs(Tables.streamTable(s, dir, "events"))
           .withWatermark("ts", "2 hours")
           .withColumn("cents", round($"value" * 100).cast("long"))
           .withColumn("k",
             pmod(unix_micros($"ts"), lit(3600000000L)) * 100000000L + $"event_id")
-        val agg = keyed
           .groupBy(window($"ts", "1 hour"), $"event_type")
           .agg(
             min_by($"cents", $"k").as("open_c"),
@@ -219,14 +214,7 @@ object TimeSeries {
             round($"close_c" / 100.0, 2).as("close"),
             round($"vol_c" / 100.0, 2).as("volume"),
             $"n_events")
-        val query = agg.writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(sinkName).orderBy($"hour", $"event_type")
+      }.orderBy($"hour", $"event_type")
     },
     Some("""WITH e AS (
            |  SELECT date_trunc('hour', ts) AS h, event_type,

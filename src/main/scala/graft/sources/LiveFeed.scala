@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 

@@ -3,16 +3,14 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.github.luben.zstd.ZstdInputStream
 import org.apache.spark.input.PortableDataStream
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.model.{Change, FeedMsg, Frame, Level}
+import graft.model.{FeedMsg, Frame}
 
 /** Scan layer for the hourly `YYYY-MM-DD-HH.jsonl.zst` raw logs
   * (SURVEY.md §2.1 S1/S2/S7, §2.2 F4/F5/F6).

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{InputStream, OutputStream}
-import java.net.{Socket, SocketTimeoutException}
+import java.net.Socket
 import java.nio.charset.StandardCharsets
 
 /** RFC 6455 WebSocket framing, client side — the wire layer between

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{FeedMsg, Level, Tick}
 import graft.operators.{Book, BookReplay}
@@ -31,6 +31,11 @@ import graft.operators.{Book, BookReplay}
   * explicit `Trigger.ProcessingTime(...)` — under the default 0 ms
   * trigger the query busy-spins and `processAllAvailable` never
   * returns. Eviction under RocksDB is spec'd in LiveIngestSpec.
+  *
+  * `ticksStream` is the ONE stream fold of the book. It runs on both
+  * state-store providers (the default HDFS-backed one and RocksDB, the
+  * production provider); their parity is spec'd in
+  * StateProviderParitySpec and gated by q_stream_replay_ticks_tws.
   */
 object StreamingReplay {
 
@@ -74,57 +79,6 @@ object StreamingReplay {
             out.iterator
           }
       }
-  }
-
-  /** The same fold on the MODERN state API (`transformWithState`,
-    * Spark 4): the book lives in a `ValueState[BookState]` with NATIVE
-    * per-value TTL (`TTLConfig`) instead of manual
-    * `GroupStateTimeout` bookkeeping — an expired book simply reads as
-    * absent, so dead-asset eviction needs no timer branch at all. The
-    * engine requires the RocksDB state store provider for this
-    * operator, which is the production provider anyway. Kept alongside
-    * `ticksStream` (not replacing it): parity between the two is
-    * spec'd, and the older API remains for HDFS-backed state stores.
-    */
-  def ticksStreamTWS(
-      msgs: Dataset[FeedMsg],
-      marketFilter: Option[Set[String]] = None,
-      stateTtl: Option[java.time.Duration] = None,
-  ): Dataset[Tick] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    // TTL cleanup is wall-clock based => ProcessingTime time mode
-    val timeMode =
-      if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    BookReplay.inMarkets(msgs, marketFilter)
-      .groupByKey(_.assetId)
-      .transformWithState(new BookProcessor(stateTtl), timeMode, OutputMode.Append())
-  }
-
-  /** StatefulProcessor form of the book fold (see `ticksStreamTWS`). */
-  private[streaming] class BookProcessor(stateTtl: Option[java.time.Duration])
-      extends StatefulProcessor[String, FeedMsg, Tick] {
-    @transient private var bookState: ValueState[BookState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl = stateTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-      bookState = getHandle.getValueState[BookState](
-        "book", Encoders.product[BookState], ttl)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[FeedMsg],
-        timerValues: TimerValues): Iterator[Tick] = {
-      // an expired (TTL) or absent value both read as non-existent:
-      // the fold starts a fresh book either way
-      val book =
-        if (bookState.exists()) toBook(bookState.get()) else new Book
-      val ordered = rows.toSeq.sortBy(m => (m.fileHour, m.lineNo, m.msgIdx))
-      val out = ordered.iterator.flatMap(m => BookReplay.applyMsg(book, m)).toVector
-      bookState.update(fromBook(book))
-      out.iterator
-    }
   }
 
   /** A1 streaming: last BBO price per (1-minute tumbling window, side)

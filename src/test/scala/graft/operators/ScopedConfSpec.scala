@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.{col, expr, upper}
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -7,7 +12,9 @@ import graft.TestSpark
 /** The scoped-conf helpers' restore contract: every key they touch is
   * restored after the scope — on success AND on failure — because the
   * hand-rolled sites they replaced kept leaking `noDataMicroBatches`
-  * session-wide (set-without-restore) across ~30 gates.
+  * session-wide (set-without-restore) across ~30 gates. `streamGate`,
+  * the one streaming-gate body, must also return what a batch run of
+  * the same plan returns.
   */
 class ScopedConfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -29,26 +36,41 @@ class ScopedConfSpec extends AnyFunSuite {
     assert(spark.conf.get(PartsKey) == before)
   }
 
-  test("withStreamingGate: partitions + noDataMicroBatches set inside, " +
-    "BOTH restored after — including a previously-customized noData value") {
+  /** A fresh directory with one text file per `lines` entry; its path. */
+  private def textSource(lines: Seq[String]*): String = {
+    val dir = Files.createTempDirectory("scopedconf-src")
+    lines.zipWithIndex.foreach { case (ls, i) =>
+      Files.write(dir.resolve(s"part$i.txt"), ls.mkString("", "\n", "\n").getBytes)
+    }
+    dir.toString
+  }
+
+  private def stream(dir: String): DataFrame =
+    spark.readStream.schema("value STRING").text(dir)
+
+  test("streamGate: partitions + noDataMicroBatches set while the plan " +
+    "is built, BOTH restored after — including a previously-customized noData value") {
     val beforeParts = spark.conf.get(PartsKey)
+    val dir = textSource(Seq("x"))
     spark.conf.set(NoDataKey, "false")
     try {
-      ScopedConf.withStreamingGate(spark, "graft_scopedconf_spec_sink") {
+      val out = ScopedConf.streamGate(spark, "graft_scopedconf_spec_sink") {
         assert(spark.conf.get(PartsKey) == "8")
         assert(spark.conf.get(NoDataKey) == "true")
+        stream(dir)
       }
+      assert(out.count() == 1)
       assert(spark.conf.get(PartsKey) == beforeParts)
       assert(spark.conf.get(NoDataKey) == "false",
-        "the hand-rolled sites leaked this key; the helper must not")
+        "the hand-rolled sites leaked this key; the gate body must not")
     } finally spark.conf.unset(NoDataKey)
   }
 
-  test("withStreamingGate: rocksDb pins the provider inside and restores " +
-    "the session's previous value, also on failure") {
+  test("streamGate: rocksDb pins the provider while the plan is built and " +
+    "restores the session's previous value, also when the plan throws") {
     val prev = spark.conf.getOption(ProviderKey)
     intercept[RuntimeException] {
-      ScopedConf.withStreamingGate(
+      ScopedConf.streamGate(
         spark, "graft_scopedconf_spec_sink", partitions = 2, rocksDb = true) {
         assert(spark.conf.get(PartsKey) == "2")
         assert(spark.conf.get(ProviderKey).contains("RocksDB"))
@@ -58,20 +80,53 @@ class ScopedConfSpec extends AnyFunSuite {
     assert(spark.conf.getOption(ProviderKey) == prev)
   }
 
-  test("withStreamingGate stops an active query of the same sink name " +
-    "before the body runs (warm-session re-run does not collide)") {
+  test("streamGate: a finished query of the same sink name does not " +
+    "collide, and the table holds only the new run's rows") {
     val sinkName = "graft_scopedconf_spec_stream"
-    val dir = java.nio.file.Files.createTempDirectory("scopedconf-src")
-    java.nio.file.Files.write(dir.resolve("a.txt"), "x\n".getBytes)
-    val q = spark.readStream.schema("value STRING").text(dir.toString)
+    val q = stream(textSource(Seq("old")))
       .writeStream.format("memory").queryName(sinkName)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     // the finished-but-registered query must not break the next gate
-    ScopedConf.withStreamingGate(spark, sinkName) {
+    val out = ScopedConf.streamGate(spark, sinkName) {
       assert(!spark.streams.active.exists(x => Option(x.name).contains(sinkName)))
+      stream(textSource(Seq("new1", "new2")))
     }
-    // and the previous run's sink view is gone
-    intercept[org.apache.spark.sql.AnalysisException](spark.table(sinkName))
+    assert(out.as[String](Encoders.STRING).collect().sorted.toSeq == Seq("new1", "new2"))
+  }
+
+  test("streamGate returns the table a batch run of the same plan " +
+    "gives, in append and in complete mode") {
+    val dir = textSource(Seq("a", "b", "a"), Seq("c", "a"), Seq("b"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def appendPlan(df: DataFrame) = df.select(upper(col("value")).as("v"))
+    def completePlan(df: DataFrame) = df.groupBy(col("value")).count()
+    val batch = spark.read.schema("value STRING").text(dir)
+    assert(rows(ScopedConf.streamGate(spark, "graft_scopedconf_spec_append") {
+      appendPlan(stream(dir))
+    }) == rows(appendPlan(batch)))
+    assert(rows(ScopedConf.streamGate(spark, "graft_scopedconf_spec_complete", "complete") {
+      completePlan(stream(dir))
+    }) == rows(completePlan(batch)))
+  }
+
+  test("streamGate: a query that fails at runtime makes the gate throw, " +
+    "and every session setting is still restored") {
+    val beforeParts = spark.conf.get(PartsKey)
+    val prevProvider = spark.conf.getOption(ProviderKey)
+    val dir = textSource(Seq("x"))
+    spark.conf.set(NoDataKey, "false")
+    try {
+      val e = intercept[StreamingQueryException] {
+        ScopedConf.streamGate(
+          spark, "graft_scopedconf_spec_fail", partitions = 3, rocksDb = true) {
+          stream(dir).select(expr("raise_error(concat('boom ', value))"))
+        }
+      }
+      assert(e.getMessage.contains("boom x"))
+      assert(spark.conf.get(PartsKey) == beforeParts)
+      assert(spark.conf.get(NoDataKey) == "false")
+      assert(spark.conf.getOption(ProviderKey) == prevProvider)
+    } finally spark.conf.unset(NoDataKey)
   }
 }

@@ -71,7 +71,6 @@ class FeedSourceSpec extends AnyFunSuite {
 
   test("checkpoint recovery: a restarted query resumes from committed " +
     "offsets and processes only newly-arrived frames") {
-    import spark.implicits._
     val ckpt = Files.createTempDirectory("graft_feed_resume").toString
     val outDir = Files.createTempDirectory("graft_feed_resume_out").toString
     // the memory sink can't recover from a checkpoint; the file sink can

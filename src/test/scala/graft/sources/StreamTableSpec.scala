@@ -16,9 +16,8 @@ class StreamTableSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def streamCount(dir: String, table: String): Long = {
-    val sch = spark.read.parquet(s"$dir/$table.parquet").schema
     val sinkName = s"stream_table_spec_${table}_${System.nanoTime()}"
-    val q = Tables.streamTable(spark, dir, table, sch)
+    val q = Tables.streamTable(spark, dir, table)
       .agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName(sinkName)
       .outputMode("complete")

@@ -111,7 +111,6 @@ class FrameSinkSpec extends AnyFunSuite {
 
   test("a crash DURING the batch write (mid-partition) leaves no visible " +
     "file for that hour, and the replayed batch heals it completely") {
-    import spark.implicits._
     val dir = tmpDir("frame_sink_midwrite")
     val poisoned = rows((1 to 20).map(i => ("2025-07-01-10", i.toLong, s"line$i")))
       .withColumn("value",
