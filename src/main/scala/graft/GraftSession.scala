@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * of it can call all of them and no query registers its own. It runs
   * in UTC, sizes shuffle partitions to `cores` rather
   * than the 200 default, reads nanosecond Parquet timestamps as longs
-  * (`Tables.events` converts them) and enlarges the codegen cache.
+  * (`Tables.events` converts them), enlarges the codegen cache and
+  * scans bucketed tables by bucket.
   * AQE with partition coalescing and skew-join splitting is Spark's
   * default and is left at it; `BenchSpec` pins the effective values.
   */
@@ -43,6 +44,13 @@ object GraftSession {
       // driver, scale-independent (the 100-TB cluster compiles the
       // same plan texts). Static conf: must be set at session build.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Bucketed tables are always scanned one task per bucket.
+      // `BookReplay.ticksPreDistributed` folds an assetId-bucketed lake
+      // with a sort and `mapPartitions`, which declare no required
+      // distribution, so Spark's automatic rule would scan the lake
+      // unbucketed: an asset whose bucket spans several files (one per
+      // writer task) would then be folded in pieces by several tasks.
+      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -139,12 +139,12 @@ object Main {
       case ms => Some(ms.toSet)
     }
     val msgs = RawLogSource.feedMessagesIn(spark, dir, startHour, endHour)
-    val ticks = BookReplay.ticks(msgs, marketFilter)
     if (o.has("--csv"))
       Sinks.writeTicksCsvLegacy(
         BookReplay.referenceTicks(msgs, marketFilter), out)
     else if (o.has("--partition-by-hour"))
-      Sinks.writeTicksParquet(ticks.toDF(), out, partitionByHour = true)
+      Sinks.writeTicksParquet(
+        BookReplay.ticks(msgs, marketFilter).toDF(), out, partitionByHour = true)
     else
       Sinks.writeTicksParquet(
         BookReplay.referenceTicks(msgs, marketFilter), out)

@@ -35,8 +35,9 @@ final case class Change(price: String, size: String, side: String)
 /** Flattened feed-message union (tag = `eventType`), plus the stable
   * arrival-order key `(fileHour, lineNo, msgIdx)` — file hours sort
   * lexicographically = chronologically, line numbers are assigned
-  * sequentially within one file read, msgIdx indexes inside one
-  * frame's double-encoded array.
+  * sequentially within one file read (offset by `rank << 32` for the
+  * later batch files of one hour), msgIdx indexes inside one frame's
+  * double-encoded array.
   */
 final case class FeedMsg(
     fileHour: String,

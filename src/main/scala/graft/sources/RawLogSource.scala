@@ -1,14 +1,15 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.github.luben.zstd.ZstdInputStream
-import org.apache.spark.input.PortableDataStream
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.{FeedMsg, Frame}
 
@@ -16,15 +17,24 @@ import graft.model.{FeedMsg, Frame}
   * (SURVEY.md §2.1 S1/S2/S7, §2.2 F4/F5/F6).
   *
   * Design notes for scale:
-  *   - The unit of parallelism is the hourly file — the same unit the
+  *   - The unit of work is the hourly file — the same unit the
   *     reference processes sequentially (`cli/src/tick_generator.rs:164-195`).
-  *     `binaryFiles` hands each file to one task as a lazy stream
-  *     (`PortableDataStream`), so a 1000-executor cluster decodes 1000
-  *     hours concurrently; no file is ever materialized in memory.
+  *     The path list is sliced into `min(files, defaultParallelism)`
+  *     contiguous runs in `discover` order, one task per run; a task
+  *     opens its files one after another through the Hadoop
+  *     `FileSystem` (its `Configuration` broadcast once per scan) and
+  *     streams each, so no file is ever materialized in memory and a
+  *     cluster with N cores decodes N runs of hours concurrently. Paths
+  *     are taken verbatim: no comma splitting, no glob expansion.
   *   - Line numbers are assigned while streaming one file start-to-end,
   *     which is the only way to get a stable arrival-order key out of a
-  *     non-splittable compressed file. `(fileHour, lineNo, msgIdx)` is
-  *     then a total order identical to the reference's replay order.
+  *     non-splittable compressed file. An hour the sink wrote as several
+  *     `.bNNNNNNNNN` batch files offsets each file's line numbers by
+  *     `rank << 32`, its rank among the hour's files in `discover`
+  *     order, so the batches fold one after another instead of line by
+  *     line; an hour with one file keeps plain line numbers.
+  *     `(fileHour, lineNo, msgIdx)` is then a total order identical to
+  *     the reference's replay order.
   *   - Hour-range pruning (F4, `cli/src/file_reader.rs:93-99`) happens
   *     at file-listing time — the distributed scan never opens a file
   *     outside the range, the moral equivalent of partition pruning.
@@ -92,7 +102,9 @@ object RawLogSource {
   }
 
   /** S1: stream-decode log files into typed frames with stable
-    * per-file line numbers.
+    * per-file line numbers. `paths` is taken in `discover` order: it
+    * fixes each batch file's rank within its hour (see the design
+    * notes above).
     *
     * `permissive = false` (default) mirrors the reference: a malformed
     * line is an error (`tick_generator.rs:179-186` would bail).
@@ -108,20 +120,36 @@ object RawLogSource {
   ): Dataset[Frame] = {
     import spark.implicits._
     require(paths.nonEmpty, "RawLogSource.frames: no input files")
-    spark.sparkContext
-      .binaryFiles(paths.mkString(","), minPartitions = paths.size)
-      .flatMap { case (path, stream) => readFile(path, stream, permissive) }
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    sc.parallelize(paths.zip(hourRanks(paths)), math.min(paths.size, sc.defaultParallelism))
+      .flatMap { case (path, rank) =>
+        val p = new Path(path)
+        readFile(path, rank, p.getFileSystem(conf.value.value).open(p), permissive)
+      }
       .toDS()
+  }
+
+  /** Each path's rank among the paths of its hour, in the given order:
+    * 0 for the only (or first) file of an hour.
+    */
+  private def hourRanks(paths: Seq[String]): Seq[Int] = {
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    paths.map { p =>
+      val hour = fileHourOf(p)
+      seen(hour) += 1
+      seen(hour) - 1
+    }
   }
 
   val CorruptType = "_corrupt"
 
   private def readFile(
       path: String,
-      pds: PortableDataStream,
+      rank: Int,
+      raw: InputStream,
       permissive: Boolean,
   ): Iterator[Frame] = {
-    val raw = pds.open()
     val in =
       if (path.endsWith(".zst")) new ZstdInputStream(raw)
       else raw
@@ -135,7 +163,7 @@ object RawLogSource {
         try reader.close() catch { case _: Exception => () }))
     val hour = fileHourOf(path)
     val mapper = new ObjectMapper()
-    var lineNo = -1L
+    var lineNo = (rank.toLong << 32) - 1
     new Iterator[Frame] {
       private var nextLine: String = reader.readLine()
       override def hasNext: Boolean = {

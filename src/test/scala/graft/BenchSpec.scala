@@ -68,7 +68,8 @@ class BenchSpec extends AnyFunSuite {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true")
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
     expected.foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
     assert(s.sparkContext.defaultParallelism == 4)
   }

@@ -227,4 +227,22 @@ class BookReplaySpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.replay.assertSampleMod")
     }
   }
+
+  test("a bucketed lake whose bucket spans several files replays like the shuffled fold") {
+    import spark.implicits._
+    // every diff adds a lower bid, so the best bid stays the asset's
+    // first one and a fold that starts part-way through reads lower
+    val msgs = (0 until 60).map(i =>
+      msg(i.toLong, "price_change", asset = s"A${i % 2}",
+        changes = Seq(Change(f"0.${70 - i}%02d", "1", "BUY"))))
+    val wh = java.nio.file.Files.createTempDirectory("graft_multi_file_lake").toString
+    try {
+      // four round-robin writer tasks: the one bucket is four files
+      graft.sources.Sinks.writeBucketedLake(
+        spark.createDataset(msgs).repartition(4), "graft_multi_file_lake", wh, nBuckets = 1)
+      val lake = graft.sources.Sinks.readBucketedLake(spark, "graft_multi_file_lake")
+      assert(BookReplay.ticksPreDistributed(lake).collect().toSeq.sortBy(_.toString) ==
+        replay(msgs).sortBy(_.toString))
+    } finally spark.sql("DROP TABLE IF EXISTS graft_multi_file_lake")
+  }
 }

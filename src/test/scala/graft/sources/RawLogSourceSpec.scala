@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.io.{File, FileOutputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.github.luben.zstd.ZstdOutputStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -9,7 +13,7 @@ import graft.TestSpark
 /** Scan-layer semantics over generated reference-format logs
   * (FIXTURES.md §1-2): stable line numbers, frame/message parsing,
   * PONG + unknown-event filtering, hour-range discovery, open-schema
-  * market dim.
+  * market dim, the scan's task layout and batch-file order.
   */
 class RawLogSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -154,5 +158,65 @@ class RawLogSourceSpec extends AnyFunSuite {
     // receipt times bucket into the hour the file is named after
     assert(msgs.select("fileHour").distinct().collect().map(_.getString(0)).sorted.toSeq ==
       expected.map(_.file_hour).distinct.sorted)
+  }
+
+  /** One zstd log file of feed frames, each carrying `content` verbatim. */
+  private def writeFeedLog(file: File, contents: Seq[String]): Unit = {
+    val mapper = new ObjectMapper()
+    val out = new OutputStreamWriter(
+      new ZstdOutputStream(new FileOutputStream(file)), StandardCharsets.UTF_8)
+    try contents.foreach { c =>
+      val frame = mapper.createObjectNode()
+        .put("timestamp", "2025-07-01T10:00:00+00:00")
+        .put("message_type", "feed_message")
+        .put("content", c)
+      out.write(mapper.writeValueAsString(frame) + "\n")
+    } finally out.close()
+  }
+
+  test("the batch files of one hour fold one after another, not line by line") {
+    val d = Files.createTempDirectory("graft_batch_fold").toFile
+    val head = """"asset_id":"A1","market":"0xM1","timestamp":"1751378400000""""
+    def askChange(size: String) =
+      s"""[{"event_type":"price_change",$head,"changes":[{"price":"0.55","size":"$size","side":"SELL"}]}]"""
+    writeFeedLog(new File(d, "2025-07-01-10.b000000000.jsonl.zst"), Seq(
+      s"""[{"event_type":"book",$head,"asks":[{"price":"0.60","size":"10"}],"bids":[]}]""",
+      askChange("1")))
+    writeFeedLog(new File(d, "2025-07-01-10.b000000001.jsonl.zst"), Seq(askChange("0")))
+    val files = RawLogSource.discover(d.getPath)
+    val asks = graft.operators.BookReplay
+      .referenceTicks(RawLogSource.feedMessages(RawLogSource.frames(spark, files)))
+      .filter("kind = 'BBO' AND side = 'ASK'")
+      .collect().map(r => (r.getAs[Double]("price"), r.getAs[Double]("size"))).toSeq
+    // book → 0.60×10, set 0.55 to 1 → 0.55×1, delete 0.55 → 0.60×10
+    assert(asks == Seq((0.60, 10.0), (0.55, 1.0), (0.60, 10.0)), s"got $asks")
+    // the first file keeps plain line numbers; the second starts at 1 << 32
+    assert(RawLogSource.frames(spark, files).collect().map(_.lineNo).sorted.toSeq ==
+      Seq(0L, 1L, 1L << 32))
+  }
+
+  test("frames reads a log directory whose name holds a comma") {
+    val base = Files.createTempDirectory("graft_comma_path").toFile
+    val day = FixtureLog.Spec(
+      dir = new File(base, "comma,dir").getPath, nFiles = 2, framesPerFile = 20)
+    val files = FixtureLog.write(day)
+    assert(RawLogSource.frames(spark, files).count() == 2 * (day.framesPerFile + 3))
+    assert(RawLogSource.feedMessagesIn(spark, day.dir).count() ==
+      FixtureLog.feedMessages(day).size)
+  }
+
+  test("scan layout: one task per contiguous run of files in discover order") {
+    val day = FixtureLog.Spec(
+      dir = Files.createTempDirectory("graft_scan_layout").toString,
+      nFiles = 24, framesPerFile = 2)
+    val files = FixtureLog.write(day)
+    def hoursByPartition(paths: Seq[String]): Seq[Seq[String]] =
+      RawLogSource.frames(spark, paths).rdd.map(_.fileHour).glom()
+        .collect().map(_.toSeq.distinct).toSeq
+    val parts = hoursByPartition(files)
+    // TestSpark is local[4]: min(24 files, 4 cores) tasks of 6 files each
+    assert(parts.map(_.size) == Seq(6, 6, 6, 6), s"got $parts")
+    assert(parts.flatten == files.map(RawLogSource.fileHourOf))
+    assert(hoursByPartition(files.take(1)) == Seq(Seq(RawLogSource.fileHourOf(files.head))))
   }
 }
