@@ -22,8 +22,11 @@ import graft.sources.{MarketsDim, RawLogSource, Sinks}
   * }}}
   *
   * `replay` is the reference's single-threaded decode→parse→fold→write
-  * pipeline re-expressed as: pruned file listing → distributed scan →
-  * one shuffle on asset → streaming fold → parquet/csv sink.
+  * pipeline re-expressed as: pruned file listing → distributed scan of
+  * contiguous runs of hours → per-run book effects → each run folded
+  * from its seeded books → parquet/csv sink, with no shuffle and no
+  * sort (`BookReplay.withOrderedTicks`). `--partition-by-hour` keeps
+  * all 11 tick columns and partitions the Parquet output by hour.
   * `download` is the hour-cache fill (`cli download`,
   * `cli/src/main.rs:29-31`): compute the required hours, fetch the
   * missing ones 4-wide. The transport is pluggable — `--from SRCDIR`
@@ -139,15 +142,14 @@ object Main {
       case ms => Some(ms.toSet)
     }
     val msgs = RawLogSource.feedMessagesIn(spark, dir, startHour, endHour)
-    if (o.has("--csv"))
-      Sinks.writeTicksCsvLegacy(
-        BookReplay.referenceTicks(msgs, marketFilter), out)
-    else if (o.has("--partition-by-hour"))
-      Sinks.writeTicksParquet(
-        BookReplay.ticks(msgs, marketFilter).toDF(), out, partitionByHour = true)
-    else
-      Sinks.writeTicksParquet(
-        BookReplay.referenceTicks(msgs, marketFilter), out)
+    BookReplay.withOrderedTicks(msgs, marketFilter) { ticks =>
+      if (o.has("--csv"))
+        Sinks.writeTicksCsvLegacy(BookReplay.reference(ticks), out)
+      else if (o.has("--partition-by-hour"))
+        Sinks.writeTicksParquet(ticks.toDF(), out, partitionByHour = true)
+      else
+        Sinks.writeTicksParquet(BookReplay.reference(ticks), out)
+    }
     println(s"[graft] replay written to $out")
   }
 

@@ -6,34 +6,35 @@ import scala.collection.mutable
 
 import graft.model.{Change, Level}
 
-/** Per-asset limit order book: price → size, both sides sorted by
-  * price. Mirrors the reference's
-  * `Book { asks: BTreeMap<Decimal,Decimal>, bids: ... }`
-  * (`cli/src/tick_generator.rs:233-281`), keyed on exact decimals —
-  * `BigDecimal` compared by `compareTo` so `"0.55"` and `"0.550"` hit
-  * the same level, exactly like `rust_decimal` keys. Doubles appear
-  * only in the emitted tick (the reference's one lossy cast,
-  * `tick_generator.rs:89-90`).
+/** Where a book event's level writes land: a live [[Book]], or a
+  * [[BookEffect]] that records them. Snapshot and diff semantics are
+  * defined here once, as `clear` plus per-level writes, so a recorded
+  * run of events replays onto a book exactly as the events themselves
+  * would have.
   */
-final class Book {
-  private val cmp: Ordering[BigDecimal] = (a, b) => a.compareTo(b)
-  val asks: mutable.TreeMap[BigDecimal, BigDecimal] = mutable.TreeMap()(cmp)
-  val bids: mutable.TreeMap[BigDecimal, BigDecimal] = mutable.TreeMap()(cmp)
+sealed abstract class Levels {
+
+  /** Empty both sides. */
+  private[operators] def clear(): Unit
+
+  /** Set the level `price` of one side to `size`; a null `size`
+    * deletes the level.
+    */
+  private[operators] def write(bid: Boolean, price: BigDecimal, size: BigDecimal): Unit
 
   /** Snapshot semantics: clear both sides, rebuild
-    * (`tick_generator.rs:241-254`).
+    * (`tick_generator.rs:241-254`). A zero-size snapshot level is kept
+    * at size 0; only a diff deletes on zero.
     */
   def resetFromSnapshot(askLvls: Seq[Level], bidLvls: Seq[Level]): this.type = {
-    asks.clear()
-    bids.clear()
-    if (askLvls != null)
-      askLvls.foreach(l =>
-        if (l != null && l.price != null && l.size != null)
-          asks.update(new BigDecimal(l.price), new BigDecimal(l.size)))
-    if (bidLvls != null)
-      bidLvls.foreach(l =>
-        if (l != null && l.price != null && l.size != null)
-          bids.update(new BigDecimal(l.price), new BigDecimal(l.size)))
+    clear()
+    def put(bid: Boolean, lvls: Seq[Level]): Unit =
+      if (lvls != null)
+        lvls.foreach(l =>
+          if (l != null && l.price != null && l.size != null)
+            write(bid, new BigDecimal(l.price), new BigDecimal(l.size)))
+    put(bid = false, askLvls)
+    put(bid = true, bidLvls)
     this
   }
 
@@ -50,13 +51,43 @@ final class Book {
       // the strict parse gate would have rejected
       if (c != null && c.price != null && c.size != null &&
         (c.side == "BUY" || c.side == "SELL")) {
-        val side = if (c.side == "BUY") bids else asks
         val size = new BigDecimal(c.size)
-        if (size.signum() == 0) side.remove(new BigDecimal(c.price))
-        else side.update(new BigDecimal(c.price), size)
+        write(c.side == "BUY", new BigDecimal(c.price), if (size.signum() == 0) null else size)
       }
     }
     this
+  }
+}
+
+object Levels {
+
+  /** Exact-decimal price order: `"0.55"` and `"0.550"` are one level. */
+  object PriceOrder extends Ordering[BigDecimal] {
+    def compare(a: BigDecimal, b: BigDecimal): Int = a.compareTo(b)
+  }
+}
+
+/** Per-asset limit order book: price → size, both sides sorted by
+  * price. Mirrors the reference's
+  * `Book { asks: BTreeMap<Decimal,Decimal>, bids: ... }`
+  * (`cli/src/tick_generator.rs:233-281`), keyed on exact decimals —
+  * `BigDecimal` compared by `compareTo` so `"0.55"` and `"0.550"` hit
+  * the same level, exactly like `rust_decimal` keys. Doubles appear
+  * only in the emitted tick (the reference's one lossy cast,
+  * `tick_generator.rs:89-90`).
+  */
+final class Book extends Levels {
+  val asks: mutable.TreeMap[BigDecimal, BigDecimal] = mutable.TreeMap()(Levels.PriceOrder)
+  val bids: mutable.TreeMap[BigDecimal, BigDecimal] = mutable.TreeMap()(Levels.PriceOrder)
+
+  private[operators] def clear(): Unit = {
+    asks.clear()
+    bids.clear()
+  }
+
+  private[operators] def write(bid: Boolean, price: BigDecimal, size: BigDecimal): Unit = {
+    val side = if (bid) bids else asks
+    if (size == null) side.remove(price) else side.update(price, size)
   }
 
   /** Best ask = lowest ask; (0,0) when the side is empty
@@ -72,4 +103,38 @@ final class Book {
     bids.lastOption
       .map { case (p, s) => (p.doubleValue, s.doubleValue) }
       .getOrElse((0.0, 0.0))
+}
+
+/** The net effect of a run of book events on one asset's book: whether
+  * the run resets the book (it holds a snapshot) and the last write per
+  * (side, price) since the last reset, a null size marking a delete.
+  * A write is a last-writer-wins assignment and a reset discards what
+  * came before, so effects compose associatively: recording `e2` onto a
+  * copy of `e1` ([[applyTo]]) gives the effect of `e1` then `e2`. That
+  * is what lets the ordered replay fold every scan run from a seed, the
+  * exclusive prefix of the runs before it (see `BookReplay`).
+  */
+final class BookEffect extends Levels with Serializable {
+  private var reset = false
+  private val asks = mutable.TreeMap.empty[BigDecimal, BigDecimal](Levels.PriceOrder)
+  private val bids = mutable.TreeMap.empty[BigDecimal, BigDecimal](Levels.PriceOrder)
+
+  private[operators] def clear(): Unit = {
+    reset = true
+    asks.clear()
+    bids.clear()
+  }
+
+  private[operators] def write(bid: Boolean, price: BigDecimal, size: BigDecimal): Unit =
+    (if (bid) bids else asks).update(price, size)
+
+  /** Replay this effect onto `target`: a book, or another effect (which
+    * then holds the composition). Reads this effect only.
+    */
+  def applyTo[L <: Levels](target: L): L = {
+    if (reset) target.clear()
+    asks.foreach { case (p, s) => target.write(bid = false, p, s) }
+    bids.foreach { case (p, s) => target.write(bid = true, p, s) }
+    target
+  }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -7,31 +9,52 @@ import graft.model.{FeedMsg, Tick}
 
 /** B1/B2/B3 — order-book reconstruction (SURVEY.md §2.4), the
   * reference's core operator (`MarketState::update`,
-  * `cli/src/tick_generator.rs:318-362`).
+  * `cli/src/tick_generator.rs:318-362`). Book state is keyed solely by
+  * `asset_id`, and every fold below runs the one emission rule,
+  * [[applyMsg]], over each asset's messages in arrival order
+  * `(fileHour, lineNo, msgIdx)`.
   *
-  * Distribution argument: book state is keyed solely by `asset_id`, so
-  * replaying each asset's messages in arrival order is equivalent to
-  * the reference's single-threaded global-order replay — only the
-  * interleaving of *different* assets' output rows differs (SURVEY.md
-  * §2.4 B1). That makes the operator shard perfectly: one shuffle on
-  * `assetId`, then a streaming fold per key.
+  * Ordered replay ([[orderedTicks]], [[referenceTicks]], and the CLI
+  * through [[withOrderedTicks]]) keeps the scan's own layout:
+  * `RawLogSource.frames` gives partition i a contiguous run of hour
+  * files in `discover` order. A book event is a last-writer-wins
+  * assignment per (side, price) and a snapshot resets the book, so a
+  * run's net change to each asset's book is a composable
+  * [[BookEffect]] (an exclusive prefix scan over an associative
+  * operator, Blelloch 1990):
+  *   - pass 1, one job: each partition reports its first and last
+  *     arrival key, whether its keys ascend, and one effect per asset;
+  *   - Spark driver: checks that keys ascend inside each partition and that
+  *     partitions do not overlap (else it fails, naming the partition,
+  *     and never folds partial books), then composes the effects into
+  *     each partition's seed books and broadcasts them, keyed by the
+  *     partition's first arrival key;
+  *   - pass 2, the consumer's job: each partition folds its messages in
+  *     input order from its seeded books. The ticks come out in
+  *     reference order, so the write needs no exchange and no sort.
   *
-  * Physical plan: `repartition(assetId)` + `sortWithinPartitions(assetId,
-  * arrival key)` + `mapPartitions` — the classic secondary-sort shape.
-  * Unlike `groupByKey.flatMapGroups` (which materializes each group),
-  * the sort runs through Spark's spillable external sorter and the fold
-  * walks the partition as one pass holding exactly ONE book at a time.
-  * Memory per task is O(one asset's live levels), independent of
-  * message count — this is what survives a 100 TB replay.
+  * Memory contract: a pass-2 task holds the books of every asset of its
+  * run of hours, not one asset's book; the Spark driver holds assets ×
+  * scan-partitions seeds (each at most an asset's live levels). At
+  * 100 TB the driver-side prefix becomes a keyed running fold over
+  * (asset, run) effects, which shuffles effects, not messages.
   *
-  * The market filter (F2) is applied *before* the shuffle: filtered
-  * messages neither move nor mutate state, matching the reference's
-  * filter-before-state placement (`tick_generator.rs:322-351`) and
-  * shrinking the shuffle to exactly the requested markets.
+  * [[ticks]] is the fold for an arbitrary input layout: one shuffle on
+  * `assetId`, then a secondary sort and a streaming fold that holds one
+  * book at a time. The market filter (F2) is applied before any state
+  * or shuffle: filtered messages neither move nor mutate state,
+  * matching the reference's filter-before-state placement
+  * (`tick_generator.rs:322-351`).
   */
 object BookReplay {
 
-  /** Full tick stream (BBO + TRADE) with arrival-order seq columns. */
+  /** Full tick stream (BBO + TRADE) with arrival-order seq columns, for
+    * any input layout: `repartition(assetId)` +
+    * `sortWithinPartitions(assetId, arrival key)` + `mapPartitions`, the
+    * secondary-sort shape. The sort runs through Spark's spillable
+    * external sorter and the fold walks each partition holding one
+    * book at a time; rows come out grouped by asset.
+    */
   def ticks(
       msgs: Dataset[FeedMsg],
       marketFilter: Option[Set[String]] = None,
@@ -119,8 +142,8 @@ object BookReplay {
   }
 
   /** F2, the one market filter of every replay (batch and stream): an
-    * IN-set on the `market` column, placed upstream of the shuffle so
-    * Catalyst can push it into the scan where possible.
+    * IN-set on the `market` column, placed upstream of any state or
+    * shuffle so Catalyst can push it into the scan where possible.
     */
   private[graft] def inMarkets(
       msgs: Dataset[FeedMsg],
@@ -128,16 +151,129 @@ object BookReplay {
   ): Dataset[FeedMsg] =
     marketFilter.fold(msgs)(ids => msgs.filter(col("market").isin(ids.toSeq: _*)))
 
-  /** Reference-schema projection (7 columns, `tick_generator.rs:50-58`),
-    * ordered like a single-threaded replay would append.
+  /** Reference-schema projection (7 columns, `tick_generator.rs:50-58`)
+    * of the ordered replay, ordered like a single-threaded replay would
+    * append. Reads `msgs` twice (see [[orderedTicks]]).
     */
   def referenceTicks(
       msgs: Dataset[FeedMsg],
       marketFilter: Option[Set[String]] = None,
-  ): DataFrame =
-    ticks(msgs, marketFilter)
-      .orderBy(col("file_hour"), col("line_no"), col("msg_idx"), col("emit_idx"))
-      .select(Tick.referenceColumns.map(col): _*)
+  ): DataFrame = reference(orderedTicks(msgs, marketFilter))
+
+  /** The reference's 7 output columns of a tick stream. */
+  def reference(ticks: Dataset[Tick]): DataFrame =
+    ticks.select(Tick.referenceColumns.map(col): _*)
+
+  /** Ordered replay of a scan in arrival order (see the object doc):
+    * runs pass 1 now and returns pass 2, whose ticks come out in
+    * reference order with no exchange and no sort. `msgs` must be a
+    * `RawLogSource.frames` scan, or keep its layout: keys ascending
+    * inside each partition and partitions not overlapping; anything
+    * else fails here, naming the partition. `msgs` is read by both
+    * passes; [[withOrderedTicks]] reads it once.
+    */
+  def orderedTicks(
+      msgs: Dataset[FeedMsg],
+      marketFilter: Option[Set[String]] = None,
+  ): Dataset[Tick] = {
+    val spark = msgs.sparkSession
+    import spark.implicits._
+    val kept = inMarkets(msgs, marketFilter)
+    val runs = kept.rdd.mapPartitions(it => Iterator(summarize(it))).collect().toSeq
+    val seeds = spark.sparkContext.broadcast(seedsOf(runs))
+    kept.mapPartitions(it => foldRun(seeds.value, it))
+  }
+
+  /** [[orderedTicks]] handed to `sink`, with the market-filtered
+    * messages persisted across the two passes, so the logs are decoded
+    * once. The messages are released once `sink` returns or fails, so
+    * `sink` must consume the ticks (write them) before returning.
+    */
+  def withOrderedTicks[A](
+      msgs: Dataset[FeedMsg],
+      marketFilter: Option[Set[String]],
+  )(sink: Dataset[Tick] => A): A = {
+    val kept = inMarkets(msgs, marketFilter).persist()
+    try sink(orderedTicks(kept))
+    finally kept.unpersist()
+  }
+
+  /** One message's arrival key `(fileHour, lineNo, msgIdx)`, ordered
+    * like the reference's replay.
+    */
+  private[operators] type Arrival = (String, Long, Int)
+  private def arrival(m: FeedMsg): Arrival = (m.fileHour, m.lineNo, m.msgIdx)
+  private val order = Ordering[Arrival]
+
+  /** Pass 1's report on one partition: its first and last arrival keys
+    * (null when it is empty), whether its keys strictly ascend, and each
+    * asset's net book effect.
+    */
+  private[operators] final case class Run(
+      first: Arrival,
+      last: Arrival,
+      ascending: Boolean,
+      effects: Map[String, BookEffect],
+  )
+
+  private[operators] def summarize(it: Iterator[FeedMsg]): Run = {
+    val effects = mutable.HashMap.empty[String, BookEffect]
+    var first, last: Arrival = null
+    var ascending = true
+    it.foreach { m =>
+      val k = arrival(m)
+      if (first == null) first = k else if (order.lteq(k, last)) ascending = false
+      last = k
+      bookEvent(effects.getOrElseUpdate(m.assetId, new BookEffect), m)
+    }
+    Run(first, last, ascending, effects.toMap)
+  }
+
+  /** The Spark-driver step: check the order contract over the runs, then map
+    * the first key of each non-empty run i to its seed, the composition
+    * of every asset's effects in runs 0 until i.
+    */
+  private[operators] def seedsOf(runs: Seq[Run]): Map[Arrival, Map[String, BookEffect]] = {
+    def violated(why: String) = throw new IllegalStateException(
+      s"ordered replay needs a scan in arrival order (RawLogSource.frames over " +
+        s"discover order, no repartition): $why; folding it would write partial books")
+    runs.zipWithIndex.foreach { case (r, i) =>
+      if (!r.ascending) violated(s"the arrival keys of partition $i do not ascend")
+    }
+    val filled = runs.zipWithIndex.filter(_._1.first != null)
+    filled.zip(filled.drop(1)).foreach { case ((a, i), (b, j)) =>
+      if (order.lteq(b.first, a.last))
+        violated(s"partition $j starts at ${b.first}, not after partition $i's last key ${a.last}")
+    }
+    val seeds = runs.scanLeft(Map.empty[String, BookEffect]) { (seed, r) =>
+      seed ++ r.effects.map { case (asset, e) =>
+        asset -> e.applyTo(seed.get(asset).fold(new BookEffect)(_.applyTo(new BookEffect)))
+      }
+    }
+    runs.zip(seeds).collect { case (r, seed) if r.first != null => r.first -> seed }.toMap
+  }
+
+  /** Pass 2 over one run: fold its messages in input order, each asset
+    * from the seed book of the run that starts at the first message
+    * (empty when no earlier run touched the asset). The seed is found by
+    * that key, not by task partition id: a downstream `coalesce` runs
+    * several runs in one task.
+    */
+  private[operators] def foldRun(
+      seeds: Map[Arrival, Map[String, BookEffect]],
+      it: Iterator[FeedMsg],
+  ): Iterator[Tick] = {
+    val books = mutable.HashMap.empty[String, Book]
+    var seed: Map[String, BookEffect] = null
+    it.flatMap { m =>
+      if (seed == null) seed = seeds.getOrElse(arrival(m), throw new IllegalStateException(
+        s"ordered replay: no pass-1 partition starts at ${arrival(m)}, where a pass-2 " +
+          "partition starts; the input must read the same on every pass"))
+      val book = books.getOrElseUpdate(m.assetId,
+        seed.get(m.assetId).fold(new Book)(_.applyTo(new Book)))
+      applyMsg(book, m)
+    }
+  }
 
   /** Walk one partition of asset-contiguous, arrival-ordered messages,
     * folding a single live book and emitting ticks. Assets arrive
@@ -175,13 +311,21 @@ object BookReplay {
           new java.math.BigDecimal(m.price).doubleValue,
           new java.math.BigDecimal(m.size).doubleValue,
           m.fileHour, m.lineNo, m.msgIdx, 0))
+    case _ => if (bookEvent(book, m)) bbo(book, m) else Nil
+  }
+
+  /** One message's change to a book or an effect: a snapshot resets, a
+    * diff updates, anything else (a trade) leaves it alone. Returns
+    * whether the message was a book event.
+    */
+  private def bookEvent(levels: Levels, m: FeedMsg): Boolean = m.eventType match {
     case "book" =>
-      book.resetFromSnapshot(m.asks, m.bids)
-      bbo(book, m)
+      levels.resetFromSnapshot(m.asks, m.bids)
+      true
     case "price_change" =>
-      book.updateFromDiff(m.changes)
-      bbo(book, m)
-    case _ => Nil
+      levels.updateFromDiff(m.changes)
+      true
+    case _ => false
   }
 
   /** B2: two BBO rows after every book event, ASK first then BID

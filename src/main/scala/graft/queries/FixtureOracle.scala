@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.io.File
+import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
@@ -24,7 +25,8 @@ import graft.sources.{FixtureLog, GraftFeed}
   * hash-match.
   *
   * The oracle SQL embeds absolute dump paths computed at Verify
-  * runtime (the driver executes the SQL on the same host right after),
+  * runtime (the oracle check executes the SQL on the same host right after;
+  * each JVM dumps to its own directory, see [[ensureDumps]]),
   * which is what lets a non-sf-table input participate in the DuckDB
   * gate at all.
   */
@@ -46,32 +48,50 @@ object FixtureOracle {
   val LiveNMarkets = 2
   val LiveAssetsPerMarket = 2
 
-  private val oracleDir = new File(sys.props("java.io.tmpdir"), "graft_oracle")
-  val fixtureMsgsPath: String = new File(oracleDir, "fixture_msgs").getPath
-  val fixtureMarketsPath: String = new File(oracleDir, "fixture_markets").getPath
-  val liveMsgsPath: String = new File(oracleDir, "live_msgs").getPath
+  /** The three oracle dumps, written under `dir`. */
+  private[graft] final class Dumps(val dir: File) {
+    val fixtureMsgsPath: String = new File(dir, "fixture_msgs").getPath
+    val fixtureMarketsPath: String = new File(dir, "fixture_markets").getPath
+    val liveMsgsPath: String = new File(dir, "live_msgs").getPath
+
+    /** Overwrite the dumps: same spec, same rows. */
+    def write(spark: SparkSession): Unit = {
+      import spark.implicits._
+      val writeConf = (df: org.apache.spark.sql.DataFrame, path: String) =>
+        df.coalesce(1).write.mode("overwrite").parquet(path)
+      writeConf(FixtureLog.feedMessages(batchSpec).toDF(), fixtureMsgsPath)
+      writeConf(FixtureLog.marketTokens(batchSpec).toDF(), fixtureMarketsPath)
+      writeConf(
+        (1L until LiveTotalFrames)
+          .flatMap(i => GraftFeed.structuredMsg(i, LiveNMarkets, LiveAssetsPerMarket))
+          .toDF(),
+        liveMsgsPath)
+    }
+  }
+
+  /** Dumps in a fresh directory under `java.io.tmpdir`. */
+  private[graft] def newDumps(): Dumps = new Dumps(Files.createTempDirectory(
+    new File(sys.props("java.io.tmpdir")).toPath, "graft_oracle").toFile)
+
+  /** This JVM's dumps, in a directory of its own created once (on first
+    * use), so another JVM that runs a replay gate (a test run during an
+    * oracle check, say) never rewrites the files this JVM's oracle SQL
+    * reads. The SQL below is built from these paths.
+    */
+  private lazy val dumps = newDumps()
+  lazy val fixtureMsgsPath: String = dumps.fixtureMsgsPath
+  lazy val fixtureMarketsPath: String = dumps.fixtureMarketsPath
+  lazy val liveMsgsPath: String = dumps.liveMsgsPath
 
   @volatile private var written = false
 
-  /** Write the three oracle dumps once per JVM (idempotent overwrite —
-    * same spec, same rows). Called by every fixture gate query before
-    * returning its plan, so a Verify run always leaves fresh dumps for
-    * the driver's DuckDB pass.
+  /** Write this JVM's three oracle dumps once. Called by every fixture
+    * gate query before returning its plan, so a Verify run always
+    * leaves fresh dumps for the DuckDB oracle check.
     */
   def ensureDumps(spark: SparkSession): Unit = synchronized {
     if (written) return
-    import spark.implicits._
-    val writeConf = (df: org.apache.spark.sql.DataFrame, path: String) =>
-      df.coalesce(1).write.mode("overwrite").parquet(path)
-    writeConf(
-      FixtureLog.feedMessages(batchSpec).toDF(),
-      fixtureMsgsPath)
-    writeConf(FixtureLog.marketTokens(batchSpec).toDF(), fixtureMarketsPath)
-    writeConf(
-      (1L until LiveTotalFrames)
-        .flatMap(i => GraftFeed.structuredMsg(i, LiveNMarkets, LiveAssetsPerMarket))
-        .toDF(),
-      liveMsgsPath)
+    dumps.write(spark)
     written = true
   }
 

@@ -53,11 +53,13 @@ object Sinks {
     * `BookReplay.ticksPreDistributed` with ZERO exchanges: the bucketed
     * scan satisfies the co-location contract (each asset's messages
     * land in exactly one bucket), so the only remaining work per task
-    * is the in-partition spillable sort and the fold. At 100 TB this
-    * converts the replay's one big shuffle into a one-time write-side
-    * cost amortized over every downstream read. Files are additionally
-    * sorted by the fold's arrival key, so the read-side sort consumes
-    * mostly-ordered runs.
+    * is the in-partition spillable sort and the fold. The write pays
+    * one shuffle, `repartition(nBuckets, assetId)`: it hashes like the
+    * bucketing, so each writer task holds exactly one bucket and writes
+    * one file for it (without it, N writer tasks leave up to
+    * N × nBuckets files). Every later read of the lake is shuffle-free.
+    * Files are additionally sorted by the fold's arrival key, so the
+    * read-side sort consumes mostly-ordered runs.
     *
     * `nBuckets` sizes read parallelism: one bucket = one task in the
     * shuffle-free plan, so pick ~2-4× the executor-core count of the
@@ -69,7 +71,8 @@ object Sinks {
       path: String,
       nBuckets: Int,
   ): Unit =
-    msgs.write.mode("overwrite")
+    msgs.repartition(nBuckets, col("assetId"))
+      .write.mode("overwrite")
       .option("path", path)
       .bucketBy(nBuckets, "assetId")
       .sortBy("assetId", "fileHour", "lineNo", "msgIdx")

@@ -238,11 +238,34 @@ class BookReplaySpec extends AnyFunSuite {
     val wh = java.nio.file.Files.createTempDirectory("graft_multi_file_lake").toString
     try {
       // four round-robin writer tasks: the one bucket is four files
-      graft.sources.Sinks.writeBucketedLake(
-        spark.createDataset(msgs).repartition(4), "graft_multi_file_lake", wh, nBuckets = 1)
+      // (an append to a lake leaves such buckets; `writeBucketedLake`
+      // itself writes one file per bucket)
+      spark.createDataset(msgs).repartition(4).write.mode("overwrite")
+        .option("path", wh)
+        .bucketBy(1, "assetId")
+        .sortBy("assetId", "fileHour", "lineNo", "msgIdx")
+        .saveAsTable("graft_multi_file_lake")
       val lake = graft.sources.Sinks.readBucketedLake(spark, "graft_multi_file_lake")
       assert(BookReplay.ticksPreDistributed(lake).collect().toSeq.sortBy(_.toString) ==
         replay(msgs).sortBy(_.toString))
     } finally spark.sql("DROP TABLE IF EXISTS graft_multi_file_lake")
+  }
+
+  test("writeBucketedLake writes one file per non-empty bucket") {
+    import spark.implicits._
+    val msgs = (0 until 40).map(i =>
+      msg(i.toLong, "last_trade_price", asset = s"A${i % 4}", side = "BUY",
+        price = "0.5", size = "1"))
+    val wh = java.nio.file.Files.createTempDirectory("graft_lake_files").toString
+    try {
+      // four round-robin partitions, each holding every asset
+      graft.sources.Sinks.writeBucketedLake(
+        spark.createDataset(msgs).repartition(4), "graft_lake_files", wh, nBuckets = 3)
+      val buckets = new java.io.File(wh).list().toSeq.filter(_.endsWith(".parquet"))
+        .flatMap(org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId)
+      assert(buckets.nonEmpty && buckets.size == buckets.distinct.size, s"bucket files: $buckets")
+      assert(buckets.distinct.size == graft.sources.Sinks.readBucketedLake(spark, "graft_lake_files")
+        .selectExpr("pmod(hash(assetId), 3)").distinct().count())
+    } finally spark.sql("DROP TABLE IF EXISTS graft_lake_files")
   }
 }
