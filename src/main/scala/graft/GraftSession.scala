@@ -44,12 +44,13 @@ object GraftSession {
       // driver, scale-independent (the 100-TB cluster compiles the
       // same plan texts). Static conf: must be set at session build.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Bucketed tables are always scanned one task per bucket.
-      // `BookReplay.ticksPreDistributed` folds an assetId-bucketed lake
-      // with a sort and `mapPartitions`, which declare no required
-      // distribution, so Spark's automatic rule would scan the lake
-      // unbucketed: an asset whose bucket spans several files (one per
-      // writer task) would then be folded in pieces by several tasks.
+      // Bucketed tables are always scanned one task per bucket. A
+      // lake replay (`Sinks.readBucketedLake` into the book fold)
+      // declares no required distribution, so Spark's automatic rule
+      // would scan the lake unbucketed; an asset whose bucket spans
+      // several files (an append leaves such buckets) would then sit in
+      // several tasks with overlapping key ranges, and the fold would
+      // fail on its contract. One task per bucket keeps them disjoint.
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -111,8 +111,9 @@ final class Book extends Levels {
   * A write is a last-writer-wins assignment and a reset discards what
   * came before, so effects compose associatively: recording `e2` onto a
   * copy of `e1` ([[applyTo]]) gives the effect of `e1` then `e2`. That
-  * is what lets the ordered replay fold every scan run from a seed, the
-  * exclusive prefix of the runs before it (see `BookReplay`).
+  * is what lets the batch replay fold each of an asset's partitions from
+  * a seed, the exclusive prefix of its partitions before it (see
+  * `BookReplay`).
   */
 final class BookEffect extends Levels with Serializable {
   private var reset = false

@@ -10,50 +10,50 @@ import graft.model.{FeedMsg, Tick}
 /** B1/B2/B3 — order-book reconstruction (SURVEY.md §2.4), the
   * reference's core operator (`MarketState::update`,
   * `cli/src/tick_generator.rs:318-362`). Book state is keyed solely by
-  * `asset_id`, and every fold below runs the one emission rule,
-  * [[applyMsg]], over each asset's messages in arrival order
-  * `(fileHour, lineNo, msgIdx)`.
+  * `asset_id`, and every batch replay runs one fold, [[foldRun]], of
+  * the one emission rule, [[applyMsg]], over each asset's messages in
+  * arrival order `(fileHour, lineNo, msgIdx)`.
   *
-  * Ordered replay ([[orderedTicks]], [[referenceTicks]], and the CLI
-  * through [[withOrderedTicks]]) keeps the scan's own layout:
-  * `RawLogSource.frames` gives partition i a contiguous run of hour
-  * files in `discover` order. A book event is a last-writer-wins
-  * assignment per (side, price) and a snapshot resets the book, so a
-  * run's net change to each asset's book is a composable
-  * [[BookEffect]] (an exclusive prefix scan over an associative
-  * operator, Blelloch 1990):
-  *   - pass 1, one job: each partition reports its first and last
-  *     arrival key, whether its keys ascend, and one effect per asset;
-  *   - Spark driver: checks that keys ascend inside each partition and that
-  *     partitions do not overlap (else it fails, naming the partition,
-  *     and never folds partial books), then composes the effects into
-  *     each partition's seed books and broadcasts them, keyed by the
-  *     partition's first arrival key;
+  * The fold's contract is per asset: inside a partition, each asset's
+  * messages ascend by arrival key, and the partitions that hold an
+  * asset do not overlap in its key range. A book event is a
+  * last-writer-wins assignment per (side, price) and a snapshot resets
+  * the book, so an asset's net change over one partition is a
+  * composable [[BookEffect]], and replay is a segmented exclusive
+  * prefix scan with one segment per asset (Blelloch 1990):
+  *   - pass 1, one job: each partition reports, per asset, its first
+  *     and last arrival key, whether the keys ascend, and the effect;
+  *   - Spark driver: checks the contract (else it fails, naming the
+  *     asset and the partitions, and never folds partial books), then
+  *     composes each asset's effects in key order into the seed of each
+  *     of its partitions and broadcasts them;
   *   - pass 2, the consumer's job: each partition folds its messages in
-  *     input order from its seeded books. The ticks come out in
-  *     reference order, so the write needs no exchange and no sort.
+  *     input order, each asset from its seed.
+  *
+  * A `RawLogSource.frames` scan meets the contract in its own layout
+  * (partition i holds a contiguous run of hour files), and its ticks
+  * come out in reference order, so a write needs no exchange and no
+  * sort. So does a lake read through `Sinks.readBucketedLake`, and
+  * [[ticks]]' shuffle, which puts each asset in one partition and so
+  * needs no seeds and no pass 1.
   *
   * Memory contract: a pass-2 task holds the books of every asset of its
-  * run of hours, not one asset's book; the Spark driver holds assets ×
-  * scan-partitions seeds (each at most an asset's live levels). At
-  * 100 TB the driver-side prefix becomes a keyed running fold over
-  * (asset, run) effects, which shuffles effects, not messages.
-  *
-  * [[ticks]] is the fold for an arbitrary input layout: one shuffle on
-  * `assetId`, then a secondary sort and a streaming fold that holds one
-  * book at a time. The market filter (F2) is applied before any state
-  * or shuffle: filtered messages neither move nor mutate state,
-  * matching the reference's filter-before-state placement
+  * partition; the Spark driver holds assets × partitions seeds (each at
+  * most an asset's live levels). At 100 TB the driver-side prefix
+  * becomes a keyed running fold over (asset, partition) effects, which
+  * shuffles effects, not messages. The market filter (F2) is applied
+  * before any state or shuffle: filtered messages neither move nor
+  * mutate state, matching the reference's filter-before-state placement
   * (`tick_generator.rs:322-351`).
   */
 object BookReplay {
 
   /** Full tick stream (BBO + TRADE) with arrival-order seq columns, for
-    * any input layout: `repartition(assetId)` +
-    * `sortWithinPartitions(assetId, arrival key)` + `mapPartitions`, the
-    * secondary-sort shape. The sort runs through Spark's spillable
-    * external sorter and the fold walks each partition holding one
-    * book at a time; rows come out grouped by asset.
+    * any input layout, in one job: `repartition(assetId)` +
+    * `sortWithinPartitions(assetId, arrival key)` puts each asset's
+    * messages in one partition in key order, so [[foldRun]] needs no
+    * seeds. The sort runs through Spark's spillable external sorter;
+    * rows come out grouped by asset.
     */
   def ticks(
       msgs: Dataset[FeedMsg],
@@ -64,81 +64,7 @@ object BookReplay {
     inMarkets(msgs, marketFilter)
       .repartition($"assetId")
       .sortWithinPartitions($"assetId", $"fileHour", $"lineNo", $"msgIdx")
-      .mapPartitions(foldPartition)
-  }
-
-  /** Replay WITHOUT the shuffle, for inputs whose partitioning already
-    * co-locates every asset's messages — a message lake bucketed by
-    * `assetId` (`bucketBy(n, "assetId")`), or an upstream repartition
-    * shared by several consumers. The exchange disappears from the
-    * plan entirely; what remains is the in-partition spillable sort
-    * and the fold. This is the incremental-tick-generation shape at
-    * scale: parse once into a bucketed table, then every replay/
-    * reprocess over it is shuffle-free.
-    *
-    * Caller contract: each partition must hold all of its assets'
-    * messages (bucketed scans guarantee this). A violated contract
-    * silently folds per-partition partial books — the data-path plan
-    * cannot check it without the shuffle being avoided, so the check
-    * lives in an OPT-IN side job: set
-    * `spark.graft.replay.assertPreDistributed=true` (CI/debug) and the
-    * operator first verifies single-partition residency for a sample of
-    * assets (`spark.graft.replay.assertSampleMod`, default 8 — every
-    * asset whose hash ≡ 0 mod it; 1 = all) and fails fast with the
-    * offending asset ids. The side job shuffles only distinct
-    * (asset, partition) pairs — bounded by asset cardinality, never by
-    * message volume — and leaves the replay plan itself untouched.
-    */
-  def ticksPreDistributed(
-      msgs: Dataset[FeedMsg],
-      marketFilter: Option[Set[String]] = None,
-  ): Dataset[Tick] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    val filtered = inMarkets(msgs, marketFilter)
-    if (spark.conf.getOption("spark.graft.replay.assertPreDistributed")
-        .exists(_.toBoolean)) {
-      val mod = spark.conf.getOption("spark.graft.replay.assertSampleMod")
-        .map(_.toInt).getOrElse(8)
-      assertCoLocated(filtered, mod)
-    }
-    filtered
-      .sortWithinPartitions($"assetId", $"fileHour", $"lineNo", $"msgIdx")
-      .mapPartitions(foldPartition)
-  }
-
-  /** Debug-mode contract check: every sampled asset must live in exactly
-    * one partition of `msgs` AS PARTITIONED NOW. Emits one (asset,
-    * partitionId) pair per distinct sampled asset per partition, then
-    * looks for assets spanning >1 partition.
-    */
-  private def assertCoLocated(msgs: Dataset[FeedMsg], sampleMod: Int): Unit = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    require(sampleMod >= 1, s"assertSampleMod must be >= 1, got $sampleMod")
-    val offending = msgs
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        it.foreach { m =>
-          if (m.assetId != null && (m.assetId.hashCode & 0x7fffffff) % sampleMod == 0)
-            seen += m.assetId
-        }
-        seen.iterator.map(a => (a, pid))
-      }
-      .toDF("assetId", "pid")
-      .groupBy($"assetId")
-      .agg(countDistinct($"pid").as("n_parts"))
-      .filter($"n_parts" > 1)
-      .limit(5)
-      .collect()
-    require(offending.isEmpty,
-      "ticksPreDistributed contract violated: asset(s) " +
-        offending.map(r => s"${r.getString(0)} (${r.getLong(1)} partitions)")
-          .mkString(", ") +
-        " span multiple partitions — the fold would emit partial books. " +
-        "Bucket the input by assetId (bucketBy(n, \"assetId\")) or use " +
-        "BookReplay.ticks, which shuffles.")
+      .mapPartitions(it => foldRun(None, it))
   }
 
   /** F2, the one market filter of every replay (batch and stream): an
@@ -152,8 +78,8 @@ object BookReplay {
     marketFilter.fold(msgs)(ids => msgs.filter(col("market").isin(ids.toSeq: _*)))
 
   /** Reference-schema projection (7 columns, `tick_generator.rs:50-58`)
-    * of the ordered replay, ordered like a single-threaded replay would
-    * append. Reads `msgs` twice (see [[orderedTicks]]).
+    * of [[orderedTicks]]; over a `RawLogSource.frames` scan, ordered like
+    * a single-threaded replay would append. Reads `msgs` twice.
     */
   def referenceTicks(
       msgs: Dataset[FeedMsg],
@@ -164,13 +90,10 @@ object BookReplay {
   def reference(ticks: Dataset[Tick]): DataFrame =
     ticks.select(Tick.referenceColumns.map(col): _*)
 
-  /** Ordered replay of a scan in arrival order (see the object doc):
-    * runs pass 1 now and returns pass 2, whose ticks come out in
-    * reference order with no exchange and no sort. `msgs` must be a
-    * `RawLogSource.frames` scan, or keep its layout: keys ascending
-    * inside each partition and partitions not overlapping; anything
-    * else fails here, naming the partition. `msgs` is read by both
-    * passes; [[withOrderedTicks]] reads it once.
+  /** Replay of `msgs` in its own layout (see the object doc): runs
+    * pass 1 now, failing on a broken contract, and returns pass 2, which
+    * adds no exchange and no sort. `msgs` is read by both passes;
+    * [[withOrderedTicks]] reads it once.
     */
   def orderedTicks(
       msgs: Dataset[FeedMsg],
@@ -181,7 +104,7 @@ object BookReplay {
     val kept = inMarkets(msgs, marketFilter)
     val runs = kept.rdd.mapPartitions(it => Iterator(summarize(it))).collect().toSeq
     val seeds = spark.sparkContext.broadcast(seedsOf(runs))
-    kept.mapPartitions(it => foldRun(seeds.value, it))
+    kept.mapPartitions(it => foldRun(Some(seeds.value), it))
   }
 
   /** [[orderedTicks]] handed to `sink`, with the market-filtered
@@ -205,94 +128,78 @@ object BookReplay {
   private def arrival(m: FeedMsg): Arrival = (m.fileHour, m.lineNo, m.msgIdx)
   private val order = Ordering[Arrival]
 
-  /** Pass 1's report on one partition: its first and last arrival keys
-    * (null when it is empty), whether its keys strictly ascend, and each
-    * asset's net book effect.
+  /** A seed book effect per (asset, arrival key of the asset's first
+    * message in a partition).
     */
-  private[operators] final case class Run(
-      first: Arrival,
-      last: Arrival,
-      ascending: Boolean,
-      effects: Map[String, BookEffect],
-  )
+  private[operators] type Seeds = Map[(String, Arrival), BookEffect]
 
-  private[operators] def summarize(it: Iterator[FeedMsg]): Run = {
-    val effects = mutable.HashMap.empty[String, BookEffect]
-    var first, last: Arrival = null
+  /** Pass 1's report on one asset in one partition: its first and last
+    * arrival keys, whether they strictly ascend, and its net book
+    * effect.
+    */
+  private[operators] final class Span(val first: Arrival) extends Serializable {
+    var last: Arrival = null
     var ascending = true
+    val effect = new BookEffect
+  }
+
+  private[operators] def summarize(it: Iterator[FeedMsg]): Map[String, Span] = {
+    val spans = mutable.HashMap.empty[String, Span]
     it.foreach { m =>
       val k = arrival(m)
-      if (first == null) first = k else if (order.lteq(k, last)) ascending = false
-      last = k
-      bookEvent(effects.getOrElseUpdate(m.assetId, new BookEffect), m)
+      val span = spans.getOrElseUpdate(m.assetId, new Span(k))
+      if (span.last != null && order.lteq(k, span.last)) span.ascending = false
+      span.last = k
+      bookEvent(span.effect, m)
     }
-    Run(first, last, ascending, effects.toMap)
+    spans.toMap
   }
 
-  /** The Spark-driver step: check the order contract over the runs, then map
-    * the first key of each non-empty run i to its seed, the composition
-    * of every asset's effects in runs 0 until i.
+  /** The Spark-driver step over pass 1's reports, one per partition:
+    * check the contract asset by asset, then map each of an asset's
+    * spans to its seed, the composition of the asset's effects in
+    * every span before it in key order.
     */
-  private[operators] def seedsOf(runs: Seq[Run]): Map[Arrival, Map[String, BookEffect]] = {
-    def violated(why: String) = throw new IllegalStateException(
-      s"ordered replay needs a scan in arrival order (RawLogSource.frames over " +
-        s"discover order, no repartition): $why; folding it would write partial books")
-    runs.zipWithIndex.foreach { case (r, i) =>
-      if (!r.ascending) violated(s"the arrival keys of partition $i do not ascend")
-    }
-    val filled = runs.zipWithIndex.filter(_._1.first != null)
-    filled.zip(filled.drop(1)).foreach { case ((a, i), (b, j)) =>
-      if (order.lteq(b.first, a.last))
-        violated(s"partition $j starts at ${b.first}, not after partition $i's last key ${a.last}")
-    }
-    val seeds = runs.scanLeft(Map.empty[String, BookEffect]) { (seed, r) =>
-      seed ++ r.effects.map { case (asset, e) =>
-        asset -> e.applyTo(seed.get(asset).fold(new BookEffect)(_.applyTo(new BookEffect)))
+  private[operators] def seedsOf(runs: Seq[Map[String, Span]]): Seeds = {
+    def violated(asset: String, why: String) = throw new IllegalStateException(
+      s"book replay needs each asset's messages ascending by arrival key in every " +
+        s"partition, with disjoint key ranges across partitions: asset $asset $why; " +
+        "folding it would write partial books")
+    runs.zipWithIndex
+      .flatMap { case (spans, p) => spans.map { case (asset, span) => (asset, (p, span)) } }
+      .groupMap(_._1)(_._2)
+      .flatMap { case (asset, held) =>
+        val inOrder = held.sortBy(_._2.first)(order)
+        inOrder.foreach { case (p, s) =>
+          if (!s.ascending) violated(asset, s"does not ascend in partition $p")
+        }
+        inOrder.zip(inOrder.drop(1)).foreach { case ((p, a), (q, b)) =>
+          if (order.lteq(b.first, a.last))
+            violated(asset, s"starts at ${b.first} in partition $q, not after its " +
+              s"last key ${a.last} in partition $p")
+        }
+        val seeds = inOrder.scanLeft(new BookEffect) { case (seed, (_, s)) =>
+          s.effect.applyTo(seed.applyTo(new BookEffect))
+        }
+        inOrder.zip(seeds).map { case ((_, s), seed) => (asset, s.first) -> seed }
       }
-    }
-    runs.zip(seeds).collect { case (r, seed) if r.first != null => r.first -> seed }.toMap
   }
 
-  /** Pass 2 over one run: fold its messages in input order, each asset
-    * from the seed book of the run that starts at the first message
-    * (empty when no earlier run touched the asset). The seed is found by
-    * that key, not by task partition id: a downstream `coalesce` runs
-    * several runs in one task.
+  /** The one fold, pass 2 over one partition: fold its messages in
+    * input order, each asset's book from its seed, found by the key of
+    * the asset's first message here, not by task partition id: a
+    * downstream `coalesce` runs several partitions in one task. `seeds`
+    * is None when each asset sits in one partition, so every book
+    * starts empty.
     */
-  private[operators] def foldRun(
-      seeds: Map[Arrival, Map[String, BookEffect]],
-      it: Iterator[FeedMsg],
-  ): Iterator[Tick] = {
+  private[operators] def foldRun(seeds: Option[Seeds], it: Iterator[FeedMsg]): Iterator[Tick] = {
     val books = mutable.HashMap.empty[String, Book]
-    var seed: Map[String, BookEffect] = null
     it.flatMap { m =>
-      if (seed == null) seed = seeds.getOrElse(arrival(m), throw new IllegalStateException(
-        s"ordered replay: no pass-1 partition starts at ${arrival(m)}, where a pass-2 " +
-          "partition starts; the input must read the same on every pass"))
-      val book = books.getOrElseUpdate(m.assetId,
-        seed.get(m.assetId).fold(new Book)(_.applyTo(new Book)))
-      applyMsg(book, m)
-    }
-  }
-
-  /** Walk one partition of asset-contiguous, arrival-ordered messages,
-    * folding a single live book and emitting ticks. Assets arrive
-    * grouped (partition is sorted by assetId first), so book state is
-    * dropped as soon as its asset's run ends.
-    */
-  private[graft] def foldPartition(iter: Iterator[FeedMsg]): Iterator[Tick] = {
-    var started = false
-    var currentAsset: String = null
-    var book: Book = null
-    iter.flatMap { m =>
-      // `started` (not a null sentinel) so the very first message
-      // always allocates a book — even a dirty null-asset message that
-      // slipped past an upstream gate folds instead of NPE-ing
-      if (!started || m.assetId != currentAsset) {
-        started = true
-        currentAsset = m.assetId
-        book = new Book
-      }
+      val book = books.getOrElseUpdate(m.assetId, seeds.fold(new Book)(
+        _.getOrElse((m.assetId, arrival(m)), throw new IllegalStateException(
+          s"book replay: no pass-1 partition starts asset ${m.assetId} at " +
+            s"${arrival(m)}, where pass 2 does; the input must read the same on every pass"))
+          .applyTo(new Book)))
       applyMsg(book, m)
     }
   }

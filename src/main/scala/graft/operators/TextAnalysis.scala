@@ -1002,13 +1002,13 @@ object TextAnalysis {
     * `source`; the decreasing order comes from Spark's spillable
     * in-partition sorter (no global sort), and the greedy fold is one
     * pass with O(1) state per task — the secondary-sort shape
-    * [[BookReplay.ticks]] uses, applied to packing. Sequentiality is
-    * per source by construction, so parallelism = number of sources;
-    * for a corpus dominated by ONE giant source, pre-shard it into
-    * `(source, hash(doc_id) % k)` groups — each shard packs
-    * independently at a cost of at most k−1 extra partially-filled
-    * bins per source, which is how the sequential scan stays bounded
-    * at 100 TB.
+    * (repartition by key, sort within partitions, one streaming pass).
+    * Sequentiality is per source by construction, so parallelism =
+    * number of sources; for a corpus dominated by ONE giant source,
+    * pre-shard it into `(source, hash(doc_id) % k)` groups — each shard
+    * packs independently at a cost of at most k−1 extra
+    * partially-filled bins per source, which is how the sequential scan
+    * stays bounded at 100 TB.
     *
     * Output: `(doc_id, source, tokens, bin_id, bin_fill)` — `bin_id`
     * dense per source in placement order, `bin_fill` the bin's running

@@ -1,10 +1,10 @@
 package graft.queries
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Scratch
 import graft.sources.{FixtureLog, GraftFeed}
 
 /** Independent DuckDB oracle for the full raw-log replay pipeline
@@ -13,8 +13,8 @@ import graft.sources.{FixtureLog, GraftFeed}
   * The fixture generators are structured-first: each known feed event
   * exists as a [[graft.sources.WireMsg]] BEFORE it is rendered to wire
   * JSON. This object dumps that ground truth to parquet (under the
-  * JVM's tmpdir, next to the fixture logs) and builds oracle SQL that
-  * replays the book from it — per-event BBO as cumulative
+  * JVM's [[Scratch]] root, next to the fixture logs) and builds oracle
+  * SQL that replays the book from it — per-event BBO as cumulative
   * last-write-wins over (asset, side, level) with snapshot cutoffs,
   * plus trade passthrough (`cli/src/tick_generator.rs:318-362`).
   *
@@ -36,9 +36,9 @@ object FixtureOracle {
     * queries — same seed/shape, so one dump oracles both).
     */
   val batchSpec: FixtureLog.Spec = FixtureLog.Spec(
-    dir = new File(sys.props("java.io.tmpdir"), "graft_fixture_logs").getPath)
+    dir = Scratch.path("fixture_logs"))
   val streamSpec: FixtureLog.Spec = FixtureLog.Spec(
-    dir = new File(sys.props("java.io.tmpdir"), "graft_fixture_logs_plain").getPath,
+    dir = Scratch.path("fixture_logs_plain"),
     compress = false)
 
   /** The live-feed gate query's generator bounds (must match the
@@ -48,8 +48,9 @@ object FixtureOracle {
   val LiveNMarkets = 2
   val LiveAssetsPerMarket = 2
 
-  /** The three oracle dumps, written under `dir`. */
-  private[graft] final class Dumps(val dir: File) {
+  /** The three oracle dumps, written under `root`. */
+  private[graft] final class Dumps(root: File) {
+    private val dir = new File(root, "oracle")
     val fixtureMsgsPath: String = new File(dir, "fixture_msgs").getPath
     val fixtureMarketsPath: String = new File(dir, "fixture_markets").getPath
     val liveMsgsPath: String = new File(dir, "live_msgs").getPath
@@ -69,16 +70,12 @@ object FixtureOracle {
     }
   }
 
-  /** Dumps in a fresh directory under `java.io.tmpdir`. */
-  private[graft] def newDumps(): Dumps = new Dumps(Files.createTempDirectory(
-    new File(sys.props("java.io.tmpdir")).toPath, "graft_oracle").toFile)
-
-  /** This JVM's dumps, in a directory of its own created once (on first
-    * use), so another JVM that runs a replay gate (a test run during an
-    * oracle check, say) never rewrites the files this JVM's oracle SQL
-    * reads. The SQL below is built from these paths.
+  /** This JVM's dumps, under its own [[Scratch]] root, so another JVM
+    * that runs a replay gate (a test run during an oracle check, say)
+    * never rewrites the files this JVM's oracle SQL reads. The SQL
+    * below is built from these paths.
     */
-  private lazy val dumps = newDumps()
+  private lazy val dumps = new Dumps(Scratch.root)
   lazy val fixtureMsgsPath: String = dumps.fixtureMsgsPath
   lazy val fixtureMarketsPath: String = dumps.fixtureMarketsPath
   lazy val liveMsgsPath: String = dumps.liveMsgsPath

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.ScopedConf
 import graft.operators.{GraphAlgos, SccEntity}
 
@@ -1213,9 +1213,7 @@ object Graph {
           $"a.ok" === $"b.ok" && $"b.ln" === $"a.ln" + 1 && $"a.p" =!= $"b.p")
         .select(least($"a.p", $"b.p").as("u"), greatest($"a.p", $"b.p").as("v"))
         .distinct()
-      val lake = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_anf_lake_${s.sparkContext.applicationId}").getPath
+      val lake = Scratch.path("anf_lake")
       GraphAlgos.anfRegisters(edges, "u", "v", maxT = 4)
         .write.mode("overwrite").parquet(lake)
       val est = s.read.parquet(lake)

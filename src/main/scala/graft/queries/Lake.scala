@@ -4,7 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Data-lake layout queries: the storage-side half of the 100-TB
   * story. Z-ordering (q_layout_zorder) covers intra-file clustering;
@@ -18,7 +18,7 @@ import graft.Tables
 object Lake {
 
   private def lakeDir(name: String): String =
-    new File(new File(sys.props("java.io.tmpdir"), "graft_lake"), name).getPath
+    new File(Scratch.path("lake"), name).getPath
 
   /** Hive-partitioned write + statically-pruned read: events land as
     * `event_date=YYYY-MM-DD/` directories (the universal raw-event

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.ScopedConf
 
 /** Relational operator inventory (SURVEY.md §2.2, §2.3, §2.4 A1–A4,
@@ -1979,11 +1979,7 @@ object Relational {
       import s.implicits._
       val ev = Tables(s, dir).events
         .select($"user_id", to_date($"ts").as("d"))
-      // per-application path: concurrent verify/bench runs each get
-      // their own lake instead of clobbering a shared one mid-read
-      val lake = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_hll_sketch_lake_${s.sparkContext.applicationId}").getPath
+      val lake = Scratch.path("hll_sketch_lake")
       ev.groupBy($"d")
         .agg(call_function(graft.functions.Hll.RegsName,
           $"user_id".cast("string")).as("regs"))
@@ -2121,9 +2117,7 @@ object Relational {
       val li = Tables(s, dir).lineitem
         .select(date_format($"l_shipdate", "yyyy-MM").as("mon"),
           ($"l_extendedprice" * 100).cast("long").as("x"))
-      val lake = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_kll_sketch_lake_${s.sparkContext.applicationId}").getPath
+      val lake = Scratch.path("kll_sketch_lake")
       li.groupBy($"mon")
         .agg(call_function(graft.functions.KllSketch.StateName, $"x").as("st"),
           count(lit(1)).as("n"))
@@ -3457,7 +3451,7 @@ object Relational {
     "q_stream_checkpoint_resume",
     (s, dir) => {
       import s.implicits._
-      val base = new java.io.File(sys.props("java.io.tmpdir"), "graft_ckpt_gate")
+      val base = new java.io.File(Scratch.path("ckpt_gate"))
       org.apache.commons.io.FileUtils.deleteQuietly(base)
       val inDir = new java.io.File(base, "in").getPath
       val outDir = new java.io.File(base, "out").getPath

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.ScopedConf
 import graft.model.{FeedMsg, Tick}
 import graft.operators.BookReplay
@@ -198,7 +198,7 @@ object Replay {
            |ORDER BY sp.asset, sp.side""".stripMargin),
   )
 
-  /** Deterministic fixture logs under java.io.tmpdir; written lazily
+  /** Deterministic fixture logs under [[Scratch]]; written lazily
     * once per JVM (same spec → same bytes, so rewrites are harmless).
     * The spec lives in [[FixtureOracle]], which also dumps the
     * generator's structured ground truth for the DuckDB oracle.
@@ -222,32 +222,29 @@ object Replay {
   )
 
   /** The fixture feed parsed once and written as an assetId-bucketed
-    * lake (`Sinks.writeBucketedLake`), then replayed SHUFFLE-FREE
-    * through `BookReplay.ticksPreDistributed` — the 100-TB ingest
-    * shape: parse raw logs once, bucket by the fold key, and every
-    * downstream replay/reprocess reads co-located buckets with zero
-    * exchanges. Shared by the gate query and PlanShapeSpec's
-    * zero-Exchange assert so the plan the spec checks IS the gated
-    * plan. Overwrite-mode writes make repeated calls idempotent.
+    * lake (`Sinks.writeBucketedLake`), then replayed SHUFFLE-FREE by
+    * `BookReplay.orderedTicks` over the lake read in each bucket's
+    * arrival order — the 100-TB ingest shape: parse raw logs once,
+    * bucket by the fold key, and every downstream replay/reprocess
+    * reads co-located buckets with zero exchanges. Shared by the gate
+    * query and PlanShapeSpec's zero-Exchange assert so the plan the
+    * spec checks IS the gated plan. Overwrite-mode writes make repeated
+    * calls idempotent.
     */
-  private[graft] def bucketedFixtureTicks(
-      s: SparkSession): org.apache.spark.sql.Dataset[Tick] = {
+  private[graft] def bucketedFixtureTicks(s: SparkSession): Dataset[Tick] = {
     FixtureOracle.ensureDumps(s)
     val paths = FixtureLog.write(fixtureSpec)
     val msgs = RawLogSource.feedMessages(RawLogSource.frames(s, paths))
-    val lake = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixture_bucketed_lake").getPath
     graft.sources.Sinks.writeBucketedLake(
-      msgs, "graft_fixture_bucketed", lake, nBuckets = 8)
-    BookReplay.ticksPreDistributed(
-      graft.sources.Sinks.readBucketedLake(s, "graft_fixture_bucketed"))
+      msgs, "graft_fixture_bucketed", Scratch.path("fixture_bucketed_lake"), nBuckets = 8)
+    BookReplay.orderedTicks(graft.sources.Sinks.readBucketedLake(s, "graft_fixture_bucketed"))
   }
 
   /** B1 over a bucketed lake, under the gate: identical output to
     * q_replay_fixture_ticks (same oracle, same hash) but the replay
-    * plan contains NO exchange — the bucketed scan satisfies the
-    * co-location contract, so only the in-partition sort and fold
-    * remain. This gates the headline scale claim: the one shuffle a
+    * plan contains NO exchange — each asset sits in one bucket, which
+    * meets the fold's per-asset contract, so only the in-partition sort
+    * and fold remain. This gates the headline scale claim: the one shuffle a
     * replay needs can be paid once at ingest and amortized over every
     * read (`tick_generator.rs:318-362` replays a pre-sorted local file
     * the same way; the lake is that file's distributed analog).
@@ -329,7 +326,7 @@ object Replay {
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
       val frames = RawLogSource.frames(s, paths)
-      val ticks = BookReplay.ticks(RawLogSource.feedMessages(frames))
+      val ticks = BookReplay.orderedTicks(RawLogSource.feedMessages(frames))
       val yesTokens = MarketsDim
         .tokenDim(MarketsDim.markets(frames))
         .filter($"outcome" === "Yes" && $"condition_id" === "0xM0")
@@ -373,7 +370,7 @@ object Replay {
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
       val frames = RawLogSource.frames(s, paths)
-      val ticks = BookReplay.ticks(RawLogSource.feedMessages(frames))
+      val ticks = BookReplay.orderedTicks(RawLogSource.feedMessages(frames))
       val yesTokens = MarketsDim
         .tokenDim(MarketsDim.markets(frames))
         .filter($"outcome" === "Yes" && $"condition_id" === "0xM0")
@@ -484,7 +481,7 @@ object Replay {
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
       val frames = RawLogSource.frames(s, paths)
-      val ticks = BookReplay.ticks(RawLogSource.feedMessages(frames))
+      val ticks = BookReplay.orderedTicks(RawLogSource.feedMessages(frames))
       val yesTokens = fixtureYesTokens(s)
       val vol = ticks
         .filter($"kind" === "TRADE")
@@ -556,7 +553,7 @@ object Replay {
       import s.implicits._
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
-      val ticks = BookReplay.ticks(RawLogSource.feedMessages(RawLogSource.frames(s, paths)))
+      val ticks = BookReplay.orderedTicks(RawLogSource.feedMessages(RawLogSource.frames(s, paths)))
       graft.operators.TickAnalytics.tradesWithPrevailingBbo(ticks)
         .drop("file_hour", "line_no", "msg_idx")
         .orderBy($"timestamp", $"asset", $"price", $"size")
@@ -578,7 +575,7 @@ object Replay {
       import s.implicits._
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
-      val ticks = BookReplay.ticks(RawLogSource.feedMessages(RawLogSource.frames(s, paths)))
+      val ticks = BookReplay.orderedTicks(RawLogSource.feedMessages(RawLogSource.frames(s, paths)))
       ticks.filter($"kind" === "TRADE")
         .select(
           date_format(
@@ -781,7 +778,7 @@ object Replay {
       import s.implicits._
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
-      val ticks = BookReplay.ticks(RawLogSource.feedMessages(RawLogSource.frames(s, paths)))
+      val ticks = BookReplay.orderedTicks(RawLogSource.feedMessages(RawLogSource.frames(s, paths)))
       graft.operators.TickAnalytics.timeWeightedSpread(ticks)
         .orderBy($"asset")
     },
@@ -805,8 +802,7 @@ object Replay {
     (s, _) => {
       FixtureOracle.ensureDumps(s)
       val paths = FixtureLog.write(fixtureSpec)
-      val outDir = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_sink_jsonl_roundtrip").getPath
+      val outDir = Scratch.path("sink_jsonl_roundtrip")
       graft.sources.Sinks.writeFramesJsonlZst(
         RawLogSource.frames(s, paths), outDir)
       val rewritten = RawLogSource.discover(outDir)
@@ -879,8 +875,7 @@ object Replay {
     (s, _) => {
       FixtureOracle.ensureDumps(s)
       FixtureLog.write(FixtureOracle.streamSpec)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_stream_sink_gate")
+      val base = new java.io.File(Scratch.path("stream_sink_gate"))
       org.apache.commons.io.FileUtils.deleteQuietly(base)
       val outDir = new java.io.File(base, "out").getPath
       val ckpt = new java.io.File(base, "ckpt").getPath
@@ -1076,8 +1071,7 @@ object Replay {
         require(listed.map(_.name) == names,
           s"GCS listing mismatch: ${listed.map(_.name)} vs $names")
         val hours = names.map(_.stripPrefix("raw/").stripSuffix(".jsonl.zst"))
-        val cacheDir = new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_gcs_gate_cache")
+        val cacheDir = new java.io.File(Scratch.path("gcs_gate_cache"))
         // clean: every run must exercise the fetch path, not stale cache
         Option(cacheDir.listFiles()).foreach(_.foreach(_.delete()))
         val fetched = HourCache.fetchMissing(cacheDir.getPath, hours,

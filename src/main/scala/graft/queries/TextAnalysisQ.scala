@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.ScopedConf
 import graft.operators.TextAnalysis
 
@@ -1525,9 +1525,7 @@ object TextAnalysisQ {
       import s.implicits._
       val words = Tables(s, dir).documents
         .select($"source", explode(split($"text", " ")).as("w"))
-      val lake = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_mg_lake_${s.sparkContext.applicationId}").getPath
+      val lake = Scratch.path("mg_lake")
       words.groupBy($"source")
         .agg(call_function(graft.functions.MisraGries.Name, $"w").as("s"),
           count(lit(1)).as("n"))
@@ -1729,9 +1727,7 @@ object TextAnalysisQ {
       import s.implicits._
       val words = Tables(s, dir).documents
         .select($"source", explode(split($"text", " ")).as("w"))
-      val lake = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_ss_lake_${s.sparkContext.applicationId}").getPath
+      val lake = Scratch.path("ss_lake")
       words.groupBy($"source")
         .agg(call_function(graft.functions.SpaceSaving.Name, $"w").as("s"),
           count(lit(1)).as("n"))

@@ -303,9 +303,15 @@ object Loopback {
     * cursor (the retry path).
     */
   def marketPages(
-      total: Int, pageSize: Int, failFirst: Boolean = false)(row: Int => String): Http = {
+      total: Int, pageSize: Int, failFirst: Boolean = false)(row: Int => String): Http =
+    http("/markets" -> pager(total, pageSize, failFirst)(row))
+
+  /** The `/markets` handler of [[marketPages]]. */
+  def pager(
+      total: Int, pageSize: Int, failFirst: Boolean = false)(row: Int => String)
+      : HttpExchange => Unit = {
     val failed = ConcurrentHashMap.newKeySet[String]()
-    http("/markets" -> { ex =>
+    ex => {
       val cursor = param(ex, "next_cursor").getOrElse("")
       if (failFirst && failed.add(cursor)) respond(ex, 500)
       else {
@@ -317,6 +323,6 @@ object Loopback {
         respond(ex, 200,
           s"""{"data":[${rows.mkString(",")}],"next_cursor":$next}""".getBytes(UTF_8))
       }
-    })
+    }
   }
 }

@@ -49,11 +49,11 @@ object Sinks {
 
   /** Bucketed message lake — the INGEST side of shuffle-free replay.
     * Parse the raw log once, write it bucketed by `assetId`, and every
-    * subsequent replay / reprocess / backfill over the lake runs
-    * `BookReplay.ticksPreDistributed` with ZERO exchanges: the bucketed
-    * scan satisfies the co-location contract (each asset's messages
-    * land in exactly one bucket), so the only remaining work per task
-    * is the in-partition spillable sort and the fold. The write pays
+    * subsequent replay / reprocess / backfill over the lake
+    * ([[readBucketedLake]] into `BookReplay.orderedTicks`) runs with
+    * ZERO exchanges: each asset's messages land in exactly one bucket,
+    * so the only work per task is the in-partition spillable sort and
+    * the fold, from empty seeds. The write pays
     * one shuffle, `repartition(nBuckets, assetId)`: it hashes like the
     * bucketing, so each writer task holds exactly one bucket and writes
     * one file for it (without it, N writer tasks leave up to
@@ -78,8 +78,10 @@ object Sinks {
       .sortBy("assetId", "fileHour", "lineNo", "msgIdx")
       .saveAsTable(table)
 
-  /** Typed view of a lake written by `writeBucketedLake`; feed this to
-    * `BookReplay.ticksPreDistributed`.
+  /** Typed view of a lake written by `writeBucketedLake`, each bucket
+    * sorted by the fold's arrival key: what `BookReplay.orderedTicks`
+    * folds. The sort keeps a bucket that spans several files (an
+    * append leaves such buckets) in one ascending run per asset.
     */
   def readBucketedLake(
       spark: org.apache.spark.sql.SparkSession,
@@ -87,6 +89,7 @@ object Sinks {
   ): Dataset[graft.model.FeedMsg] = {
     import spark.implicits._
     spark.table(table).as[graft.model.FeedMsg]
+      .sortWithinPartitions("assetId", "fileHour", "lineNo", "msgIdx")
   }
 
   /** K2: rotating zstd-JSONL frame sink — one

@@ -87,17 +87,9 @@ class PlanShapeSpec extends AnyFunSuite {
       graft.sources.Sinks.writeBucketedLake(
         msgs.toDS(), "graft_feed_bucketed", s"$wh/feed", nBuckets = 4)
       val bucketed = graft.sources.Sinks.readBucketedLake(spark, "graft_feed_bucketed")
-      val df = graft.operators.BookReplay.ticksPreDistributed(bucketed).toDF()
+      val df = graft.operators.BookReplay.orderedTicks(bucketed).toDF()
       val p = physical(df)
       assert(!p.contains("Exchange"), s"bucketed replay grew a shuffle:\n$p")
-      // the lake satisfies the co-location contract the debug check enforces
-      spark.conf.set("spark.graft.replay.assertPreDistributed", "true")
-      spark.conf.set("spark.graft.replay.assertSampleMod", "1")
-      try graft.operators.BookReplay.ticksPreDistributed(bucketed).collect()
-      finally {
-        spark.conf.unset("spark.graft.replay.assertPreDistributed")
-        spark.conf.unset("spark.graft.replay.assertSampleMod")
-      }
       val expect = graft.operators.BookReplay.ticks(msgs.toDS())
         .collect().map(_.toString).sorted.toSeq
       assert(df.as[graft.model.Tick].collect().map(_.toString).sorted.toSeq == expect)

@@ -73,7 +73,7 @@ class ReplayPlanSpec extends AnyFunSuite {
     "contract, naming a partition") {
     val e = intercept[IllegalStateException](
       BookReplay.referenceTicks(msgs.repartition(3)).collect())
-    assert(e.getMessage.matches("(?s).*partition \\d.*"), e.getMessage)
+    assert(e.getMessage.matches("(?s).*asset \\S+ .*partition \\d.*"), e.getMessage)
   }
 
   test("replay --partition-by-hour writes the shuffled fold's 11-column " +

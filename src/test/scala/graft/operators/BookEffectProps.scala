@@ -1,14 +1,18 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.util.Random
+
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 import graft.model.{Change, FeedMsg, Level, Tick}
 
-/** ScalaCheck property for the ordered replay's effect algebra (pure
-  * JVM, no Spark): cutting a message sequence into contiguous runs and
-  * folding each run from the exclusive prefix of the runs' composed
-  * [[BookEffect]]s emits exactly the ticks of the sequential fold.
+/** ScalaCheck properties for the book fold's effect algebra (pure JVM,
+  * no Spark): cutting messages into runs, each asset's runs ascending
+  * and disjoint, and folding every run from the exclusive prefix of its
+  * asset's composed [[BookEffect]]s emits exactly the ticks of one
+  * fold over the whole arrival-ordered sequence.
   */
 object BookEffectProps extends Properties("BookEffect") {
 
@@ -71,14 +75,55 @@ object BookEffectProps extends Properties("BookEffect") {
       bounds.zip(bounds.tail).map { case (a, b) => msgs.slice(a, b) }
     }
 
+  /** Each asset's messages cut into contiguous runs, each run sent to a
+    * partition that holds no other run of that asset, and every
+    * partition a random interleaving of its runs: the per-asset contract
+    * holds, while a partition's keys need not ascend across assets.
+    */
+  private def spreadGen(msgs: Vector[FeedMsg]): Gen[Seq[Vector[FeedMsg]]] = for {
+    nParts <- Gen.chooseNum(1, 5)
+    seed <- Gen.long
+  } yield {
+    val rnd = new Random(seed)
+    val parts = Vector.fill(nParts)(mutable.ArrayBuffer.empty[Iterator[FeedMsg]])
+    msgs.groupBy(_.assetId).values.foreach { own =>
+      val cuts = Seq.fill(rnd.nextInt(nParts))(rnd.nextInt(own.size + 1)).sorted
+      val bounds = 0 +: cuts :+ own.size
+      rnd.shuffle(parts.indices.toVector).zip(bounds.zip(bounds.tail)).foreach {
+        case (p, (a, b)) => parts(p) += own.slice(a, b).iterator
+      }
+    }
+    parts.map { runs =>
+      val out = Vector.newBuilder[FeedMsg]
+      val left = runs.filter(_.hasNext)
+      while (left.nonEmpty) {
+        val i = rnd.nextInt(left.size)
+        out += left(i).next()
+        if (!left(i).hasNext) left.remove(i)
+      }
+      out.result()
+    }
+  }
+
   private def key(t: Tick) = (t.file_hour, t.line_no, t.msg_idx, t.emit_idx)
+
+  /** One seedless fold over the arrival-ordered sequence. */
+  private def sequential(msgs: Vector[FeedMsg]) =
+    BookReplay.foldRun(None, msgs.iterator).toSeq.sortBy(key)
+
+  private def folded(parts: Seq[Vector[FeedMsg]]) = {
+    val seeds = BookReplay.seedsOf(parts.map(p => BookReplay.summarize(p.iterator)))
+    parts.flatMap(p => BookReplay.foldRun(Some(seeds), p.iterator))
+  }
 
   property("runs folded from prefix-composed seeds equal the sequential fold") =
     forAll(msgsGen.flatMap(m => runsGen(m).map(m -> _))) { case (msgs, runs) =>
-      val sequential = BookReplay.foldPartition(msgs.sortBy(_.assetId).iterator)
-        .toSeq.sortBy(key)
-      val seeds = BookReplay.seedsOf(runs.map(r => BookReplay.summarize(r.iterator)))
-      val folded = runs.flatMap(r => BookReplay.foldRun(seeds, r.iterator))
-      folded == sequential
+      folded(runs) == sequential(msgs)
+    }
+
+  property("per-asset runs spread over partitions in any interleaving fold " +
+    "like the sequential fold") =
+    forAll(msgsGen.flatMap(m => spreadGen(m).map(m -> _))) { case (msgs, parts) =>
+      folded(parts).sortBy(key) == sequential(msgs)
     }
 }

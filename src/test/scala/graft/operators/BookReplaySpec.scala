@@ -200,32 +200,39 @@ class BookReplaySpec extends AnyFunSuite {
     assert(aloneA == mixed)
   }
 
-  test("ticksPreDistributed debug contract check catches a non-co-located input") {
+  test("ordered replay checks its contract on every call: a round-robin " +
+    "input fails, naming an asset; a co-located one folds") {
     import spark.implicits._
     val msgs = (0 until 100).map(i =>
       msg(i.toLong, "price_change", asset = s"A${i % 5}",
         changes = Seq(Change("0.50", "1", "BUY"))))
-    // round-robin partitioning scatters every asset across partitions —
-    // exactly the silent-partial-book misuse the flag must catch
+    // round-robin partitioning scatters every asset across partitions
     val scattered = spark.createDataset(msgs).repartition(4)
-    // co-located: hash-partitioned on the contract key
+    val e = intercept[IllegalStateException](BookReplay.orderedTicks(scattered))
+    assert(e.getMessage.matches("(?s).*asset A\\d .*partition \\d.*"), e.getMessage)
     val coLocated = spark.createDataset(msgs).repartition($"assetId")
-    spark.conf.set("spark.graft.replay.assertPreDistributed", "true")
-    spark.conf.set("spark.graft.replay.assertSampleMod", "1") // sample all
-    try {
-      val e = intercept[IllegalArgumentException] {
-        BookReplay.ticksPreDistributed(scattered).collect()
-      }
-      assert(e.getMessage.contains("span multiple partitions"))
-      // the same flag lets a correctly distributed input through
-      assert(BookReplay.ticksPreDistributed(coLocated).collect().nonEmpty)
-      // and the check is opt-in: off by default, misuse stays silent
-      spark.conf.set("spark.graft.replay.assertPreDistributed", "false")
-      BookReplay.ticksPreDistributed(scattered).collect()
-    } finally {
-      spark.conf.unset("spark.graft.replay.assertPreDistributed")
-      spark.conf.unset("spark.graft.replay.assertSampleMod")
-    }
+      .sortWithinPartitions("assetId", "fileHour", "lineNo", "msgIdx")
+    assert(BookReplay.orderedTicks(coLocated).collect().toSeq.sortBy(_.toString) ==
+      replay(msgs).sortBy(_.toString))
+  }
+
+  test("ordered replay over two partitions whose key ranges overlap on one " +
+    "asset fails, naming that asset") {
+    import spark.implicits._
+    // B's lines 0-9 sit in partition 0 and 10-19 in partition 1, but
+    // both partitions hold lines of A7 from 0 to 19
+    val a7 = (0 until 20).map(i => msg(i.toLong, "price_change", asset = "A7",
+      changes = Seq(Change(f"0.${10 + i}%02d", "1", "BUY"))))
+    val b = (0 until 20).map(i => msg(i.toLong, "last_trade_price", asset = "B",
+      side = "BUY", price = "0.5", size = "1"))
+    val (even, odd) = a7.partition(_.lineNo % 2 == 0)
+    val parts = spark.createDataset(spark.sparkContext.parallelize(
+      even ++ b.take(10) ++ odd ++ b.drop(10), numSlices = 2))
+    assert(parts.rdd.glom().collect().map(_.length).toSeq == Seq(20, 20))
+    val e = intercept[IllegalStateException](BookReplay.orderedTicks(parts))
+    assert(e.getMessage.contains("asset A7 ") && e.getMessage.contains("partition 1"),
+      e.getMessage)
+    assert(BookReplay.orderedTicks(parts.filter($"assetId" === "B")).count() == 20)
   }
 
   test("a bucketed lake whose bucket spans several files replays like the shuffled fold") {
@@ -246,7 +253,7 @@ class BookReplaySpec extends AnyFunSuite {
         .sortBy("assetId", "fileHour", "lineNo", "msgIdx")
         .saveAsTable("graft_multi_file_lake")
       val lake = graft.sources.Sinks.readBucketedLake(spark, "graft_multi_file_lake")
-      assert(BookReplay.ticksPreDistributed(lake).collect().toSeq.sortBy(_.toString) ==
+      assert(BookReplay.orderedTicks(lake).collect().toSeq.sortBy(_.toString) ==
         replay(msgs).sortBy(_.toString))
     } finally spark.sql("DROP TABLE IF EXISTS graft_multi_file_lake")
   }

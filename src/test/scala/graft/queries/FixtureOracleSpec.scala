@@ -15,8 +15,8 @@ class FixtureOracleSpec extends AnyFunSuite {
   test("two sessions' dump directories differ, and each dump stays " +
     "readable while the other is rewritten") {
     // `mine` and `theirs` stand for the dumps of two JVMs
-    val mine = FixtureOracle.newDumps()
-    val theirs = FixtureOracle.newDumps()
+    val mine = new FixtureOracle.Dumps(graft.Scratch.newRoot())
+    val theirs = new FixtureOracle.Dumps(graft.Scratch.newRoot())
     assert(Set(FixtureOracle.fixtureMsgsPath, mine.fixtureMsgsPath, theirs.fixtureMsgsPath)
       .size == 3)
     mine.write(spark)

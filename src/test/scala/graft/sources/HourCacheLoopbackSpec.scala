@@ -6,6 +6,7 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
+import com.sun.net.httpserver.HttpExchange
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S6's download-and-cache path over a REAL HTTP object store on
@@ -18,14 +19,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class HourCacheLoopbackSpec extends AnyFunSuite {
 
   /** Object store serving /objects/<hour>.jsonl.zst; hours in
-    * `missing404` return 404.
+    * `missing404` return 404. `hold` wraps the handler.
     */
-  private def objectServer(missing404: Set[String]) = Loopback.http("/objects/" -> { ex =>
-    Thread.sleep(30) // let batch-mates overlap measurably
-    val hour = hourOf(ex.getRequestURI.getPath)
-    if (missing404.contains(hour)) Loopback.respond(ex, 404)
-    else Loopback.respond(ex, 200, s"payload-for-$hour\n".getBytes("UTF-8"))
-  })
+  private def objectServer(
+      missing404: Set[String],
+      hold: (HttpExchange => Unit) => HttpExchange => Unit = identity) =
+    Loopback.http("/objects/" -> hold { ex =>
+      val hour = hourOf(ex.getRequestURI.getPath)
+      if (missing404.contains(hour)) Loopback.respond(ex, 404)
+      else Loopback.respond(ex, 200, s"payload-for-$hour\n".getBytes("UTF-8"))
+    })
 
   private def hourOf(path: String) = path.stripPrefix("/objects/").stripSuffix(".jsonl.zst")
 
@@ -58,7 +61,7 @@ class HourCacheLoopbackSpec extends AnyFunSuite {
       Instant.parse("2025-07-01T03:10:00Z"), Instant.parse("2025-07-01T08:10:00Z"))
     assert(hours.size == 6)
     val gone = hours(2)
-    val server = objectServer(Set(gone))
+    val server = objectServer(Set(gone), HoldFirst(_))
     val dir = java.nio.file.Files.createTempDirectory("graft_s6_loopback").toFile
     try {
       val fetched = HourCache.fetchMissing(

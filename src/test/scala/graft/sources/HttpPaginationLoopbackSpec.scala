@@ -22,7 +22,8 @@ class HttpPaginationLoopbackSpec extends AnyFunSuite {
 
   test("S3 windowed-concurrent pagination over real HTTP: every row " +
     "exactly once, requests actually overlap") {
-    val server = Loopback.marketPages(total = 1237, pageSize = 100)(rowJson)
+    val server = Loopback.http(
+      "/markets" -> HoldFirst(Loopback.pager(total = 1237, pageSize = 100)(rowJson)))
     try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
