@@ -10,9 +10,10 @@ import graft.model.{Change, Level}
   * [[BookEffect]] that records them. Snapshot and diff semantics are
   * defined here once, as `clear` plus per-level writes, so a recorded
   * run of events replays onto a book exactly as the events themselves
-  * would have.
+  * would have. Both kinds are Java-serializable: effects travel to the
+  * batch fold as seeds, and a book is the stream fold's per-asset state.
   */
-sealed abstract class Levels {
+sealed abstract class Levels extends Serializable {
 
   /** Empty both sides. */
   private[operators] def clear(): Unit
@@ -115,7 +116,7 @@ final class Book extends Levels {
   * a seed, the exclusive prefix of its partitions before it (see
   * `BookReplay`).
   */
-final class BookEffect extends Levels with Serializable {
+final class BookEffect extends Levels {
   private var reset = false
   private val asks = mutable.TreeMap.empty[BigDecimal, BigDecimal](Levels.PriceOrder)
   private val bids = mutable.TreeMap.empty[BigDecimal, BigDecimal](Levels.PriceOrder)

@@ -205,7 +205,7 @@ object BookReplay {
   }
 
   /** One message against the live book, the emission rule shared by
-    * the batch fold and both streaming folds (`MarketState::update`,
+    * the batch fold and the stream fold (`MarketState::update`,
     * `tick_generator.rs:318-362`).
     */
   private[graft] def applyMsg(book: Book, m: FeedMsg): Seq[Tick] = m.eventType match {

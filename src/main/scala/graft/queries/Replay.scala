@@ -522,13 +522,8 @@ object Replay {
       import s.implicits._
       val yesTokens = fixtureYesTokens(s)
       volumeRects(runStreamToTable(s, "graft_stream_volume_gate", outputMode = "complete")(tks =>
-        tks.filter($"kind" === "TRADE")
-          .join(broadcast(yesTokens), tks("asset") === yesTokens("token_id"), "left_semi")
-          // try_cast, not cast: the raw exchange timestamp is a string
-          // end-to-end; a dirty one on a long-running stream must drop
-          // the tick, not kill the query (bboMinutely's policy)
-          .withColumn("event_ts", timestamp_millis(expr("try_cast(timestamp AS LONG)")))
-          .filter($"event_ts".isNotNull)
+        StreamingReplay.withEventTs(tks.filter($"kind" === "TRADE")
+          .join(broadcast(yesTokens), tks("asset") === yesTokens("token_id"), "left_semi"))
           .withColumn("hi",
             (unix_millis(date_trunc("hour", $"event_ts")) / lit(3600000L)).cast("long"))
           .groupBy($"hi")

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
-import graft.model.{FeedMsg, Level, Tick}
+import graft.model.{FeedMsg, Tick}
 import graft.operators.{Book, BookReplay}
 
 /** Structured Streaming variant of the book replay (SURVEY.md §2.7):
@@ -12,6 +12,14 @@ import graft.operators.{Book, BookReplay}
   * `GroupState` instead of a partition-local variable — state lives
   * across micro-batches exactly like the reference's long-running
   * collector state lives across messages.
+  *
+  * State: the live [[Book]] itself, stored with
+  * `Encoders.javaSerialization` (the serialization that already
+  * carries `BookEffect` seeds to the batch fold), so exact decimal
+  * levels cross a batch boundary unchanged. A checkpoint written with
+  * the earlier state schema (two lists of decimal-string levels)
+  * cannot be resumed: Spark's state-schema check refuses it, so such
+  * a query restarts from a fresh checkpoint.
   *
   * Ordering: within one micro-batch a key's messages are sorted by the
   * arrival key before folding. Across micro-batches, ordering is the
@@ -39,19 +47,6 @@ import graft.operators.{Book, BookReplay}
   */
 object StreamingReplay {
 
-  /** Serializable book state: level lists (price/size decimal strings,
-    * exact round trip into the TreeMap representation).
-    */
-  final case class BookState(asks: Seq[Level], bids: Seq[Level])
-
-  private[streaming] def toBook(st: BookState): Book =
-    new Book().resetFromSnapshot(st.asks, st.bids)
-
-  private[streaming] def fromBook(b: Book): BookState = BookState(
-    asks = b.asks.iterator.map { case (p, s) => Level(p.toPlainString, s.toPlainString) }.toSeq,
-    bids = b.bids.iterator.map { case (p, s) => Level(p.toPlainString, s.toPlainString) }.toSeq,
-  )
-
   def ticksStream(
       msgs: Dataset[FeedMsg],
       marketFilter: Option[Set[String]] = None,
@@ -59,27 +54,40 @@ object StreamingReplay {
   ): Dataset[Tick] = {
     val spark = msgs.sparkSession
     import spark.implicits._
+    implicit val bookEncoder: Encoder[Book] = Encoders.javaSerialization[Book]
     val timeout = stateTtl
       .map(_ => GroupStateTimeout.ProcessingTimeTimeout())
       .getOrElse(GroupStateTimeout.NoTimeout())
 
     BookReplay.inMarkets(msgs, marketFilter)
       .groupByKey(_.assetId)
-      .flatMapGroupsWithState[BookState, Tick](OutputMode.Append(), timeout) {
-        (_: String, it: Iterator[FeedMsg], state: GroupState[BookState]) =>
+      .flatMapGroupsWithState[Book, Tick](OutputMode.Append(), timeout) {
+        (_: String, it: Iterator[FeedMsg], state: GroupState[Book]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            val book = state.getOption.map(toBook).getOrElse(new Book)
+            val book = state.getOption.getOrElse(new Book)
             val ordered = it.toSeq.sortBy(m => (m.fileHour, m.lineNo, m.msgIdx))
             val out = ordered.iterator.flatMap(m => BookReplay.applyMsg(book, m)).toVector
-            state.update(fromBook(book))
+            state.update(book)
             stateTtl.foreach(state.setTimeoutDuration)
             out.iterator
           }
       }
   }
+
+  /** Adds `event_ts`, the exchange timestamp read as epoch millis, and
+    * drops the rows whose timestamp is not a number. try_cast, not
+    * cast: the reference carries the exchange timestamp as a raw
+    * string end-to-end (tick_generator.rs:51), so a non-numeric one can
+    * reach a long-running stream, and under ANSI a plain cast would
+    * throw and kill the query instead of dropping the dirty tick.
+    */
+  def withEventTs(ticks: Dataset[_]): DataFrame =
+    ticks
+      .withColumn("event_ts", timestamp_millis(expr("try_cast(timestamp AS LONG)")))
+      .filter(col("event_ts").isNotNull)
 
   /** A1 streaming: last BBO price per (1-minute tumbling window, side)
     * with a watermark on the exchange timestamp — late data beyond the
@@ -90,15 +98,7 @@ object StreamingReplay {
   def bboMinutely(ticks: Dataset[Tick], watermark: String = "2 minutes"): DataFrame = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .filter($"kind" === "BBO")
-      // try_cast + drop, not cast: the reference carries the exchange
-      // timestamp as a raw string end-to-end (tick_generator.rs:51),
-      // so a non-numeric one can reach a long-running stream — under
-      // ANSI a plain cast would throw and kill the query at hour
-      // 90,000 instead of classifying the tick as dirty
-      .withColumn("event_ts", timestamp_millis(expr("try_cast(timestamp AS LONG)")))
-      .filter($"event_ts".isNotNull)
+    withEventTs(ticks.filter($"kind" === "BBO"))
       .withWatermark("event_ts", watermark)
       .groupBy(window($"event_ts", "1 minute"), $"asset", $"side")
       .agg(
@@ -112,11 +112,7 @@ object StreamingReplay {
   def hourlyVolume(ticks: Dataset[Tick], watermark: String = "2 minutes"): DataFrame = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .filter($"kind" === "TRADE")
-      // same dirty-timestamp policy as bboMinutely
-      .withColumn("event_ts", timestamp_millis(expr("try_cast(timestamp AS LONG)")))
-      .filter($"event_ts".isNotNull)
+    withEventTs(ticks.filter($"kind" === "TRADE"))
       .withWatermark("event_ts", watermark)
       .groupBy(window($"event_ts", "1 hour"), $"asset")
       .agg(sum($"size").as("volume"), count(lit(1)).as("n_trades"))

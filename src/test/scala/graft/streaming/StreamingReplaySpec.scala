@@ -63,39 +63,6 @@ class StreamingReplaySpec extends AnyFunSuite {
     ))
   }
 
-  test("the fold runs unchanged under the RocksDB state store " +
-    "(the production provider for state larger than executor heap)") {
-    val s = spark.newSession() // provider conf stays isolated here
-    import s.implicits._
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    implicit val sqlCtx = s.sqlContext
-    val input = MemoryStream[FeedMsg]
-    val query = StreamingReplay
-      .ticksStream(input.toDS())
-      .writeStream
-      .format("memory")
-      .queryName("ticks_rocksdb_test")
-      .outputMode("append")
-      .start()
-    input.addData(msg(0, "book",
-      asks = Seq(Level("0.60", "10")), bids = Seq(Level("0.40", "20"))))
-    query.processAllAvailable()
-    // state must survive the batch boundary inside RocksDB
-    input.addData(msg(1, "price_change", changes = Seq(Change("0.40", "0", "BUY"))))
-    query.processAllAvailable()
-    query.stop()
-    val out = s.table("ticks_rocksdb_test")
-      .as[graft.model.Tick].collect().toSeq.sortBy(t => (t.line_no, t.emit_idx))
-    assert(out.map(t => (t.kind, t.side, t.price, t.size)) == Seq(
-      ("BBO", "ASK", 0.60, 10.0),
-      ("BBO", "BID", 0.40, 20.0),
-      ("BBO", "ASK", 0.60, 10.0),
-      ("BBO", "BID", 0.0, 0.0), // bid deleted against RocksDB-held state
-    ))
-  }
-
   test("watermarked 1-minute BBO agg finalizes windows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
